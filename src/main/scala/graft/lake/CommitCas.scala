@@ -2,13 +2,14 @@ package graft.lake
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 /** The commit CAS seam — the single storage primitive the whole
   * optimistic commit protocol rests on: publish `content` at `dest` iff
   * nothing exists there, ATOMICALLY. `metadata/v<N>.json` is the version
-  * token; whoever publishes it owns version N, losers get an IOException
-  * and the retry loop re-derives the commit against refreshed metadata
+  * token; whoever publishes it owns version N, losers get a
+  * [[FileAlreadyExistsException]] and `LakeTable`'s commit loop
+  * re-derives the commit against refreshed metadata
   * (reference analog: Iceberg's optimistic snapshot swap,
   * `Writer.java:146-150`, retried per `commit.retry.num-retries`).
   *
@@ -35,9 +36,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    the moment two committers race the same table.
   */
 trait CommitCas {
-  /** Atomically publish `content` at `dest`; throw IOException iff the
-    * destination already exists (the lost-CAS signal the retry loop keys
-    * on). Must never leave a partial `dest` visible to readers.
+  /** Atomically publish `content` at `dest`. Throw Hadoop's
+    * [[FileAlreadyExistsException]] iff the destination already exists:
+    * that is the lost-CAS signal, and the only failure the commit loop
+    * retries. Any other IOException (a full disk, a denied write) is a
+    * hard failure and surfaces from the commit on its first attempt.
+    * Must never leave a partial `dest` visible to readers.
     */
   @throws[java.io.IOException]
   def publish(fs: FileSystem, dest: Path, content: String): Unit
@@ -60,7 +64,8 @@ object CommitCas {
       try java.nio.file.Files.createLink(destNio, tmp)
       catch {
         case e: java.nio.file.FileAlreadyExistsException =>
-          throw new java.io.IOException(s"concurrent commit: $dest exists", e)
+          throw new FileAlreadyExistsException(s"concurrent commit: $dest exists")
+            .initCause(e)
       } finally java.nio.file.Files.deleteIfExists(tmp)
     }
   }
@@ -77,7 +82,7 @@ object CommitCas {
       try out.write(content.getBytes("UTF-8")) finally out.close()
       if (!fs.rename(tmp, dest)) {
         fs.delete(tmp, false)
-        throw new java.io.IOException(s"concurrent commit: $dest exists")
+        throw new FileAlreadyExistsException(s"concurrent commit: $dest exists")
       }
     }
   }

@@ -40,7 +40,8 @@ object ConditionalPutCas extends CommitCas {
   private def publishLocked(dest: Path, content: String): Unit = synchronized {
     attempts.incrementAndGet()
     if (!published.add(dest.toUri.getPath))
-      throw new java.io.IOException(s"conditional put failed: $dest exists")
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+        s"conditional put failed: $dest exists")
     val nio = java.nio.file.Paths.get(dest.toUri.getPath)
     java.nio.file.Files.createDirectories(nio.getParent)
     val tmp = nio.resolveSibling(s".condput-${java.util.UUID.randomUUID()}")

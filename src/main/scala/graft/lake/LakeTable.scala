@@ -3,7 +3,7 @@ package graft.lake
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -23,9 +23,12 @@ import org.apache.spark.sql.types.StructType
   *   data/<col>_trunc=<v>/<uuid>.parquet
   *   _commits/{tmp,pending}/     — two-phase moniker handoff (A11)
   *
-  * Commit protocol (A10 + §7.5.1): write metadata/v<N+1>.json.tmp-<uuid>,
-  * atomically rename onto v<N+1>.json — rename-if-absent is the CAS; on
-  * contention, reload and retry (bounded by commit.retry.num-retries).
+  * Commit protocol (A10 + §7.5.1): every table change goes through the
+  * one `commit` primitive, which publishes metadata/v<N+1>.json through
+  * the scheme's create-if-absent [[CommitCas]]. A lost CAS surfaces as
+  * Hadoop's FileAlreadyExistsException; `commit` then reloads, re-derives
+  * the change and retries (bounded by commit.retry.num-retries). Any
+  * other I/O failure fails the commit at once.
   * Fast append: each commit adds ONE manifest and reuses the parent's
   * manifest list untouched (reference Writer.java:141-146), so commit cost
   * is O(1) in table size; manifests merge once they exceed
@@ -366,7 +369,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
   /** Publish through the per-scheme commit CAS ([[CommitCas]]): hard-link
     * on local FS, rename-if-absent on namespace stores, a registered
     * store-native conditional-put on flat object stores. Throws
-    * IOException on a lost CAS — the retry loop's conflict signal.
+    * FileAlreadyExistsException on a lost CAS — [[commit]]'s retry signal.
     */
   private def writeAtomic(dest: Path, content: String): Unit =
     CommitCas.forScheme(fs.getScheme).publish(fs, dest, content)
@@ -406,18 +409,20 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     }
   }
 
-  /** One CAS attempt: only the metadata write can signal a conflict;
-    * everything after the CAS lands is best-effort maintenance and must
-    * never be mistaken for contention (a retry after a landed commit would
-    * apply the operation twice).
+  /** Everything one commit changes, as a [[commit]] body derives it from
+    * the metadata it just read. Every default carries its field forward
+    * unchanged from that metadata, so a body names only what it changes.
+    * Defaults read `meta` when the plan is built: build plans inside the
+    * body, never outside it.
     */
-  private def commitAttempt(op: String, manifests: Seq[String],
-      keepSnapshots: Seq[Snapshot],
-      propsUpdate: Map[String, String] = Map.empty,
-      schemaUpdate: Option[String] = None,
+  private case class CommitPlan(
+      manifests: Seq[String] = meta.current.map(_.manifests).getOrElse(Nil),
+      keepSnapshots: Seq[Snapshot] = meta.snapshots,
+      props: Map[String, String] = Map.empty,
       propsRemove: Set[String] = Set.empty,
-      // None = carry the current snapshot's delete manifests forward
-      deleteManifests: Option[Seq[String]] = None,
+      schemaDdl: String = meta.schemaDdl,
+      deleteManifests: Seq[String] =
+        meta.current.map(_.deleteManifests).getOrElse(Nil),
       // WAP staging: a "stage" snapshot forks from its branch head and
       // leaves what main readers see untouched
       parentOverride: Option[Long] = None,
@@ -426,25 +431,32 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // current (entries are append-only; ids never reused)
       schemasUpdate: Option[(Seq[SchemaDef], Int)] = None,
       // partition-width evolution: same append-only contract
-      specsUpdate: Option[(Seq[SpecDef], Int)] = None): Long = {
+      specsUpdate: Option[(Seq[SpecDef], Int)] = None)
+
+  /** One CAS attempt: only the metadata write can signal a conflict;
+    * everything after the CAS lands is best-effort maintenance and must
+    * never be mistaken for contention (a retry after a landed commit would
+    * apply the operation twice).
+    */
+  private def commitAttempt(op: String, plan: CommitPlan): Long = {
     val cur = meta
     val nextVersion = cur.snapshots.map(_.id).maxOption.getOrElse(-1L) + 1
-    val newSchemaDdl = schemaUpdate.getOrElse(cur.schemaDdl)
-    val newSchemaId = schemasUpdate.map(_._2).getOrElse(cur.currentSchemaId)
+    val newSchemaId = plan.schemasUpdate.map(_._2).getOrElse(cur.currentSchemaId)
     // every snapshot pins the schema current as of its commit, so time
     // travel reads old vintages with their own column set
-    val snap = Snapshot(nextVersion, parentOverride.getOrElse(cur.currentSnapshotId),
-      System.currentTimeMillis(), op, manifests, Some(newSchemaDdl),
-      deleteManifests.getOrElse(cur.current.map(_.deleteManifests).getOrElse(Nil)),
-      schemaId = Some(newSchemaId))
-    val next = cur.copy(schemaDdl = newSchemaDdl,
-      properties = (cur.properties -- propsRemove) ++ propsUpdate,
-      snapshots = keepSnapshots :+ snap,
-      currentSnapshotId = if (advanceCurrent) nextVersion else cur.currentSnapshotId,
-      schemas = cur.schemas ++ schemasUpdate.map(_._1).getOrElse(Nil),
+    val snap = Snapshot(nextVersion,
+      plan.parentOverride.getOrElse(cur.currentSnapshotId),
+      System.currentTimeMillis(), op, plan.manifests, Some(plan.schemaDdl),
+      plan.deleteManifests, schemaId = Some(newSchemaId))
+    val next = cur.copy(schemaDdl = plan.schemaDdl,
+      properties = (cur.properties -- plan.propsRemove) ++ plan.props,
+      snapshots = plan.keepSnapshots :+ snap,
+      currentSnapshotId =
+        if (plan.advanceCurrent) nextVersion else cur.currentSnapshotId,
+      schemas = cur.schemas ++ plan.schemasUpdate.map(_._1).getOrElse(Nil),
       currentSchemaId = newSchemaId,
-      specs = cur.specs ++ specsUpdate.map(_._1).getOrElse(Nil),
-      currentSpecId = specsUpdate.map(_._2).getOrElse(cur.currentSpecId))
+      specs = cur.specs ++ plan.specsUpdate.map(_._1).getOrElse(Nil),
+      currentSpecId = plan.specsUpdate.map(_._2).getOrElse(cur.currentSpecId))
     writeAtomic(new Path(metaDir, s"v$nextVersion.json"), Json.metaToJson(next))
     meta = next
     // Pointer update is advisory (recovery lists metadata/ for max v).
@@ -457,37 +469,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     nextVersion
   }
 
-  /** Optimistic retry loop. `body` is re-evaluated against REFRESHED
-    * metadata on every attempt — commit content must never be computed
-    * from pre-conflict state (a stale manifest list would silently drop a
-    * concurrent committer's files: the lost-update hazard). Returning None
-    * from `body` means nothing to commit (-1).
-    */
-  private def retryCommit(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot])]): Long =
-    retryCommitProps(op)(() => body().map { case (m, s) => (m, s, Map.empty[String, String]) })
-
-  /** retryCommit variant whose body can also update table properties
-    * atomically with the snapshot swap (streaming-epoch fencing below).
-    */
-  private def retryCommitProps(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Map[String, String])]): Long =
-    retryCommitPropsRemove(op)(() =>
-      body().map { case (m, s, p) => (m, s, p, Set.empty[String]) })
-
-  /** retryCommitProps variant whose body can also DELETE property keys
-    * (streaming-epoch watermark GC below — a plain merge can never shrink
-    * the map).
-    */
-  private def retryCommitPropsRemove(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Map[String, String], Set[String])]): Long =
-    retryCommitFull(op)(() =>
-      body().map { case (m, s, p, r) => (m, s, p, r, None) })
-
-  /** Bottom of the retry-helper ladder: bodies can additionally REPLACE the
-    * delete-manifest list (merge-on-read deletes and the rewrite commits
-    * that prune them); None carries the current snapshot's list forward.
-    */
   /** Contention signal: has THIS table handle recently lost a CAS?
     * Gates the chain-break yield below — a single committer never sets
     * it, so the yield costs nothing on the recommended path. DECAYS:
@@ -524,21 +505,28 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       }
     }
 
-  private def retryCommitFull(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Map[String, String],
-        Set[String], Option[Seq[String]])]): Long = {
+  /** The one optimistic commit primitive every table change goes through.
+    * `plan` is re-evaluated against REFRESHED metadata on every attempt —
+    * commit content must never be computed from pre-conflict state (a
+    * stale manifest list would silently drop a concurrent committer's
+    * files: the lost-update hazard). `None` from `plan` means nothing to
+    * commit (-1). Only a lost CAS ([[FileAlreadyExistsException]] from
+    * [[CommitCas.publish]]) is retried, up to `commit.retry.num-retries`
+    * times with [[retryBackoff]] between; any other failure surfaces from
+    * the attempt that hit it.
+    */
+  private def commit(op: String)(plan: () => Option[CommitPlan]): Long = {
     var attempt = 0
     var yielded = false
     while (true) {
-      body() match {
+      plan() match {
         case None => return -1L
-        case Some((manifests, keepSnapshots, props, remove, deletes)) =>
+        case Some(p) =>
           // yield only when there is actually something to commit — a
           // no-op body (idempotent replay) must never pay the beat
           if (!yielded) { chainBreakYield(); yielded = true }
           try {
-            val id = commitAttempt(op, manifests, keepSnapshots, props,
-              propsRemove = remove, deleteManifests = deletes)
+            val id = commitAttempt(op, p)
             chainWins = if (attempt == 0) chainWins + 1 else 0
             if (chainWins >= LakeTable.ChainCalmWins) {
               conflictSeen = false
@@ -546,12 +534,13 @@ final class LakeTable private (val location: String, private var meta: TableMeta
             }
             return id
           } catch {
-            case _: java.io.IOException =>
+            case _: FileAlreadyExistsException =>
               attempt += 1
               conflictSeen = true
               LakeTable.commitRetries.incrementAndGet()
               if (attempt >= maxRetries)
-                throw new IllegalStateException(s"commit failed after $attempt retries")
+                throw new IllegalStateException(
+                  s"$op commit failed after $attempt retries")
               retryBackoff(attempt)
               refresh()
           }
@@ -559,13 +548,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     }
     -1L // unreachable
   }
-
-  /** retryCommit variant for commits that set the delete-manifest list. */
-  private def retryCommitDeletes(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Seq[String])]): Long =
-    retryCommitFull(op)(() =>
-      body().map { case (m, s, d) => (m, s, Map.empty[String, String],
-        Set.empty[String], Some(d)) })
 
   /** Honors write.metadata.delete-after-commit.enabled +
     * previous-versions-max (§1.3): drop superseded v*.json beyond the limit.
@@ -596,10 +578,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     knownPathsCache._2
   }
 
-  /** Fast append (A10) with path-dedupe for idempotent replay — the
-    * crash-window fix for the reference's delete-before-commit /
-    * at-least-once-redelivery bugs (A14, §3.3.6).
-    */
   /** Register EXTERNALLY-WRITTEN parquet files into the table —
     * metadata-only, the Iceberg `add_files` migration path and the bulk
     * form of what the moniker flow does one batch at a time. Files under
@@ -676,6 +654,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     append(metas)
   }
 
+  /** Fast append (A10) with path-dedupe for idempotent replay — the
+    * crash-window fix for the reference's delete-before-commit /
+    * at-least-once-redelivery bugs (A14, §3.3.6).
+    */
   def append(newFiles: Seq[DataFileMeta],
       // properties merged ATOMICALLY with the snapshot swap (e.g. the
       // ANN maintenance-debt odometer): a reader of any snapshot sees
@@ -685,7 +667,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     // cache forward without re-reading manifests (see below)
     var lastKnown: Set[String] = null
     var lastFresh: Seq[String] = Nil
-    val id = retryCommitProps("append") { () =>
+    val id = commit("append") { () =>
       val existing = meta.current.map(_.manifests).getOrElse(Nil)
       // dedupe within the batch too: one sweep can carry the same file
       // twice (at-least-once event redelivery)
@@ -698,8 +680,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // from minting an empty snapshot per redelivery — idempotent means
       // no new rows AND no history growth
       if (fresh.isEmpty) None
-      else Some((maybeMerge(existing :+ writeManifest(stamp(fresh))),
-        meta.snapshots, props))
+      else Some(CommitPlan(
+        manifests = maybeMerge(existing :+ writeManifest(stamp(fresh))),
+        props = props))
     }
     // Roll the cache forward: the new snapshot's path set is exactly the
     // parent's plus this commit's fresh paths (a merge reshuffles manifests
@@ -720,12 +703,12 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * compactFiles, driven by the DSv2 truncate-write path.
     */
   def overwrite(newFiles: Seq[DataFileMeta]): Long =
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       val fresh = newFiles.distinctBy(_.path)
       // full replacement: no pre-existing file survives, so no pending
       // delete can reference a live file
-      Some((writeManifests(stamp(fresh)),
-        meta.snapshots, Nil))
+      Some(CommitPlan(manifests = writeManifests(stamp(fresh)),
+        deleteManifests = Nil))
     }
 
   /** Full-table overwrite that ATOMICALLY also updates table properties —
@@ -738,10 +721,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def overwriteWithProps(newFiles: Seq[DataFileMeta],
       props: Map[String, String]): Long =
-    retryCommitFull("rewrite") { () =>
+    commit("rewrite") { () =>
       val fresh = newFiles.distinctBy(_.path)
-      Some((writeManifests(stamp(fresh)), meta.snapshots, props,
-        Set.empty[String], Some(Nil)))
+      Some(CommitPlan(manifests = writeManifests(stamp(fresh)),
+        props = props, deleteManifests = Nil))
     }
 
   /** Epoch-fenced fast append for exactly-once streaming sinks: the epoch
@@ -766,7 +749,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // they merge, so state advances exactly once per epoch
       extraProps: Map[String, String] = Map.empty): Long = {
     val key = s"$PropStreamEpochPrefix$queryId"
-    retryCommitFull("append") { () =>
+    commit("append") { () =>
       if (meta.properties.get(key)
           .exists(v => LakeTable.parseEpochValue(v)._1 >= epochId)) None
       else {
@@ -799,19 +782,16 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           .filter(k => k.startsWith(PropStreamEpochPrefix) && k != key)
           .filter(k => now - LakeTable.parseEpochValue(meta.properties(k))._2 >= ttl)
           .toSet
-        Some((maybeMerge(withNew), meta.snapshots,
-          extraProps + (key -> s"$epochId:$now"), stale,
-          if (newDeletes.isEmpty) None else Some(withDels)))
+        Some(CommitPlan(manifests = maybeMerge(withNew),
+          props = extraProps + (key -> s"$epochId:$now"), propsRemove = stale,
+          deleteManifests = withDels))
       }
     }
   }
 
   /** Table-property update as one metadata commit (SQL SET TBLPROPERTIES). */
   def setProperty(key: String, value: String): Long =
-    retryCommitProps("alter") { () =>
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map(key -> value)))
-    }
+    commit("alter") { () => Some(CommitPlan(props = Map(key -> value))) }
 
   /** Schema evolution: ADD COLUMN (nullable, appended last). One metadata
     * commit bumping schemaDdl — no data file is touched; files written
@@ -826,7 +806,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def addColumn(name: String,
       dataType: org.apache.spark.sql.types.DataType): Long =
-    alterSchemaRetry { () =>
+    commit("alter") { () =>
       if (schema.fieldNames.exists(_.equalsIgnoreCase(name)))
         throw new IllegalArgumentException(s"column $name already exists")
       val newDdl = StructType(schema.fields :+
@@ -839,7 +819,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           Some((Seq(SchemaDef(nextId, newDdl,
             cur.ids :+ (meta.lastFieldId + 1))), nextId))
         }
-      (newDdl, schemasUpd)
+      Some(CommitPlan(schemaDdl = newDdl, schemasUpdate = schemasUpd))
     }
 
   /** Schema evolution: RENAME COLUMN. Mints a new [[SchemaDef]] carrying
@@ -851,7 +831,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * under before the top-level DDL diverges from it.
     */
   def renameColumn(oldName: String, newName: String): Long =
-    alterSchemaRetry(() => {
+    commit("alter") { () =>
       val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(oldName))
       if (idx < 0) throw new IllegalArgumentException(s"no column $oldName")
       if (schema.fieldNames.exists(_.equalsIgnoreCase(newName)))
@@ -864,9 +844,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val fields = schema.fields.clone()
       fields(idx) = fields(idx).copy(name = newName)
       val newDdl = StructType(fields).toDDL
-      (newDdl, Some((base :+ SchemaDef(nextId, newDdl,
-        meta.currentSchemaDef.ids), nextId)))
-    }, () => rewriteColumnListProps(oldName, Some(newName)))
+      Some(CommitPlan(schemaDdl = newDdl,
+        schemasUpdate = Some((base :+ SchemaDef(nextId, newDdl,
+          meta.currentSchemaDef.ids), nextId)),
+        props = rewriteColumnListProps(oldName, Some(newName))))
+    }
 
   /** Schema evolution: WIDEN COLUMN TYPE (`ALTER COLUMN x TYPE t`) — the
     * Iceberg-legal promotions only: INT → BIGINT, FLOAT → DOUBLE, and
@@ -889,7 +871,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def widenColumnType(name: String,
       newType: org.apache.spark.sql.types.DataType): Long =
-    alterSchemaRetry(() => {
+    commit("alter") { () =>
       import org.apache.spark.sql.types._
       val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
       if (idx < 0) throw new IllegalArgumentException(s"no column $name")
@@ -913,9 +895,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val fields = schema.fields.clone()
       fields(idx) = fields(idx).copy(dataType = newType)
       val newDdl = StructType(fields).toDDL
-      (newDdl, Some((base :+ SchemaDef(nextId, newDdl,
-        meta.currentSchemaDef.ids), nextId)))
-    })
+      Some(CommitPlan(schemaDdl = newDdl,
+        schemasUpdate = Some((base :+ SchemaDef(nextId, newDdl,
+          meta.currentSchemaDef.ids), nextId))))
+    }
 
   /** Schema evolution: DROP COLUMN. Metadata-only — the column's field id
     * leaves the current schema (and is never reused), so every file's copy
@@ -923,7 +906,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * snapshots still reads it through their pinned schema.
     */
   def dropColumn(name: String): Long =
-    alterSchemaRetry(() => {
+    commit("alter") { () =>
       val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
       if (idx < 0) throw new IllegalArgumentException(s"no column $name")
       if (schema.fields.length == 1)
@@ -935,9 +918,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val (base, nextId) = mintBase()
       val newDdl = StructType(
         schema.fields.patch(idx, Nil, 1)).toDDL
-      (newDdl, Some((base :+ SchemaDef(nextId, newDdl,
-        meta.currentSchemaDef.ids.patch(idx, Nil, 1)), nextId)))
-    }, () => rewriteColumnListProps(name, None))
+      Some(CommitPlan(schemaDdl = newDdl,
+        schemasUpdate = Some((base :+ SchemaDef(nextId, newDdl,
+          meta.currentSchemaDef.ids.patch(idx, Nil, 1)), nextId)),
+        props = rewriteColumnListProps(name, None)))
+    }
 
   /** Pending equality-delete files key rows BY NAME; renaming/dropping a
     * key column out from under them would silently stop retiring the rows
@@ -984,29 +969,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       (Seq(SchemaDef(0, meta.schemaDdl, names.indices.map(_ + 1).toSeq)),
         meta.schemas.map(_.id).maxOption.getOrElse(0) + 1)
     } else (Nil, meta.schemas.map(_.id).max + 1)
-
-  private def alterSchemaRetry(
-      body: () => (String, Option[(Seq[SchemaDef], Int)]),
-      propsUpdate: () => Map[String, String] = () => Map.empty): Long = {
-    var attempt = 0
-    while (true) {
-      val (newDdl, schemasUpd) = body()
-      try
-        return commitAttempt("alter",
-          meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-          propsUpdate = propsUpdate(),
-          schemaUpdate = Some(newDdl), schemasUpdate = schemasUpd)
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"alter failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
-    }
-    -1L // unreachable
-  }
 
   /** Column-list properties (`write.sort-order`, `write.bloom.columns`)
     * rewritten for a rename (newName = Some) or drop (None) of `oldName`.
@@ -1061,8 +1023,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def setPartitionWidth(newWidthMicros: Long): Long = {
     require(newWidthMicros > 0, "truncate width must be positive")
-    var attempt = 0
-    while (true) {
+    commit("alter") { () =>
       if (newWidthMicros == spec.widthMicros)
         throw new IllegalArgumentException(
           s"partition width is already $newWidthMicros")
@@ -1071,20 +1032,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val (base, nextId) =
         if (meta.specs.isEmpty) (Seq(SpecDef(0, meta.spec.widthMicros)), 1)
         else (Nil, meta.specs.map(_.id).max + 1)
-      try
-        return commitAttempt("alter",
-          meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-          specsUpdate = Some((base :+ SpecDef(nextId, newWidthMicros), nextId)))
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"alter failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      Some(CommitPlan(
+        specsUpdate = Some((base :+ SpecDef(nextId, newWidthMicros), nextId))))
     }
-    -1L // unreachable
   }
 
   // ---- snapshot refs: tags + rollback ------------------------------------
@@ -1108,11 +1058,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
   def createTag(name: String, snapshotId: Long): Long = {
     require(name.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid tag name: $name (must start with a letter)")
-    retryCommitProps("tag") { () =>
+    commit("tag") { () =>
       if (meta.snapshot(snapshotId).isEmpty)
         throw new IllegalArgumentException(s"no snapshot $snapshotId to tag")
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map(s"$PropTagPrefix$name" -> snapshotId.toString)))
+      Some(CommitPlan(props = Map(s"$PropTagPrefix$name" -> snapshotId.toString)))
     }
   }
 
@@ -1120,10 +1069,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * when the tag doesn't exist.
     */
   def dropTag(name: String): Long =
-    retryCommitPropsRemove("untag") { () =>
+    commit("untag") { () =>
       if (!meta.properties.contains(s"$PropTagPrefix$name")) None
-      else Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map.empty[String, String], Set(s"$PropTagPrefix$name")))
+      else Some(CommitPlan(propsRemove = Set(s"$PropTagPrefix$name")))
     }
 
   // ---- WAP branches: stage → audit → publish -----------------------------
@@ -1147,8 +1095,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
   def stageAppend(newFiles: Seq[DataFileMeta], branch: String): Long = {
     require(branch.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid branch name: $branch (must start with a letter)")
-    var attempt = 0
-    while (true) {
+    commit("stage") { () =>
       val base = branchHead(branch)
         .map(id => meta.snapshot(id).getOrElse(throw new IllegalStateException(
           s"branch $branch points at missing snapshot $id")))
@@ -1159,21 +1106,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val manifests =
         if (fresh.isEmpty) base.manifests
         else base.manifests :+ writeManifest(stamp(fresh))
-      val stagedId = nextSeq
-      try return commitAttempt("stage", manifests, meta.snapshots,
-        propsUpdate = Map(s"$PropBranchPrefix$branch" -> stagedId.toString),
-        deleteManifests = Some(base.deleteManifests),
-        parentOverride = Some(base.id), advanceCurrent = false)
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"stage failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      Some(CommitPlan(manifests = manifests,
+        props = Map(s"$PropBranchPrefix$branch" -> nextSeq.toString),
+        deleteManifests = base.deleteManifests,
+        parentOverride = Some(base.id), advanceCurrent = false))
     }
-    -1L // unreachable
   }
 
   /** Publish half: fold the branch's staged manifests into MAIN as one
@@ -1185,7 +1122,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def publishBranch(branch: String): Long = {
     val key = s"$PropBranchPrefix$branch"
-    retryCommitPropsRemove("append") { () =>
+    commit("append") { () =>
       branchHead(branch) match {
         case None => None
         case Some(headId) =>
@@ -1204,8 +1141,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           else {
             val cur = meta.current.map(_.manifests).getOrElse(Nil)
             val curSet = cur.toSet
-            Some((maybeMerge(cur ++ staged.filterNot(curSet.contains)),
-              meta.snapshots, Map.empty[String, String], Set(key)))
+            Some(CommitPlan(
+              manifests = maybeMerge(cur ++ staged.filterNot(curSet.contains)),
+              propsRemove = Set(key)))
           }
       }
     }
@@ -1216,10 +1154,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def dropBranch(branch: String): Long = {
     val key = s"$PropBranchPrefix$branch"
-    retryCommitPropsRemove("unbranch") { () =>
+    commit("unbranch") { () =>
       if (!meta.properties.contains(key)) None
-      else Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map.empty[String, String], Set(key)))
+      else Some(CommitPlan(propsRemove = Set(key)))
     }
   }
 
@@ -1231,9 +1168,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * (rollback is not an "append" snapshot), so a stream crossing a
     * rollback never re-delivers.
     */
-  def rollbackTo(snapshotId: Long): Long = {
-    var attempt = 0
-    while (true) {
+  def rollbackTo(snapshotId: Long): Long =
+    commit("rollback") { () =>
       val target = meta.snapshot(snapshotId).getOrElse(
         throw new IllegalArgumentException(s"no snapshot $snapshotId to roll back to"))
       val restoredDdl = target.schemaDdl.getOrElse(meta.schemaDdl)
@@ -1274,23 +1210,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           restoredDef.fold(Map.empty[String, String])(
             translateColumnListProps(meta.currentSchemaDef, _))
         }
-      try
-        return commitAttempt("rollback", target.manifests, meta.snapshots,
-          propsUpdate = propsUpd,
-          schemaUpdate = Some(restoredDdl),
-          deleteManifests = Some(target.deleteManifests),
-          schemasUpdate = Some(schemasUpd))
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"rollback failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      Some(CommitPlan(manifests = target.manifests, props = propsUpd,
+        schemaDdl = restoredDdl, deleteManifests = target.deleteManifests,
+        schemasUpdate = Some(schemasUpd)))
     }
-    -1L // unreachable
-  }
 
   /** Consolidate the current snapshot's data manifests into ONE (the
     * Iceberg `rewrite_manifests` maintenance op): commit-heavy ingest
@@ -1302,25 +1225,12 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * untouched, and incremental readers see no new files (a "compact"
     * snapshot, never re-delivered). Returns -1 when already consolidated.
     */
-  def rewriteManifests(): Long = {
-    var attempt = 0
-    while (true) {
+  def rewriteManifests(): Long =
+    commit("compact") { () =>
       val cur = meta.current.map(_.manifests).getOrElse(Nil)
-      if (cur.size <= 1) return -1L
-      val merged = writeManifests(cur.flatMap(readManifest))
-      try return commitAttempt("compact", merged, meta.snapshots)
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(
-              s"rewrite_manifests failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      if (cur.size <= 1) None
+      else Some(CommitPlan(manifests = writeManifests(cur.flatMap(readManifest))))
     }
-    -1L // unreachable
-  }
 
   /** Manifest compaction once the count crosses the merge threshold.
     *
@@ -1364,7 +1274,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * Returns the new snapshot id, or -1 if nothing matched.
     */
   def deleteOlderThan(cutoffMicros: Long): Long = {
-    retryCommitDeletes("delete") { () =>
+    commit("delete") { () =>
       // recomputed from fresh metadata on every attempt so a concurrent
       // append's files survive the rewrite of the manifest list. A file is
       // droppable iff its WHOLE bucket sits below the cutoff — judged per
@@ -1373,8 +1283,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val (dropped, kept) = files().partition(f =>
         f.partitionValue + meta.specWidth(f.specId) <= cutoffMicros)
       if (dropped.isEmpty) None
-      else Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      else Some(CommitPlan(manifests = writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -1425,10 +1335,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     val live = files()
     if (live.isEmpty && extra.isEmpty) return -1L
     if (live.isEmpty) // overwrite into an empty table = plain append
-      return retryCommitDeletes("rewrite") { () =>
+      return commit("rewrite") { () =>
         val kept = files() ++ stamp(extra)
-        Some((writeManifests(kept), meta.snapshots,
-          carryDeleteManifests(kept)))
+        Some(CommitPlan(manifests = writeManifests(kept),
+          deleteManifests = carryDeleteManifests(kept)))
       }
     // Pending MoR deletes must be honored throughout: a deleted row that
     // matched the scan would mis-classify its file; one that survived a
@@ -1475,15 +1385,15 @@ final class LakeTable private (val location: String, private var meta: TableMeta
         LakeWriter.writeDataFiles(keepRows, this)
       }
     val replaced = (partial ++ fullyDropped).map(_.path).toSet
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       assertNoNewDeletes(scanSnapshot, partial ++ fullyDropped, "delete")
       assertReplacedLive(replaced, "delete")
       // recompute survivors from fresh metadata: concurrent appends since
       // the scan must not be dropped by this manifest rewrite
       val kept = files().filterNot(f => replaced.contains(f.path)) ++
         stamp(rewritten) ++ stamp(extra)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(CommitPlan(manifests = writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -1539,7 +1449,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
         LakeWriter.writeDataFiles(keepRows, this)
       }
     val straddlingPaths = straddling.map(_.path).toSet
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       val cur = files()
       // lost-update guard: files added since the scan that overlap a
       // touched bucket would be silently swallowed by the swap
@@ -1554,8 +1464,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val kept = cur.filter { f =>
         !straddlingPaths.contains(f.path) && !writeBuckets(f).forall(touched)
       } ++ stamp(rewritten) ++ stamp(fresh)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(CommitPlan(manifests = writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -1707,7 +1617,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
 
   private[lake] def commitPositionDeletes(written: Seq[DeleteFileMeta],
       scanSnapshot: Option[Long] = None): Long =
-    retryCommitDeletes("delete") { () =>
+    commit("delete") { () =>
       val dangling = danglingDeleteRefs(written,
         files().map(_.path).toSet, scanSnapshot)
       if (dangling.nonEmpty)
@@ -1716,8 +1626,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
             s"${dangling.size} referenced data file(s) no longer live " +
             s"(first: ${dangling.head})")
       val cur = meta.current.map(_.deleteManifests).getOrElse(Nil)
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        cur :+ writeDeleteManifest(written)))
+      Some(CommitPlan(deleteManifests = cur :+ writeDeleteManifest(written)))
     }
 
   /** Compact the table's POSITION-delete files (the Iceberg
@@ -1780,7 +1689,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       if (n == 0L) Nil else writeDeleteParquets(spark, rows, n)
     } finally rows.unpersist()
     val replaced = pos.map(_.path).toSet
-    retryCommitDeletes("rewrite-deletes") { () =>
+    commit("rewrite-deletes") { () =>
       val curEntries = deleteFilesMeta()
       val gone = replaced -- curEntries.map(_.path).toSet
       if (gone.nonEmpty)
@@ -1799,7 +1708,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // eq entries + any pos files appended since the scan carry forward
       val kept = curEntries.filterNot(d => replaced.contains(d.path))
       val next = kept ++ rewritten
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
+      Some(CommitPlan(deleteManifests =
         if (next.isEmpty) Nil else Seq(writeDeleteManifest(next))))
     }
   }
@@ -1889,7 +1798,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     // the replaced eq parquets become orphans after the commit; the
     // bounded GC sweep (removeOrphanFiles) collects them with every
     // other dead file
-    retryCommitDeletes("rewrite-deletes") { () =>
+    commit("rewrite-deletes") { () =>
       val curEntries = deleteFilesMeta()
       val gone = replaced -- curEntries.map(_.path).toSet
       if (gone.nonEmpty)
@@ -1906,7 +1815,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
             s"(first: ${dangling.head})")
       val kept = curEntries.filterNot(d => replaced.contains(d.path))
       val next = kept ++ rewritten
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
+      Some(CommitPlan(deleteManifests =
         if (next.isEmpty) Nil else Seq(writeDeleteManifest(next))))
     }
   }
@@ -1934,7 +1843,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       scanSnapshot: Option[Long] = None): Long = {
     if (newData.isEmpty && newDeletes.isEmpty) return -1L
     val fresh = newData.distinctBy(_.path)
-    retryCommitDeletes(if (fresh.nonEmpty) "append" else "delete") { () =>
+    commit(if (fresh.nonEmpty) "append" else "delete") { () =>
       assertEqColumnsResolvable(newDeletes, "delta commit")
       val dangling = danglingDeleteRefs(newDeletes,
         files().map(_.path).toSet, scanSnapshot)
@@ -1946,11 +1855,13 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val curM = meta.current.map(_.manifests).getOrElse(Nil)
       val curD = meta.current.map(_.deleteManifests).getOrElse(Nil)
       val s = nextSeq
-      Some((if (fresh.isEmpty) curM else curM :+ writeManifest(stamp(fresh)),
-        meta.snapshots,
-        if (newDeletes.isEmpty) curD
-        else curD :+ writeDeleteManifest(newDeletes.map(d =>
-          if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))))
+      Some(CommitPlan(
+        manifests =
+          if (fresh.isEmpty) curM else curM :+ writeManifest(stamp(fresh)),
+        deleteManifests =
+          if (newDeletes.isEmpty) curD
+          else curD :+ writeDeleteManifest(newDeletes.map(d =>
+            if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))))
     }
   }
 
@@ -2162,7 +2073,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       scanSnapshot: Option[Long] = None): Long = {
     val fresh = newFiles.distinctBy(_.path)
     if (replacedPaths.isEmpty && fresh.isEmpty) return -1L
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       scanSnapshot.foreach { s =>
         assertReplacedLive(replacedPaths, "rewrite")
         val replacedMetas = files().filter(f => replacedPaths.contains(f.path))
@@ -2170,8 +2081,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       }
       val kept = files().filterNot(f => replacedPaths.contains(f.path)) ++
         stamp(fresh)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(CommitPlan(manifests = writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -2290,13 +2201,13 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       sortBy = effectiveSortBy, maxRecordsPerFile = maxRecordsPerFile,
       sortExprs = zKey)
     val replaced = candidates.map(_.path).toSet
-    retryCommitDeletes("compact") { () =>
+    commit("compact") { () =>
       assertNoNewDeletes(scanSnapshot, candidates, "compaction")
       assertReplacedLive(replaced, "compaction")
       val kept = files().filterNot(f => replaced.contains(f.path)) ++
         stamp(rewritten)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(CommitPlan(manifests = writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -2317,7 +2228,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     var orphanManifests: Set[String] = Set.empty
     var orphanDeleteFiles: Set[String] = Set.empty
     var orphanDeleteManifests: Set[String] = Set.empty
-    val id = retryCommit("expire") { () =>
+    val id = commit("expire") { () =>
       val ordered = meta.snapshots.sortBy(_.id)
       val byAge = ordered.filter(s =>
         s.timestampMs >= olderThanMs || s.id == meta.currentSnapshotId)
@@ -2412,7 +2323,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           .flatMap(readDeleteManifest).map(_.path).toSet
         orphanDeleteFiles =
           orphanDeleteManifests.flatMap(readDeleteManifest).map(_.path) -- keptDelPaths
-        Some((meta.current.map(_.manifests).getOrElse(Nil), keep))
+        Some(CommitPlan(keepSnapshots = keep))
       }
     }
     if (id >= 0) {
@@ -2715,10 +2626,9 @@ object LakeTable {
     */
   private[lake] lazy val hadoopConf = new Configuration()
 
-  /** JVM-global count of lost-CAS commit retries on the
-    * retryCommitFull path (appends / delete commits / property updates
-    * — the contended fast-append workload): each round that lost the
-    * rename race and re-derived against refreshed metadata.
+  /** JVM-global count of lost-CAS commit retries: each round of the
+    * one commit loop that lost the CAS race and re-derived against
+    * refreshed metadata, whatever the operation.
     * Observability only — the contention bench reads the delta around a
     * run; nothing branches on it. */
   val commitRetries = new java.util.concurrent.atomic.AtomicLong()

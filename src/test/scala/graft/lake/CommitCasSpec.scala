@@ -12,7 +12,9 @@ import org.apache.hadoop.fs.Path
   *  2. an installed conditional-put CAS makes racing committers settle
   *     every version exactly once (loser retries, no lost update);
   *  3. unregistered flat-store schemes fall back to best-effort
-  *     rename-if-absent (single-committer posture) rather than failing.
+  *     rename-if-absent (single-committer posture) rather than failing;
+  *  4. only a lost CAS is retried: a hard I/O error fails at once, and
+  *     every operation's lost CAS goes through the same counted retry.
   */
 class CommitCasSpec extends SparkSpec {
 
@@ -98,6 +100,76 @@ class CommitCasSpec extends SparkSpec {
       val ids = fin.snapshots.map(_.id).sorted
       assert(ids == (ids.min to ids.max), s"version chain has gaps: $ids")
     } finally CommitCas.unregister("mocks3")
+  }
+
+  test("a hard I/O error from the CAS fails the commit on its first " +
+      "attempt, without retrying and without moving the table") {
+    // manifests publish normally; the metadata version swap — the CAS
+    // the commit loop guards — fails the way a full disk would
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val diskFull = new java.io.IOException("No space left on device")
+    CommitCas.register("mocks3", new CommitCas {
+      override def publish(fs: org.apache.hadoop.fs.FileSystem, dest: Path,
+          content: String): Unit =
+        if (!dest.getName.matches("v[0-9]+\\.json"))
+          CommitCas.RenameIfAbsent.publish(fs, dest, content)
+        else {
+          calls.incrementAndGet()
+          throw diskFull
+        }
+    })
+    try {
+      val loc = mockLoc("cas-hard-error")
+      LakeTable.drop(loc)
+      val t = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val retries = LakeTable.commitRetries.get()
+      val thrown = intercept[java.io.IOException] {
+        t.append(Seq(DataFileMeta(s"$loc/data/a.parquet", 100L, 10L, bucket(0))))
+      }
+      assert(thrown eq diskFull)
+      assert(LakeTable.commitRetries.get() == retries,
+        "a hard I/O error was retried as if it were a lost CAS")
+      assert(calls.get() == 1, s"version CAS called ${calls.get()} times")
+      val reloaded = LakeTable.load(loc)
+      assert(reloaded.currentSnapshotId == 0L)
+      assert(reloaded.files().isEmpty)
+      LakeTable.drop(loc)
+    } finally CommitCas.unregister("mocks3")
+  }
+
+  test("a stale handle's lost CAS is retried by every operation") {
+    def file(loc: String, name: String) =
+      DataFileMeta(s"$loc/data/$name.parquet", 100L, 10L, bucket(0))
+    val ops: Seq[(String, (LakeTable, String) => Long)] = Seq(
+      "addColumn" -> ((t, _) =>
+        t.addColumn("extra", org.apache.spark.sql.types.LongType)),
+      "setPartitionWidth" -> ((t, _) =>
+        t.setPartitionWidth(t.spec.widthMicros * 2)),
+      "stageAppend" -> ((t, loc) => t.stageAppend(Seq(file(loc, "s")), "audit")),
+      "rollbackTo" -> ((t, _) => t.rollbackTo(1L)),
+      "rewriteManifests" -> ((t, _) => t.rewriteManifests()),
+      "createTag" -> ((t, _) => t.createTag("pinned", 1L)))
+    for ((name, op) <- ops) withClue(s"$name: ") {
+      val loc = tmpDir(s"cas-stale-$name")
+      LakeTable.drop(loc)
+      val t1 = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      t1.append(Seq(file(loc, "a")))
+      t1.append(Seq(file(loc, "b")))
+      // loaded before t1's next commit: its first CAS targets the version
+      // t1 is about to publish, and loses
+      val stale = LakeTable.load(loc)
+      t1.append(Seq(file(loc, "c")))
+      val retries = LakeTable.commitRetries.get()
+      val id = op(stale, loc)
+      assert(id > t1.currentSnapshotId, s"did not land after t1 (id $id)")
+      val fin = LakeTable.load(loc)
+      assert(fin.snapshots.exists(_.id == id))
+      val ids = fin.snapshots.map(_.id).sorted
+      assert(ids == (ids.min to ids.max), s"version chain has gaps: $ids")
+      assert(LakeTable.commitRetries.get() > retries,
+        "lost CAS not counted as a retry")
+      LakeTable.drop(loc)
+    }
   }
 
   test("5-way local-FS append storm: no commit lost, no committer dies " +

@@ -1,6 +1,11 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{DecimalNode, IntNode, LongNode,
+  NullNode, ObjectNode}
+import graft.lake.Json
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): runs the headline batch queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -174,9 +179,9 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(ExchangeProbe)
 
-    // the join-shaped entries whose reps the ExchangeProbe brackets; the
-    // SPJ pair and the stream-catchup region are probed at their own
-    // call sites below (they time through dedicated runners). The two
+    // the entries whose timed reps the ExchangeProbe brackets; the SPJ
+    // pair and the stream-catchup region are probed at their own call
+    // sites below (they time through dedicated runners). The two
     // heavy entries are the other r14 bouncers (+26%/+37% same-code) —
     // their bytes include scratch-table build shuffles, which is fine:
     // the adjudication compares each entry against ITS OWN prior rounds.
@@ -188,9 +193,12 @@ object Bench {
       "d01_dedup_incremental",
       // r15 verdict item 3: the driver's trained-ANN regression
       // (3.95 -> 6.31 s on a code path whose r16 same-JVM A/B read flat)
-      // gets the same adjudication bracket; ingest/maintenance are
-      // probed at their own best2 call sites below
-      "d02_ann_indexed_trained")
+      // gets the same adjudication bracket
+      "d02_ann_indexed_trained",
+      // r15 verdict item 3: the ingest_100k 2.17 -> 4.04 s move happened
+      // on byte-identical code and could not be adjudicated bytes-moved
+      // vs time-per-byte
+      "ingest_100k", "maintenance_compact")
     // short artifact prefixes for the `exchange` object's keys
     val exchangeKeyNames = Map(
       "b09_join_inner" -> "b09", "b11_join_left" -> "b11",
@@ -215,7 +223,7 @@ object Bench {
     // phase split record it on EVERY run, but the bench reports the MIN
     // rep — capturing phases post-hoc took them from the LAST rep, so a
     // taxed last rep made phases sum to 2× the reported wall (r14's own
-    // artifact: ann phases 9.58 s vs entry 4.05 s). run() now snapshots
+    // artifact: ann phases 9.58 s vs entry 4.05 s). bestOf snapshots
     // the phases at the rep that set the reported min and appends
     // phases_wall_s so sum-of-phases ≈ wall is checkable from the JSON.
     def zipfStylePhases(idx: () => Seq[(String, Double)],
@@ -252,33 +260,35 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    /** Warmup run (discarded), then best of two timed runs — plus a THIRD
-      * timed run when the best so far is sub-1.5 s (r10 verdict item 1:
+    /** The one rep protocol, for every envelope, lifecycle and heavy
+      * entry: warmup run (discarded), then best of two timed runs — plus a
+      * THIRD timed run when the best so far is sub-1.5 s (r10 verdict item 1:
       * the envelope is ~25 entries dominated by fixed per-job overhead, so
       * on a weather-degraded VM a single bad scheduler/GC pause inflates a
       * 0.3 s entry 2-3×; one extra rep on the cheap entries costs ~10 s of
       * wall total and moves the reported min materially toward the true
       * floor. Entries ≥1.5 s keep best-of-2: their runtime is real work,
       * spiky noise is proportionally small, and a third rep there would
-      * add minutes).
+      * add minutes). `f` returns one rep's wall in seconds, -1 on failure;
+      * reps of the `exchangeFamily` entries get the ExchangeProbe bracket.
       */
-    def run(name: String): Double = {
-      val probed = exchangeFamily(name)
-      val phases = phaseSources.get(name)
+    def bestOf(key: String)(f: () => Double): Double = {
+      val probed = exchangeFamily(key)
+      val phases = phaseSources.get(key)
       var minSoFar = Double.MaxValue
       def rep(): Double = {
         if (probed) ExchangeProbe.reset()
-        val w = runOnce(name)
-        if (probed) recordExchange(name, w)
+        val w = f()
+        if (probed) recordExchange(key, w)
         if (w >= 0 && w < minSoFar) {
           minSoFar = w
           // snapshot the phase split AT the rep that set the reported min
           phases.foreach(g =>
-            minRepPhases(name) = g() :+ ("phases_wall_s" -> w))
+            minRepPhases(key) = g() :+ ("phases_wall_s" -> w))
         }
         w
       }
-      runOnce(name) // warmup — never probed, never sets the min
+      f() // warmup — never probed, never sets the min
       val a = rep(); val b = rep()
       val best = if (a < 0 || b < 0) math.max(a, b) else math.min(a, b)
       if (best >= 0 && best < 1.5) {
@@ -347,14 +357,10 @@ object Bench {
       import org.apache.spark.sql.functions._
       val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-scan-${java.util.UUID.randomUUID()}"
       val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
-      // SPARK_GRAFT_LAKE_SCAN_ROWS: per-commit row count (default 100k × 4
-      // commits = 400k) — raise it when measuring the reader tax at a scale
-      // where decode dominates fixed per-query overhead.
-      val rowsPer = sys.env.get("SPARK_GRAFT_LAKE_SCAN_ROWS")
-        .map(_.toInt).getOrElse(100000)
+      // 100k rows × 4 commits = 400k
       for (i <- 0 until 4)
         table.append(LakeWriter.writeDataFiles(
-          LakeWriter.generateBatch(spark, rowsPer, (5666666L + i) * 300000000L, seed = 200 + i),
+          LakeWriter.generateBatch(spark, 100000, (5666666L + i) * 300000000L, seed = 200 + i),
           table, filesPerPartition = 4))
       val paths = table.files().map(_.path)
       def agg(df: org.apache.spark.sql.DataFrame) =
@@ -471,8 +477,8 @@ object Bench {
       * code change on this path and no way to adjudicate it from the
       * artifact): each side's detail — total data files, planned files
       * per needle serve, and every rep's wall — lands in
-      * `pointLookupDetail` (compact totals+planned+worst-rep on the
-      * stdout line, per-rep walls in BENCH_FULL.json). Planned-count
+      * `pointLookupDetail` (the planned counts on the stdout line, the
+      * rest in the full artifact). Planned-count
       * drift means the layout stopped pruning; same counts with
       * uniformly slow reps means per-open cost (fs weather); one bad
       * rep means a scheduler/GC pause the min already absorbs.
@@ -553,7 +559,11 @@ object Bench {
       // needles exist by construction (v is a bijection on [0, 1000000))
       val (s, sDetail) = side(sorted, sortedLoc, "s")
       val (p, pDetail) = side(plain, plainLoc, "p")
-      pointLookupDetail = sDetail ++ pDetail
+      // sp/pp: the two planned counts again under the stdout line's short
+      // names (the pruning-drift canary; sorted must stay 1)
+      pointLookupDetail = sDetail ++ pDetail ++ (sDetail ++ pDetail).collect {
+        case ("s_planned", v) => "sp" -> v
+        case ("p_planned", v) => "pp" -> v }
       System.err.println("[bench] point_lookup detail: " + pointLookupDetail
         .map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
       spark.sql(s"DROP TABLE $sorted"); spark.sql(s"DROP TABLE $plain")
@@ -666,108 +676,6 @@ object Bench {
       secs
     }
 
-    /** SPARK_GRAFT_HEAVY_SCALE=m1[,m2,...]: price the two iterative heavy
-      * operators against corpus size (a dev measurement like
-      * SPARK_GRAFT_LAKE_SCAN_ROWS — the driver's default run leaves it
-      * unset so the round artifact stays comparable). For each multiplier
-      * m the sf corpus is replicated m× under shifted ids — document
-      * copies append one per-copy token (near-dup clusters grow m×, the
-      * operator's actual work shape), embedding copies are exact twins —
-      * written as a scratch sf-layout dir, and the UNCHANGED
-      * d01_dedup_cluster / d01_semdedup queries run against it. Reported:
-      * seconds per entry plus the CC fixpoint round count on stderr, so
-      * the O(log diameter) claim is a measured rounds-vs-size curve.
-      */
-    def runHeavyScale(mults: Seq[Int]): Seq[(String, Double)] = {
-      import org.apache.spark.sql.functions._
-      val docs = graft.Tables.t(spark, sfDir, "documents")
-      val emb = graft.Tables.t(spark, sfDir, "embeddings")
-      val maxDoc = docs.agg(max("doc_id")).head().getLong(0) + 1
-      val maxVec = emb.agg(max("vec_id")).head().getLong(0) + 1
-      mults.flatMap { m =>
-        val scratch = s"${System.getProperty("java.io.tmpdir")}/graft-heavy-x$m-${java.util.UUID.randomUUID()}"
-        val sd = (0 until m).map { i =>
-          val d = docs.withColumn("doc_id", col("doc_id") + lit(i * maxDoc))
-          if (i == 0) d
-          else d.withColumn("text", concat(col("text"), lit(s" cp$i")))
-        }.reduce(_ union _)
-        val se = (0 until m).map(i =>
-          emb.withColumn("vec_id", col("vec_id") + lit(i * maxVec)))
-          .reduce(_ union _)
-        sd.write.parquet(s"$scratch/documents.parquet")
-        se.write.parquet(s"$scratch/embeddings.parquet")
-        def onceAt(name: String): Double = {
-          val t0 = System.nanoTime()
-          try SparkEntry.queries(name)(spark, scratch)
-            .write.mode("overwrite").format("noop").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name x$m failed: ${e.getMessage}")
-            return -1.0
-          } finally spark.sqlContext.clearCache()
-          (System.nanoTime() - t0) / 1e9
-        }
-        // the standard warmup+best-of-2 protocol, one definition for all
-        // three entries so a later edit can't silently drop a warmup
-        def best2At(name: String): Double = {
-          onceAt(name); math.min(onceAt(name), onceAt(name))
-        }
-        val cluster = best2At("d01_dedup_cluster")
-        val ccRounds = graft.queries.PipelineQueries.lastCcRounds
-        System.err.println(s"[bench] heavy_scale x$m: cc_rounds=$ccRounds")
-        val sem = best2At("d01_semdedup")
-        val mh = best2At("d03_minhash_lsh")
-        // the round-8 incremental/index paths priced against corpus size
-        // too: the per-arrival MinHash gate (committed band space grows
-        // with the corpus) and the committed-index build+serve
-        val mhInc = best2At("d01_minhash_incremental")
-        val annIdx = best2At("d02_ann_indexed")
-        // round-9 committed-index variants: the persisted band index
-        // (build one commit + increment-proportional gate/maintenance)
-        // and the trained-model ANN index (adds the Lloyd-round training
-        // jobs to the build side)
-        val mhIdx = best2At("d03_minhash_index")
-        val annTrained = best2At("d02_ann_indexed_trained")
-        // the committed semantic cell index (build one commit +
-        // increment-sized gate/maintenance) against corpus size
-        val semIdx = best2At("d01_semdedup_index")
-        // packed-stream sequence packing: a pure two-phase prefix sum —
-        // the curve should track corpus size ~linearly with no fixpoint
-        val seqPack = best2At("d04_seq_pack")
-        // round-11 additions priced against corpus size: substring-span
-        // dedup (the shingle groupBy is the wide stage — should track
-        // corpus ~linearly), the committed BM25 index (build ∝ corpus,
-        // serve ∝ query-term postings), and the trained LR (6 scans +
-        // map-side partial aggs — the flattest curve here by design)
-        val substr = best2At("d01_dedup_substring")
-        val substrIdx = best2At("d01_substring_index")
-        val bm25Idx = best2At("d02_bm25_index")
-        val qlr = best2At("d04_quality_lr")
-        // round-12 additions: the positional index (same two-level layout
-        // as BM25 — curve should track postings ~linearly) and the fused
-        // committed-arm hybrid (serve ∝ query; build ∝ corpus encode)
-        val phraseIdx = best2At("d02_phrase_index")
-        val hybrid = best2At("d02_hybrid_indexed")
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(scratch))
-        Seq(s"d01_dedup_cluster_x$m" -> cluster, s"d01_semdedup_x$m" -> sem,
-          s"d03_minhash_lsh_x$m" -> mh,
-          s"d01_minhash_incremental_x$m" -> mhInc,
-          s"d02_ann_indexed_x$m" -> annIdx,
-          s"d03_minhash_index_x$m" -> mhIdx,
-          s"d02_ann_indexed_trained_x$m" -> annTrained,
-          s"d01_semdedup_index_x$m" -> semIdx,
-          s"d04_seq_pack_x$m" -> seqPack,
-          s"d01_dedup_substring_x$m" -> substr,
-          s"d01_substring_index_x$m" -> substrIdx,
-          s"d02_bm25_index_x$m" -> bm25Idx,
-          s"d04_quality_lr_x$m" -> qlr,
-          s"d02_phrase_index_x$m" -> phraseIdx,
-          s"d02_hybrid_indexed_x$m" -> hybrid,
-          // the O(log diameter) claim as artifact data, not SURVEY prose:
-          // rounds-vs-size rides the same JSON object as the seconds
-          s"cc_rounds_x$m" -> ccRounds.toDouble)
-      }
-    }
-
     /** r11 verdict item 1 — the WELL-CONDITIONED headline ratio. Three
       * rounds of driver artifacts computed >2× vs DuckDB while committed
       * runs sat at 1.15–1.55×; the in-artifact canaries proved why: at
@@ -795,7 +703,7 @@ object Bench {
       * supplier; events offset user_id+event_id so the range join's
       * per-user pairing never crosses replicas) while the genuine
       * dimensions (nation/region) stay unreplicated, exactly like a
-      * higher scale factor. Documents get the heavy-scale " cp$i" suffix
+      * higher scale factor. Documents get a per-replica " cp$i" suffix
       * and embeddings a one-dimension deterministic perturbation per
       * replica (replica texts AND vectors stay unique, so dedup
       * semantics don't degenerate into giant equal groups — the r12
@@ -813,22 +721,17 @@ object Bench {
       * not define it. The DuckDB side runs through the same
       * tools/bench_duckdb.py with mode=median3 against the same scratch
       * corpus in the same process run — same weather for both engines by
-      * construction. Returns (spark per-entry seconds, raw duckdb JSON).
-      */
-    def runEnvelopeX10(m: Int):
-        (Seq[(String, Double)], String, Seq[(String, Double)]) =
-      runEnvelopeAtScale(m, headline, withPack = true)
-
-    /** One ×m replicated-corpus tier: build the scratch corpus, run the
-      * given entries through both engines (same run, same storage), and
-      * return (spark walls, duckdb json, budget-pack phases). Factored
-      * from the ×10 section (r14 verdict item 4) so a second tier can
-      * re-run just the floor-dominated subset at a higher multiplier —
-      * the ×10 corpus at 170 MB leaves ~half the overlap sub-second on
-      * BOTH engines, carrying no engine signal.
+      * construction.
+      *
+      * One ×m tier builds the scratch corpus, runs the given entries
+      * through both engines (same run, same storage), and returns (spark
+      * walls, duckdb seconds, budget-pack phases). A second tier re-runs
+      * just the floor-dominated subset at a higher multiplier (r14 verdict
+      * item 4) — the ×10 corpus at 170 MB leaves ~half the overlap
+      * sub-second on BOTH engines, carrying no engine signal.
       */
     def runEnvelopeAtScale(m: Int, names: Seq[String], withPack: Boolean):
-        (Seq[(String, Double)], String, Seq[(String, Double)]) = {
+        (Seq[(String, Double)], Option[JsonNode], Seq[(String, Double)]) = {
       import org.apache.spark.sql.functions._
       val scratch = s"${System.getProperty("java.io.tmpdir")}/graft-envx$m-${java.util.UUID.randomUUID()}"
       def tb(n: String) = graft.Tables.t(spark, sfDir, n)
@@ -961,30 +864,9 @@ object Bench {
           Nil
         }
       // DuckDB over the SAME scratch corpus, same protocol, same run
-      val duckJson: String = try {
-        val sqls = SparkEntry.oracleSql.filter { case (k, _) =>
-          names.contains(k) }
-        val node = graft.lake.Json.obj()
-        sqls.foreach { case (k, v) => node.put(k, v) }
-        val f = java.io.File.createTempFile("graft-benchx10-sql", ".json")
-        f.deleteOnExit()
-        java.nio.file.Files.write(f.toPath,
-          graft.lake.Json.write(node).getBytes("UTF-8"))
-        val sb = new StringBuilder
-        // stderr INHERITs the bench's own stderr: a piped-but-unread
-        // stderr deadlocks the child (and this run) the moment a warning
-        // storm overflows the ~64 KB pipe buffer; merging into stdout
-        // would corrupt the JSON line instead
-        val proc = new ProcessBuilder("python3", "tools/bench_duckdb.py",
-          scratch, f.getAbsolutePath, "median3")
-          .redirectError(ProcessBuilder.Redirect.INHERIT).start()
-        val src = scala.io.Source.fromInputStream(proc.getInputStream)
-        try sb.append(src.mkString) finally src.close()
-        val line = sb.toString.trim
-        if (proc.waitFor() == 0 && line.startsWith("{")) line else "null"
-      } catch { case _: Throwable => "null" }
+      val duck = runDuckdb(scratch, names.toSet, Some("median3"))
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(scratch))
-      (sparkSide, duckJson, packPhases)
+      (sparkSide, duck, packPhases)
     }
 
     /** Realistic-vocabulary retrieval selectivity (r12 verdict item 3).
@@ -1125,7 +1007,7 @@ object Bench {
       out.toSeq
     }
 
-    /** SPARK_GRAFT_COMMIT_CURVE=1: commit latency vs snapshot-history
+    /** Commit latency vs snapshot-history
       * depth (r7 verdict item #4). The reference's whole point is
       * low-latency ingest; the delta-metadata codec claims O(1)-ish
       * commits at deep history, but the standard benches only price
@@ -1135,9 +1017,9 @@ object Bench {
       * 1000. The appended metas are synthetic (unique paths, no physical
       * parquet): the probe isolates the COMMIT PROTOCOL — metadata codec
       * + CAS + property GC — from Spark job-launch noise, which at ~1 ms
-      * per commit would otherwise be 100× the signal. Env-gated like
-      * SPARK_GRAFT_HEAVY_SCALE; reported under its own `commit_curve`
-      * JSON key (ms units), never inside `total`/`heavy_total`.
+      * per commit would otherwise be 100× the signal. Reported under its
+      * own `commit_curve` JSON key (ms units), never inside
+      * `total`/`heavy_total`.
       */
     def runCommitCurve(): Seq[(String, Double)] = {
       import graft.lake._
@@ -1166,801 +1048,6 @@ object Bench {
           .mkString(" "))
       Seq("ms_per_commit_at_10" -> win(10), "ms_per_commit_at_100" -> win(100),
         "ms_per_commit_at_1000" -> win(1000))
-    }
-
-    /** SPARK_GRAFT_PLAN_SCALE=<nFiles>: metadata-path planning cost at a
-      * file count the sf corpus can't reach — n synthetic file metas land
-      * through real fast-append commits (500/commit, the queue-mode cap),
-      * rewrite_manifests bins them at 50k entries/manifest, and the probe
-      * times (a) a COLD table load + full files() inventory walk (fresh
-      * process planning a deep table), (b) the warm re-walk (cached
-      * manifest parses), and (c) executor-side filesDF().count() — the
-      * shape `$files`/orphan-GC/compaction planning use. Env-gated like
-      * the commit curve; reported under its own `plan_scale` key in ms.
-      */
-    /** SPARK_GRAFT_INDEX_COMPACT=m: the committed-index fragmentation
-      * debt a live gate accretes — every maintenance commit appends one
-      * small file per touched bucket — and the targeted-compaction
-      * payoff, against an m×-replicated corpus (m=1: the plain sf
-      * corpus). Builds a band index (one corpus commit + 25
-      * arrival-cadence maintenance commits), times the gate semi-join
-      * against the FRAGMENTED index, prices a PARTITION-SCOPED compact
-      * first (one quarter of the band space — the hot-bucket maintenance
-      * an operator actually runs at 100 TB, bounding both the rewrite
-      * and the conflict window), then the full bin-pack compact,
-      * re-times the gate, and asserts the verdict count is unchanged
-      * (compaction is a rewrite, never a semantic change). Reported
-      * under its own `index_compact` key; never joins the totals.
-      */
-    def runIndexCompact(mult: Int): Seq[(String, Double)] = {
-      import graft.lake._
-      import org.apache.spark.sql.functions._
-      val P = graft.queries.PipelineQueries
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-idxc-${java.util.UUID.randomUUID()}"
-      val docs0 = graft.Tables.t(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"))
-      val maxDoc = docs0.agg(max("doc_id")).head().getLong(0) + 1
-      // m× corpus under shifted ids; copies append a per-copy token so
-      // the near-dup cluster shape grows with m (the heavy-scale recipe)
-      val docs = (0 until mult).map { i =>
-        val d = docs0.withColumn("doc_id", col("doc_id") + lit(i * maxDoc))
-        if (i == 0) d
-        else d.withColumn("text", concat(col("text"), lit(s" cp$i")))
-      }.reduce(_ union _)
-      val evens = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      val odds = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      val index = LakeTable.create(loc, P.BandIndexDdl,
-        TruncateSpec("bkey", 1L))
-      index.append(LakeWriter.writeDataFiles(
-        P.withBandKey(P.explodeBands(P.md5MinhashSigs(evens))
-          .select("band", "h0", "h1").distinct()), index))
-      for (i <- 0 until 25) {
-        index.append(LakeWriter.writeDataFiles(
-          P.withBandKey(P.explodeBands(P.md5MinhashSigs(
-              odds.filter(pmod(col("doc_id"), lit(50)) === i * 2 + 1)))
-            .select("band", "h0", "h1").distinct()), index))
-      }
-      val filesBefore = index.refresh().files().size
-      // key-space balance under the uniformized bkey layout: file count
-      // per quarter of the 16 buckets — the r9 h0-minima layout measured
-      // ~70% in the low quarter; the re-key must keep max/min ≤ ~2×
-      val quarterFiles = index.files()
-        .groupBy(f => (f.partitionValue / 4).min(3L)).view
-        .mapValues(_.size.toDouble).toMap.withDefaultValue(0.0)
-      val wave = docs.filter(col("doc_id") < 200)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      def gateOnce(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = P.explodeBands(P.md5MinhashSigs(wave))
-          .join(spark.read.format("laketable").load(loc),
-            Seq("band", "h0", "h1"), "left_semi")
-          .select("doc_id").distinct().count()
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      gateOnce() // warmup
-      val (gFrag, nFrag) = gateOnce()
-      // PARTITION-SCOPED first: compact one quarter of the band space
-      // (bkey buckets 0–3) — the targeted slice sweep; its cost must
-      // track the targeted slice, not the table
-      val tP = System.nanoTime()
-      index.compactFiles(spark, minInputFiles = 2,
-        partitionMin = Some(0L), partitionMax = Some(3L))
-      val compactPartS = (System.nanoTime() - tP) / 1e9
-      val filesAfterPart = index.refresh().files().size
-      val t0 = System.nanoTime()
-      index.compactFiles(spark, minInputFiles = 2)
-      val compactS = (System.nanoTime() - t0) / 1e9
-      val filesAfter = index.refresh().files().size
-      val (gComp, nComp) = gateOnce()
-      assert(nFrag == nComp, s"compaction changed gate verdicts: $nFrag != $nComp")
-      assert(filesAfter < filesBefore, "compaction did not reduce index file count")
-      LakeTable.drop(loc)
-      Seq("corpus_mult" -> mult.toDouble,
-        "files_before" -> filesBefore.toDouble,
-        "files_q0" -> quarterFiles(0L), "files_q1" -> quarterFiles(1L),
-        "files_q2" -> quarterFiles(2L), "files_q3" -> quarterFiles(3L),
-        "files_after_part" -> filesAfterPart.toDouble,
-        "files_after" -> filesAfter.toDouble,
-        "gate_frag_s" -> gFrag, "gate_compact_s" -> gComp,
-        "compact_part_s" -> compactPartS, "compact_s" -> compactS)
-    }
-
-    /** Contended-committer pricing (r9 verdict item 5): the reference's
-      * `writeandcommitfiles` runs FIVE committing processes against one
-      * table (run.sh:58-68, Writer.java:116); the CAS is fuzz-proven
-      * correct (CommitCasSpec) but was never priced under contention.
-      * Five threads (own LakeTable instance each — the multi-process
-      * shape in one JVM) append 200 one-file commits each; reported:
-      * p50/p99 commit latency across all 1000, lost-CAS retries per
-      * commit (LakeTable.commitRetries delta), and the single-committer
-      * p50 at the same depth as the uncontended baseline. Local-FS
-      * rename CAS; the mocks3 conditional-put seam is test-scoped
-      * (CommitCasSpec fuzzes its correctness) so object-store latency is
-      * not modeled here — this prices the COORDINATION cost only.
-      */
-    def runCommitContention(threads: Int = 5,
-        perThread: Int = 200): Seq[(String, Double)] = {
-      import graft.lake._
-      def pct(xs: Seq[Double], p: Double): Double = {
-        val s = xs.sorted
-        s(math.min(s.size - 1, (p * s.size).toInt))
-      }
-      def commitStorm(nThreads: Int): (Seq[Double], Long) = {
-        val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-cont-${java.util.UUID.randomUUID()}"
-        LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
-        val before = LakeTable.commitRetries.get()
-        val lats = java.util.Collections.synchronizedList(
-          new java.util.ArrayList[Double]())
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-        val start = new java.util.concurrent.CountDownLatch(1)
-        val futures = (0 until nThreads).map { th =>
-          pool.submit(new Runnable {
-            override def run(): Unit = {
-              val t = LakeTable.load(loc) // own instance = own metadata view
-              start.await()
-              for (i <- 0 until perThread) {
-                val m = DataFileMeta(s"$loc/data/t$th-f$i.parquet", 1024L,
-                  10L, 5666666L * 300000000L)
-                val t0 = System.nanoTime()
-                t.append(Seq(m))
-                lats.add((System.nanoTime() - t0) / 1e6)
-              }
-            }
-          })
-        }
-        start.countDown()
-        pool.shutdown()
-        assert(pool.awaitTermination(20, java.util.concurrent.TimeUnit.MINUTES))
-        // surface committer deaths (retry exhaustion) — the first probe
-        // run swallowed them in the Future and misread the loss as
-        // "files missing"; a dead committer must fail the probe loudly
-        futures.foreach(_.get())
-        val table = LakeTable.load(loc)
-        assert(table.files().size == nThreads * perThread,
-          s"contended commits lost files: ${table.files().size}")
-        assert(table.currentSnapshotId == nThreads.toLong * perThread,
-          s"expected ${nThreads * perThread} snapshots, got ${table.currentSnapshotId}")
-        LakeTable.drop(loc)
-        import scala.jdk.CollectionConverters._
-        (lats.asScala.toSeq, LakeTable.commitRetries.get() - before)
-      }
-      val (base, baseRetries) = commitStorm(1)
-      val (cont, contRetries) = commitStorm(threads)
-      val out = Seq(
-        "threads" -> threads.toDouble,
-        "commits" -> cont.size.toDouble,
-        "p50_ms" -> pct(cont, 0.50), "p99_ms" -> pct(cont, 0.99),
-        "retries_per_commit" -> contRetries.toDouble / cont.size,
-        "single_p50_ms" -> pct(base, 0.50),
-        "single_p99_ms" -> pct(base, 0.99),
-        "single_retries_per_commit" -> baseRetries.toDouble / base.size)
-      System.err.println("[bench] commit_contention: " + out.map {
-        case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-      out
-    }
-
-    /** SPARK_GRAFT_MOCKS3=<latencyMs>: object-store pricing (r10 verdict
-      * items 3+7). Local-FS numbers undersell per-file latency ~300×
-      * (NIO ~0.05 ms vs 10-20 ms per object-store round-trip), so three
-      * artifacts' caveats ("local FS undersells...") were never priced.
-      * This probe re-runs the latency-sensitive protocol paths through
-      * the `mocks3:` FS with MockStoreLatency injecting <latencyMs> per
-      * round-trip-shaped primitive and the ConditionalPutCas registered
-      * (the real flat-store commit posture — rename is NOT a CAS there):
-      *
-      *  1. commit curve at depth 300 — what a commit costs when every
-      *     metadata read/write is a request, not a syscall;
-      *  2. the 5-way contention storm (item 7: the reference's
-      *     20000-retry posture targets exactly this object-store race) —
-      *     zero losses asserted, p50/p99/retries reported;
-      *  3. snapshot-expiry GC over ~600 retired metadata files, per-file
-      *     deletes vs a registered S3-DeleteObjects-style batch (1000
-      *     keys/request) — the BulkDelete seam's reason to exist;
-      *  4. the orphan sweep over 1500 planted orphans, same pair.
-      *
-      * Setup (table builds, orphan planting) runs with latency OFF — the
-      * timed regions price the OPERATIONS, not the fixture construction.
-      * All keys land under `mocks3_latency` in the artifact.
-      */
-    def runMockS3(latencyMs: Int): Seq[(String, Double)] = {
-      import graft.lake._
-      val out = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      out += "latency_ms" -> latencyMs.toDouble
-      def lat[A](on: Boolean)(f: => A): A = {
-        if (on) System.setProperty(MockStoreLatency.Prop, latencyMs.toString)
-        else System.clearProperty(MockStoreLatency.Prop)
-        try f finally System.clearProperty(MockStoreLatency.Prop)
-      }
-      def loc(tag: String) =
-        s"mocks3:${System.getProperty("java.io.tmpdir")}/graft-bench-s3-$tag-${java.util.UUID.randomUUID()}"
-      def pct(xs: Seq[Double], p: Double): Double = {
-        val s = xs.sorted
-        s(math.min(s.size - 1, (p * s.size).toInt))
-      }
-      // one S3 DeleteObjects request per ≤1000 keys; the store deletes
-      // server-side (no per-key client round-trip), emulated by charging
-      // ONE latency per chunk and removing the backing files via NIO
-      object BatchDelete extends BulkDelete {
-        override def deleteAll(fs: org.apache.hadoop.fs.FileSystem,
-            paths: Seq[org.apache.hadoop.fs.Path]): Unit =
-          paths.grouped(1000).foreach { chunk =>
-            MockStoreLatency.charge()
-            chunk.foreach(p => java.nio.file.Files.deleteIfExists(
-              java.nio.file.Paths.get(p.toUri.getPath)))
-          }
-      }
-      CommitCas.register("mocks3", ConditionalPutCas)
-      try {
-        // ---- 1. commit curve under per-request latency ----
-        val curveLoc = loc("curve")
-        val curve = LakeTable.create(curveLoc, LakeWriter.EventSchemaDdl,
-          LakeWriter.EventSpec)
-        val lats = lat(on = true) {
-          (0 until 300).map { i =>
-            val m = DataFileMeta(s"$curveLoc/data/f$i.parquet", 1024L, 10L,
-              5666666L * 300000000L)
-            val t0 = System.nanoTime()
-            curve.append(Seq(m))
-            (System.nanoTime() - t0) / 1e6
-          }
-        }
-        def win(until: Int): Double = {
-          val from = math.max(0, until - 10)
-          lats.slice(from, until).sum / (until - from)
-        }
-        out += "curve_ms_at_10" -> win(10)
-        out += "curve_ms_at_100" -> win(100)
-        out += "curve_ms_at_300" -> win(300)
-        System.err.println(f"[bench] mocks3 curve: at10=${win(10)}%.1fms " +
-          f"at100=${win(100)}%.1fms at300=${win(300)}%.1fms " +
-          f"total=${lats.sum / 1000}%.1fs")
-
-        // ---- 2. 5-way contention storm through the conditional put ----
-        // The first run of this probe at 15 ms/RT found REAL starvation:
-        // a loser's refresh+rederive cycle (~6 RTs) is slower than the
-        // in-sync pack's 2-RT win cycle, so one committer can lose every
-        // race until the pack drains — 100 straight losses killed it.
-        // That is precisely why the reference ships
-        // commit.retry.num-retries=20000 (Writer.java:116): on an object
-        // store the retry budget must cover the WHOLE contention window,
-        // not a fixed count of coin flips. The probe adopts the
-        // reference's posture via the table's own knobs: a deep retry
-        // budget plus a latency-proportional backoff base (10 ms → cap
-        // 640 ms, long enough to leapfrog the pack's cycle).
-        // The p99 here is STRUCTURAL, not a tuning defect (r12 verdict
-        // item 5, attributed r13): at 15 ms/op a lagging committer's
-        // refresh→rederive→CAS window is ~6 round-trips ≈ 90 ms while
-        // the in-sync pack lands a commit every ~25 ms, so its per-round
-        // win probability is ~e^(-window/intercommit) — a few percent —
-        // and its worst-case latency is the PACK-DRAIN time, for any
-        // backoff schedule. Two fairness levers shipped r13 (the
-        // bounded-tail ladder decay + the chain-break yield); closing
-        // the rest needs coordination (a fairness token), which no
-        // uncoordinated optimistic-CAS design has — the reference
-        // accepts the same tail via its 20000-retry posture
-        // (Writer.java:116). The CONTRACT is zero lost writes (asserted)
-        // with a retry budget covering the whole contention window; p90
-        // rides along so the tail's shape (a thin worst-case spike, not
-        // a fat tail) is in-artifact.
-        //
-        // r14 (verdict item 3): the pack-drain bound is now a DERIVED
-        // in-artifact key — <pfx>_structural_bound_ms = the rivals'
-        // total commits × the table's measured inter-commit time
-        // (storm wall / commits). "p99 ≤ bound" is the structural claim,
-        // checkable from the JSON alone.
-        def storm(pfx: String, committers: Int, perCommitter: Int): Unit = {
-          val contLoc = loc(pfx)
-          LakeTable.create(contLoc, LakeWriter.EventSchemaDdl,
-            LakeWriter.EventSpec,
-            Map(LakeFormat.PropCommitRetries -> "20000",
-              LakeFormat.PropCommitRetryWaitMs -> "10"))
-          val before = LakeTable.commitRetries.get()
-          val contLats = java.util.Collections.synchronizedList(
-            new java.util.ArrayList[Double]())
-          val tStorm = System.nanoTime()
-          lat(on = true) {
-            val pool =
-              java.util.concurrent.Executors.newFixedThreadPool(committers)
-            val start = new java.util.concurrent.CountDownLatch(1)
-            val futures = (0 until committers).map { th =>
-              pool.submit(new Runnable {
-                override def run(): Unit = {
-                  val t = LakeTable.load(contLoc)
-                  start.await()
-                  for (i <- 0 until perCommitter) {
-                    val m = DataFileMeta(s"$contLoc/data/t$th-f$i.parquet",
-                      1024L, 10L, 5666666L * 300000000L)
-                    val t0 = System.nanoTime()
-                    t.append(Seq(m))
-                    contLats.add((System.nanoTime() - t0) / 1e6)
-                  }
-                }
-              })
-            }
-            start.countDown()
-            pool.shutdown()
-            assert(pool.awaitTermination(20,
-              java.util.concurrent.TimeUnit.MINUTES))
-            futures.foreach(_.get()) // a dead committer fails the probe loudly
-          }
-          val stormWallMs = (System.nanoTime() - tStorm) / 1e6
-          val expect = committers.toLong * perCommitter
-          val contTable = LakeTable.load(contLoc)
-          assert(contTable.files().size == expect,
-            s"mocks3 contention lost files: ${contTable.files().size}")
-          assert(contTable.currentSnapshotId == expect,
-            s"expected $expect snapshots, got ${contTable.currentSnapshotId}")
-          import scala.jdk.CollectionConverters._
-          val cl = contLats.asScala.toSeq
-          out += s"${pfx}_commits" -> cl.size.toDouble
-          out += s"${pfx}_p50_ms" -> pct(cl, 0.50)
-          out += s"${pfx}_p90_ms" -> pct(cl, 0.90)
-          out += s"${pfx}_p99_ms" -> pct(cl, 0.99)
-          out += s"${pfx}_retries_per_commit" ->
-            (LakeTable.commitRetries.get() - before).toDouble / cl.size
-          out += s"${pfx}_structural_bound_ms" ->
-            (expect - perCommitter) * stormWallMs / expect
-          System.err.println(s"[bench] $pfx depth profile (mean ms per " +
-            "100-commit window): " + cl.grouped(100)
-              .map(w => f"${w.sum / w.size}%.0f").mkString(" "))
-          LakeTable.drop(contLoc)
-        }
-        storm("cont", committers = 5, perCommitter = 100)
-        // longer-drain case (r13 advice: the decay ladder's bounded
-        // per-retry wait must hold zero-loss over a drain window ~2×
-        // the standard storm's, or the retry budget is sized to the
-        // probe, not the regime). Env-gated: probes-artifact runs only.
-        if (sys.env.get("SPARK_GRAFT_MOCKS3_DRAIN").contains("1"))
-          storm("cont_long", committers = 5, perCommitter = 200)
-
-        /** Coordination COUNTERFACTUAL (r14 verdict item 8, opt-in): the
-          * same 5×100 storm, but each commit passes through a FIFO
-          * ticket-queue lease held ON the mock store — enqueue a unique
-          * ticket object (PUT), poll with LIST until own ticket is the
-          * queue head, commit, DELETE the ticket. The structural claim
-          * behind the ~9 s uncoordinated p99 is that flat object stores
-          * offer no coordination primitive, so CAS losers must drain the
-          * winners' pack; this probe prices the alternative world where
-          * an external lease service exists — commit latency becomes
-          * queue-wait + single-commit service and the tail should
-          * collapse by an order of magnitude. Ticket ordering comes from
-          * a shared monotonic counter (the stand-in for the lease
-          * service's sequencer — a ZK sequential node / DynamoDB atomic
-          * counter; its one round-trip is priced by the ticket PUT);
-          * every queue operation pays the store's injected latency.
-          * Env-gated (SPARK_GRAFT_MOCKS3_LEASE=1): probes-artifact only.
-          */
-        def leaseStorm(pfx: String, committers: Int,
-            perCommitter: Int): Unit = {
-          val contLoc = loc(pfx)
-          LakeTable.create(contLoc, LakeWriter.EventSchemaDdl,
-            LakeWriter.EventSpec,
-            Map(LakeFormat.PropCommitRetries -> "20000",
-              LakeFormat.PropCommitRetryWaitMs -> "10"))
-          val before = LakeTable.commitRetries.get()
-          val leaseDir = new org.apache.hadoop.fs.Path(s"$contLoc/_lease")
-          val lfs = leaseDir
-            .getFileSystem(new org.apache.hadoop.conf.Configuration())
-          val ticketSeq = new java.util.concurrent.atomic.AtomicLong()
-          val contLats = java.util.Collections.synchronizedList(
-            new java.util.ArrayList[Double]())
-          lat(on = true) {
-            lfs.mkdirs(leaseDir)
-            def acquire(): org.apache.hadoop.fs.Path = {
-              val id = ticketSeq.incrementAndGet()
-              val p = new org.apache.hadoop.fs.Path(leaseDir, f"t$id%020d")
-              lfs.create(p, false).close() // the ticket PUT
-              var mine = false
-              while (!mine) {
-                val entries = lfs.listStatus(leaseDir) // LIST round-trip
-                  .map(_.getPath.getName)
-                mine = entries.nonEmpty && entries.min == p.getName
-                if (!mine) Thread.sleep(2)
-              }
-              p
-            }
-            val pool =
-              java.util.concurrent.Executors.newFixedThreadPool(committers)
-            val start = new java.util.concurrent.CountDownLatch(1)
-            val futures = (0 until committers).map { th =>
-              pool.submit(new Runnable {
-                override def run(): Unit = {
-                  val t = LakeTable.load(contLoc)
-                  start.await()
-                  for (i <- 0 until perCommitter) {
-                    val m = DataFileMeta(s"$contLoc/data/t$th-f$i.parquet",
-                      1024L, 10L, 5666666L * 300000000L)
-                    // the latency a CALLER sees is acquire + commit +
-                    // release — the whole coordinated operation
-                    val t0 = System.nanoTime()
-                    val ticket = acquire()
-                    try t.append(Seq(m))
-                    finally lfs.delete(ticket, false)
-                    contLats.add((System.nanoTime() - t0) / 1e6)
-                  }
-                }
-              })
-            }
-            start.countDown()
-            pool.shutdown()
-            assert(pool.awaitTermination(30,
-              java.util.concurrent.TimeUnit.MINUTES))
-            futures.foreach(_.get())
-          }
-          val expect = committers.toLong * perCommitter
-          val contTable = LakeTable.load(contLoc)
-          assert(contTable.files().size == expect,
-            s"lease storm lost files: ${contTable.files().size}")
-          assert(contTable.currentSnapshotId == expect,
-            s"expected $expect snapshots, got ${contTable.currentSnapshotId}")
-          import scala.jdk.CollectionConverters._
-          val cl = contLats.asScala.toSeq
-          out += s"${pfx}_commits" -> cl.size.toDouble
-          out += s"${pfx}_p50_ms" -> pct(cl, 0.50)
-          out += s"${pfx}_p90_ms" -> pct(cl, 0.90)
-          out += s"${pfx}_p99_ms" -> pct(cl, 0.99)
-          out += s"${pfx}_max_ms" -> cl.max
-          out += s"${pfx}_retries_per_commit" ->
-            (LakeTable.commitRetries.get() - before).toDouble / cl.size
-          // depth profile: mean latency per 100-commit window (insertion
-          // order ≈ commit order) — distinguishes "tail = rare stall"
-          // from "tail = service time growing with table depth"
-          System.err.println(s"[bench] $pfx depth profile (mean ms per " +
-            "100-commit window): " + cl.grouped(100)
-              .map(w => f"${w.sum / w.size}%.0f").mkString(" "))
-          LakeTable.drop(contLoc)
-        }
-        if (sys.env.get("SPARK_GRAFT_MOCKS3_LEASE").contains("1"))
-          leaseStorm("cont_lease", committers = 5, perCommitter = 100)
-
-        // ---- 3. expiry GC: per-file deletes vs batched DeleteObjects ----
-        // two identical 300-commit tables built latency-OFF; expiry
-        // retires ~299 manifests + ~299 version files each, and the only
-        // difference between the two timed regions is the delete seam
-        def buildExpireTable(): LakeTable = {
-          val l = loc("expire")
-          val t = LakeTable.create(l, LakeWriter.EventSchemaDdl,
-            LakeWriter.EventSpec)
-          (0 until 300).foreach { i =>
-            t.append(Seq(DataFileMeta(s"$l/data/e$i.parquet", 1024L, 10L,
-              5666666L * 300000000L)))
-          }
-          // full overwrite unreferences all 300 appended files, so the
-          // expiry GC below has REAL data-file deletes to price (~600
-          // objects: retired data + manifests), not just the manifest
-          // tail — without this the delete phase was ~200 objects and
-          // the pair's numbers were dominated by the fold, not the seam
-          t.overwrite(Seq(DataFileMeta(s"$l/data/final.parquet", 1024L,
-            10L, 5666666L * 300000000L)))
-          t
-        }
-        val (expA, expB) = (buildExpireTable(), buildExpireTable())
-        val cutoff = System.currentTimeMillis() + 3600000L
-        val perFileExpire = lat(on = true) {
-          val t0 = System.nanoTime()
-          expA.expireSnapshots(cutoff, retainLast = 1)
-          (System.nanoTime() - t0) / 1e9
-        }
-        BulkDelete.register("mocks3", BatchDelete)
-        val batchExpire =
-          try lat(on = true) {
-            val t0 = System.nanoTime()
-            expB.expireSnapshots(cutoff, retainLast = 1)
-            (System.nanoTime() - t0) / 1e9
-          } finally BulkDelete.unregister("mocks3")
-        out += "expire_perfile_s" -> perFileExpire
-        out += "expire_batch_s" -> batchExpire
-        LakeTable.drop(expA.location); LakeTable.drop(expB.location)
-
-        // ---- 4. orphan sweep: same pair over 1500 planted orphans ----
-        def plantOrphans(t: LakeTable): Unit = {
-          val dataDir = java.nio.file.Paths.get(
-            new org.apache.hadoop.fs.Path(t.location, "data").toUri.getPath)
-          java.nio.file.Files.createDirectories(dataDir)
-          (0 until 1500).foreach { i =>
-            java.nio.file.Files.write(dataDir.resolve(s"orphan-$i.parquet"),
-              Array[Byte](1, 2, 3))
-          }
-        }
-        def buildOrphanTable(): LakeTable = {
-          val l = loc("orphan")
-          val t = LakeTable.create(l, LakeWriter.EventSchemaDdl,
-            LakeWriter.EventSpec)
-          t.append(Seq(DataFileMeta(s"$l/data/kept.parquet", 1024L, 10L,
-            5666666L * 300000000L)))
-          plantOrphans(t)
-          t
-        }
-        val orphA = buildOrphanTable()
-        val perFileOrphan = lat(on = true) {
-          val t0 = System.nanoTime()
-          val swept = orphA.removeOrphanFiles(spark, cutoff)
-          assert(swept.deletedCount == 1500L,
-            s"per-file sweep deleted ${swept.deletedCount}")
-          (System.nanoTime() - t0) / 1e9
-        }
-        val orphB = buildOrphanTable()
-        BulkDelete.register("mocks3", BatchDelete)
-        val batchOrphan =
-          try lat(on = true) {
-            val t0 = System.nanoTime()
-            val swept = orphB.removeOrphanFiles(spark, cutoff)
-            assert(swept.deletedCount == 1500L,
-              s"batch sweep deleted ${swept.deletedCount}")
-            (System.nanoTime() - t0) / 1e9
-          } finally BulkDelete.unregister("mocks3")
-        out += "orphan_perfile_s" -> perFileOrphan
-        out += "orphan_batch_s" -> batchOrphan
-        LakeTable.drop(orphA.location); LakeTable.drop(orphB.location)
-
-        // ---- 5. committed-index serve: layout pruning as request count ----
-        // r11 verdict item 2's done-criterion: the serve-side layout
-        // prune priced at 15 ms/request. The BM25 index builds
-        // latency-OFF on the mocks3 store (the probe prices the SERVE);
-        // the timed region is a FRESH load + scan + score, once with the
-        // two-level layout predicates (tkey buckets + thash footer skip)
-        // and once with them stripped — identical results, different
-        // request counts. planned-file keys carry the count evidence
-        // (one parquet file ≈ open + footer + read round-trips); the
-        // seconds carry what that costs through 32-way read parallelism.
-        {
-          import org.apache.spark.sql.functions.{col, concat, concat_ws,
-            count => fcount, element_at, lit, pmod, size => fsize,
-            split => fsplit, sum => fsum, typedLit, when, xxhash64}
-          val P = graft.queries.PipelineQueries
-          val LQ = graft.queries.LakeQueries
-          val idxLoc = loc("bm25idx")
-          // the testdata vocabulary is ~30 words, so the fixed probe
-          // terms ARE the corpus head: 80% of all postings are probe-term
-          // postings (measured 92,780 of 116,231 at sf0.1) and a CORRECT
-          // serve must read nearly every file — 99 of 120 planned is
-          // data, not a plan defect. Query-proportional retrieval is only
-          // measurable when queries are not the head, so the probe
-          // synthesizes a realistic-vocabulary corpus at the sf's doc
-          // count: 40 filler terms per doc from a 20,011-term vocabulary
-          // (deterministic xxhash64 draws) plus one probe term planted on
-          // every 50th doc — each query term then has ~nDocs/1200
-          // postings, the needle-in-corpus shape a 100 TB index serves.
-          val nDocs = graft.Tables.t(spark, sfDir, "documents").count()
-          val probeTerms = P.Bm25Queries.flatMap(_._2.split(" ")).distinct
-          val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-            concat(
-              concat_ws(" ", (0 until 40).map(j =>
-                concat(lit("w"),
-                  pmod(xxhash64(col("id"), lit(j)), lit(20011L)))): _*),
-              when(pmod(col("id"), lit(50L)) === 0L,
-                concat(lit(" "), element_at(
-                  typedLit(probeTerms),
-                  (pmod(col("id") / 50L, lit(probeTerms.size.toLong)) + 1L)
-                    .cast("int"))))
-                .otherwise(lit(""))).as("text"))
-          val idx = LakeTable.create(idxLoc, P.Bm25IndexDdl,
-            TruncateSpec("tkey", 1L))
-          idx.setProperty("write.sort-order", "thash")
-          val st = docs.agg(fcount(lit(1)),
-            fsum(fsize(fsplit(col("text"), " ")).cast("long"))).collect()(0)
-          idx.append(LakeWriter.writeDataFiles(
-            P.bm25Keyed(P.bm25Postings(docs)), idx, sortBy = Seq("thash"),
-            maxRecordsPerFile = 1024L))
-          idx.setProperty(LQ.bm25StatsKey("build"),
-            s"${st.getLong(0)}:${st.getLong(1)}")
-          def serve(pruned: Boolean): Double = {
-            val t0 = System.nanoTime()
-            val idxT = LakeTable.load(idxLoc)
-            val (nd, sdl) = LQ.bm25FoldStats(idxT.tableMeta.properties)
-            val df0 = idxT.toDF(spark)
-            val df = if (pruned) df0.filter(P.bm25LayoutPredicate) else df0
-            P.bm25Serve(df.select("term", "doc_id", "tf", "dl"), nd, sdl)
-              .write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          def best2serve(pruned: Boolean): Double = {
-            serve(pruned) // warmup — every rep still pays its round-trips
-            math.min(serve(pruned), serve(pruned))
-          }
-          val sFull = lat(on = true) { best2serve(pruned = false) }
-          val plannedFull = graft.lake.dsv2.LakeScanMetrics
-            .lastPlannedByLocation.getOrElse(idxLoc, -1)
-          val sPruned = lat(on = true) { best2serve(pruned = true) }
-          val plannedPruned = graft.lake.dsv2.LakeScanMetrics
-            .lastPlannedByLocation.getOrElse(idxLoc, -1)
-          out += "serve_full_s" -> sFull
-          out += "serve_pruned_s" -> sPruned
-          out += "serve_files_total" -> idx.refresh().files().size.toDouble
-          out += "serve_files_planned_full" -> plannedFull.toDouble
-          out += "serve_files_planned_pruned" -> plannedPruned.toDouble
-          LakeTable.drop(idxLoc)
-        }
-        LakeTable.drop(curveLoc)
-      } finally {
-        CommitCas.unregister("mocks3")
-        BulkDelete.unregister("mocks3")
-        System.clearProperty(MockStoreLatency.Prop)
-      }
-      System.err.println("[bench] mocks3_latency: " + out.map {
-        case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-      out.toSeq
-    }
-
-    /** SPARK_GRAFT_EQ_CONVERT=m: prices `convert_equality_deletes` (r10
-      * verdict item 6) at an m×-scaled corpus under a REALISTIC debt — 36
-      * CDC-style upsert batches (the c20 stream shape: new row versions +
-      * one eq-delete parquet each, appendEpoch-committed), each retiring
-      * scattered keys across every base file. Timed: the read tax while
-      * the debt is pending, the SEQ-SCOPED conversion (oldest half of the
-      * entries — the bounded-maintenance shape, since eq deletes are
-      * sequence-addressed and table-global), the remainder conversion,
-      * and the read after. Also asserts the threshold trigger: a call
-      * with min_eq_files above the pending count must no-op.
-      */
-    def runEqConvert(mult: Int): Seq[(String, Double)] = {
-      import graft.lake._
-      import org.apache.spark.sql.functions._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-eqc-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl,
-        LakeWriter.EventSpec,
-        Map(LakeFormat.PropMergeMode -> LakeFormat.DeleteModeMergeOnRead))
-      try {
-        val rowsPer = 25000 * mult
-        for (i <- 0 until 4)
-          table.append(LakeWriter.writeDataFiles(
-            LakeWriter.generateBatch(spark, rowsPer,
-              (5666666L + i) * 300000000L, seed = 400 + i),
-            table, filesPerPartition = 4))
-        val totalRows = 4L * rowsPer
-        // 36 upsert batches: batch b retires keys ≡ b (mod 144) in its
-        // own bucket's id space — scattered matches in every base file
-        import spark.implicits._
-        for (b <- 0 until 36) {
-          val keys = (b.toLong until totalRows by 144L).toSeq
-          val df = keys.toDF("message_id").select(
-            col("message_id"), lit(s"uv$b").as("data"),
-            timestamp_micros(lit(5666666L * 300000000L) + col("message_id"))
-              .as("timestamp"),
-            lit(5666666L * 300000000L).as("timeperiod_loadedBy"),
-            lit(s"uv$b").cast("binary").as("message_body"))
-          val files = LakeWriter.writeDataFiles(df, table)
-          val eq = new graft.lake.dsv2.LakeEqualityDeleteWriter(
-            table.location, table.schema, Seq("message_id"))
-          val keyRow = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(table.schema.length)
-          keys.foreach { id =>
-            keyRow.setLong(table.schema.fieldIndex("message_id"), id)
-            eq.write(keyRow)
-          }
-          table.appendEpoch(files, "bench-eqc", b.toLong, Seq(eq.finish()))
-        }
-        val eqEntries = table.deleteFilesMeta()
-          .filter(_.kind == DeleteFileMeta.KindEq)
-        def scanOnce(): Double = {
-          val t0 = System.nanoTime()
-          spark.read.format("laketable").load(loc)
-            .agg(count(lit(1)).as("n"),
-              avg(length(col("data"))).as("alen"))
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        scanOnce()
-        val scanPending = math.min(scanOnce(), scanOnce())
-        // the invariant conversion must preserve is VISIBILITY, not the
-        // base row count: each upsert key retires its match in all four
-        // per-bucket id spaces while inserting one new version, so the
-        // MoR-visible count is totalRows - (retired - inserted), a
-        // mod-144 rounding expression — capture it once and require the
-        // conversions to leave it untouched
-        val visibleBefore = spark.read.format("laketable").load(loc).count()
-        // threshold trigger: debt below the bar → no-op
-        assert(table.convertEqualityDeletes(spark,
-          minEqFiles = eqEntries.size + 1) == -1L,
-          "threshold trigger did not no-op below the bar")
-        // seq-scoped: the oldest half of the debt first
-        val seqs = eqEntries.map(_.seq).sorted
-        val midSeq = seqs(seqs.size / 2 - 1)
-        val t1 = System.nanoTime()
-        assert(table.convertEqualityDeletes(spark, maxSeq = Some(midSeq),
-          minEqFiles = eqEntries.size / 4) > 0)
-        val scopedS = (System.nanoTime() - t1) / 1e9
-        val remaining = table.deleteFilesMeta()
-          .count(_.kind == DeleteFileMeta.KindEq)
-        assert(remaining == eqEntries.size - seqs.size / 2,
-          s"seq-scope retired wrong count: $remaining left")
-        val t2 = System.nanoTime()
-        assert(table.convertEqualityDeletes(spark) > 0)
-        val restS = (System.nanoTime() - t2) / 1e9
-        assert(!table.deleteFilesMeta().exists(_.kind == DeleteFileMeta.KindEq))
-        scanOnce()
-        val scanConverted = math.min(scanOnce(), scanOnce())
-        // visibility unchanged by conversion: same MoR-visible count as
-        // before any eq→pos retirement (totalRows is the BASE count — the
-        // upserts legitimately shrank visibility, see visibleBefore)
-        val visibleAfter = spark.read.format("laketable").load(loc).count()
-        assert(visibleAfter == visibleBefore,
-          s"conversion changed visibility: $visibleBefore -> $visibleAfter")
-        val out = Seq(
-          "corpus_mult" -> mult.toDouble,
-          "rows" -> totalRows.toDouble,
-          "eq_files" -> eqEntries.size.toDouble,
-          "scan_pending_s" -> scanPending,
-          "convert_scoped_s" -> scopedS,
-          "convert_rest_s" -> restS,
-          "scan_converted_s" -> scanConverted)
-        System.err.println("[bench] eq_convert: " + out.map {
-          case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-        out
-      } finally LakeTable.drop(loc)
-    }
-
-    /** SPARK_GRAFT_ANN_REBUILD=m: prices the committed-ANN-index
-      * maintenance trade (r10 verdict item 4) at an m×-replicated corpus
-      * — (a) INCREMENTAL: encode one 10%-sized arrival under the frozen
-      * committed models and append (work ∝ increment; recall decays
-      * under drift), vs (b) REBUILD: retrain on the current corpus,
-      * re-encode everything, swap codes+models in one commit (work ∝
-      * corpus; recall re-earned). The ratio tells an operator how many
-      * increments one rebuild costs — the cadence number.
-      */
-    def runAnnRebuild(mult: Int): Seq[(String, Double)] = {
-      import graft.lake._
-      import org.apache.spark.sql.functions._
-      val P = graft.queries.PipelineQueries
-      val Q = graft.queries.LakeQueries
-      val e0 = graft.Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val maxId = e0.agg(max("vec_id")).head().getLong(0) + 1
-      val corpus = (0 until mult).map(i =>
-        e0.withColumn("vec_id", col("vec_id") + lit(i * maxId)))
-        .reduce(_ union _)
-      val locD = s"${System.getProperty("java.io.tmpdir")}/graft-bench-rbd-d-${java.util.UUID.randomUUID()}"
-      val locI = s"${System.getProperty("java.io.tmpdir")}/graft-bench-rbd-i-${java.util.UUID.randomUUID()}"
-      val data = LakeTable.create(locD,
-        "vec_id BIGINT,embedding ARRAY<FLOAT>", TruncateSpec("vec_id", 100L))
-      val index = LakeTable.create(locI, P.AnnIndexDdl, P.AnnIndexSpec)
-      try {
-        val d1 = data.append(LakeWriter.writeDataFiles(corpus, data))
-        val committed = data.snapshotDF(spark, d1)
-        val tb = System.nanoTime()
-        val ivf = P.trainIvfCentroids(committed)
-        val pq = P.trainPqCodebooks(committed)
-        index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-        index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-        index.append(LakeWriter.writeDataFiles(
-          P.ivfPqEncode(spark, committed, ivf, pq), index))
-        val buildS = (System.nanoTime() - tb) / 1e9
-        // one 10%-sized arrival
-        val incr = e0.filter(pmod(col("vec_id"), lit(10)) === 0)
-          .withColumn("vec_id", col("vec_id") + lit(mult * maxId))
-        val d2 = data.append(LakeWriter.writeDataFiles(incr, data))
-        val incrRows = incr.count()
-        // (a) incremental maintenance under the FROZEN committed models,
-        // parsed back from the index table — the serve-path discipline
-        val ti = System.nanoTime()
-        val frozen = LakeTable.load(locI)
-        val ivfF = P.ivfModelFromString(
-          frozen.tableMeta.properties(P.AnnIvfProp))
-        val pqF = P.pqModelFromString(
-          frozen.tableMeta.properties(P.AnnPqProp))
-        index.append(LakeWriter.writeDataFiles(
-          P.ivfPqEncode(spark, data.changesBetween(spark, d1, d2), ivfF, pqF),
-          index))
-        val incrementalS = (System.nanoTime() - ti) / 1e9
-        // (b) the rebuild procedure: retrain + re-encode + one-commit swap
-        val tr = System.nanoTime()
-        Q.rebuildAnnIndex(spark, data, index, trained = true)
-        val rebuildS = (System.nanoTime() - tr) / 1e9
-        val out = Seq(
-          "corpus_mult" -> mult.toDouble,
-          "corpus_rows" -> (corpus.count() * 1.0),
-          "incr_rows" -> incrRows.toDouble,
-          "build_s" -> buildS,
-          "incremental_s" -> incrementalS,
-          "rebuild_s" -> rebuildS)
-        System.err.println("[bench] ann_rebuild: " + out.map {
-          case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-        out
-      } finally {
-        LakeTable.drop(locD)
-        LakeTable.drop(locI)
-      }
     }
 
     /** Phase split for the shard export (r9 verdict item 3): the heavy
@@ -1995,295 +1082,47 @@ object Bench {
       Seq("compute_s" -> computeS, "write_s" -> writeS, "read_s" -> readS)
     }
 
-    def runPlanScale(nFiles: Int): Seq[(String, Double)] = {
-      import graft.lake._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-plan-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl,
-        LakeWriter.EventSpec,
-        Map(LakeFormat.PropManifestMergeMaxEntries -> "50000"))
-      val t0 = System.nanoTime()
-      (0 until nFiles).grouped(500).foreach { batch =>
-        table.append(batch.map(i => DataFileMeta(
-          s"$loc/data/f$i.parquet", 1L << 20, 1000L,
-          (5666666L + i % 64) * 300000000L)))
-      }
-      table.rewriteManifests()
-      val buildS = (System.nanoTime() - t0) / 1e9
-      def ms(f: => Unit): Double = {
-        val s = System.nanoTime(); f; (System.nanoTime() - s) / 1e6
-      }
-      // drop the JVM-wide parse caches so "cold" means a fresh process
-      // planning a deep table, not a warm re-read of the build's parses
-      LakeTable.manifestCache.clear()
-      LakeTable.metaParseCache.clear()
-      val fresh = LakeTable.load(loc)
-      val cold = ms(assert(fresh.files().size == nFiles))
-      val warm = ms(assert(fresh.files().size == nFiles))
-      val dfMs = ms(assert(fresh.filesDF(spark).count() == nFiles))
-      // PRUNED planning: the real query-path shape — DSv2
-      // planInputPartitions with a partition-bucket equality pushed, over
-      // the full inventory (expects ~1/64 of the files to survive)
-      var prunedParts = 0
-      val scan = new graft.lake.dsv2.LakeBatchScan(loc, fresh, fresh.schema,
-        Array(org.apache.spark.sql.sources.EqualTo(
-          "timeperiod_loadedBy", 5666666L * 300000000L)), None)
-      val prunedMs = ms { prunedParts = scan.planInputPartitions().length }
-      assert(prunedParts > 0 && prunedParts.toLong < nFiles,
-        s"pruned planning kept $prunedParts partitions")
-      // the two MAINTENANCE sweeps at the same posture (r8 verdict item
-      // #6). Expiry here is the pure-metadata shape (every file stays
-      // referenced by a retained snapshot, so nothing is physically
-      // deleted): the cost is the retention-set walk over ~2000 commits'
-      // manifest lists. Orphan GC prices the REFERENCE-SET fold (10^6
-      // manifest entries through the driver) — its other term, the
-      // distributed data-tree listing, is ~0 here because the probe's
-      // files are synthetic metas (that term runs one task per bucket dir
-      // and is spec'd in LakeTableSpec, not priced here).
-      // r9 verdict item 2: the sweep numbers spread 4× across re-runs with
-      // no code change — a single sample is not a number. Protocol now:
-      // FIVE samples of each sweep inside ONE artifact (median + spread),
-      // each bracketed by an fs-op canary (a create/rename/stat/delete
-      // loop — the same op mix the commit path pays) so a slow sample is
-      // attributable to the filesystem, not the sweep code. Expiry
-      // mutates the table (2000 snapshots → 101), so each rep expires a
-      // fresh METADATA COPY of the built table; the orphan fold is
-      // non-destructive and reps in place. Caches drop per rep — "cold"
-      // must mean a fresh process, not the previous rep's parses.
-      def fsCanaryUs(): Double = {
-        val dir = new org.apache.hadoop.fs.Path(loc, "_canary")
-        val cfs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        cfs.mkdirs(dir)
-        val n = 200
-        val t0 = System.nanoTime()
-        for (i <- 0 until n) {
-          val a = new org.apache.hadoop.fs.Path(dir, s"a$i")
-          val b = new org.apache.hadoop.fs.Path(dir, s"b$i")
-          val out = cfs.create(a); out.write(42); out.close()
-          cfs.rename(a, b)
-          cfs.getFileStatus(b)
-          cfs.delete(b, false)
-        }
-        val us = (System.nanoTime() - t0) / 1e3 / n
-        cfs.delete(dir, true)
-        us
-      }
-      def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-      // GC attribution for the r10 p100 finding (expire spread 1.07 s →
-      // 21.6 s with a FLAT fs canary): each rep reports the JVM-wide GC
-      // time that elapsed INSIDE its expire call, so an outlier sample
-      // carries its own root-cause evidence in the artifact
-      def gcMs(): Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).filter(_ > 0).sum
-      }
-      val reps = 5
-      val samples = (0 until reps).map { i =>
-        val canaryUs = fsCanaryUs()
-        val copy = s"$loc-exp$i"
-        org.apache.hadoop.fs.FileUtil.copy(
-          new org.apache.hadoop.fs.Path(loc).getFileSystem(new org.apache.hadoop.conf.Configuration()),
-          new org.apache.hadoop.fs.Path(loc),
-          new org.apache.hadoop.fs.Path(copy).getFileSystem(new org.apache.hadoop.conf.Configuration()),
-          new org.apache.hadoop.fs.Path(copy), false, new org.apache.hadoop.conf.Configuration())
-        LakeTable.manifestCache.clear()
-        LakeTable.metaParseCache.clear()
-        val t2 = LakeTable.load(copy)
-        val gc0 = gcMs()
-        val expire = ms {
-          val id = t2.expireSnapshots(System.currentTimeMillis() + 1000L,
-            retainLast = 100)
-          assert(id >= 0, "expiry committed nothing")
-        }
-        val expireGc = (gcMs() - gc0).toDouble
-        assert(t2.snapshots.size <= 101,
-          s"expiry retained ${t2.snapshots.size} snapshots")
-        LakeTable.drop(copy)
-        LakeTable.manifestCache.clear()
-        LakeTable.metaParseCache.clear()
-        val orphan = ms {
-          val sweep = fresh.removeOrphanFiles(spark,
-            System.currentTimeMillis() - 3600000L)
-          assert(sweep.deletedCount == 0,
-            s"probe sweep deleted ${sweep.deletedCount} files")
-        }
-        System.err.println(f"[bench] plan_scale rep $i: canary=$canaryUs%.0fus/op " +
-          f"expire=$expire%.0fms (gc=$expireGc%.0fms) orphan=$orphan%.0fms")
-        (canaryUs, expire, orphan, expireGc)
-      }
-      val expireMs = med(samples.map(_._2))
-      val orphanMs = med(samples.map(_._3))
-      System.err.println(f"[bench] plan_scale n=$nFiles: build=$buildS%.1fs " +
-        f"cold=$cold%.0fms warm=$warm%.0fms filesDF=$dfMs%.0fms " +
-        f"pruned=$prunedMs%.0fms ($prunedParts tasks) " +
-        f"expire_med=$expireMs%.0fms orphan_med=$orphanMs%.0fms")
-      LakeTable.drop(loc)
-      Seq("files_cold_ms" -> cold, "files_warm_ms" -> warm,
-        "files_df_ms" -> dfMs, "pruned_plan_ms" -> prunedMs,
-        // median under the historical keys (cross-round comparability),
-        // spread + canary alongside so variance is in-artifact
-        "expire_ms" -> expireMs,
-        "expire_ms_min" -> samples.map(_._2).min,
-        "expire_ms_max" -> samples.map(_._2).max,
-        "orphan_ref_ms" -> orphanMs,
-        "orphan_ref_ms_min" -> samples.map(_._3).min,
-        "orphan_ref_ms_max" -> samples.map(_._3).max,
-        "fsop_canary_us_med" -> med(samples.map(_._1)),
-        "fsop_canary_us_max" -> samples.map(_._1).max,
-        // GC time inside the expire reps: an expire_ms_max outlier with a
-        // matching expire_gc_ms_max and flat canary is JVM weather, not a
-        // sweep regression (r10 item 5's attribution, now in-artifact)
-        "expire_gc_ms_med" -> med(samples.map(_._4)),
-        "expire_gc_ms_max" -> samples.map(_._4).max,
-        "n_files" -> nFiles.toDouble)
-    }
-
-    /** SPARK_GRAFT_DELETE_COMPACT=1: the merge-on-read read-amplification
-      * debt and the `rewrite_position_deletes` payoff. 25 small DELETE
-      * commits fragment a lineitem-backed MoR table's delete inventory
-      * (one pos-delete parquet each — the streaming-upsert cadence);
-      * the probe times a full scan against the FRAGMENTED masks, runs
-      * the rewrite, re-times the scan, and asserts the visible row count
-      * is unchanged. Reported under its own `delete_compact` key.
-      */
-    def runDeleteCompact(): Seq[(String, Double)] = {
-      import graft.lake._
-      import org.apache.spark.sql.functions._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-delc-${java.util.UUID.randomUUID()}"
-      LakeTable.drop(loc)
-      val t = LakeTable.create(loc,
-        "l_orderkey BIGINT,l_linenumber BIGINT,l_quantity DOUBLE",
-        TruncateSpec("l_orderkey", 400L),
-        Map(LakeFormat.PropDeleteMode -> LakeFormat.DeleteModeMergeOnRead))
-      val li = graft.Tables.t(spark, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").cast("double").as("l_quantity"))
-      t.append(LakeWriter.writeDataFiles(li, t))
-      // 25 arrival-cadence DELETE commits, each masking a thin slice —
-      // every one lands its own pos-delete parquet
-      for (i <- 0 until 25)
-        t.deleteWhere(spark, col("l_orderkey") % 100 === i &&
-          col("l_linenumber") === (i % 7) + 1)
-      val delBefore = t.refresh().deleteFilesMeta().size
-      def scanOnce(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = spark.read.format("laketable").load(loc)
-          .agg(count(lit(1)), sum("l_quantity")).head().getLong(0)
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      scanOnce() // warmup
-      val (sFrag, nFrag) = scanOnce()
-      val t0 = System.nanoTime()
-      // side effect hoisted out of assert: with -Xdisable-assertions the
-      // rewrite must still run, else the probe measures the fragmented
-      // scan twice
-      val rewritten = t.rewritePositionDeletes(spark)
-      assert(rewritten > 0)
-      val rewriteS = (System.nanoTime() - t0) / 1e9
-      val delAfter = t.refresh().deleteFilesMeta().size
-      val (sComp, nComp) = scanOnce()
-      assert(nFrag == nComp, s"rewrite changed visible rows: $nFrag != $nComp")
-      assert(delAfter < delBefore)
-      LakeTable.drop(loc)
-      Seq("del_files_before" -> delBefore.toDouble,
-        "del_files_after" -> delAfter.toDouble,
-        "scan_frag_s" -> sFrag, "scan_compact_s" -> sComp,
-        "rewrite_s" -> rewriteS)
-    }
-
     // SPARK_GRAFT_BENCH_ONLY=<substring[,substring...]> restricts the run —
-    // an iteration aid (e.g. =lake_scan while tuning the DSv2 reader); the
-    // driver's full run leaves it unset.
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+    // an iteration aid (e.g. =lake_scan while tuning the DSv2 reader, or a
+    // section name: =zipf_retrieval, =commit_curve); a full run leaves it
+    // unset.
+    val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val only: String => Boolean = benchOnly match {
       case Some(f) => val pats = f.split(","); n => pats.exists(n.contains)
       case None => _ => true
     }
-    // same warmup+best-of-2 protocol as queries for the envelope entries —
-    // each invocation builds and drops its own scratch table, so repeats
-    // are independent (single-shot runs read ±35% noise as regressions
-    // across rounds 1-3)
-    def best2(f: () => Double): Double = {
-      f()
-      val best = math.min(f(), f())
-      // same adaptive third rep as `run` (r10 verdict item 1) — the
-      // sub-1.5 s members of this family (maintenance_compact, the merge
-      // pair) are equally exposed to spiky per-job overhead
-      if (best < 1.5) math.min(best, f()) else best
-    }
-    /** best2 with the ExchangeProbe bracket (r15 verdict item 3: the
-      * ingest_100k 2.17 -> 4.04 s move happened on byte-identical code and
-      * could not be adjudicated bytes-moved vs time-per-byte) — identical
-      * rep protocol, only the canary keys are new.
-      */
-    def best2Probed(key: String)(f: () => Double): Double = {
-      f() // warmup, never probed
-      def rep(): Double = {
-        ExchangeProbe.reset()
-        val w = f()
-        recordExchange(key, w)
-        w
-      }
-      val best = math.min(rep(), rep())
-      if (best < 1.5) math.min(best, rep()) else best
-    }
-    run("b01_scan") // session warmup (codegen, FS metadata) — not reported
-    val envelope = headline.filter(only).map(n => n -> run(n)) ++
-      (if (only("ingest_100k")) Seq("ingest_100k" ->
-        best2Probed("ingest_100k")(() => runIngest())) else Nil) ++
-      (if (only("maintenance_compact"))
-        Seq("maintenance_compact" ->
-          best2Probed("maintenance_compact")(() => runMaintenance())) else Nil) ++
-      (if (only("dml_merge_cow"))
-        Seq("dml_merge_cow" -> best2(() => runMergeOnce(mor = false))) else Nil) ++
-      (if (only("dml_merge_mor"))
-        Seq("dml_merge_mor" -> best2(() => runMergeOnce(mor = true))) else Nil) ++
+    val fullRun = benchOnly.isEmpty
+    // the lifecycle entries use the same protocol as the queries — each
+    // invocation builds and drops its own scratch table, so repeats are
+    // independent (single-shot runs read ±35% noise as regressions across
+    // rounds 1-3)
+    def lifecycle(key: String)(f: () => Double): Seq[(String, Double)] =
+      if (only(key)) Seq(key -> bestOf(key)(f)) else Nil
+    def query(name: String): (String, Double) =
+      name -> bestOf(name)(() => runOnce(name))
+    query("b01_scan") // session warmup (codegen, FS metadata) — not reported
+    val envelope = headline.filter(only).map(query) ++
+      lifecycle("ingest_100k")(() => runIngest()) ++
+      lifecycle("maintenance_compact")(() => runMaintenance()) ++
+      lifecycle("dml_merge_cow")(() => runMergeOnce(mor = false)) ++
+      lifecycle("dml_merge_mor")(() => runMergeOnce(mor = true)) ++
       (if (only("lake_scan_400k")) runLakeScanPair() else Nil) ++
       (if (only("lake_scan_mor")) runMorScanPair() else Nil) ++
       (if (only("lake_point_lookup")) runPointLookupPair() else Nil) ++
       (if (only("lake_join_spj")) runSpjJoinPair() else Nil) ++
-      (if (only("stream_catchup"))
-        Seq("stream_catchup_backlog" -> best2(() => runStreamCatchup())) else Nil)
-    val heavy = heavyTail.filter(only).map(n => n -> run(n))
-    // malformed multipliers are dropped, not fatal: the env knob is a dev
-    // aid and must never abort a run after the envelope benches were paid.
-    // Reported under their own JSON keys (r7 verdict item #8): the driver's
-    // default run leaves both knobs unset, so `queries`/`total`/
-    // `heavy_total` stay comparable across rounds with or without them.
-    val heavyScale = sys.env.get("SPARK_GRAFT_HEAVY_SCALE").toSeq.flatMap(s =>
-      runHeavyScale(s.split(",").toSeq
-        .flatMap(_.trim.toIntOption).filter(_ >= 1)))
-    // the commit curve doubles as the IN-ARTIFACT VM-HEALTH CANARY (r9
-    // verdict item 1): it is pure fs-op protocol work (no Spark jobs), so
-    // ms_per_commit_at_1000 ≈ 7 ms marks a healthy VM and ~2× that the
-    // degraded one that inflated the r9 envelope. Every FULL run embeds
-    // it — a reader can now adjudicate environment-vs-regression from the
-    // committed artifact alone. Runs AFTER the envelope+heavy entries so
-    // its 1000-commit churn can't shift them (the adjacency rule).
-    val fullRun = sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty
+      lifecycle("stream_catchup_backlog")(() => runStreamCatchup())
+    val heavy = heavyTail.filter(only).map(query)
     // r11 verdict item 1: the work-dominated headline ratio (see
-    // runEnvelopeX10 above). Runs on every FULL run — this is the
+    // runEnvelopeAtScale above). Runs on every FULL run — this is the
     // section whose ratio is the round's summary number; the raw sf0.1
-    // envelope above stays untouched for cross-round continuity.
-    // SPARK_GRAFT_X10 overrides the multiplier (≤1 disables — a probe
-    // iteration aid; the driver's run leaves it unset → ×10). Runs
+    // envelope above stays untouched for cross-round continuity. Runs
     // AFTER the envelope+heavy entries (the adjacency rule) and BEFORE
     // the commit-curve canary, so the canary still adjudicates the
     // whole run's weather.
-    val x10Mult = sys.env.get("SPARK_GRAFT_X10")
-      .flatMap(_.trim.toIntOption).getOrElse(10)
-    val (x10Spark, x10DuckJson, x10PackPhases) =
-      if (fullRun && x10Mult >= 2) runEnvelopeX10(x10Mult)
-      else (Seq.empty[(String, Double)], "null", Seq.empty[(String, Double)])
-    def parseDuck(json: String): Map[String, Double] =
-      if (json == "null") Map.empty
-      else try {
-        val n = graft.lake.Json.parse(json)
-        import scala.jdk.CollectionConverters._
-        n.properties().asScala
-          .map(e => e.getKey -> e.getValue.asDouble(-1.0))
-          .filter(_._2 >= 0).toMap
-      } catch { case _: Throwable => Map.empty }
-    val x10Duck: Map[String, Double] = parseDuck(x10DuckJson)
+    val x10Mult = 10
+    val (x10Spark, x10Duck, x10PackPhases) =
+      if (fullRun) runEnvelopeAtScale(x10Mult, headline, withPack = true)
+      else (Seq.empty[(String, Double)], None, Seq.empty[(String, Double)])
     // DEEP tier over the FLOOR-DOMINATED subset (r14 verdict item 4):
     // at ×10 roughly half the overlap is sub-0.1 s on DuckDB — those
     // entries' ratios price the fixed Spark job floor against an
@@ -2296,33 +1135,34 @@ object Bench {
     // must buy an order of magnitude. Entries still under the bar at
     // ×100 are genuinely floor-shaped in BOTH engines (b01-style
     // metadata answers); they stay visible in duckdb_xfloor rather than
-    // being silently escalated further. SPARK_GRAFT_XFLOOR overrides
-    // the multiplier (≤1 disables).
-    val xfloorMult = sys.env.get("SPARK_GRAFT_XFLOOR")
-      .flatMap(_.trim.toIntOption).getOrElse(100)
+    // being silently escalated further.
+    val xfloorMult = 100
+    val x10DuckSecs = duckSeconds(x10Duck)
     val floorNames = x10Spark.filter(_._2 >= 0).map(_._1)
-      .filter(k => x10Duck.get(k).exists(v => v > 0 && v < 0.1))
-    val (xfloorSpark, xfloorDuckJson) =
-      if (fullRun && xfloorMult >= 2 && floorNames.nonEmpty) {
+      .filter(k => x10DuckSecs.get(k).exists(v => v > 0 && v < 0.1))
+    val (xfloorSpark, xfloorDuck) =
+      if (fullRun && floorNames.nonEmpty) {
         val (s, d, _) = runEnvelopeAtScale(xfloorMult, floorNames,
           withPack = false)
         (s, d)
-      } else (Seq.empty[(String, Double)], "null")
-    val xfloorDuck: Map[String, Double] = parseDuck(xfloorDuckJson)
-    // realistic-vocabulary retrieval selectivity (r12 verdict item 3):
-    // full runs and SPARK_GRAFT_ZIPF=1 partial iterations
+      } else (Seq.empty[(String, Double)], None)
+    // realistic-vocabulary retrieval selectivity (r12 verdict item 3)
     val zipfRetrieval =
-      if (fullRun || sys.env.get("SPARK_GRAFT_ZIPF").contains("1"))
+      if (only("zipf_retrieval"))
         try runZipfRetrieval()
         catch { case e: Throwable =>
           System.err.println(s"[bench] zipf_retrieval failed: ${e.getMessage}")
           Nil
         }
       else Nil
-    val commitCurve =
-      if (fullRun || sys.env.get("SPARK_GRAFT_COMMIT_CURVE").contains("1"))
-        runCommitCurve()
-      else Nil
+    // the commit curve doubles as the IN-ARTIFACT VM-HEALTH CANARY (r9
+    // verdict item 1): it is pure fs-op protocol work (no Spark jobs), so
+    // ms_per_commit_at_1000 ≈ 7 ms marks a healthy VM and ~2× that the
+    // degraded one that inflated the r9 envelope. Every FULL run embeds
+    // it — a reader can now adjudicate environment-vs-regression from the
+    // committed artifact alone. Runs AFTER the envelope+heavy entries so
+    // its 1000-commit churn can't shift them (the adjacency rule).
+    val commitCurve = if (only("commit_curve")) runCommitCurve() else Nil
     // SECOND in-artifact canary (r10 verdict item 1, "fix the sensitivity"):
     // the measured PER-ENTRY SPARK FLOOR. The envelope is ~25 sub-second
     // entries whose cost at sf0.1 is dominated by fixed per-job overhead
@@ -2416,12 +1256,6 @@ object Bench {
         }
         ph
       }
-    val annPhases = entryPhases("d02_ann_indexed")
-    val hybridPhases = entryPhases("d02_hybrid_indexed")
-    val phrasePhases = entryPhases("d02_phrase_index")
-    val zipfPhases = entryPhases("d02_bm25_zipf")
-    val phraseZipfPhases = entryPhases("d02_phrase_zipf")
-    val hybridZipfPhases = entryPhases("d02_hybrid_zipf")
     // r10 verdict item 2's "measured tokens/sec at a few-hundred-merge
     // vocab": one end-to-end run of the production-vocab encoder (model
     // commit + serve) reduced to sum(n_tokens); rate = corpus tokens
@@ -2438,181 +1272,6 @@ object Bench {
       Seq("merges" -> 256.0, "tokens" -> toks.toDouble,
         "tokens_per_sec" -> toks / secs, "encode_s" -> secs)
     } else Nil
-    // SPARK_GRAFT_COMMIT_CONTENTION=1: the 5-committer CAS pricing
-    val commitContention =
-      if (sys.env.get("SPARK_GRAFT_COMMIT_CONTENTION").contains("1"))
-        runCommitContention()
-      else Nil
-    val planScale = sys.env.get("SPARK_GRAFT_PLAN_SCALE")
-      .flatMap(_.trim.toIntOption).filter(_ > 0)
-      .map(runPlanScale).getOrElse(Nil)
-    // value = corpus multiplier (1 = plain sf corpus; m>1 replicates the
-    // documents m× first, the runHeavyScale recipe — prices the same
-    // fragmentation/compaction cycle against a 10× band space)
-    val indexCompact = sys.env.get("SPARK_GRAFT_INDEX_COMPACT")
-      .flatMap(_.trim.toIntOption).filter(_ >= 1)
-      .map(runIndexCompact).getOrElse(Nil)
-    val deleteCompact =
-      if (sys.env.get("SPARK_GRAFT_DELETE_COMPACT").contains("1"))
-        runDeleteCompact()
-      else Nil
-    // value = injected per-request latency in ms (15 ≈ mid-range
-    // published S3/ADLS first-byte latency)
-    val mockS3 = sys.env.get("SPARK_GRAFT_MOCKS3")
-      .flatMap(_.trim.toIntOption).filter(_ > 0)
-      .map(runMockS3).getOrElse(Nil)
-    // value = corpus multiplier for the rebuild-vs-incremental pricing
-    val annRebuild = sys.env.get("SPARK_GRAFT_ANN_REBUILD")
-      .flatMap(_.trim.toIntOption).filter(_ >= 1)
-      .map(runAnnRebuild).getOrElse(Nil)
-    // value = corpus multiplier for the eq-delete-debt conversion pricing
-    val eqConvert = sys.env.get("SPARK_GRAFT_EQ_CONVERT")
-      .flatMap(_.trim.toIntOption).filter(_ >= 1)
-      .map(runEqConvert).getOrElse(Nil)
-    val results = envelope ++ heavy
-    // 10ms precision (round 8: was 3dp): cross-round deltas under ~0.3 s
-    // are run variance on this harness, so 2dp loses nothing real, and
-    // the saved chars keep the GROWING JSON line (two new heavy entries +
-    // their duckdb keys this round) inside the driver's 2000-char
-    // output-tail capture — the round-6 artifact truncated away three
-    // entries when the blob outgrew the window. The full-precision blob
-    // still lands in /tmp/graft_bench.json every run.
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    // `total` = envelope entries only; the heavyTail pair (~5 s of
-    // iterative CC + SemDeDup) reports under `heavy_total` so the
-    // envelope aggregate stays comparable with rounds ≤5 (adding them to
-    // `total` in round 6 read as a +5 s cross-round regression with no
-    // code change — the same artifact problem the heavyTail ordering
-    // fix was for, moved into the sum).
-    val total = envelope.map(_._2).filter(_ >= 0).sum
-    val heavyTotal = heavy.map(_._2).filter(_ >= 0).sum
-    // DuckDB side-by-side: time each headline query's oracle SQL on the
-    // same parquet at the same sf (dev measurement via tools/bench_duckdb
-    // .py — duckdb is driver-side tooling, not a library dependency). The
-    // artifact then carries both engines so the round ratio needs no
-    // re-measurement. Null/absent when python3+duckdb is unavailable.
-    val duckdbJson: String = try {
-      val measured = results.map(_._1).toSet
-      val sqls = SparkEntry.oracleSql.filter { case (k, _) => measured(k) }
-      if (sqls.isEmpty) "null"
-      else {
-        val node = graft.lake.Json.obj()
-        sqls.foreach { case (k, v) => node.put(k, v) }
-        val f = java.io.File.createTempFile("graft-bench-sql", ".json")
-        f.deleteOnExit()
-        java.nio.file.Files.write(f.toPath,
-          graft.lake.Json.write(node).getBytes("UTF-8"))
-        val sb = new StringBuilder
-        // same stderr-INHERIT rationale as the x10 invocation above
-        val proc = new ProcessBuilder("python3", "tools/bench_duckdb.py",
-          sfDir, f.getAbsolutePath)
-          .redirectError(ProcessBuilder.Redirect.INHERIT).start()
-        val src = scala.io.Source.fromInputStream(proc.getInputStream)
-        try sb.append(src.mkString) finally src.close()
-        val line = sb.toString.trim
-        if (proc.waitFor() == 0 && line.startsWith("{")) line else "null"
-      }
-    } catch { case _: Throwable => "null" }
-    def fmt3(v: Double): String =
-      if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // r8 verdict item #2 (the r6 truncation hazard): the per-query duckdb
-    // map cost ~670 chars of the driver's 2000-char stdout-tail window and
-    // the line sat at 1,851 — one more entry away from silently losing the
-    // blob's tail. The stdout line now carries SUMMARY duckdb keys only
-    // (total + overlap count + the Spark sum over the same overlap, so the
-    // round ratio is still computable from the artifact alone); the full
-    // per-query map rides the committed BENCH_FULL.json + /tmp copy.
-    val duckdbByQuery: Map[String, Double] =
-      if (duckdbJson == "null") Map.empty
-      else try {
-        val n = graft.lake.Json.parse(duckdbJson)
-        import scala.jdk.CollectionConverters._
-        n.properties().asScala
-          .map(e => e.getKey -> e.getValue.asDouble(-1.0))
-          .filter(_._2 >= 0).toMap
-      } catch { case _: Throwable => Map.empty }
-    // Entries whose DuckDB oracle is deliberately ORACLE-SHAPED rather than
-    // engine-idiomatic: d04_bpe_encode_full's oracle replays the greedy BPE
-    // encoder as ~80-deep nested-replace CTE blocks (the only way DuckDB SQL
-    // can express merge recursion), measured ~90× the Spark mapPartitions
-    // encoder (30.4 s vs 0.34 s at sf0.1). Timing that compares the oracle's
-    // SHAPE, not the engines — and including it flatters the summary ratio
-    // ~2.8× (0.69 vs 1.9 on the r11 healthy run). The summary overlap
-    // excludes it; the raw per-query number stays in duckdb_seconds so the
-    // judge sees both.
-    val oracleShaped = Set("d04_bpe_encode_full")
-    val overlap = results.filter { case (k, v) =>
-      v >= 0 && duckdbByQuery.contains(k) && !oracleShaped(k) }
-    // ×10 section bookkeeping: compute the work-dominated summary ratio
-    // over entries BOTH engines completed (the `_duckdb_canary` key
-    // never matches a Spark entry, so it can't join the overlap; it
-    // rides the full artifact as this run's second denominator canary)
-    val x10Overlap = x10Spark.filter { case (k, v) =>
-      v >= 0 && x10Duck.contains(k) && !oracleShaped(k) }
-    val x10SparkTotal = x10Overlap.map(_._2).sum
-    val x10DuckTotal = x10Overlap.map(p => x10Duck(p._1)).sum
-    // r12 verdict item 2: the sum ratio is kept for continuity but is
-    // not robust — one entry where the engines differ in complexity
-    // class can own either side of the quotient (r12: d01_dedup_embed's
-    // quadratic oracle replay was 94% of the denominator). ratio_median
-    // (median of per-entry ratios) is domination-proof; ratio_work
-    // (sum ratio over entries whose DuckDB side >= 0.1 s) conditions
-    // away the ~0.1 s per-job Spark floor that owns the sub-second
-    // entries' ratios.
-    val x10Ratios = x10Overlap
-      .map(p => (p._1, p._2, x10Duck(p._1))).filter(_._3 > 0)
-    val x10RatioMedian =
-      if (x10Ratios.isEmpty) -1.0
-      else {
-        val rs = x10Ratios.map(t => t._2 / t._3).sorted
-        rs((rs.size - 1) / 2)
-      }
-    val x10Work = x10Ratios.filter(_._3 >= 0.1)
-    val x10RatioWork =
-      if (x10Work.isEmpty) -1.0
-      else x10Work.map(_._2).sum / x10Work.map(_._3).sum
-    // COMBINED work-dominated set (r14 verdict item 4): the ×10 work
-    // entries plus every floor entry the ×100 (xfloorMult) tier pushed
-    // over the 0.1 s DuckDB bar. Per entry the deeper tier is only used
-    // where ×10 carried no signal, so the two tiers never double-count.
-    // Weighting caveat (r14 ADVICE): ratio_work sums ×10 walls and
-    // deep-tier walls into one sum-of-sums quotient, so a deep-tier entry
-    // carries ~(xfloorMult/x10Mult)× the weight per unit of base-corpus
-    // work. The quotient itself is still a fair engine comparison (both
-    // engines pay the same scale per entry); ratio_work_median below is
-    // the scale-weighting-free companion statistic.
-    val xfloorRatios = xfloorSpark
-      .filter { case (k, v) =>
-        v >= 0 && xfloorDuck.contains(k) && !oracleShaped(k) }
-      .map(p => (p._1, p._2, xfloorDuck(p._1))).filter(_._3 > 0)
-    val xfloorWork = xfloorRatios.filter(_._3 >= 0.1)
-    val x10WorkNames = x10Work.map(_._1).toSet
-    val combinedWork = x10Work ++ xfloorWork.filterNot(t => x10WorkNames(t._1))
-    val ratioWorkAll =
-      if (combinedWork.isEmpty) -1.0
-      else combinedWork.map(_._2).sum / combinedWork.map(_._3).sum
-    // scale-weighting-free companion (r14 ADVICE) + the PINNED population
-    // (r14 verdict item 4): the combined set's entry names ride the full
-    // artifact as `work_set` so the cross-round headline ratio_work is
-    // comparable only when the named population matches
-    val ratioWorkMedian =
-      if (combinedWork.isEmpty) -1.0
-      else {
-        val rs = combinedWork.map(t => t._2 / t._3).sorted
-        rs((rs.size - 1) / 2)
-      }
-    val workSetNames = combinedWork.map(_._1).sorted
-    if (x10Spark.nonEmpty)
-      System.err.println(f"[bench] x10 envelope: spark=$x10SparkTotal%.2f " +
-        f"duckdb=$x10DuckTotal%.2f over ${x10Overlap.size} entries, " +
-        f"ratio=${if (x10DuckTotal > 0) x10SparkTotal / x10DuckTotal else -1.0}%.2f " +
-        f"median=$x10RatioMedian%.2f work=$x10RatioWork%.2f " +
-        f"(${x10Work.size} work-dominated)")
-    if (xfloorSpark.nonEmpty)
-      System.err.println(f"[bench] x$xfloorMult%d floor tier: ${xfloorSpark.size} " +
-        f"entries re-run, ${xfloorWork.size} now work-dominated; combined " +
-        f"work_n=${combinedWork.size} ratio_work=$ratioWorkAll%.2f")
     if (x10PackPhases.nonEmpty)
       System.err.println("[bench] d04_budget_pack x10 phases: " +
         x10PackPhases.map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
@@ -2631,197 +1290,321 @@ object Bench {
     if (exchangeStats.nonEmpty)
       System.err.println("[bench] exchange (min-rep): " + exchangeStats
         .map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
-    def render(f: Double => String, fullDuckdb: Boolean): String = {
-      // counts (planned files, work_n, commit totals) render as bare
-      // integers — "64" not "64.00" — the stdout line's 2000-char budget
-      // is real and decimals on counts buy nothing. KEY-driven, not
-      // value-driven (r14 ADVICE): a timing that lands exactly on an
-      // integer must still render as "2.00", else textual artifact diffs
-      // are format-unstable depending on the value.
-      val countKeys = Set("sp", "pp", "mult", "n", "overlap", "work_n",
-        "merges", "tokens", "threads", "commits", "rows", "s_total",
-        "p_total", "n_docs", "n_files", "files_total", "files_before",
-        "files_after", "files_after_part", "eq_files")
-      def isCount(k: String): Boolean =
-        countKeys(k) || k.endsWith("_planned") || k.endsWith("_files") ||
-          k.endsWith("_df") || k.endsWith("_hits") || k.endsWith("_rows") ||
-          k.endsWith("_mult") || k.endsWith("_tasks") ||
-          k.startsWith("files_q") ||
-          k.contains("files_planned") || k.endsWith("files_total")
-      def num(k: String, v: Double): String =
-        if (isCount(k) && v == v.floor && math.abs(v) < 1e9)
-          v.toLong.toString
-        else f(v)
-      def optObj(key: String, entries: Seq[(String, Double)]): String =
-        if (entries.isEmpty) ""
-        else entries.map { case (k, v) => "\"" + k + "\":" + num(k, v) }
-          .mkString(s""""$key":{""", ",", "},")
-      val q = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
-        .mkString("{", ",", "}")
-      // the raw sf0.1 all-overlap quotient mixes two populations: the
-      // ENVELOPE queries (pure compute, comparable across engines) and
-      // the heavy-tail LIFECYCLE entries (table create + multi-commit +
-      // serve + drop, which the DuckDB oracle replays as pure logic with
-      // no storage — pricing the table round-trip against nothing, the
-      // r10 finding that moved them out of the envelope). The full
-      // artifact carries the split so a reader computes like-for-like;
-      // the cross-engine headline remains the x10 section.
-      val envNames = envelope.map(_._1).toSet
-      val envOverlap = overlap.filter(p => envNames(p._1))
-      val lifecycleOverlap = overlap.filterNot(p => envNames(p._1))
-      val split =
-        if (!fullDuckdb || duckdbByQuery.isEmpty) ""
-        else s""""spark_env_total":${f(envOverlap.map(_._2).sum)},""" +
-          s""""duckdb_env_total":${f(envOverlap.map(p => duckdbByQuery(p._1)).sum)},""" +
-          s""""spark_lifecycle_total":${f(lifecycleOverlap.map(_._2).sum)},""" +
-          s""""duckdb_lifecycle_total":${f(lifecycleOverlap.map(p => duckdbByQuery(p._1)).sum)},"""
-      val duck =
-        if (fullDuckdb) split + s""""duckdb_seconds":$duckdbJson,"""
-        else if (duckdbByQuery.isEmpty) """"duckdb_total":null,"""
-        else s""""duckdb_total":${f(overlap.map(p => duckdbByQuery(p._1)).sum)},""" +
-          s""""duckdb_overlap":${overlap.size},""" +
-          s""""spark_overlap_total":${f(overlap.map(_._2).sum)},"""
-      // the x10 SUMMARY (5 keys, ~90 chars) rides the stdout line — it is
-      // the round's headline ratio; the per-query x10 maps ride only the
-      // full artifact (the 2000-char tail-capture discipline)
-      // "mult" rides the full artifact only since r14 (stdout budget —
-      // the multiplier is 10 by contract; SPARK_GRAFT_X10 overrides are
-      // dev iterations that never write the committed artifact)
-      val x10Summary =
-        if (x10Spark.isEmpty) ""
-        else optObj("x10",
-          (if (fullDuckdb) Seq("mult" -> x10Mult.toDouble) else Nil) ++ Seq(
-          "spark_total" -> x10SparkTotal,
-          "duckdb_total" -> x10DuckTotal,
-          "overlap" -> x10Overlap.size.toDouble,
-          "ratio" ->
-            (if (x10DuckTotal > 0) x10SparkTotal / x10DuckTotal else -1.0)) ++
-          // per-population medians + the x10-only work stats ride the
-          // full artifact since r15 (stdout-tail budget: the line hit
-          // 1,993 of 2,000 chars; the tracked headline is the COMBINED
-          // work population under "xfloor", README round 15)
-          (if (fullDuckdb) Seq(
-            "ratio_median" -> x10RatioMedian,
-            "ratio_work" -> x10RatioWork,
-            "work_n" -> x10Work.size.toDouble) else Nil))
-      // the xfloor summary's work_n/ratio_work are the COMBINED
-      // (×10 ∪ deep-tier) work-dominated statistics — the round's
-      // widest-coverage engine comparison (README round 14)
-      val xfloorSummary =
-        if (xfloorSpark.isEmpty) ""
-        else optObj("xfloor",
-          (if (fullDuckdb) Seq("mult" -> xfloorMult.toDouble,
-            "n" -> xfloorSpark.size.toDouble) else Nil) ++ Seq(
-          "work_n" -> combinedWork.size.toDouble,
-          "ratio_work" -> ratioWorkAll,
-          "ratio_work_median" -> ratioWorkMedian))
-      val x10Full =
-        if (!fullDuckdb || x10Spark.isEmpty) ""
-        else optObj("envelope_x10", x10Spark) +
-          s""""duckdb_x10":$x10DuckJson,""" +
-          optObj("d04_budget_pack_x10_phases", x10PackPhases)
-      val xfloorFull =
-        if (!fullDuckdb || xfloorSpark.isEmpty) ""
-        else optObj("envelope_xfloor", xfloorSpark) +
-          s""""duckdb_xfloor":$xfloorDuckJson,""" +
-          (if (workSetNames.isEmpty) ""
-           else workSetNames.map("\"" + _ + "\"")
-             .mkString("\"work_set\":[", ",", "],"))
-      s"""{"metric":"total","value":${f(total)},"unit":"sec",""" +
-        s""""heavy_total":${f(heavyTotal)},"queries":$q,""" +
-        x10Summary + xfloorSummary + x10Full + xfloorFull +
-        // heavy_scale (~16 keys, ~470 chars when SPARK_GRAFT_HEAVY_SCALE
-        // is set) rides the FULL artifact only: with it inline the r13
-        // heavy-scale run's stdout line hit 2,286 chars — past the
-        // 2000-char driver tail capture; the x1/x4/x10 family is also
-        // printed to stderr per step, so nothing is lost from a terminal
-        (if (fullDuckdb) optObj("heavy_scale", heavyScale) else "") +
-        // point-lookup attribution canary (r14, verdict item 1): the
-        // compact totals/planned/worst-rep ride the stdout line so
-        // BENCH_r{N}.json can adjudicate file-count drift vs per-open
-        // cost; the per-rep walls + warmup ride the full artifact only
-        // (stdout-tail budget)
-        // stdout carries the two PLANNED counts only (sp/pp — the
-        // pruning-drift canary; sorted must stay 1); totals, per-rep
-        // walls and warmup ride the full artifact (tail-capture budget)
-        optObj("point_lookup",
-          if (fullDuckdb) pointLookupDetail
-          else pointLookupDetail.collect {
-            case ("s_planned", v) => "sp" -> v
-            case ("p_planned", v) => "pp" -> v }) +
-        // at_10/at_100 ride the full artifact only (at_10 since r14,
-        // at_100 since r15 — stdout budget); the canary threshold the
-        // gate rule quotes is at_1000
-        optObj("commit_curve",
-          if (fullDuckdb) commitCurve
-          else commitCurve.filter(_._1 == "ms_per_commit_at_1000")) +
-        // stdout carries the two CANARY floors only (bulk = exchange
-        // epoch, scan = page-cache/storage epoch); the per-job floor
-        // pair rides the full artifact (r15 stdout-tail budget)
-        optObj("spark_floor",
-          if (fullDuckdb) sparkFloor
-          else sparkFloor.filter(p =>
-            p._1 == "floor_bulk_s" || p._1 == "floor_scan_s")) +
-        // the join family's shuffle decomposition rides the FULL artifact
-        // only (25 keys ≈ 600 chars — stdout-tail budget); stderr prints
-        // it on every run
-        (if (fullDuckdb) optObj("exchange", exchangeStats) else "") +
-        optObj("plan_scale", planScale) +
-        optObj("index_compact", indexCompact) +
-        optObj("delete_compact", deleteCompact) +
-        optObj("mocks3_latency", mockS3) +
-        optObj("ann_rebuild", annRebuild) +
-        optObj("eq_convert", eqConvert) +
-        // phase splits + the BPE rate ride the FULL artifact only (r12):
-        // the six new heavy entries pushed the stdout line to ~1940 of
-        // the driver's 2000-char tail capture; these objects are
-        // committed in BENCH_FULL.json and printed to stderr, so the
-        // stdout line keeps headroom for the summary keys
-        (if (fullDuckdb) optObj("d06_shards_phases", shardPhases)
-         else "") +
-        (if (fullDuckdb) optObj("d02_ann_indexed_phases", annPhases)
-         else "") +
-        (if (fullDuckdb) optObj("d02_hybrid_indexed_phases", hybridPhases)
-         else "") +
-        (if (fullDuckdb) optObj("d02_phrase_index_phases", phrasePhases)
-         else "") +
-        (if (fullDuckdb) optObj("d02_bm25_zipf_phases", zipfPhases)
-         else "") +
-        (if (fullDuckdb) optObj("d02_phrase_zipf_phases", phraseZipfPhases)
-         else "") +
-        (if (fullDuckdb) optObj("d02_hybrid_zipf_phases", hybridZipfPhases)
-         else "") +
-        (if (fullDuckdb) optObj("bpe_full", bpeRate) else "") +
-        (if (fullDuckdb) optObj("zipf_retrieval", zipfRetrieval) else "") +
-        optObj("commit_contention", commitContention) +
-        duck +
-        s""""sf":"${sfDir.split('/').last}"}"""
-    }
-    val json = render(fmt, fullDuckdb = false)
-    // file fallback for machine parsing, then the bare stdout line —
-    // printed LAST so the driver's output-tail capture always holds the
-    // complete blob; warn (stderr) if it ever outgrows the tail window
-    if (json.length > 1900)
-      System.err.println(s"[bench] WARNING: json line ${json.length} chars " +
+    val results = envelope ++ heavy
+    val (line, full) = render(Measured(
+      sf = sfDir.split('/').last,
+      envelope = envelope,
+      heavy = heavy,
+      x10 = Tier(x10Mult, x10Spark, x10Duck),
+      x10PackPhases = x10PackPhases,
+      xfloor = Tier(xfloorMult, xfloorSpark, xfloorDuck),
+      sections = Seq(
+        "point_lookup" -> pointLookupDetail,
+        "commit_curve" -> commitCurve,
+        "spark_floor" -> sparkFloor,
+        "exchange" -> exchangeStats,
+        "d06_shards_phases" -> shardPhases) ++
+        Seq("d02_ann_indexed", "d02_hybrid_indexed", "d02_phrase_index",
+          "d02_bm25_zipf", "d02_phrase_zipf", "d02_hybrid_zipf")
+          .map(n => s"${n}_phases" -> entryPhases(n)) ++
+        Seq("bpe_full" -> bpeRate, "zipf_retrieval" -> zipfRetrieval),
+      // DuckDB side-by-side: each measured entry's oracle SQL on the same
+      // parquet at the same sf, so the artifact carries both engines and
+      // the round ratio needs no re-measurement
+      duckdb = runDuckdb(sfDir, results.map(_._1).toSet, mode = None)))
+    if (line.length > 1900)
+      System.err.println(s"[bench] WARNING: json line ${line.length} chars " +
         "— approaching the 2000-char driver tail capture")
-    // the file copies keep ms precision AND the full per-query duckdb map
-    // (the historical artifact format); BENCH_FULL.json is committed so the
-    // judge reads the complete map even though stdout carries summaries
-    // partial runs (SPARK_GRAFT_BENCH_ONLY) write the /tmp copy only —
-    // a probe-only iteration must never clobber the committed full
+    // the file copies keep ms precision AND the full per-query duckdb map;
+    // BENCH_FULL_c<cpus>.json is committed so a reader has the complete
+    // map even though stdout carries summaries. One file per core count:
+    // an 8-core run once overwrote the 32-core artifact and its canaries.
+    // Partial runs (SPARK_GRAFT_BENCH_ONLY) write the /tmp copy only — a
+    // section-only iteration must never clobber the committed full
     // artifact with an empty envelope. Same guard for the SCALE: the
     // committed artifact is sf0.1 evidence, and a full smoke at sf0.001
     // (the verify recipe's step 4) silently replaced it once in r11 —
     // only a full run at the driver's sf may write it.
     for (path <- Seq("/tmp/graft_bench.json") ++
-        (if (fullRun && sfDir.endsWith("sf0.1")) Seq("BENCH_FULL.json")
+        (if (fullRun && sfDir.endsWith("sf0.1")) Seq(s"BENCH_FULL_c$cpus.json")
          else Nil)) {
       try {
         val w = new java.io.PrintWriter(path)
-        try w.println(render(fmt3, fullDuckdb = true)) finally w.close()
+        try w.println(full) finally w.close()
       } catch { case _: Throwable => }
     }
-    println(json)
+    // the bare stdout line is printed LAST so an output-tail capture
+    // always holds the complete line
+    println(line)
     spark.stop()
+  }
+
+  /** A ×m replicated-corpus tier: the Spark walls per entry and the DuckDB
+    * twin's {entry: seconds} object (None when DuckDB did not run).
+    */
+  final case class Tier(mult: Int, spark: Seq[(String, Double)],
+      duckdb: Option[JsonNode])
+
+  /** What one run measured — the input of [[render]]. `sections` are the
+    * named per-run objects (canaries, phase splits, zipf_retrieval) in
+    * report order; an empty one is left out.
+    */
+  final case class Measured(
+      sf: String,
+      envelope: Seq[(String, Double)],
+      heavy: Seq[(String, Double)],
+      x10: Tier,
+      x10PackPhases: Seq[(String, Double)],
+      xfloor: Tier,
+      sections: Seq[(String, Seq[(String, Double)])],
+      duckdb: Option[JsonNode])
+
+  /** Times each named entry's oracle SQL in DuckDB over the parquet tables
+    * in `dir` through tools/bench_duckdb.py (mode "median3" for the ×m
+    * tiers, the script's best-of protocol otherwise) and returns its
+    * {entry: seconds} object. None when no entry has oracle SQL or when
+    * python3/duckdb is unavailable or fails — duckdb is measurement
+    * tooling, not a library dependency.
+    */
+  private def runDuckdb(dir: String, names: Set[String],
+      mode: Option[String]): Option[JsonNode] = {
+    val sqls = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
+    if (sqls.isEmpty) None
+    else try {
+      val node = Json.obj()
+      sqls.foreach { case (k, v) => node.put(k, v) }
+      val f = java.io.File.createTempFile("graft-bench-sql", ".json")
+      f.deleteOnExit()
+      java.nio.file.Files.write(f.toPath,
+        Json.write(node).getBytes("UTF-8"))
+      // stderr INHERITs the bench's own stderr: a piped-but-unread
+      // stderr deadlocks the child (and this run) the moment a warning
+      // storm overflows the ~64 KB pipe buffer; merging into stdout
+      // would corrupt the JSON line instead
+      val proc = new ProcessBuilder((Seq("python3", "tools/bench_duckdb.py",
+          dir, f.getAbsolutePath) ++ mode): _*)
+        .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+      val src = scala.io.Source.fromInputStream(proc.getInputStream)
+      val line = try src.mkString.trim finally src.close()
+      if (proc.waitFor() == 0 && line.startsWith("{")) Some(Json.parse(line))
+      else None
+    } catch { case _: Throwable => None }
+  }
+
+  /** The DuckDB seconds per entry; entries whose oracle errored are left
+    * out.
+    */
+  private def duckSeconds(duck: Option[JsonNode]): Map[String, Double] =
+    duck.fold(Map.empty[String, Double])(_.properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble(-1.0))
+      .filter(_._2 >= 0).toMap)
+
+  // Entries whose DuckDB oracle is deliberately ORACLE-SHAPED rather than
+  // engine-idiomatic: d04_bpe_encode_full's oracle replays the greedy BPE
+  // encoder as ~80-deep nested-replace CTE blocks (the only way DuckDB SQL
+  // can express merge recursion), measured ~90× the Spark mapPartitions
+  // encoder (30.4 s vs 0.34 s at sf0.1). Timing that compares the oracle's
+  // SHAPE, not the engines — and including it flatters the summary ratio
+  // ~2.8× (0.69 vs 1.9 on the r11 healthy run). The summary overlap
+  // excludes it; the raw per-query number stays in duckdb_seconds so both
+  // are visible.
+  private val oracleShaped = Set("d04_bpe_encode_full")
+
+  private def median(xs: Seq[Double]): Double =
+    if (xs.isEmpty) -1.0 else xs.sorted.apply((xs.size - 1) / 2)
+
+  /** The full report as one JSON tree of raw numbers, in artifact order. */
+  private def report(m: Measured): ObjectNode = {
+    val root = Json.obj()
+    def put(key: String, entries: Seq[(String, Double)]): Unit =
+      if (entries.nonEmpty) {
+        val o = root.putObject(key)
+        entries.foreach { case (k, v) => o.put(k, v) }
+      }
+    val results = m.envelope ++ m.heavy
+    // `total` = envelope entries only; the heavyTail entries report under
+    // `heavy_total` so the envelope aggregate stays comparable with
+    // rounds ≤5 (adding them to `total` in round 6 read as a +5 s
+    // cross-round regression with no code change).
+    root.put("metric", "total")
+    root.put("value", m.envelope.map(_._2).filter(_ >= 0).sum)
+    root.put("unit", "sec")
+    root.put("heavy_total", m.heavy.map(_._2).filter(_ >= 0).sum)
+    val q = root.putObject("queries")
+    results.foreach { case (k, v) => q.put(k, v) }
+    // ×m tier summaries: the work-dominated engine ratio over entries
+    // BOTH engines completed (the `_duckdb_canary` key never matches a
+    // Spark entry, so it can't join the overlap; it rides the full
+    // artifact as this run's second denominator canary). r12 verdict
+    // item 2: the sum ratio is kept for continuity but is not robust —
+    // one entry where the engines differ in complexity class can own
+    // either side of the quotient. ratio_median (median of per-entry
+    // ratios) is domination-proof; ratio_work (sum ratio over entries
+    // whose DuckDB side >= 0.1 s) conditions away the ~0.1 s per-job
+    // Spark floor that owns the sub-second entries' ratios.
+    def ratios(t: Tier): Seq[(String, Double, Double)] = {
+      val duck = duckSeconds(t.duckdb)
+      t.spark.filter { case (k, v) => v >= 0 && duck.contains(k) &&
+        !oracleShaped(k) }.map { case (k, v) => (k, v, duck(k)) }
+    }
+    val x10Overlap = ratios(m.x10)
+    val x10SparkTotal = x10Overlap.map(_._2).sum
+    val x10DuckTotal = x10Overlap.map(_._3).sum
+    val x10Ratios = x10Overlap.filter(_._3 > 0)
+    val x10Work = x10Ratios.filter(_._3 >= 0.1)
+    // COMBINED work-dominated set (r14 verdict item 4): the ×10 work
+    // entries plus every floor entry the deep tier pushed over the 0.1 s
+    // DuckDB bar. Per entry the deeper tier is only used where ×10
+    // carried no signal, so the two tiers never double-count. Weighting
+    // caveat (r14 ADVICE): ratio_work sums ×10 walls and deep-tier walls
+    // into one sum-of-sums quotient, so a deep-tier entry carries
+    // ~(xfloor mult / x10 mult)× the weight per unit of base-corpus work;
+    // ratio_work_median is the scale-weighting-free companion, and
+    // `work_set` pins the population so cross-round ratio_work values are
+    // comparable only when the named set matches.
+    val x10WorkNames = x10Work.map(_._1).toSet
+    val combinedWork = x10Work ++ ratios(m.xfloor)
+      .filter(_._3 >= 0.1).filterNot(t => x10WorkNames(t._1))
+    if (m.x10.spark.nonEmpty)
+      put("x10", Seq("mult" -> m.x10.mult.toDouble,
+        "spark_total" -> x10SparkTotal,
+        "duckdb_total" -> x10DuckTotal,
+        "overlap" -> x10Overlap.size.toDouble,
+        "ratio" -> (if (x10DuckTotal > 0) x10SparkTotal / x10DuckTotal else -1.0),
+        "ratio_median" -> median(x10Ratios.map(t => t._2 / t._3)),
+        "ratio_work" -> (if (x10Work.isEmpty) -1.0
+          else x10Work.map(_._2).sum / x10Work.map(_._3).sum),
+        "work_n" -> x10Work.size.toDouble))
+    // the xfloor summary's work_n/ratio_work are the COMBINED
+    // (×10 ∪ deep-tier) work-dominated statistics — the round's
+    // widest-coverage engine comparison (README)
+    if (m.xfloor.spark.nonEmpty)
+      put("xfloor", Seq("mult" -> m.xfloor.mult.toDouble,
+        "n" -> m.xfloor.spark.size.toDouble,
+        "work_n" -> combinedWork.size.toDouble,
+        "ratio_work" -> (if (combinedWork.isEmpty) -1.0
+          else combinedWork.map(_._2).sum / combinedWork.map(_._3).sum),
+        "ratio_work_median" -> median(combinedWork.map(t => t._2 / t._3))))
+    if (m.x10.spark.nonEmpty) {
+      put("envelope_x10", m.x10.spark)
+      root.set[JsonNode]("duckdb_x10", m.x10.duckdb.getOrElse(NullNode.instance))
+      put("d04_budget_pack_x10_phases", m.x10PackPhases)
+    }
+    if (m.xfloor.spark.nonEmpty) {
+      put("envelope_xfloor", m.xfloor.spark)
+      root.set[JsonNode]("duckdb_xfloor",
+        m.xfloor.duckdb.getOrElse(NullNode.instance))
+      if (combinedWork.nonEmpty) {
+        val a = root.putArray("work_set")
+        combinedWork.map(_._1).sorted.foreach(a.add)
+      }
+    }
+    m.sections.foreach { case (k, entries) => put(k, entries) }
+    // the sf-level engine overlap. The raw all-overlap quotient mixes two
+    // populations: the ENVELOPE queries (pure compute, comparable across
+    // engines) and the heavy-tail LIFECYCLE entries (table create +
+    // multi-commit + serve + drop, which the DuckDB oracle replays as pure
+    // logic with no storage — pricing the table round-trip against
+    // nothing, the r10 finding that moved them out of the envelope). The
+    // env/lifecycle split lets a reader compute like-for-like; the
+    // cross-engine headline remains the x10 section.
+    val duck = duckSeconds(m.duckdb)
+    if (duck.isEmpty) root.putNull("duckdb_total")
+    else {
+      val overlap = results.filter { case (k, v) =>
+        v >= 0 && duck.contains(k) && !oracleShaped(k) }
+      val envNames = m.envelope.map(_._1).toSet
+      val (env, lifecycle) = overlap.partition(p => envNames(p._1))
+      def duckSum(xs: Seq[(String, Double)]) = xs.map(p => duck(p._1)).sum
+      root.put("duckdb_total", duckSum(overlap))
+      root.put("duckdb_overlap", overlap.size.toDouble)
+      root.put("spark_overlap_total", overlap.map(_._2).sum)
+      root.put("spark_env_total", env.map(_._2).sum)
+      root.put("duckdb_env_total", duckSum(env))
+      root.put("spark_lifecycle_total", lifecycle.map(_._2).sum)
+      root.put("duckdb_lifecycle_total", duckSum(lifecycle))
+    }
+    root.set[JsonNode]("duckdb_seconds", m.duckdb.getOrElse(NullNode.instance))
+    root.put("sf", m.sf)
+    root
+  }
+
+  /** What the stdout line keeps of the report: top-level key → the
+    * sub-keys kept of its object (empty = the whole value). Everything
+    * else rides the full artifact only — the line's reader captures the
+    * last 2,000 chars of output, and the round-6 artifact lost three
+    * entries when the line outgrew that window.
+    */
+  private val lineKeys: Map[String, Set[String]] = Map(
+    "metric" -> Set(), "value" -> Set(), "unit" -> Set(),
+    "heavy_total" -> Set(), "queries" -> Set(),
+    "x10" -> Set("spark_total", "duckdb_total", "overlap", "ratio"),
+    "xfloor" -> Set("work_n", "ratio_work", "ratio_work_median"),
+    "point_lookup" -> Set("sp", "pp"),
+    // the canary threshold the gate rule quotes
+    "commit_curve" -> Set("ms_per_commit_at_1000"),
+    // bulk = exchange epoch, scan = page-cache/storage epoch
+    "spark_floor" -> Set("floor_bulk_s", "floor_scan_s"),
+    "duckdb_total" -> Set(), "duckdb_overlap" -> Set(),
+    "spark_overlap_total" -> Set(), "sf" -> Set())
+
+  // counts (planned files, work_n, overlap) render as bare integers —
+  // "64" not "64.00". KEY-driven, not value-driven (r14 ADVICE): a
+  // timing that lands exactly on an integer must still render as "2.00",
+  // else textual artifact diffs are format-unstable depending on the value.
+  private val countKeys = Set("sp", "pp", "mult", "n", "overlap", "work_n",
+    "duckdb_overlap", "merges", "tokens", "s_total", "p_total", "n_docs",
+    "files_total")
+  private def isCount(k: String): Boolean =
+    countKeys(k) || k.endsWith("_planned") || k.endsWith("_files") ||
+      k.endsWith("_df") || k.endsWith("_hits") || k.endsWith("_rows") ||
+      k.endsWith("_tasks") || k.contains("files_planned") ||
+      k.endsWith("files_total")
+
+  /** The stdout line's subset of the report, in report order. */
+  private def line(report: ObjectNode): ObjectNode = {
+    val out = Json.obj()
+    report.properties().asScala.foreach { e =>
+      lineKeys.get(e.getKey).foreach { sub =>
+        if (sub.isEmpty) out.set[JsonNode](e.getKey, e.getValue)
+        else {
+          val kept = Json.obj()
+          e.getValue.properties().asScala.foreach { p =>
+            if (sub(p.getKey)) kept.set[JsonNode](p.getKey, p.getValue)
+          }
+          if (!kept.isEmpty) out.set[JsonNode](e.getKey, kept)
+        }
+      }
+    }
+    out
+  }
+
+  /** `n` with every number at `dp` decimals: counts as integers, failures
+    * (any negative) as -1.
+    */
+  private def formatted(n: JsonNode, dp: Int, key: String = ""): JsonNode =
+    n match {
+      case o: ObjectNode =>
+        val out = Json.obj()
+        o.properties().asScala.foreach(e =>
+          out.set[JsonNode](e.getKey, formatted(e.getValue, dp, e.getKey)))
+        out
+      case d if d.isFloatingPointNumber =>
+        val v = d.doubleValue
+        if (v.isNaN || v.isInfinite) NullNode.instance
+        else if (v < 0) IntNode.valueOf(-1)
+        else if (isCount(key) && v == v.floor && v < 1e9)
+          LongNode.valueOf(v.toLong)
+        else DecimalNode.valueOf(java.math.BigDecimal.valueOf(v)
+          .setScale(dp, java.math.RoundingMode.HALF_UP))
+      case other => other
+    }
+
+  /** The report rendered twice: the stdout line (2 dp, summaries only) and
+    * the full artifact (3 dp).
+    */
+  def render(m: Measured): (String, String) = {
+    val tree = report(m)
+    (Json.write(formatted(line(tree), 2)), Json.write(formatted(tree, 3)))
   }
 }

@@ -33,8 +33,13 @@ import org.apache.spark.sql.types.StructType
   * manifest list untouched (reference Writer.java:141-146), so commit cost
   * is O(1) in table size; manifests merge once they exceed
   * commit.manifest.min-count-to-merge (Writer.java:120).
+  *
+  * `meta` is volatile: staging futures (LakeQueries) read a handle's
+  * metadata on another thread while its owner commits, so every refresh
+  * and commit must publish the new TableMeta to them.
   */
-final class LakeTable private (val location: String, private var meta: TableMeta) {
+final class LakeTable private (val location: String,
+    @volatile private var meta: TableMeta) {
   import LakeFormat._
 
   private def fs: FileSystem = new Path(location).getFileSystem(LakeTable.hadoopConf)

@@ -3418,18 +3418,11 @@ object PipelineQueries {
       comp = session.createDataFrame(labels.rdd, labels.schema)
       rounds += 1
     } finally session.conf.set(spKey, prevParts)
-    lastCcRounds = rounds
     val out = Scratch.persist(comp, "cc")
     pinned.foreach(_.unpersist())
     edges.unpersist()
     out
   }
-
-  /** Rounds the last [[connectedComponents]] fixpoint took — the heavy-
-    * scale bench records it so the O(log diameter) claim is a measured
-    * curve (rounds vs corpus size), not an asymptote.
-    */
-  @volatile private[graft] var lastCcRounds: Int = -1
 
   // D4e — n-gram language ID: rank each language's bigrams by lift
   // (freq-in-lang / freq-overall), keep the top 30 per language, predict

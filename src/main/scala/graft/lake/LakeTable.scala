@@ -98,50 +98,55 @@ final class LakeTable private (val location: String,
 
   // ---- file listing ------------------------------------------------------
 
-  private[lake] def readManifest(name: String): Seq[DataFileMeta] = {
-    val p = new Path(metaDir, name)
-    // Manifests are immutable by construction (every write mints a new
-    // UUID name), so parsed contents cache safely across queries — without
-    // this, EVERY planning pass re-parses the full inventory JSON on the
-    // driver, which at 10⁶ files is hundreds of MB per query. Bounded LRU:
-    // memory tops out near the live-inventory size (what one files() call
-    // transiently allocates anyway); expired manifests age out.
-    val key = p.toString
-    val cached = LakeTable.manifestCache.get(key)
-    if (cached != null) cached
-    else {
-      val parsed = Json.manifestFromJson(LakeTable.readSmall(fs, p))
+  /** The data files listed by manifests `names`, in manifest order.
+    * Manifests are immutable by construction (every write mints a new
+    * UUID name), so parsed contents cache safely across queries — without
+    * this, EVERY planning pass re-parses the full inventory JSON on the
+    * driver, which at 10⁶ files is hundreds of MB per query. Bounded LRU:
+    * memory tops out near the live-inventory size (what one files() call
+    * transiently allocates anyway); expired manifests age out.
+    */
+  private[lake] def readManifests(names: Seq[String]): Seq[DataFileMeta] =
+    cachedManifests(names, LakeTable.manifestCache) { json =>
+      val parsed = Json.manifestFromJson(json)
       LakeTable.manifestParses.incrementAndGet()
-      LakeTable.manifestCache.put(key, parsed)
       parsed
     }
+
+  /** The entries of manifests `names`, in manifest order, from `cache` or
+    * read and parsed. A walk past the cache on an object store costs one
+    * request per manifest, so misses are read concurrently
+    * ([[LakeTable.cachedOrRead]]).
+    */
+  private def cachedManifests[E](names: Seq[String],
+      cache: java.util.Map[String, Seq[E]])(parse: String => Seq[E]): Seq[E] = {
+    val (fs, dir) = (this.fs, metaDir)
+    LakeTable.cachedOrRead(names.map(new Path(dir, _)), cache)(p =>
+      parse(LakeTable.readSmall(fs, p))).flatten
   }
+
+  private[lake] def readManifest(name: String): Seq[DataFileMeta] =
+    readManifests(Seq(name))
 
   /** All live data files at a snapshot (current by default). */
   def files(snapshotId: Long = meta.currentSnapshotId): Seq[DataFileMeta] =
     meta.snapshot(snapshotId) match {
       case None => throw new IllegalArgumentException(s"no snapshot $snapshotId")
-      case Some(s) => s.manifests.flatMap(readManifest)
+      case Some(s) => readManifests(s.manifests)
     }
 
-  private def readDeleteManifest(name: String): Seq[DeleteFileMeta] = {
-    val p = new Path(metaDir, name)
-    val key = p.toString
-    val cached = LakeTable.deleteManifestCache.get(key)
-    if (cached != null) cached
-    else {
-      val parsed = Json.deleteManifestFromJson(LakeTable.readSmall(fs, p))
-      LakeTable.deleteManifestCache.put(key, parsed)
-      parsed
-    }
-  }
+  /** The delete files listed by delete manifests `names`, in manifest
+    * order; same immutable-name LRU as [[readManifests]].
+    */
+  private def readDeleteManifests(names: Seq[String]): Seq[DeleteFileMeta] =
+    cachedManifests(names, LakeTable.deleteManifestCache)(Json.deleteManifestFromJson)
 
   /** Live position-delete files at a snapshot (merge-on-read deletes). */
   def deleteFilesMeta(
       snapshotId: Long = meta.currentSnapshotId): Seq[DeleteFileMeta] =
     meta.snapshot(snapshotId) match {
       case None => throw new IllegalArgumentException(s"no snapshot $snapshotId")
-      case Some(s) => s.deleteManifests.flatMap(readDeleteManifest)
+      case Some(s) => readDeleteManifests(s.deleteManifests)
     }
 
   /** The delete files that can mark rows of data file `f` — position
@@ -184,7 +189,7 @@ final class LakeTable private (val location: String,
       .filter(id => id > fromId && id <= toId).sorted
     if (ids.isEmpty) return Nil
     val seen = scala.collection.mutable.HashSet.empty[String]
-    fromSnap.manifests.flatMap(readManifest).foreach(seen += _.path)
+    readManifests(fromSnap.manifests).foreach(seen += _.path)
     var prevManifests = fromSnap.manifests.toSet
     val out = Seq.newBuilder[(Long, Seq[DataFileMeta])]
     for (id <- ids) {
@@ -197,8 +202,7 @@ final class LakeTable private (val location: String,
         // folded into `seen` already; only genuinely-new manifests need
         // parsing (a merge commit's combined manifest re-lists old files —
         // the seen-set drops them)
-        val newFiles = s.manifests.filterNot(prevManifests.contains)
-          .flatMap(readManifest)
+        val newFiles = readManifests(s.manifests.filterNot(prevManifests.contains))
           .filterNot(f => seen.contains(f.path))
           .distinctBy(_.path)
         newFiles.foreach(seen += _.path)
@@ -312,10 +316,10 @@ final class LakeTable private (val location: String,
   private def assertNoNewDeletes(sinceSnapshot: Long,
       replaced: Seq[DataFileMeta], op: String): Unit = {
     val before = meta.snapshot(sinceSnapshot)
-      .map(_.deleteManifests.flatMap(readDeleteManifest).map(_.path).toSet)
+      .map(s => readDeleteManifests(s.deleteManifests).map(_.path).toSet)
       .getOrElse(Set.empty[String])
-    val fresh = meta.current.map(_.deleteManifests).getOrElse(Nil)
-      .flatMap(readDeleteManifest).filterNot(d => before.contains(d.path))
+    val fresh = readDeleteManifests(meta.current.map(_.deleteManifests).getOrElse(Nil))
+      .filterNot(d => before.contains(d.path))
     val hit = fresh.filter(d => replaced.exists(d.applies))
     if (hit.nonEmpty)
       throw new java.util.ConcurrentModificationException(
@@ -348,7 +352,7 @@ final class LakeTable private (val location: String,
   private def carryDeleteManifests(kept: Seq[DataFileMeta]): Seq[String] = {
     val curManifests = meta.current.map(_.deleteManifests).getOrElse(Nil)
     if (curManifests.isEmpty) return Nil
-    val dels = curManifests.flatMap(readDeleteManifest)
+    val dels = readDeleteManifests(curManifests)
     val keptPaths = kept.map(_.path).sorted.toArray
     val keptSet = keptPaths.toSet
     val oldestKeptSeq = kept.map(_.seq).minOption.getOrElse(Long.MaxValue)
@@ -576,8 +580,8 @@ final class LakeTable private (val location: String,
   private def knownPaths(): Set[String] = {
     val id = meta.currentSnapshotId
     if (knownPathsCache._1 != id) {
-      val paths = meta.current.map(_.manifests).getOrElse(Nil)
-        .flatMap(readManifest).map(_.path).toSet
+      val paths = readManifests(meta.current.map(_.manifests).getOrElse(Nil))
+        .map(_.path).toSet
       knownPathsCache = (id, paths)
     }
     knownPathsCache._2
@@ -1106,7 +1110,7 @@ final class LakeTable private (val location: String,
           s"branch $branch points at missing snapshot $id")))
         .orElse(meta.current)
         .getOrElse(throw new IllegalStateException("cannot stage on an empty table"))
-      val known = base.manifests.flatMap(readManifest).map(_.path).toSet
+      val known = readManifests(base.manifests).map(_.path).toSet
       val fresh = newFiles.distinctBy(_.path).filterNot(f => known.contains(f.path))
       val manifests =
         if (fresh.isEmpty) base.manifests
@@ -1234,7 +1238,7 @@ final class LakeTable private (val location: String,
     commit("compact") { () =>
       val cur = meta.current.map(_.manifests).getOrElse(Nil)
       if (cur.size <= 1) None
-      else Some(CommitPlan(manifests = writeManifests(cur.flatMap(readManifest))))
+      else Some(CommitPlan(manifests = writeManifests(readManifests(cur))))
     }
 
   /** Manifest compaction once the count crosses the merge threshold.
@@ -1894,7 +1898,6 @@ final class LakeTable private (val location: String,
       // under toId's names): name misses then translate through field
       // ids instead of null-filling a renamed column
       requestDef: Option[SchemaDef] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     if (fileMetas.isEmpty) {
       val full = StructType(schema.fields
         ++ keepPathCol.map(n => org.apache.spark.sql.types.StructField(
@@ -1904,12 +1907,27 @@ final class LakeTable private (val location: String,
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
     }
+    val wanted = fileMetas.map(_.path)
+    readSnapshot(spark, schema, snapshotId,
+      if (wanted.toSet == files(snapshotId).map(_.path).toSet) None
+      else Some(wanted),
+      keepPathCol, keepPosCol, requestDef)
+  }
+
+  /** [[readWithDeletes]]' read: snapshot `snapshotId` through the DSv2
+    * source, narrowed to the data files `only` when given. The whole
+    * snapshot (`None`) needs no file list here, so the scan's own
+    * manifest walk is the only one.
+    */
+  private def readSnapshot(spark: SparkSession, schema: StructType,
+      snapshotId: Long, only: Option[Seq[String]],
+      keepPathCol: Option[String] = None, keepPosCol: Option[String] = None,
+      requestDef: Option[SchemaDef] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
     var df = spark.read.format("laketable")
       .option("snapshotId", snapshotId.toString).load(location)
-    val wanted = fileMetas.map(_.path)
-    if (wanted.toSet != files(snapshotId).map(_.path).toSet)
-      df = df.filter(col(dsv2.LakeMetaColumns.FileColumn)
-        .isin(wanted.toIndexedSeq: _*))
+    only.foreach(paths => df = df.filter(col(dsv2.LakeMetaColumns.FileColumn)
+      .isin(paths.toIndexedSeq: _*)))
     val present = df.columns.toSet
     lazy val pinnedDef = schemaDefAt(snapshotId)
     val projected = schema.fields.map(f =>
@@ -1978,9 +1996,9 @@ final class LakeTable private (val location: String,
           s.operation == "stage" || s.operation == "rewrite-deletes") Nil
       else {
         val parent = meta.snapshot(s.parentId)
-        val pFiles = parent.map(_.manifests.flatMap(readManifest))
+        val pFiles = parent.map(p => readManifests(p.manifests))
           .getOrElse(Nil).distinctBy(_.path)
-        val sFiles = s.manifests.flatMap(readManifest).distinctBy(_.path)
+        val sFiles = readManifests(s.manifests).distinctBy(_.path)
         val pPaths = pFiles.map(_.path).toSet
         val sPaths = sFiles.map(_.path).toSet
         val added = sFiles.filterNot(f => pPaths.contains(f.path))
@@ -2002,9 +2020,9 @@ final class LakeTable private (val location: String,
               "insert", id))
           // new delete files (diffed by delete-file path — rewrite commits
           // re-list carried entries under fresh manifest names)
-          val pDelPaths = parent.map(_.deleteManifests.flatMap(readDeleteManifest))
+          val pDelPaths = parent.map(p => readDeleteManifests(p.deleteManifests))
             .getOrElse(Nil).map(_.path).toSet
-          val newDels = s.deleteManifests.flatMap(readDeleteManifest)
+          val newDels = readDeleteManifests(s.deleteManifests)
             .distinctBy(_.path).filterNot(d => pDelPaths.contains(d.path))
           val (newPos, newEq) = newDels.partition(_.kind == DeleteFileMeta.KindPos)
           val posDeletes =
@@ -2324,10 +2342,10 @@ final class LakeTable private (val location: String,
         val keptDelManifests = keep.flatMap(_.deleteManifests).toSet
         orphanDeleteManifests =
           expired.flatMap(_.deleteManifests).toSet -- keptDelManifests
-        val keptDelPaths = keptDelManifests.toSeq
-          .flatMap(readDeleteManifest).map(_.path).toSet
+        val keptDelPaths = readDeleteManifests(keptDelManifests.toSeq)
+          .map(_.path).toSet
         orphanDeleteFiles =
-          orphanDeleteManifests.flatMap(readDeleteManifest).map(_.path) -- keptDelPaths
+          readDeleteManifests(orphanDeleteManifests.toSeq).map(_.path).toSet -- keptDelPaths
         Some(CommitPlan(keepSnapshots = keep))
       }
     }
@@ -2413,8 +2431,8 @@ final class LakeTable private (val location: String,
     // references stay driver-side — both are metadata-bounded by design.
     val dataManifests = meta.snapshots.flatMap(_.manifests).distinct
       .map(new Path(metaDir, _).toString)
-    val smallRefs = (meta.snapshots.flatMap(_.deleteManifests).distinct
-      .flatMap(readDeleteManifest).map(f => plain(f.path)) ++ pendingRefs)
+    val smallRefs = (readDeleteManifests(meta.snapshots.flatMap(_.deleteManifests).distinct)
+      .map(f => plain(f.path)) ++ pendingRefs)
     val locPrefix = plain(new Path(location).toString) + "/"
     import org.apache.spark.sql.functions.col
 
@@ -2588,7 +2606,7 @@ final class LakeTable private (val location: String,
     * deletes as of that snapshot.
     */
   def snapshotDF(spark: SparkSession, snapshotId: Long): DataFrame =
-    readWithDeletes(spark, schemaAt(snapshotId), files(snapshotId), snapshotId)
+    readSnapshot(spark, schemaAt(snapshotId), snapshotId, only = None)
 
   /** Incremental read (B3): rows added in (fromId, toId]. Append-only CDC
     * contract: rows are delivered AS APPENDED — merge-on-read deletes
@@ -2704,6 +2722,54 @@ object LakeTable {
           size() > 128
       })
   private[lake] val manifestParses = new java.util.concurrent.atomic.AtomicLong
+
+  /** Name prefix of the [[manifestReaders]] threads. */
+  private[lake] final val ManifestReaderThread = "laketable-manifest-reader"
+
+  /** JVM-wide pool that reads manifest cache misses, created on first use.
+    * Eight daemon threads — the width of the reference's bookkeeper pool
+    * and of LakeWriter's publish pool, not the core count: its tasks wait
+    * on store requests. Idle threads block on the queue. Tasks only read
+    * and parse; none submits a task, so callers waiting on them cannot
+    * starve the pool.
+    */
+  private lazy val manifestReaders: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
+      val t = new Thread(r, s"$ManifestReaderThread-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** `cache`'s values for `paths`, in order, with misses read by `read`
+    * and cached. Hits are served on the caller's thread, as is a single
+    * miss; two or more misses are read on [[manifestReaders]]. Every read
+    * finishes before anything is rethrown; the first failure in path
+    * order is rethrown as `read` threw it (a missing manifest stays a
+    * FileNotFoundException).
+    */
+  private def cachedOrRead[V <: AnyRef](paths: Seq[Path],
+      cache: java.util.Map[String, V])(read: Path => V): Seq[V] = {
+    import scala.jdk.CollectionConverters._
+    val hits = paths.map(p => cache.get(p.toString))
+    val misses = paths.iterator.zip(hits.iterator)
+      .collect { case (p, null) => p }.toSeq.distinct
+    def load(p: Path): V = { val v = read(p); cache.put(p.toString, v); v }
+    val loaded: Map[Path, V] =
+      if (misses.size <= 1) misses.map(p => p -> load(p)).toMap
+      else {
+        // invokeAll returns once every read has finished
+        val done = manifestReaders.invokeAll(misses.map(p =>
+          (() => load(p)): java.util.concurrent.Callable[V]).asJava).asScala
+        misses.zip(done).map { case (p, f) =>
+          try p -> f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }.toMap
+      }
+    paths.iterator.zip(hits.iterator)
+      .map { case (p, v) => if (v != null) v else loaded(p) }.toSeq
+  }
 
   /** Max referenced data paths inlined per delete-file entry; beyond this
     * the manifest stores only the [min, max] range (conservative checks).

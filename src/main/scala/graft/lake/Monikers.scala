@@ -2,7 +2,6 @@ package graft.lake
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 
 import scala.collection.parallel.CollectionConverters._

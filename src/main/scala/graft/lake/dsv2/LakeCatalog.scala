@@ -3,7 +3,6 @@ package graft.lake.dsv2
 import java.util
 
 import graft.lake.{LakeTable, TruncateSpec}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._

@@ -2,7 +2,7 @@ package graft.lake.dsv2
 
 import java.util.UUID
 
-import graft.lake.{DataFileMeta, DeleteFileMeta, LakeFormat, LakeTable, LakeWriter, TruncateSpec}
+import graft.lake.{DataFileMeta, DeleteFileMeta, LakeFormat, LakeTable, TruncateSpec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter

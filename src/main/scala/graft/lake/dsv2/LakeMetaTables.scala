@@ -3,7 +3,6 @@ package graft.lake.dsv2
 import java.util
 
 import graft.lake.{Json, LakeTable}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL-callable maintenance procedures (Spark 4 ProcedureCatalog — the
   * Iceberg `CALL cat.system.<proc>(...)` surface), so an operator runs the

@@ -79,13 +79,15 @@ final class LakeRowLevelOperation(location: String,
         LakeMetaColumns.FileColumn, org.apache.spark.sql.types.StringType,
         nullable = false))
     new ScanBuilder {
-      override def build(): Scan =
+      override def build(): Scan = {
+        val snap = ScanSnapshot.pin(table, None)
         new LakeBatchScan(location, table, readSchema, Array.empty,
-          None, None, None,
+          None, None, snap,
           planListener = Some { fs =>
             scannedPaths = fs.map(_.path).toSet
-            scanSnapshot = Some(table.currentSnapshotId)
+            scanSnapshot = Some(snap.id)
           })
+      }
     }
   }
 

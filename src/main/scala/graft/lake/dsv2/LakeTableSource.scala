@@ -2,7 +2,7 @@ package graft.lake.dsv2
 
 import java.util
 
-import graft.lake.{ColStats, DataFileMeta, LakeTable}
+import graft.lake.{DataFileMeta, LakeTable}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -183,6 +183,9 @@ final class LakeScanBuilder(location: String, table: LakeTable,
   with SupportsPushDownLimit {
 
   private var pushed: Array[Filter] = Array.empty
+  // pinned here so an aggregate pushdown and the scan it declines to
+  // replace share one manifest walk
+  private val snap = ScanSnapshot.pin(table, asOf)
   private var required: StructType =
     asOf.map(table.schemaAt).getOrElse(table.schema)
   private var aggRows: Option[(StructType, Seq[Seq[Any]])] = None
@@ -233,15 +236,14 @@ final class LakeScanBuilder(location: String, table: LakeTable,
     // pending merge-on-read deletes: manifest row counts/stats include
     // deleted rows — answers must come from the row-level path (which
     // applies the delete masks)
-    if (table.deleteFilesMeta(
-        asOf.getOrElse(table.currentSnapshotId)).nonEmpty) return false
+    if (snap.deletes.nonEmpty) return false
     val groupByPart = agg.groupByExpressions.toSeq match {
       case Nil => false
       case Seq(n: NamedReference)
         if n.fieldNames.sameElements(Array(table.spec.column)) => true
       case _ => return false // any other grouping: full row-level path
     }
-    val files = asOf.map(table.files(_)).getOrElse(table.files())
+    val files = snap.files
     // Truncate partitioning (widthMicros > 1) admits in-bucket variation:
     // rows keep raw values while a file only records its bucket start, so
     // answering GROUP BY <part col> from manifests would collapse every
@@ -311,7 +313,7 @@ final class LakeScanBuilder(location: String, table: LakeTable,
     }
     case None =>
       new LakeBatchScan(location, table, required, pushed, startSnapshot, asOf,
-        maxFilesPerTrigger, pushedLimit = limit,
+        snap, maxFilesPerTrigger, pushedLimit = limit,
         maxBytesPerTrigger = maxBytesPerTrigger, endSnapshot = endSnapshot,
         skipDeletes = skipDeletes)
   }
@@ -476,6 +478,24 @@ object LakeMetaColumns {
   }
 }
 
+/** The snapshot one scan reads, pinned once, with its data-file and
+  * delete-file lists each walked at most once. Planning asks for them
+  * several times (aggregate pushdown, statistics, partitioning,
+  * runtime-filter attributes, partitions, the reader factory); the memo
+  * lives only as long as the builder and scan that hold it, so nothing
+  * outlives the query.
+  */
+final class ScanSnapshot private (table: LakeTable, val id: Long) {
+  lazy val files: Seq[DataFileMeta] = table.files(id)
+  lazy val deletes: Seq[graft.lake.DeleteFileMeta] = table.deleteFilesMeta(id)
+}
+
+object ScanSnapshot {
+  /** `asOf`, or the table's current snapshot. */
+  def pin(table: LakeTable, asOf: Option[Long]): ScanSnapshot =
+    new ScanSnapshot(table, asOf.getOrElse(table.currentSnapshotId))
+}
+
 /** The data scan. Three scale-relevant contracts beyond the basic Batch:
   *
   *  - [[SupportsRuntimeFiltering]]: join-derived runtime filters (dynamic
@@ -490,7 +510,8 @@ object LakeMetaColumns {
   */
 final class LakeBatchScan(location: String, table: LakeTable,
     required: StructType, pushed: Array[Filter], startSnapshot: Option[Long],
-    asOf: Option[Long] = None, maxFilesPerTrigger: Option[Int] = None,
+    asOf: Option[Long], snap: ScanSnapshot,
+    maxFilesPerTrigger: Option[Int] = None,
     planListener: Option[Seq[DataFileMeta] => Unit] = None,
     pushedLimit: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None,
@@ -504,25 +525,23 @@ final class LakeBatchScan(location: String, table: LakeTable,
 
   private var runtime: Array[Filter] = Array.empty
 
-  // time travel: a pinned snapshot reads that version's file list.
+  // the pinned snapshot's file list (time travel: that version's).
   // BATCH incremental read (A25's batch form, the Iceberg incremental
   // surface): with startSnapshotId the scan plans only the files APPEND
   // snapshots added over (start, end] — same never-re-deliver-compacted
   // contract as the streaming source, one walk over the range
-  // (addedFilesBetween). Previously the batch path silently IGNORED the
-  // option and read the whole table.
-  private def liveFiles: Seq[DataFileMeta] = startSnapshot match {
-    case Some(from) =>
-      table.addedFilesBetween(from,
-        endSnapshot.orElse(asOf).getOrElse(table.currentSnapshotId))
-    case None => asOf.map(table.files(_)).getOrElse(table.files())
+  // (addedFilesBetween). Walked once per scan: statistics, partitioning,
+  // runtime-filter attributes and partition planning all read it, and
+  // runtime filters re-prune it in memory.
+  private lazy val liveFiles: Seq[DataFileMeta] = startSnapshot match {
+    case Some(from) => table.addedFilesBetween(from, endSnapshot.getOrElse(snap.id))
+    case None => snap.files
   }
 
   /** Schema def the scan's column names resolve against (rename/drop
     * evolution): current, or the pinned def of a time-travel snapshot.
     */
-  private lazy val readDef: graft.lake.SchemaDef =
-    table.schemaDefAt(asOf.getOrElse(table.currentSnapshotId))
+  private lazy val readDef: graft.lake.SchemaDef = table.schemaDefAt(snap.id)
 
   /** Stats/filter pruning sees CURRENT column names; a file written under
     * an older schema keys its footer stats by its PHYSICAL names. Translate
@@ -560,8 +579,7 @@ final class LakeBatchScan(location: String, table: LakeTable,
   private def plannedFiles: Seq[DataFileMeta] = {
     val files = prunedFiles
     pushedLimit match {
-      case Some(n) if pushed.isEmpty && runtime.isEmpty &&
-          table.deleteFilesMeta(asOf.getOrElse(table.currentSnapshotId)).isEmpty =>
+      case Some(n) if pushed.isEmpty && runtime.isEmpty && snap.deletes.isEmpty =>
         var acc = 0L
         files.takeWhile { f => val need = acc < n; acc += f.rowCount; need }
       case _ => files
@@ -645,9 +663,7 @@ final class LakeBatchScan(location: String, table: LakeTable,
     // merge-on-read: attach each file's candidate delete files (position
     // entries range-pruned by data path, equality entries sequence-pruned);
     // readers apply them as skip masks / key sets
-    val dels =
-      if (skipDeletes) Nil
-      else table.deleteFilesMeta(asOf.getOrElse(table.currentSnapshotId))
+    val dels = if (skipDeletes) Nil else snap.deletes
     val deletesFor: DataFileMeta => Seq[DeleteSliceRef] =
       if (dels.isEmpty) _ => Nil
       else {
@@ -670,8 +686,7 @@ final class LakeBatchScan(location: String, table: LakeTable,
       // Spark rejects mixed columnar/row partition sets, so ANY pending
       // delete sends the whole scan down the row path; delete-free scans
       // (the overwhelming majority) stay columnar
-      hasDeletes = !skipDeletes && table
-        .deleteFilesMeta(asOf.getOrElse(table.currentSnapshotId)).nonEmpty,
+      hasDeletes = !skipDeletes && snap.deletes.nonEmpty,
       // full table schema: equality-delete key columns may lie outside the
       // projection and need their types for the injected read
       tableSchemaDdl = asOf.map(table.schemaAt).getOrElse(table.schema).toDDL,
@@ -682,9 +697,7 @@ final class LakeBatchScan(location: String, table: LakeTable,
     val files = plannedFiles
     // pending MoR deletes shrink the row estimate (position counts may
     // double-mark a row — estimates, not answers; clamped at 0)
-    val pendingDeletes = table
-      .deleteFilesMeta(asOf.getOrElse(table.currentSnapshotId))
-      .map(_.rowCount).sum
+    val pendingDeletes = snap.deletes.map(_.rowCount).sum
     val rows = math.max(0L, files.map(_.rowCount).sum - pendingDeletes)
     // scale the on-disk size by projection width so a narrow projection of
     // a wide table can still broadcast (same spirit as the built-in file
@@ -1003,7 +1016,7 @@ final class LakeReaderFactory(schemaDdl: String,
     }
 
   private def readConfFor(extras: Seq[StructField], withIdx: Boolean,
-      sid: Int = 0): org.apache.hadoop.conf.Configuration = {
+      sid: Int): org.apache.hadoop.conf.Configuration = {
     // identity = the file's physical names ARE the requested names: same
     // schema id, no registry, or a mapping that touches no projected column
     val logical = dataSchema.fields ++ extras
@@ -1112,7 +1125,7 @@ final class LakeReaderFactory(schemaDdl: String,
     * convenience path hardcodes, plus the projected Spark schema.
     */
   private def openVectorized(s: LakeFileSlice,
-      conf: org.apache.hadoop.conf.Configuration = null) = {
+      conf: org.apache.hadoop.conf.Configuration) = {
     val r = new org.apache.spark.sql.execution.datasources.parquet
       .VectorizedParquetRecordReader(null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
     // mapred.FileSplit (extends the mapreduce one): the reader base

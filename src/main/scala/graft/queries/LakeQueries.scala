@@ -134,7 +134,7 @@ object LakeQueries {
   // commit/layout/fencing semantics.
   def b04b_lake_sink(s: SparkSession, dir: String): DataFrame = {
     val loc = scratch("laketable-sink")
-    val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+    LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
     LakeWriter.generateBatch(s, 100, bucket(0), seed = 11)
       .union(LakeWriter.generateBatch(s, 50, bucket(1), seed = 12))
       .write.format("laketable").mode("append").save(loc)

@@ -8,8 +8,6 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import scala.jdk.CollectionConverters._
-
 /** Minimal Avro container-file sink/source (reference A8: Avro is the
   * alternate data-file format, Writer.java:92-96, Constants.java:16).
   *

@@ -392,7 +392,6 @@ object StreamingQueries {
       .start()
     q.awaitTermination()
     table.refresh()
-    import s.implicits._
     // deterministic summary: per-partition-bucket row counts (dupe deduped)
     val out = localize(table.toDF(s).groupBy(col("timeperiod_loadedBy"))
       .agg(count(lit(1)).as("n"), countDistinct(col("message_id")).as("n_ids"))
@@ -526,7 +525,7 @@ object StreamingQueries {
   def c20_stream_eq_upsert(s: SparkSession, dir: String): DataFrame = {
     import graft.lake._
     val loc = s"${System.getProperty("java.io.tmpdir")}/graft-c20-${UUID.randomUUID()}"
-    val table = LakeTable.create(loc,
+    LakeTable.create(loc,
       "o_orderkey BIGINT,o_totalprice DOUBLE,o_orderstatus STRING",
       TruncateSpec("o_orderkey", 400L))
     def drain(src: DataFrame): Unit = {
@@ -1540,7 +1539,7 @@ object StreamingQueries {
     // layout key = xxhash64(band,h0,h1) pmod 16 (P.withBandKey) — h0 is
     // a minhash minimum and skews low; the uniform re-key spreads
     // maintenance appends evenly across the 16 buckets
-    val index = LakeTable.create(locI, P.BandIndexDdl,
+    LakeTable.create(locI, P.BandIndexDdl,
       TruncateSpec("bkey", 1L))
     LakeTable.create(locR, "doc_id BIGINT", TruncateSpec("doc_id", 1000L))
     try {

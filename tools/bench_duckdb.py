@@ -11,19 +11,43 @@ Usage: bench_duckdb.py <sfDir> <sql_json> [mode]
           with an adaptive third rep for >=1.5s oracles (the raw sf0.1
           envelope protocol, kept for cross-round continuity).
 Prints ONE JSON line {query_name: seconds} (null for queries that
-error). <sfDir> tables may be single parquet files (driver testdata) or
+error). DuckDB runs under a memory limit of half the memory available to
+this process and spills to a per-run temp directory, so an oracle that
+outgrows memory raises (and nulls only its own entry) instead of getting
+the whole process killed. <sfDir> tables may be single parquet files (driver testdata) or
 Spark-written directories (the x10 scratch corpus) — directories are
 read via a glob view.
 """
 import json
 import os
+import resource
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+
+
+def memory_limit_bytes():
+    """Half of what this process may use: the machine's MemAvailable,
+    capped by the address-space limit (`ulimit -v`) when one is set."""
+    avail = None
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail = int(line.split()[1]) * 1024
+                    break
+    except OSError:
+        pass
+    cap = resource.getrlimit(resource.RLIMIT_AS)[0]
+    if cap != resource.RLIM_INFINITY:
+        avail = cap if avail is None else min(avail, cap)
+    return None if avail is None else avail // 2
 
 
 def main():
@@ -34,6 +58,19 @@ def main():
     con = duckdb.connect()
     threads = os.environ.get("SPARK_GRAFT_CPUS", "32")
     con.execute(f"SET threads TO {int(threads)}")
+    limit = memory_limit_bytes()
+    if limit is not None:
+        con.execute(f"SET memory_limit = '{limit // (1 << 20)}MB'")
+    spill = tempfile.mkdtemp(prefix="bench_duckdb_")
+    try:
+        con.execute(f"SET temp_directory = '{spill}'")
+        run(con, sf_dir, sqls, median3)
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def run(con, sf_dir, sqls, median3):
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(p):

@@ -219,33 +219,18 @@ object Bench {
         }
       }
 
-    // per-entry phase getters (r14 verdict item 2): entries that expose a
-    // phase split record it on EVERY run, but the bench reports the MIN
-    // rep — capturing phases post-hoc took them from the LAST rep, so a
-    // taxed last rep made phases sum to 2× the reported wall (r14's own
-    // artifact: ann phases 9.58 s vs entry 4.05 s). bestOf snapshots
-    // the phases at the rep that set the reported min and appends
-    // phases_wall_s so sum-of-phases ≈ wall is checkable from the JSON.
-    def zipfStylePhases(idx: () => Seq[(String, Double)],
-        prune: () => (Int, Int),
-        bucket: () => Int): () => Seq[(String, Double)] = () => {
-      val (pl, tot) = prune()
-      idx() ++ (if (tot >= 0) Seq(
-        "serve_files_planned" -> pl.toDouble,
-        "serve_bucket_files" -> bucket().toDouble,
-        "files_total" -> tot.toDouble) else Nil)
-    }
-    val LQ = graft.queries.LakeQueries
-    val phaseSources: Map[String, () => Seq[(String, Double)]] = Map(
-      "d02_ann_indexed" -> (() => LQ.lastAnnIndexedPhases),
-      "d02_hybrid_indexed" -> (() => LQ.lastHybridIndexedPhases),
-      "d02_phrase_index" -> (() => LQ.lastPhraseIndexPhases),
-      "d02_bm25_zipf" -> zipfStylePhases(() => LQ.lastZipfIndexPhases,
-        () => LQ.lastZipfServeFilePrune, () => LQ.lastZipfServeBucketFiles),
-      "d02_phrase_zipf" -> zipfStylePhases(() => LQ.lastPhraseZipfPhases,
-        () => LQ.lastPhraseZipfFilePrune,
-        () => LQ.lastPhraseZipfBucketFiles),
-      "d02_hybrid_zipf" -> (() => LQ.lastHybridZipfPhases))
+    // entries whose phase split the artifact carries (r14 verdict item 2):
+    // bestOf captures every rep's trace and keeps the record of the rep
+    // that set the reported MIN — phases taken post-hoc came from the LAST
+    // rep, so a taxed last rep made phases sum to 2× the reported wall
+    // (r14's own artifact: ann phases 9.58 s vs entry 4.05 s). Each gets
+    // its spans, the serve's file-pruning counts where it records them,
+    // and phases_wall_s so sum-of-phases ≈ wall is checkable from the JSON.
+    val phaseEntries = Set("d02_ann_indexed", "d02_hybrid_indexed",
+      "d02_phrase_index", "d02_bm25_zipf", "d02_phrase_zipf",
+      "d02_hybrid_zipf")
+    val serveFileCounts =
+      Set("serve_files_planned", "serve_bucket_files", "files_total")
     val minRepPhases =
       scala.collection.mutable.Map[String, Seq[(String, Double)]]()
 
@@ -274,17 +259,17 @@ object Bench {
       */
     def bestOf(key: String)(f: () => Double): Double = {
       val probed = exchangeFamily(key)
-      val phases = phaseSources.get(key)
       var minSoFar = Double.MaxValue
       def rep(): Double = {
         if (probed) ExchangeProbe.reset()
-        val w = f()
+        val (w, trace) = Trace.capture(f())
         if (probed) recordExchange(key, w)
         if (w >= 0 && w < minSoFar) {
           minSoFar = w
-          // snapshot the phase split AT the rep that set the reported min
-          phases.foreach(g =>
-            minRepPhases(key) = g() :+ ("phases_wall_s" -> w))
+          if (phaseEntries(key))
+            minRepPhases(key) = trace.spans ++ trace.counts.collect {
+              case (k, n) if serveFileCounts(k) => k -> n.toDouble
+            } :+ ("phases_wall_s" -> w)
         }
         w
       }
@@ -985,22 +970,22 @@ object Bench {
       locally {
         import spark.implicits._
         val inc = Seq((nDocs + 1L, span + " !!!!")).toDF("doc_id", "text")
-        val spans = graft.queries.LakeQueries
-          .substrIndexRun(spark, docs, inc)
+        val (spans, trace) = Trace.capture(graft.queries.LakeQueries
+          .substrIndexRun(spark, docs, inc))
         val n = spans.count()
-        val LQ = graft.queries.LakeQueries
         // phase-split (r13 review): substrIndexRun's wall is >99% the
         // ONE-TIME corpus shingle-index build — reporting it as the
         // gate would claim corpus-proportional serve work, the exact
         // misattribution this probe exists to rule out. The gate key
         // carries the increment-proportional serve only.
-        out += "substr_build_s" -> LQ.lastSubstrBuildS
-        out += "substr_gate_s" -> LQ.lastSubstrGateServeS
-        out += "substr_maint_s" -> LQ.lastSubstrMaintS
-        val (pl, tot) = LQ.lastSubstrGateFilePrune
+        out += "substr_build_s" -> trace.span("build_s")
+        out += "substr_gate_s" -> trace.span("gate_s")
+        out += "substr_maint_s" -> trace.span("maint_s")
         out += "substr_gate_hits" -> n.toDouble
-        out += "substr_files_planned" -> pl.toDouble
-        out += "substr_files_total" -> tot.toDouble
+        out += "substr_files_planned" ->
+          trace.count("substr_files_planned").toDouble
+        out += "substr_files_total" ->
+          trace.count("substr_files_total").toDouble
       }
       System.err.println("[bench] zipf_retrieval: " + out.map {
         case (k, v) => f"$k=$v%.3f" }.mkString(" "))

@@ -3,6 +3,7 @@ package graft.queries
 import java.util.UUID
 
 import graft.Tables.t
+import graft.Trace
 import graft.lake._
 import graft.sources.AvroIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -757,10 +758,6 @@ object LakeQueries {
     * (batch-sized, the cheap side); callers that already know the count
     * pass it via `expectedItems` to skip even that.
     */
-  /** (ndv, numBits) chosen for the last incremental-dedup bloom —
-    * spec-observable so a regression back to fixed literals is caught. */
-  @volatile private[graft] var lastIncDedupBloomParams: Option[(Long, Long)] = None
-
   private[graft] def incrementalDedup(s: SparkSession, inc: DataFrame,
       corpusHashes: DataFrame, expectedItems: Option[Long] = None): DataFrame = {
     graft.functions.BloomFunctions.register(s)
@@ -778,7 +775,8 @@ object LakeQueries {
     val ndv = math.min(maxItems,
       math.max(64L, expectedItems.getOrElse(inc.count())))
     val bits = math.min(maxBits, math.max(65536L, ndv * 10L))
-    lastIncDedupBloomParams = Some((ndv, bits))
+    Trace.count("bloom_ndv", ndv)
+    Trace.count("bloom_bits", bits)
     val corpus = corpusHashes
       .filter(expr(
         s"""might_contain(
@@ -870,11 +868,6 @@ object LakeQueries {
   // re-keys share all 4 bands; near-dup re-keys with 3 appended tokens
   // share the surviving bands) are derived identically in the oracle →
   // hash-oracled end to end.
-  /** Optimized plan of the last d01_minhash_incremental run — spec-
-    * observable, so a regression from the semi-join/distinct-keys shape
-    * back to a pairing join is caught. */
-  @volatile private[graft] var lastMinhashIncPlan: Option[String] = None
-
   def d01_minhash_incremental(s: SparkSession, dir: String): DataFrame = {
     val P = graft.queries.PipelineQueries
     val loc = scratch("incmh")
@@ -907,7 +900,8 @@ object LakeQueries {
         .select(col("doc_id"),
           coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
         .orderBy("doc_id")
-      lastMinhashIncPlan = Some(out.queryExecution.optimizedPlan.toString)
+      // the spec pins the semi-join/distinct-keys shape, never a pairing join
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
       localize(out)
     } finally LakeTable.drop(loc)
   }
@@ -915,10 +909,6 @@ object LakeQueries {
   /** The incremental packer's table property: the committed stream's
     * running token total — the ENTIRE pack state. */
   private[graft] val SeqPackTotalProp = "graft.seqpack.token.total"
-  /** Optimized plan of the last d04_seqpack_incremental pack —
-    * spec-observable: must contain exactly ONE relation (the increment
-    * read off changesBetween); a corpus rescan would add a second. */
-  @volatile private[graft] var lastSeqPackIncPlan: Option[String] = None
 
   // D4l — INCREMENTAL sequence packing: the packed-stream index
   // (d04_seq_pack) maintained per arrival with work ∝ increment. The
@@ -961,7 +951,8 @@ object LakeQueries {
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tok"))
       val out = P.packStreamSpans(inc, base)
-      lastSeqPackIncPlan = Some(out.queryExecution.optimizedPlan.toString)
+      // one relation only (the increment); a corpus rescan would add a second
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
       val localized = localize(out)
       // maintenance half: advance the committed total by the increment's
       // tokens (derivable from the spans just computed — no extra scan)
@@ -973,16 +964,6 @@ object LakeQueries {
       localized
     } finally LakeTable.drop(loc)
   }
-
-  /** Optimized plan of the last d03_minhash_index GATE — spec-observable:
-    * must show a LEFT SEMI probe whose committed side is the INDEX table's
-    * scan (the laketable relation at the index location), not a recompute
-    * of the corpus band space. */
-  @volatile private[graft] var lastMinhashIndexGate: Option[(String, String)] = None
-  /** Band keys appended by the last d03_minhash_index maintenance commit —
-    * spec-observable proof that index maintenance writes work proportional
-    * to the INCREMENT's novel keys, never the corpus band space. */
-  @volatile private[graft] var lastMinhashIndexNewKeys: Long = -1L
 
   // D3f — the MinHash band space as a first-class TABLE citizen,
   // completing the committed-index family (ANN: d02_ann_indexed; fuzzy:
@@ -1048,8 +1029,8 @@ object LakeQueries {
         .select(col("doc_id"),
           coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
         .orderBy("doc_id")
-      lastMinhashIndexGate =
-        Some((out.queryExecution.optimizedPlan.toString, locI))
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+      Trace.note("index_location", locI)
       val gated = localize(out)
       // maintenance: one commit of the increment's NOVEL distinct keys —
       // probe work ∝ increment, write work ∝ novel keys
@@ -1057,32 +1038,15 @@ object LakeQueries {
         P.withBandKey(incBands.select("band", "h0", "h1").distinct()
           .join(comBands.drop("bkey"), Seq("band", "h0", "h1"),
             "left_anti")), index))
-      lastMinhashIndexNewKeys =
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum
+      // ∝ the increment's novel keys, never the corpus band space
+      Trace.count("maint_rows",
+        index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
       gated
     } finally {
       LakeTable.drop(locD)
       LakeTable.drop(locI)
     }
   }
-
-  /** Optimized plan of the last d02_phrase_index SERVE plus the index
-    * location — spec-observable: the adjacency probe reads position lists
-    * from the committed POSITIONAL index scan, never re-tokenizing the
-    * corpus. */
-  @volatile private[graft] var lastPhraseIndexServe: Option[(String, String)] = None
-  /** Posting rows appended by the last d02_phrase_index maintenance
-    * commit — work ∝ the increment's postings. */
-  @volatile private[graft] var lastPhraseIndexMaintRows: Long = -1L
-  /** Phase walls of the last d02_phrase_index run (r14 verdict item 2:
-    * the entry drifted +70% in r13 and, unlike its substring sibling,
-    * carried no split — the drift was unattributable). build = the
-    * corpus-half postings commit, maint = the increment's postings
-    * append, serve = the positional adjacency probe off the committed
-    * index. Bench surfaces these on full artifacts under
-    * `d02_phrase_index_phases` next to the single-key entry. */
-  @volatile private[graft] var lastPhraseIndexPhases: Seq[(String, Double)] =
-    Nil
 
   // D2p-index — the POSITIONAL inverted index as a committed table: one
   // layout (term, doc_id, tf, dl, positions ARRAY<BIGINT>) that serves
@@ -1116,41 +1080,30 @@ object LakeQueries {
       keyed(postings), index, sortBy = Seq("thash"),
       maxRecordsPerFile = P.Bm25IndexRowsPerFile)
     try {
-      val t0 = System.nanoTime()
-      val i1 = index.append(write(P.positionalPostings(evens)))
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      val tM0 = System.nanoTime()
-      val i2 = index.append(write(P.positionalPostings(odds)))
-      val tMaint = (System.nanoTime() - tM0) / 1e9
-      lastPhraseIndexMaintRows =
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum
+      // phase split (build = corpus-half postings, maint = the increment's
+      // postings, serve = the adjacency probe): an unsplit drift of this
+      // entry was once unattributable
+      val i1 = Trace.phase("build_s")(index.append(write(P.positionalPostings(evens))))
+      val i2 = Trace.phase("maint_s")(index.append(write(P.positionalPostings(odds))))
+      // work ∝ the increment's postings
+      Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
       val idxT = LakeTable.load(loc)
       // serve-side layout pruning, same bucket-aware predicate as the
       // BM25 serve: each OR branch pins a tkey bucket and footer-skips
       // within it on that bucket's own term hashes
-      val tS0 = System.nanoTime()
-      val out = P.phraseServe(
-        idxT.toDF(s).filter(P.phraseLayoutPredicate)
-          .select("term", "doc_id", "positions"))
-      lastPhraseIndexServe = Some((out.queryExecution.optimizedPlan.toString, loc))
-      val res = localize(out)
-      lastPhraseIndexPhases = Seq(
-        "build_s" -> tBuild, "maint_s" -> tMaint,
-        "serve_s" -> (System.nanoTime() - tS0) / 1e9)
-      lastPhraseServeFilePrune =
-        (graft.lake.dsv2.LakeScanMetrics.lastPlannedByLocation
-          .getOrElse(loc, -1), idxT.files().size)
+      val res = Trace.phase("serve_s") {
+        val out = P.phraseServe(
+          idxT.toDF(s).filter(P.phraseLayoutPredicate)
+            .select("term", "doc_id", "positions"))
+        Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+        Trace.note("index_location", loc)
+        localize(out)
+      }
+      Trace.count("phrase_files_planned", filesPlanned(loc))
+      Trace.count("phrase_files_total", idxT.files().size.toLong)
       res
     } finally LakeTable.drop(loc)
   }
-
-  /** Phase walls + serve file pruning of the last d02_phrase_zipf run. */
-  @volatile private[graft] var lastPhraseZipfPhases: Seq[(String, Double)] =
-    Nil
-  @volatile private[graft] var lastPhraseZipfFilePrune: (Int, Int) = (-1, -1)
-  /** Files in the probes' matched tkey buckets at the last serve —
-    * planned < this proves the within-bucket footer skip worked. */
-  @volatile private[graft] var lastPhraseZipfBucketFiles: Int = -1
 
   // D2pz — PHRASE adjacency under the REALISTIC Zipf vocabulary (r14
   // verdict item 3): the committed positional index is built over the
@@ -1187,8 +1140,7 @@ object LakeQueries {
       TruncateSpec("tkey", 1L))
     index.setProperty("write.sort-order", "thash")
     try {
-      val t0 = System.nanoTime()
-      index.append(LakeWriter.writeDataFiles(
+      Trace.phase("build_s")(index.append(LakeWriter.writeDataFiles(
         P.zipfPositionalPostings(rdocs)
           .withColumn("thash", xxhash64(col("term")))
           .withColumn("tkey", pmod(col("thash"), lit(16L)))
@@ -1206,36 +1158,16 @@ object LakeQueries {
         // thash): the ×16 corpus's 4.2 M posting rows otherwise write
         // through ≤16 tasks — the bucket count, not the core count, was
         // the build's parallelism cap. Files stay disjoint in thash.
-        splitBy = Seq(shiftright(col("thash"), 61))))
-      val tBuild = (System.nanoTime() - t0) / 1e9
+        splitBy = Seq(shiftright(col("thash"), 61)))))
       val idxT = LakeTable.load(loc)
-      val tS0 = System.nanoTime()
-      val out = P.phraseServe(
+      val res = Trace.phase("serve_s")(localize(P.phraseServe(
         idxT.toDF(s).filter(P.zipfPhraseLayoutPredicate)
           .select("term", "doc_id", "positions"),
-        P.ZipfPhraseQueries)
-      val res = localize(out)
-      lastPhraseZipfPhases = Seq("build_s" -> tBuild,
-        "serve_s" -> (System.nanoTime() - tS0) / 1e9)
-      val files = idxT.files()
-      lastPhraseZipfFilePrune =
-        (graft.lake.dsv2.LakeScanMetrics.lastPlannedByLocation
-          .getOrElse(loc, -1), files.size)
-      lastPhraseZipfBucketFiles =
-        files.count(f => P.zipfPhraseQueryTkeys.contains(f.partitionValue))
+        P.ZipfPhraseQueries)))
+      serveFilePrune(loc, idxT, P.zipfPhraseQueryTkeys)
       res
     } finally LakeTable.drop(loc)
   }
-
-  /** Optimized plan of the last d01_substring_index GATE plus the index
-    * location — spec-observable: the duplicated-shingle probe's committed
-    * side must be the INDEX table's scan, never a re-shingling of the
-    * committed corpus. */
-  @volatile private[graft] var lastSubstrIndexGate: Option[(String, String)] = None
-  /** Shingle keys appended by the last d01_substring_index maintenance
-    * commit — spec-observable proof maintenance writes only the
-    * increment's NOVEL hashes. */
-  @volatile private[graft] var lastSubstrIndexNewKeys: Long = -1L
 
   // D1i — the SUBSTRING shingle space as a first-class TABLE citizen,
   // completing the committed-index family across all four dedup regimes
@@ -1311,28 +1243,22 @@ object LakeQueries {
         .select(col("doc_id"), col("p").as("st"),
           (col("p") + P.SubstrShingle).as("en"))
       val out = P.mergeSpans(hits)
-      lastSubstrIndexGate =
-        Some((out.queryExecution.optimizedPlan.toString, locI))
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+      Trace.note("index_location", locI)
       // phase walls (r13): everything above is the ONE-TIME corpus
       // build (table commits + whole-corpus shingle index); the
       // localize below is the GATE SERVE — the increment-proportional
       // part a probe must report separately or the build dominates and
       // misreads as gate cost
-      lastSubstrBuildS = (System.nanoTime() - tStart) / 1e9
-      val tGate = System.nanoTime()
-      val gated = localize(out)
-      lastSubstrGateServeS = (System.nanoTime() - tGate) / 1e9
-      lastSubstrGateFilePrune =
-        (graft.lake.dsv2.LakeScanMetrics.lastPlannedByLocation
-          .getOrElse(locI, -1), idxT.files().size)
+      Trace.span("build_s", (System.nanoTime() - tStart) / 1e9)
+      val gated = Trace.phase("gate_s")(localize(out))
+      Trace.count("substr_files_planned", filesPlanned(locI))
+      Trace.count("substr_files_total", idxT.files().size.toLong)
       // maintenance: one commit of the increment's NOVEL distinct hashes
-      val tMaint = System.nanoTime()
-      val i2 = index.append(LakeWriter.writeDataFiles(
+      val i2 = Trace.phase("maint_s")(index.append(LakeWriter.writeDataFiles(
         keyed(incSh.select("shash").distinct()
-          .join(comSh, Seq("shash"), "left_anti")), index))
-      lastSubstrMaintS = (System.nanoTime() - tMaint) / 1e9
-      lastSubstrIndexNewKeys =
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum
+          .join(comSh, Seq("shash"), "left_anti")), index)))
+      Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
       gated
     } finally {
       LakeTable.drop(locD)
@@ -1340,35 +1266,22 @@ object LakeQueries {
     }
   }
 
-  /** Optimized plan of the last d02_bm25_index SERVE plus the index
-    * location — spec-observable: the scoring probe's postings side must
-    * be the committed INDEX table's scan, not a tokenize/groupBy recompute
-    * of the corpus. */
-  @volatile private[graft] var lastBm25IndexServe: Option[(String, String)] = None
-  /** Posting rows appended by the last d02_bm25_index maintenance commit —
-    * spec-observable proof that index maintenance writes work proportional
-    * to the INCREMENT's postings, never rebuilding the corpus postings. */
-  @volatile private[graft] var lastBm25IndexMaintRows: Long = -1L
-  /** (files planned, files total) of the last d02_bm25_index serve scan —
-    * spec-observable proof the serve prunes the index SCAN to the query
-    * terms' layout buckets, not just its rows (r11 verdict item 2). */
-  @volatile private[graft] var lastBm25ServeFilePrune: (Int, Int) = (-1, -1)
-  /** Files in the query terms' MATCHED tkey buckets at the last
-    * d02_bm25_index serve — the within-bucket skip is spec-observable as
-    * planned < this (bucket pruning alone can never go below it; only
-    * footer min/max skipping on the thash-sorted files can). */
-  @volatile private[graft] var lastBm25ServeBucketFiles: Int = -1
-  /** Same observation for the last d02_phrase_index serve scan. */
-  @volatile private[graft] var lastPhraseServeFilePrune: (Int, Int) = (-1, -1)
-  /** Same observation for the last d01_substring_index gate probe scan. */
-  @volatile private[graft] var lastSubstrGateFilePrune: (Int, Int) = (-1, -1)
-  /** Phase walls of the last [[substrIndexRun]]: one-time corpus build
-    * (table commits + whole-corpus shingle index), the gate SERVE (the
-    * increment-proportional part), and the maintenance append — so a
-    * probe never reports the build under the gate's name (r13). */
-  @volatile private[graft] var lastSubstrBuildS: Double = -1.0
-  @volatile private[graft] var lastSubstrGateServeS: Double = -1.0
-  @volatile private[graft] var lastSubstrMaintS: Double = -1.0
+  /** Files the latest scan of the table at `loc` planned, -1 if none. */
+  private def filesPlanned(loc: String): Long =
+    graft.lake.dsv2.LakeScanMetrics.lastPlannedByLocation.getOrElse(loc, -1).toLong
+
+  /** The serve scan's file pruning, recorded on the caller's trace: files
+    * planned, files in the probes' MATCHED tkey buckets, files in the
+    * index. planned < bucket files proves the within-bucket footer skip
+    * (bucket pruning alone can never go below it). */
+  private def serveFilePrune(loc: String, idx: LakeTable,
+      tkeys: Seq[Long]): Unit = {
+    lazy val files = idx.files()
+    Trace.count("serve_files_planned", filesPlanned(loc))
+    Trace.count("serve_bucket_files",
+      files.count(f => tkeys.contains(f.partitionValue)).toLong)
+    Trace.count("files_total", files.size.toLong)
+  }
 
   /** Corpus-stats property FAMILY on the BM25 index table: one key per
     * maintainer — "graft.bm25.stats.<maintainer>" holds that maintainer's
@@ -1416,23 +1329,6 @@ object LakeQueries {
       graft.queries.PipelineQueries.Bm25IndexRowsPerFile)
   }
 
-  /** Phase walls of the last d02_bm25_zipf run (build the expanded-vocab
-    * committed index / serve the octave probes) + the serve's
-    * (planned, total) file counts — Bench surfaces them on full
-    * artifacts so the serve wall tracks round-over-round SEPARATELY
-    * from the build (r13 verdict item 5: the envelope's retrieval serves
-    * all ran against the ~30-word corpus head, measuring the worst
-    * case; the Zipf probe measured realistic selectivity but was not an
-    * oracled, round-tracked entry). */
-  @volatile private[graft] var lastZipfIndexPhases: Seq[(String, Double)] =
-    Nil
-  @volatile private[graft] var lastZipfServeFilePrune: (Int, Int) = (-1, -1)
-  /** Files in the probes' MATCHED tkey buckets at the last d02_bm25_zipf
-    * serve — planned < this proves the within-bucket footer skip worked
-    * (bucket pruning alone can never go below it), same observability as
-    * lastBm25ServeBucketFiles. */
-  @volatile private[graft] var lastZipfServeBucketFiles: Int = -1
-
   // D2z — BM25 ranked retrieval under a REALISTIC Zipf vocabulary: the
   // corpus's tokens are deterministically expanded to a ~30k-term
   // log-uniform vocabulary (PipelineQueries.zipfPostings — all-integer
@@ -1449,29 +1345,22 @@ object LakeQueries {
     val index = LakeTable.create(loc, P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
     index.setProperty("write.sort-order", "thash")
     try {
-      val t0 = System.nanoTime()
-      val st = d.agg(count(lit(1)),
-        sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
-      index.append(LakeWriter.writeDataFiles(
-        P.bm25Keyed(P.zipfPostings(d)), index, sortBy = Seq("thash"),
-        maxRecordsPerFile = P.Bm25IndexRowsPerFile))
-      val tBuild = (System.nanoTime() - t0) / 1e9
+      // the serve wall tracks separately from the build, at realistic
+      // selectivity (the head-term serves measure only the worst case)
+      val st = Trace.phase("build_s") {
+        val r = d.agg(count(lit(1)),
+          sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
+        index.append(LakeWriter.writeDataFiles(
+          P.bm25Keyed(P.zipfPostings(d)), index, sortBy = Seq("thash"),
+          maxRecordsPerFile = P.Bm25IndexRowsPerFile))
+        r
+      }
       val idxT = LakeTable.load(loc)
-      val tS0 = System.nanoTime()
-      val out = P.bm25Serve(
+      val res = Trace.phase("serve_s")(localize(P.bm25Serve(
         idxT.toDF(s).filter(P.zipfLayoutPredicate)
           .select("term", "doc_id", "tf", "dl"),
-        st.getLong(0), st.getLong(1), P.ZipfQueries)
-      val res = localize(out)
-      lastZipfIndexPhases = Seq(
-        "build_s" -> tBuild,
-        "serve_s" -> (System.nanoTime() - tS0) / 1e9)
-      val files = idxT.files()
-      lastZipfServeFilePrune =
-        (graft.lake.dsv2.LakeScanMetrics.lastPlannedByLocation
-          .getOrElse(loc, -1), files.size)
-      lastZipfServeBucketFiles =
-        files.count(f => P.zipfQueryTkeys.contains(f.partitionValue))
+        st.getLong(0), st.getLong(1), P.ZipfQueries)))
+      serveFilePrune(loc, idxT, P.zipfQueryTkeys)
       res
     } finally LakeTable.drop(loc)
   }
@@ -1512,7 +1401,8 @@ object LakeQueries {
       val (n2, s2) = stats(odds)
       val i2 = index.append(write(P.bm25Postings(odds)))
       index.setProperty(bm25StatsKey("maint"), s"$n2:$s2")
-      lastBm25IndexMaintRows = index.addedFilesBetween(i1, i2).map(_.rowCount).sum
+      // ∝ the increment's postings, never a rebuild of the corpus postings
+      Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
       // serve from a FRESH load of the committed index — self-contained:
       // postings rows + the folded stats shards are everything BM25 needs
       val idxT = LakeTable.load(loc)
@@ -1529,30 +1419,13 @@ object LakeQueries {
         idxT.toDF(s).filter(P.bm25LayoutPredicate)
           .select("term", "doc_id", "tf", "dl"),
         nd, sdl)
-      lastBm25IndexServe = Some((out.queryExecution.optimizedPlan.toString, loc))
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+      Trace.note("index_location", loc)
       val res = localize(out)
-      val files = idxT.files()
-      lastBm25ServeFilePrune =
-        (graft.lake.dsv2.LakeScanMetrics.lastPlannedByLocation
-          .getOrElse(loc, -1), files.size)
-      lastBm25ServeBucketFiles =
-        files.count(f => P.bm25QueryTkeys.contains(f.partitionValue))
+      serveFilePrune(loc, idxT, P.bm25QueryTkeys)
       res
     } finally LakeTable.drop(loc)
   }
-
-  /** Optimized plan of the last d02_hybrid_indexed fusion plus the two
-    * index locations — spec-observable: both arms must serve from their
-    * COMMITTED index tables, with no documents read and no cross join
-    * anywhere in the fused plan. */
-  @volatile private[graft] var lastHybridIndexedPlan:
-    Option[(String, String, String)] = None
-  /** Wall-second phase split of the last d02_hybrid_indexed run — the
-    * heavy tail's biggest entry from its first tracked round, so drift
-    * is attributable in-artifact from birth (the d02_ann_indexed
-    * discipline, r11 verdict item 7). */
-  @volatile private[graft] var lastHybridIndexedPhases: Seq[(String, Double)] =
-    Nil
 
   // D2h — INDEXED hybrid retrieval (r11 verdict item 6): both arms of
   // the RRF fusion serve from COMMITTED index tables. d02_hybrid_rrf
@@ -1569,12 +1442,6 @@ object LakeQueries {
   // oracle replaying BOTH committed serves end to end.
   def d02_hybrid_indexed(s: SparkSession, dir: String): DataFrame =
     hybridIndexedRun(s, dir, zipfLex = false)
-
-  /** Wall-second phase split + the serve's lexical-arm file pruning for
-    * the last d02_hybrid_zipf run (r14 verdict item 3: the fused serve
-    * measured worst-case selectivity only). */
-  @volatile private[graft] var lastHybridZipfPhases: Seq[(String, Double)] =
-    Nil
 
   // D2hz — the INDEXED hybrid under the REALISTIC Zipf vocabulary (r14
   // verdict item 3): identical lifecycle to d02_hybrid_indexed, but the
@@ -1674,14 +1541,17 @@ object LakeQueries {
         .select(col("qid").cast("int").as("qid"),
           col("oid").as("doc_id"), col("rn").as("rs"))
       val out = P.rrfFuse(lex, sem)
-      lastHybridIndexedPlan =
-        Some((out.queryExecution.optimizedPlan.toString, locB, locI))
+      // both arms serve their COMMITTED index tables: no corpus read and
+      // no cross join anywhere in the fused plan
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+      Trace.note("bm25_location", locB)
+      Trace.note("ann_location", locI)
       val res = localize(out)
-      val phases = Seq(
-        "lex_build_s" -> tLexBuild, "ann_build_s" -> tAnnBuild,
-        "fused_serve_s" -> secsSince(tPhase2))
-      if (zipfLex) lastHybridZipfPhases = phases
-      else lastHybridIndexedPhases = phases
+      // the phase split makes the heavy tail's biggest entry's drift
+      // attributable from the artifact
+      Trace.span("lex_build_s", tLexBuild)
+      Trace.span("ann_build_s", tAnnBuild)
+      Trace.span("fused_serve_s", secsSince(tPhase2))
       res
     } finally {
       LakeTable.drop(locB)
@@ -1689,16 +1559,6 @@ object LakeQueries {
       LakeTable.drop(locI)
     }
   }
-
-  /** Optimized plan of the last d01_semdedup_index GATE plus the index
-    * location — spec-observable: the cell-keyed probe's committed side
-    * must be the INDEX table's scan (cells + embeddings persisted at
-    * build time), not an assignCellsHier recompute over the corpus. */
-  @volatile private[graft] var lastSemIndexGate: Option[(String, String)] = None
-  /** Rows appended by the last d01_semdedup_index maintenance commit —
-    * spec-observable proof that maintenance assigns and writes ONLY the
-    * increment, never re-assigning the committed corpus. */
-  @volatile private[graft] var lastSemIndexMaintRows: Long = -1L
 
   /** Centroid model property on the semantic cell-index table (same
     * (id, vector) text codec as [[PipelineQueries.AnnIvfProp]] — Float
@@ -1785,35 +1645,21 @@ object LakeQueries {
         .select(col("vec_id"), col("cell"),
           coalesce(col("is_dup"), lit(false)).as("is_dup"))
         .orderBy("vec_id")
-      lastSemIndexGate =
-        Some((out.queryExecution.optimizedPlan.toString, locI))
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+      Trace.note("index_location", locI)
       val gated = localize(out)
       // maintenance: one commit of the increment's assignments — assign
       // and write work ∝ increment
       val i2 = index.append(LakeWriter.writeDataFiles(
         aInc.select(col("cell"), col("vec_id"), col("embedding")), index))
-      lastSemIndexMaintRows =
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum
+      Trace.count("maint_rows",
+        index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
       gated
     } finally {
       LakeTable.drop(locD)
       LakeTable.drop(locI)
     }
   }
-
-  /** Rows encoded by the last d02_ann_indexed index-maintenance commit —
-    * spec-observable proof that an append triggers encode work
-    * proportional to the INCREMENT, not the corpus. */
-  @volatile private[graft] var lastAnnIndexedIncrementRows: Long = -1L
-
-  /** Wall-second phase split of the last d02_ann_indexed run (r11 verdict
-    * item 7: the entry drifted +37% across rounds with untouched code and
-    * the artifact could not attribute WHICH phase moved). Captured on
-    * every run — pure clock reads at existing statement boundaries, no
-    * behavior change; Bench surfaces it on full artifacts under
-    * `d02_ann_indexed_phases` next to the single-key entry. */
-  @volatile private[graft] var lastAnnIndexedPhases: Seq[(String, Double)] =
-    Nil
 
   // D2f — the ANN index as a first-class TABLE citizen: every other d02
   // entry retrains/encodes per query; a real 10⁹-vector serving path
@@ -1847,7 +1693,10 @@ object LakeQueries {
       def secsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
       val d1 = data.append(LakeWriter.writeDataFiles(
         e.filter(col("vec_id") < 400), data))
-      val tData = secsSince(tPhase0); val tPhase1 = System.nanoTime()
+      // phase split: a drift of this entry on untouched code was once
+      // unattributable to any phase
+      Trace.span("data_commit_s", secsSince(tPhase0))
+      val tPhase1 = System.nanoTime()
       // the increment's DATA append needs only d1 — overlap it with the
       // model derivation + corpus encode on a driver future (guide §2.6);
       // snapshot reads of d1 are immutable, and only this thread appends
@@ -1863,17 +1712,21 @@ object LakeQueries {
       // uses ONLY what a fresh session could load from the two tables
       index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
       index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-      val tModels = secsSince(tPhase1); val tPhase2 = System.nanoTime()
+      Trace.span("models_s", secsSince(tPhase1))
+      val tPhase2 = System.nanoTime()
       val i1 = index.append(LakeWriter.writeDataFiles(
         P.ivfPqEncode(s, committed, ivf, pq), index))
-      val tEncode = secsSince(tPhase2); val tPhase3 = System.nanoTime()
+      Trace.span("encode_commit_s", secsSince(tPhase2))
+      val tPhase3 = System.nanoTime()
       val d2 = scala.concurrent.Await.result(d2F,
         scala.concurrent.duration.Duration.Inf)
       val i2 = index.append(LakeWriter.writeDataFiles(
         P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
-      lastAnnIndexedIncrementRows =
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum
-      val tIncr = secsSince(tPhase3); val tPhase4 = System.nanoTime()
+      // encode work ∝ the increment, never the corpus
+      Trace.count("increment_rows",
+        index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+      Trace.span("increment_s", secsSince(tPhase3))
+      val tPhase4 = System.nanoTime()
       // serve from a FRESH load: committed codes + models parsed back
       // from the table's own properties (bit-exact round-trip)
       val served = LakeTable.load(locI)
@@ -1881,23 +1734,13 @@ object LakeQueries {
       val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
       val out = localize(P.ivfPqServe(s, served.snapshotDF(s, i2),
         data.snapshotDF(s, d2), ivf2, pq2))
-      lastAnnIndexedPhases = Seq(
-        "data_commit_s" -> tData, "models_s" -> tModels,
-        "encode_commit_s" -> tEncode, "increment_s" -> tIncr,
-        "serve_s" -> secsSince(tPhase4))
+      Trace.span("serve_s", secsSince(tPhase4))
       out
     } finally {
       LakeTable.drop(locD)
       LakeTable.drop(locI)
     }
   }
-
-  /** The frozen TRAINED models of the last d02_ann_indexed_trained run —
-    * spec-observable: serving from the committed index with parsed-back
-    * models must equal the direct per-query path under the SAME model
-    * instances (bit-exact codec round-trip at the served-result level). */
-  @volatile private[graft] var lastAnnIndexedTrainedModels:
-    Option[(Array[(Long, Seq[Float])], Array[Array[Seq[Double]]])] = None
 
   // D2g — the committed ANN index under TRAINED models: d02_ann_indexed
   // freezes untrained exact-twin constants so the whole dataflow can
@@ -1910,7 +1753,7 @@ object LakeQueries {
   // exactly like the untrained twin. Distributed float means make the
   // models run-order-sensitive in the last ulp → rows-only + recall
   // floor (the d02_ann_ivfpq convention); the codec round-trip and
-  // serve-equality claims are spec'd via [[lastAnnIndexedTrainedModels]].
+  // serve-equality claims are spec'd through the model texts it traces.
   def d02_ann_indexed_trained(s: SparkSession, dir: String): DataFrame = {
     val P = graft.queries.PipelineQueries
     val locD = scratch("annidxt-data")
@@ -1935,9 +1778,13 @@ object LakeQueries {
       // 400-vector corpus must still yield the 16 codewords per subspace
       // pqCode's argmin iterates over
       val pq = P.trainPqCodebooks(committed, seedMod = 23)
-      lastAnnIndexedTrainedModels = Some((ivf, pq))
-      index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-      index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
+      val ivfText = P.ivfModelToString(ivf)
+      val pqText = P.pqModelToString(pq)
+      index.setProperty(P.AnnIvfProp, ivfText)
+      index.setProperty(P.AnnPqProp, pqText)
+      // the spec re-serves the direct path under these exact models
+      Trace.note("ivf_model", ivfText)
+      Trace.note("pq_model", pqText)
       index.append(LakeWriter.writeDataFiles(
         P.ivfPqEncode(s, committed, ivf, pq), index))
       val d2 = scala.concurrent.Await.result(d2F,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables.{dec4, t}
+import graft.Trace
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -112,23 +113,18 @@ object PipelineQueries {
           (col("p") + L).as("en"))
       val spans = mergeSpans(hits)
       // the computing plan is consumed INSIDE this call (the scratch
-      // write below) — capture it for the plan spec, which pins the
-      // cached-once / algebraic-gate / no-shash-window shape
-      lastSubstrSpansPlan = spans.queryExecution
+      // write below), so the returned frame's plan is a scratch scan —
+      // trace it for the plan spec, which pins the cached-once /
+      // algebraic-gate / no-shash-window shape
+      Trace.note("plan", spans.queryExecution
         .explainString(org.apache.spark.sql.execution
-          .ExplainMode.fromString("formatted"))
+          .ExplainMode.fromString("formatted")))
       // re-sort after the scratch round-trip: parquet read-back order is
       // not contractual, and the span frame is interval-counted tiny
       Scratch.persist(spans, "substr_spans")
         .orderBy("doc_id", "span_start")
     } finally sh.unpersist(false)
   }
-
-  /** Formatted plan of the last [[substringDupSpans]] span computation —
-    * spec-observable now that the spans materialize inside the call (the
-    * returned frame is a scratch scan, so the interesting plan no longer
-    * rides the return value). */
-  @volatile private[graft] var lastSubstrSpansPlan: String = ""
 
   /** Gaps-and-islands interval merge shared by the batch substring-dedup
     * entries and the committed-shingle-index gate: (doc_id, st, en) hit
@@ -309,19 +305,6 @@ object PipelineQueries {
       centsOverride = Some(cents), cap = SemDeDupExactCap)
   }
 
-  /** Per-run SemDeDup observability: corpus size, chosen K, cell count,
-    * and how much of the corpus sat out of the pairwise pass because its
-    * cell breached the quadratic-cost cap. Excluded members are
-    * conservatively KEPT (never wrongly dropped), but an excluded
-    * fraction > 0 means the operator under-deduped — that degradation
-    * must be visible, never silent.
-    */
-  private[graft] case class SemDeDupStats(n: Long, k: Int, cells: Long,
-      excludedCells: Long, excludedRows: Long) {
-    def excludedFraction: Double = if (n == 0) 0.0 else excludedRows.toDouble / n
-  }
-  @volatile private[graft] var lastSemDeDupStats: Option[SemDeDupStats] = None
-
   /** SemDeDup core over an arbitrary embeddings frame (`vec_id`,
     * `embedding`). K scales as 4·√N (floor 16): K ∝ N would put
     * corpus-proportional centroid state on the driver, and fixed K pushes
@@ -336,7 +319,7 @@ object PipelineQueries {
     * pairwise cap around ~10⁷ vectors; past that, breaching cells FALL
     * BACK to an O(members) representative comparison (each member vs the
     * cell's most-central member) instead of sitting out, and the breach
-    * is surfaced via [[lastSemDeDupStats]] + a warning log — graceful,
+    * is surfaced in the trace's counts + a warning log — graceful,
     * visible degradation, never a silent no-op (the cap bounds the
     * largest single shuffle key, which no K choice can fix for a
     * genuinely hot cell).
@@ -368,8 +351,13 @@ object PipelineQueries {
     val hist = assigned.groupBy("cell").agg(count(lit(1)).as("cn"))
     val histRows = hist.collect() // ≤ K rows
     val excluded = histRows.filter(_.getLong(1) > cap)
-    lastSemDeDupStats = Some(SemDeDupStats(n, k, histRows.length,
-      excluded.length.toLong, excluded.map(_.getLong(1)).sum))
+    // excluded rows sit out of the pairwise pass: an under-dedup that
+    // must be visible, never silent
+    Trace.count("n", n)
+    Trace.count("k", k.toLong)
+    Trace.count("cells", histRows.length.toLong)
+    Trace.count("excluded_cells", excluded.length.toLong)
+    Trace.count("excluded_rows", excluded.map(_.getLong(1)).sum)
     if (excluded.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"semdedup: ${excluded.length}/${histRows.length} cells over the " +
@@ -702,7 +690,7 @@ object PipelineQueries {
     */
   // lazy vals, not defs: the probes are compile-time constants, and a def
   // re-runs XxHash64.eval over every term at each call site — including
-  // inside per-file closures (lastBm25ServeBucketFiles counts via
+  // inside per-file closures (the serve's bucket-file count calls
   // bm25QueryTkeys.contains per file)
   private[graft] lazy val bm25QueryTkeys: Seq[Long] =
     Bm25Queries.flatMap(_._2.split(" ")).distinct.map(tkeyOf).distinct.sorted

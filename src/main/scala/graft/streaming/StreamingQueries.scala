@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.UUID
 
 import graft.Tables.{t, us}
+import graft.Trace
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -668,12 +669,6 @@ object StreamingQueries {
     }
   }
 
-  /** Distinct dup doc_ids landed by each of the two d07_minhash_stream
-    * gate runs — spec-observable exactly-once evidence: the second run
-    * gates ONLY the second wave (a replayed first wave would re-land its
-    * dup ids and inflate the second delta). */
-  @volatile private[graft] var lastMinhashStreamRunDups: Seq[Long] = Nil
-
   // D7d — the FUZZY gate run CONTINUOUSLY against the committed band
   // index: the streaming pair of d03_minhash_index, the way
   // d07_ann_index_stream pairs with d02_ann_indexed. A streaming job
@@ -727,9 +722,11 @@ object StreamingQueries {
       // the static side: the committed index table, read once per
       // micro-batch planning — shared by every gate stream
       val comBands = s.read.format("laketable").load(locI)
+      // distinct dup ids landed, traced before the runs and after each:
+      // a replayed first wave would re-land its ids and inflate run 2's delta
+      def landed = s.read.format("laketable").load(locR)
+        .select("doc_id").distinct().count()
       def runGate(): Unit = {
-        val before = s.read.format("laketable").load(locR)
-          .select("doc_id").distinct().count()
         val q = P.explodeBands(P.md5MinhashSigs(
             s.readStream.format("laketable")
               .option("startSnapshotId", d1.toString).load(locD)))
@@ -740,11 +737,9 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start(locR)
         q.awaitTermination()
-        val after = s.read.format("laketable").load(locR)
-          .select("doc_id").distinct().count()
-        lastMinhashStreamRunDups :+= (after - before)
+        Trace.count("landed", landed)
       }
-      lastMinhashStreamRunDups = Nil
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(odds, data))
       runGate() // wave 1: the fresh odd docs
       val d3 = data.append(LakeWriter.writeDataFiles(wave2, data))
@@ -905,10 +900,6 @@ object StreamingQueries {
     }
   }
 
-  /** Span rows landed by each of the two d07_seqpack_stream runs —
-    * exactly-once evidence: the restart packs ONLY the new wave. */
-  @volatile private[graft] var lastSeqPackStreamRunRows: Seq[Long] = Nil
-
   // D7l — CONTINUOUS sequence packing: the incremental packer
   // (d04_seqpack_incremental) run as a checkpointed stream, completing
   // the family the way d07_ann_index_stream does for the ANN index. The
@@ -947,8 +938,10 @@ object StreamingQueries {
         .agg(sum(size(split(col("text"), " ")).cast("long"))).head().getLong(0)
       spans.setProperty(L.SeqPackTotalProp, total.toString)
       def nTok = size(split(col("text"), " ")).cast("long").as("n_tok")
+      // span rows landed, traced before the runs and after each: the
+      // restart must pack ONLY the new wave
+      def landed = s.read.format("laketable").load(locI).count()
       def runPack(): Unit = {
-        val before = s.read.format("laketable").load(locI).count()
         val q = s.readStream.format("laketable")
           .option("startSnapshotId", s1.toString).load(locD)
           .writeStream
@@ -973,10 +966,9 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        val after = s.read.format("laketable").load(locI).count()
-        lastSeqPackStreamRunRows :+= (after - before)
+        Trace.count("landed", landed)
       }
-      lastSeqPackStreamRunRows = Nil
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(
         odds.filter(col("doc_id") < oddMid), data))
       runPack() // wave 1
@@ -991,17 +983,6 @@ object StreamingQueries {
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ckpt))
     }
   }
-
-  /** Hit rows landed by each d07_substring_live gate run — exactly-once
-    * evidence across the checkpointed restart, and proof wave 2's hits
-    * include the wave-1 re-keys only a LIVE index can catch. */
-  @volatile private[graft] var lastSubstrLiveRunHits: Seq[Long] = Nil
-  /** Micro-batches processed by each d07_substring_live run — the
-    * wave-grain oracle assumes ONE batch per wave (AvailableNow with no
-    * admission cap); the spec pins that premise so an accidental
-    * maxFilesPerTrigger could never silently shift batch boundaries
-    * inside a wave. */
-  @volatile private[graft] var lastSubstrLiveRunEpochs: Seq[Long] = Nil
 
   // D7m — the LIVE substring gate: the committed shingle index
   // (d01_substring_index) gated AND maintained in the same continuous
@@ -1063,8 +1044,11 @@ object StreamingQueries {
       index.append(LakeWriter.writeDataFiles(
         keyed(P.shingleHashes(data.snapshotDF(s, d1)).select("shash")
           .distinct()), index))
+      // hit rows landed, traced before the runs and after each, and the
+      // micro-batches of each run: the wave-grain oracle assumes ONE batch
+      // per wave, so an admission cap must never shift batch boundaries
+      def landed = s.read.format("laketable").load(locR).count()
       def runLive(): Unit = {
-        val before = s.read.format("laketable").load(locR).count()
         val epochs = new java.util.concurrent.atomic.AtomicLong(0L)
         val q = s.readStream.format("laketable")
           .option("startSnapshotId", d1.toString).load(locD)
@@ -1099,12 +1083,10 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        val after = s.read.format("laketable").load(locR).count()
-        lastSubstrLiveRunHits :+= (after - before)
-        lastSubstrLiveRunEpochs :+= epochs.get()
+        Trace.count("landed", landed)
+        Trace.count("epochs", epochs.get())
       }
-      lastSubstrLiveRunHits = Nil
-      lastSubstrLiveRunEpochs = Nil
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(odds, data))
       runLive() // wave 1: gated against the corpus; its hashes join the index
       data.append(LakeWriter.writeDataFiles(wave2, data))
@@ -1119,21 +1101,14 @@ object StreamingQueries {
     }
   }
 
-  /** Posting rows landed by each d07_bm25_stream maintenance run —
-    * exactly-once evidence across the checkpointed restart, and proof
-    * each wave wrote work ∝ its own postings. */
-  @volatile private[graft] var lastBm25StreamRunRows: Seq[Long] = Nil
   /** Small-file-debt trigger for the live maintainer (the b67 threshold-
     * compaction discipline applied to the index): when any tkey bucket
     * accrues this many files, the maintainer runs one DEFAULT compaction
     * — which re-sorts by the table's declared write.sort-order (thash),
     * so the serve's within-bucket footer skip survives an unbounded
-    * stream of per-epoch appends. Default is high enough that the
-    * two-wave entry never trips it (entry behavior unchanged); the spec
-    * lowers it to pin the trigger. */
-  @volatile private[graft] var bm25StreamCompactPerBucketCap: Int = 64
-  /** Compactions the last d07_bm25_stream run triggered. */
-  @volatile private[graft] var lastBm25StreamCompactions: Int = 0
+    * stream of per-epoch appends. High enough that the two-wave entries
+    * never trip it; the spec passes a lower cap to pin the trigger. */
+  private val Bm25CompactPerBucketCap = 64
 
   /** One epoch-fenced BM25 index-maintenance step over a micro-batch —
     * shared by d07_bm25_stream and d07_hybrid_stream's lexical arm so
@@ -1147,9 +1122,10 @@ object StreamingQueries {
     * epoch-fenced commit as the stats delta (a replayed epoch re-lands
     * neither), then the small-file-debt check runs on the committed
     * state OUTSIDE the fence — compaction moves no rows, so a replayed
-    * epoch may skip it harmlessly. */
+    * epoch may skip it harmlessly. Returns whether it compacted. */
   private def bm25MaintainEpoch(locI: String, shard: String,
-      queryId: String, batch: DataFrame, epoch: Long): Unit = {
+      queryId: String, batch: DataFrame, epoch: Long,
+      compactPerBucketCap: Int): Boolean = {
     import graft.lake._
     val P = graft.queries.PipelineQueries
     val L = graft.queries.LakeQueries
@@ -1172,11 +1148,10 @@ object StreamingQueries {
       val post = LakeTable.load(locI)
       val perBucket = post.files().groupBy(_.partitionValue)
         .values.map(_.size).maxOption.getOrElse(0)
-      if (perBucket >= bm25StreamCompactPerBucketCap) {
-        post.compactFiles(b.sparkSession,
-          maxRecordsPerFile = P.Bm25IndexRowsPerFile)
-        lastBm25StreamCompactions += 1
-      }
+      val compact = perBucket >= compactPerBucketCap
+      if (compact) post.compactFiles(b.sparkSession,
+        maxRecordsPerFile = P.Bm25IndexRowsPerFile)
+      compact
     } finally b.unpersist()
   }
 
@@ -1193,7 +1168,13 @@ object StreamingQueries {
   // rows; a serve between any two batches sees stats consistent with
   // exactly the postings committed beside them. End state after both
   // waves = the full corpus → the same BM25 hash oracle.
-  def d07_bm25_stream(s: SparkSession, dir: String): DataFrame = {
+  def d07_bm25_stream(s: SparkSession, dir: String): DataFrame =
+    bm25StreamRun(s, dir, Bm25CompactPerBucketCap)
+
+  /** [[d07_bm25_stream]] with the maintainer's small-file-debt cap as a
+    * parameter, so a spec can trip the mid-stream compaction. */
+  private[graft] def bm25StreamRun(s: SparkSession, dir: String,
+      compactPerBucketCap: Int): DataFrame = {
     import graft.lake._
     val P = graft.queries.PipelineQueries
     val L = graft.queries.LakeQueries
@@ -1222,8 +1203,12 @@ object StreamingQueries {
         sortBy = Seq("thash"), maxRecordsPerFile = P.Bm25IndexRowsPerFile))
       val (n1, sd1) = stats(data.snapshotDF(s, s1))
       index.setProperty(L.bm25StatsKey("build"), s"$n1:$sd1")
+      // posting rows landed, traced before the runs and after each: each
+      // wave writes exactly its own postings, once
+      def landed = s.read.format("laketable").load(locI).count()
+      // summed on the stream thread, traced by this one after the runs
+      val compactions = new java.util.concurrent.atomic.AtomicLong(0L)
       def runMaint(): Unit = {
-        val before = s.read.format("laketable").load(locI).count()
         val q = s.readStream.format("laketable")
           .option("startSnapshotId", s1.toString).load(locD)
           .writeStream
@@ -1231,23 +1216,24 @@ object StreamingQueries {
             // the shared maintainer step: sharded stats + thash-sorted
             // postings in one epoch-fenced commit, then the
             // small-file-debt check (see bm25MaintainEpoch)
-            bm25MaintainEpoch(locI, "stream", "bm25idx", batch, epoch)
+            if (bm25MaintainEpoch(locI, "stream", "bm25idx", batch, epoch,
+                compactPerBucketCap)) compactions.incrementAndGet()
+            ()
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        val after = s.read.format("laketable").load(locI).count()
-        lastBm25StreamRunRows :+= (after - before)
+        Trace.count("landed", landed)
       }
-      lastBm25StreamRunRows = Nil
-      lastBm25StreamCompactions = 0
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(
         odds.filter(col("doc_id") < oddMid), data))
       runMaint() // wave 1
       data.append(LakeWriter.writeDataFiles(
         odds.filter(col("doc_id") >= oddMid), data))
       runMaint() // restart: only wave 2's postings flow
+      Trace.count("compactions", compactions.get())
       // serve from the stream-maintained committed index — self-contained
       // (stats folded across the build + stream maintainer shards; scan
       // bucket-pruned to the query terms' tkeys like the batch serve)
@@ -1313,10 +1299,6 @@ object StreamingQueries {
       val (n1, sd1) = stats(dataD.snapshotDF(s, s1))
       idxB.setProperty(L.bm25StatsKey("build"), s"$n1:$sd1")
       dataD.append(LakeWriter.writeDataFiles(odds, dataD))
-      // the shared maintainer advances the compaction counter; reset it
-      // here exactly as d07_bm25_stream does, so a hybrid run never
-      // leaves a stale count for a later assertion to read (r12 ADVICE)
-      lastBm25StreamCompactions = 0
       val qB = s.readStream.format("laketable")
         .option("startSnapshotId", s1.toString).load(locD)
         .writeStream
@@ -1324,7 +1306,9 @@ object StreamingQueries {
           // the SAME maintainer step as d07_bm25_stream (sharded stats,
           // thash-sorted epoch-fenced append, small-file-debt check) —
           // shared so the two flows cannot diverge
-          bm25MaintainEpoch(locB, "stream", "hybbm25", batch, epoch)
+          bm25MaintainEpoch(locB, "stream", "hybbm25", batch, epoch,
+            Bm25CompactPerBucketCap)
+          ()
         }
         .option("checkpointLocation", ckptB)
         .trigger(Trigger.AvailableNow())
@@ -1374,13 +1358,6 @@ object StreamingQueries {
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ckptA))
     }
   }
-
-  /** Distinct dup doc_ids landed by each of the two d07_minhash_live gate
-    * runs — exactly-once evidence across the checkpointed restart. */
-  @volatile private[graft] var lastMinhashLiveRunDups: Seq[Long] = Nil
-  /** Micro-batches processed by each d07_minhash_live run — pins the
-    * one-batch-per-wave premise the wave-grain oracle replays. */
-  @volatile private[graft] var lastMinhashLiveRunEpochs: Seq[Long] = Nil
 
   // D7e — the LIVE fuzzy gate: gate AND maintain the committed band
   // index in the same continuous job, so an arrival is deduped against
@@ -1445,9 +1422,11 @@ object StreamingQueries {
       index.append(LakeWriter.writeDataFiles(
         P.withBandKey(P.explodeBands(P.md5MinhashSigs(data.snapshotDF(s, d1)))
           .select("band", "h0", "h1").distinct()), index))
+      // distinct dup ids landed, traced before the runs and after each,
+      // and each run's micro-batches (the wave-grain oracle's premise)
+      def landed = s.read.format("laketable").load(locR)
+        .select("doc_id").distinct().count()
       def runLive(): Unit = {
-        val before = s.read.format("laketable").load(locR)
-          .select("doc_id").distinct().count()
         val epochs = new java.util.concurrent.atomic.AtomicLong(0L)
         val q = s.readStream.format("laketable")
           .option("startSnapshotId", d1.toString).load(locD)
@@ -1484,13 +1463,10 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        val after = s.read.format("laketable").load(locR)
-          .select("doc_id").distinct().count()
-        lastMinhashLiveRunDups :+= (after - before)
-        lastMinhashLiveRunEpochs :+= epochs.get()
+        Trace.count("landed", landed)
+        Trace.count("epochs", epochs.get())
       }
-      lastMinhashLiveRunDups = Nil
-      lastMinhashLiveRunEpochs = Nil
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(odds, data))
       runLive() // wave 1: gated against the corpus; its bands join the index
       val d3 = data.append(LakeWriter.writeDataFiles(wave2, data))
@@ -1588,11 +1564,6 @@ object StreamingQueries {
     }
   }
 
-  /** Distinct dup vec_ids landed by each of the two d07_semdedup_stream
-    * gate runs — the lastMinhashStreamRunDups pattern: exactly-once
-    * evidence that a restarted gate processes ONLY the new wave. */
-  @volatile private[graft] var lastSemStreamRunDups: Seq[Long] = Nil
-
   // D7f — the SEMANTIC gate run CONTINUOUSLY against the committed cell
   // index, completing the streaming committed-index trio (ANN:
   // d07_ann_index_stream; fuzzy: d07_minhash_stream; semantic: this).
@@ -1651,9 +1622,11 @@ object StreamingQueries {
       val cents2 = P.ivfModelFromString(idxT.tableMeta.properties(L.SemCentroidsProp))
       val comIdx = idxT.snapshotDF(s, i1)
         .select(col("cell"), col("vec_id").as("c_id"), col("embedding").as("ce"))
+      // distinct dup ids landed, traced before the runs and after each: a
+      // restarted gate must process ONLY the new wave
+      def landed = s.read.format("laketable").load(locR)
+        .select("vec_id").distinct().count()
       def runGate(): Unit = {
-        val before = s.read.format("laketable").load(locR)
-          .select("vec_id").distinct().count()
         val gq = P.assignCellsHierExpr(
             s.readStream.format("laketable")
               .option("startSnapshotId", d1.toString).load(locD), cents2)
@@ -1665,11 +1638,9 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start(locR)
         gq.awaitTermination()
-        val after = s.read.format("laketable").load(locR)
-          .select("vec_id").distinct().count()
-        lastSemStreamRunDups :+= (after - before)
+        Trace.count("landed", landed)
       }
-      lastSemStreamRunDups = Nil
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(
         q.filter(col("vec_id") >= 400 && col("vec_id") < 450), data))
       runGate() // wave 1
@@ -1692,10 +1663,6 @@ object StreamingQueries {
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ckpt))
     }
   }
-
-  /** Distinct dup vec_ids landed by each of the two d07_semdedup_live
-    * gate runs — exactly-once evidence across the checkpointed restart. */
-  @volatile private[graft] var lastSemLiveRunDups: Seq[Long] = Nil
 
   // D7g — the LIVE semantic gate: the d07_minhash_live shape applied to
   // the committed CELL index, closing the arrivals-vs-arrivals window
@@ -1745,9 +1712,10 @@ object StreamingQueries {
       index.append(LakeWriter.writeDataFiles(
         P.assignCellsHier(committed, cents)
           .select(col("cell"), col("vec_id"), col("embedding")), index))
+      // distinct dup ids landed, traced before the runs and after each
+      def landed = s.read.format("laketable").load(locR)
+        .select("vec_id").distinct().count()
       def runLive(): Unit = {
-        val before = s.read.format("laketable").load(locR)
-          .select("vec_id").distinct().count()
         val sq = s.readStream.format("laketable")
           .option("startSnapshotId", d1.toString).load(locD)
           .writeStream
@@ -1791,11 +1759,9 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         sq.awaitTermination()
-        val after = s.read.format("laketable").load(locR)
-          .select("vec_id").distinct().count()
-        lastSemLiveRunDups :+= (after - before)
+        Trace.count("landed", landed)
       }
-      lastSemLiveRunDups = Nil
+      Trace.count("landed", landed)
       data.append(LakeWriter.writeDataFiles(
         q.filter(col("vec_id") >= 400 && col("vec_id") < 450), data))
       runLive() // wave 1: gated against the corpus cells

@@ -50,7 +50,6 @@ class BookkeeperSpec extends SparkSpec {
   }
 
   test("queue events: parse keeps only BlobCreated/FlushWithClose parquet under /data/") {
-    import org.apache.spark.sql.functions._
     val mk = (et: String, api: String, url: String) =>
       s"""{"eventType":"$et","data":{"api":"$api","blobUrl":"$url","contentLength":123}}"""
     val rows = Seq(

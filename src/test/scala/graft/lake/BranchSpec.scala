@@ -1,7 +1,6 @@
 package graft.lake
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Write-audit-publish branches: stage commits invisible to main readers,
   * auditable via snapshot reads / `VERSION AS OF '<branch>'`, folded into

@@ -357,7 +357,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("z-order compaction prunes on BOTH dimensions; lexicographic only on the first") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     def grid(loc: String): LakeTable = {
       LakeTable.drop(loc)
       val t = LakeTable.create(loc, "a BIGINT, b BIGINT, p BIGINT",

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class PartitionEvolutionSpec extends SparkSpec {
 
-  private def newTable(width: Long = 100L): LakeTable = {
+  private def newTable(width: Long): LakeTable = {
     val loc = tmpDir("laketable-pevo")
     LakeTable.drop(loc)
     LakeTable.create(loc, LakeWriter.EventSchemaDdl,

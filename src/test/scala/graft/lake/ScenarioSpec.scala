@@ -1,7 +1,6 @@
 package graft.lake
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Scenario test mirroring the reference's run.sh process matrix (SURVEY
   * §5.5, A24): N concurrent writers publishing monikers, one bookkeeper

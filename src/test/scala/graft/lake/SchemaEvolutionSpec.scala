@@ -216,7 +216,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     intercept[IllegalArgumentException] { t.dropColumn("nope") }
     intercept[IllegalArgumentException] { t.renameColumn("data", "message_id") }
     // pending equality delete keyed on message_id blocks rename/drop of it
-    val keyDdl = "message_id BIGINT"
     val delPath = new org.apache.hadoop.fs.Path(t.location,
       "data/eq-delete-test.parquet")
     spark.range(3).selectExpr("id AS message_id").coalesce(1)

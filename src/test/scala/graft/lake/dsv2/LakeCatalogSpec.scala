@@ -318,7 +318,7 @@ class LakeCatalogSpec extends SparkSpec {
       s"""CREATE TABLE lake.ns.skew (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
     // bucket 0: fragmented into 3 commits; bucket 1: one commit
-    for (i <- 0 until 3)
+    for (_ <- 0 until 3)
       spark.sql(s"INSERT INTO lake.ns.skew SELECT id, ${bucket(0)}L FROM range(0, 10)")
     spark.sql(s"INSERT INTO lake.ns.skew SELECT id, ${bucket(1)}L FROM range(0, 40)")
     val rows = spark.sql(

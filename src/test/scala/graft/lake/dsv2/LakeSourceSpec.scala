@@ -347,7 +347,7 @@ class LakeSourceSpec extends SparkSpec {
 
   test("micro-batch stream: snapshot-id offsets deliver added files per commit") {
     val t = newTable()
-    val s1 = appendBatch(t, 10, bucket(0), 1)
+    appendBatch(t, 10, bucket(0), 1)
     val ckpt = tmpDir("dsv2-ckpt") + "/c"
     val name = "lakestream" + System.nanoTime()
     def runAvailable(): Unit = {

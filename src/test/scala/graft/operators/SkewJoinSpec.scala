@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class SkewJoinSpec extends SparkSpec {
 
   private def skewed = {
-    import spark.implicits._
     // 90% of rows share key 0 — the classic hot key
     spark.range(10000)
       .select((when(pmod(col("id"), lit(10)) < 9, 0L).otherwise(col("id")))
@@ -17,7 +16,6 @@ class SkewJoinSpec extends SparkSpec {
   }
 
   private def dim = {
-    import spark.implicits._
     spark.range(100).select(col("id").as("k"), concat(lit("d"), col("id")).as("name"))
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkSpec, Trace}
 import org.apache.spark.sql.functions._
 
 /** Quality gates for the approximate / oracle-less pipeline operators
@@ -399,7 +399,7 @@ class PipelineSpec extends SparkSpec {
     // cell cap, so any corpus past ~16k vectors pushed EVERY cell over
     // the cap and the operator silently returned zero duplicates. K must
     // grow with N, planted duplicates must be found, and a cap breach
-    // must be observable through lastSemDeDupStats — never silent.
+    // must be observable through the traced counts — never silent.
     val n = 40000L
     // deterministic pseudo-random 64-dim vectors; ids 20000..20499 are
     // exact twins of 0..499 (same hash seed → identical vector)
@@ -408,12 +408,12 @@ class PipelineSpec extends SparkSpec {
         |  cast(xxhash64(CASE WHEN id BETWEEN 20000 AND 20499
         |                     THEN id - 20000 ELSE id END * 64 + d) % 1000
         |    as double) / 1000.0 as float))""".stripMargin).as("embedding"))
-    val out = PipelineQueries.semdedup(spark, e)
-      .filter(col("is_dup")).select("vec_id").collect().map(_.getLong(0)).toSet
-    val stats = PipelineQueries.lastSemDeDupStats.get
-    assert(stats.n == n)
-    assert(stats.k >= n / 512, s"K=${stats.k} did not scale with N=$n")
-    assert(stats.excludedCells == 0,
+    val (out, stats) = Trace.capture(PipelineQueries.semdedup(spark, e)
+      .filter(col("is_dup")).select("vec_id").collect().map(_.getLong(0)).toSet)
+    assert(stats.count("n") == n)
+    assert(stats.count("k") >= n / 512,
+      s"K=${stats.count("k")} did not scale with N=$n")
+    assert(stats.count("excluded_cells") == 0,
       s"cells over cap at spec scale: $stats")
     // every planted twin pair lands in one cell (identical vectors) and
     // the later-ranked member must be flagged; which member ranks later
@@ -422,9 +422,9 @@ class PipelineSpec extends SparkSpec {
     assert(found == 500, s"only $found/500 planted twin pairs flagged")
     // and the same corpus under the old fixed K demonstrably breaches the
     // cap — visibly, via the stats surface
-    PipelineQueries.semdedup(spark, e, kOverride = Some(16)).collect()
-    val fixed = PipelineQueries.lastSemDeDupStats.get
-    assert(fixed.excludedFraction > 0.9,
+    val (_, fixed) = Trace.capture(
+      PipelineQueries.semdedup(spark, e, kOverride = Some(16)).collect())
+    assert(fixed.count("excluded_rows").toDouble / fixed.count("n") > 0.9,
       s"expected fixed K=16 to exclude nearly all rows, got $fixed")
   }
 
@@ -440,10 +440,11 @@ class PipelineSpec extends SparkSpec {
         |  cast(xxhash64(CASE WHEN id < 1500 THEN 7 ELSE id END * 64 + d)
         |    % 1000 as double) / 1000.0 as float))""".stripMargin)
       .as("embedding"))
-    val out = PipelineQueries.semdedup(spark, e, kOverride = Some(4))
-      .filter(col("is_dup")).select("vec_id").collect().map(_.getLong(0)).toSet
-    val stats = PipelineQueries.lastSemDeDupStats.get
-    assert(stats.excludedCells >= 1, s"expected a cap breach, got $stats")
+    val (out, stats) = Trace.capture(
+      PipelineQueries.semdedup(spark, e, kOverride = Some(4))
+        .filter(col("is_dup")).select("vec_id").collect().map(_.getLong(0)).toSet)
+    assert(stats.count("excluded_cells") >= 1,
+      s"expected a cap breach, got $stats")
     val clonesFlagged = out.count(_ < 1500L)
     assert(clonesFlagged >= 1498,
       s"fallback caught only $clonesFlagged/1499 clones: $stats")
@@ -459,13 +460,13 @@ class PipelineSpec extends SparkSpec {
     // assignment), and at the 500-vector sf both the within-cell pairwise
     // pass AND the cap-breach representative fallback must fire — a twin
     // that only ever walks one path hash-verifies half the guard
-    val out = PipelineQueries.d01_semdedup_exact(spark, dir).collect()
+    val (out, stats) = Trace.capture(
+      PipelineQueries.d01_semdedup_exact(spark, dir).collect())
     assert(out.length == 500)
-    val stats = PipelineQueries.lastSemDeDupStats.get
-    assert(stats.k == PipelineQueries.SemDeDupExactK)
-    assert(stats.excludedCells >= 1,
+    assert(stats.count("k") == PipelineQueries.SemDeDupExactK)
+    assert(stats.count("excluded_cells") >= 1,
       s"no cell breached the twin cap — rep fallback unexercised: $stats")
-    assert(stats.cells - stats.excludedCells >= 1,
+    assert(stats.count("cells") - stats.count("excluded_cells") >= 1,
       s"every cell breached — pairwise pass unexercised: $stats")
     // determinism: the fixed-centroid path has no training jitter
     val again = PipelineQueries.d01_semdedup_exact(spark, dir).collect()
@@ -858,8 +859,9 @@ class PipelineSpec extends SparkSpec {
 
   test("D1i incremental MinHash: planted cross-batch dups flagged, fresh docs " +
       "survive, committed side joins as distinct band keys (LEFT SEMI)") {
-    val rows = LakeQueries.d01_minhash_incremental(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val (rows, trace) = Trace.capture(
+      LakeQueries.d01_minhash_incremental(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
     // exact re-keys (+1000000) share ALL 4 bands with their committed
     // original — every one must be flagged
     val exactRekeys = rows.keys.filter(id => id >= 1000000L && id < 2000000L)
@@ -880,7 +882,7 @@ class PipelineSpec extends SparkSpec {
     // scale shape: the committed corpus participates ONLY as a distinct
     // band-key set probed by a LEFT SEMI join — per-key width 1, no
     // increment × committed pair fan-out
-    val plan = LakeQueries.lastMinhashIncPlan.get
+    val plan = trace.note("plan")
     assert(plan.contains("LeftSemi"), plan.take(2000))
     val semiIdx = plan.indexOf("LeftSemi")
     assert(plan.indexOf("Aggregate", semiIdx) > 0,
@@ -891,9 +893,10 @@ class PipelineSpec extends SparkSpec {
   test("D4l incremental sequence packing: base offset equals the committed " +
       "total, positions continue the stream, no corpus rescan in the plan") {
     import org.apache.spark.sql.functions._
-    val out = LakeQueries.d04_seqpack_incremental(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
+    val (out, trace) = Trace.capture(
+      LakeQueries.d04_seqpack_incremental(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))))
     assert(out.nonEmpty && out.forall(_._1 % 2 == 1),
       "output must be increment (odd) docs only")
     // the first arrival's first span starts exactly at the committed
@@ -914,7 +917,7 @@ class PipelineSpec extends SparkSpec {
     assert(lens == expect, "span lengths must tile each doc's tokens")
     // scale shape: the pack plan reads the INCREMENT's parquet relation
     // only — a corpus rescan would reintroduce the table's DSv2 scan
-    val plan = LakeQueries.lastSeqPackIncPlan.get
+    val plan = trace.note("plan")
     assert(!plan.contains("laketable"),
       s"corpus table scan leaked into the incremental pack:\n${plan.take(2000)}")
   }
@@ -922,8 +925,8 @@ class PipelineSpec extends SparkSpec {
   test("D3f committed MinHash band index: gate probes the INDEX TABLE scan " +
       "(not a corpus recompute), maintenance appends only novel keys, " +
       "verdicts equal the recompute gate") {
-    val indexed = LakeQueries.d03_minhash_index(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val (indexed, trace) = Trace.capture(LakeQueries.d03_minhash_index(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
     val recomputed = LakeQueries.d01_minhash_incremental(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     // the committed-index gate and the recompute gate see the same band
@@ -931,7 +934,7 @@ class PipelineSpec extends SparkSpec {
     // index adds storage and reuse, never drift
     assert(indexed == recomputed,
       s"indexed gate diverged on ${(indexed.toSet diff recomputed.toSet).take(5)}")
-    val (plan, locI) = LakeQueries.lastMinhashIndexGate.get
+    val (plan, locI) = (trace.note("plan"), trace.note("index_location"))
     // the semi-join's committed side is the INDEX table's DSv2 relation
     // (its name embeds the index location) — a regression back to
     // re-banding the corpus would scan the DATA table's text instead
@@ -942,7 +945,7 @@ class PipelineSpec extends SparkSpec {
     // 4 band keys per increment doc, and strictly positive (fresh odd
     // docs contribute new band buckets)
     val incDocs = indexed.size
-    val appended = LakeQueries.lastMinhashIndexNewKeys
+    val appended = trace.count("maint_rows")
     assert(appended > 0L, "maintenance appended no keys")
     assert(appended <= 4L * incDocs,
       s"maintenance wrote $appended keys for $incDocs increment docs " +
@@ -952,8 +955,8 @@ class PipelineSpec extends SparkSpec {
   test("D1s committed SemDeDup cell index: gate joins the INDEX TABLE scan " +
       "(not a corpus re-assign), maintenance writes exactly the increment, " +
       "verdicts equal the re-assign gate") {
-    val indexed = LakeQueries.d01_semdedup_index(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    val (indexed, trace) = Trace.capture(LakeQueries.d01_semdedup_index(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap)
     val reassigned = LakeQueries.d01_semdedup_incremental(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     // the committed-index gate and the re-assign gate see the same cell
@@ -961,7 +964,7 @@ class PipelineSpec extends SparkSpec {
     // be identical — the persisted index adds reuse, never drift
     assert(indexed == reassigned,
       s"indexed gate diverged on ${(indexed.toSet diff reassigned.toSet).take(5)}")
-    val (plan, locI) = LakeQueries.lastSemIndexGate.get
+    val (plan, locI) = (trace.note("plan"), trace.note("index_location"))
     // the cell join's committed side is the INDEX table's DSv2 relation
     // (its name embeds the index location) — a regression back to
     // re-assigning the corpus would scan the DATA table instead
@@ -969,8 +972,8 @@ class PipelineSpec extends SparkSpec {
       s"gate does not scan the committed index table $locI:\n${plan.take(2000)}")
     // maintenance assigned and wrote EXACTLY the increment's rows — one
     // index row per gated vector, never a corpus-proportional rewrite
-    assert(LakeQueries.lastSemIndexMaintRows == indexed.size.toLong,
-      s"maintenance wrote ${LakeQueries.lastSemIndexMaintRows} rows " +
+    assert(trace.count("maint_rows") == indexed.size.toLong,
+      s"maintenance wrote ${trace.count("maint_rows")} rows " +
         s"for ${indexed.size} increment vectors")
   }
 
@@ -979,7 +982,8 @@ class PipelineSpec extends SparkSpec {
       "direct path under the same model instances") {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val out = LakeQueries.d02_ann_indexed_trained(spark, dir)
+    val (out, trace) = Trace.capture(
+      LakeQueries.d02_ann_indexed_trained(spark, dir))
     val served = pairs(out)
     val truth = pairs(PipelineQueries.d02_cosine_topk(spark, dir))
     assert(truth.nonEmpty)
@@ -998,7 +1002,8 @@ class PipelineSpec extends SparkSpec {
     // properties; under the same model instances the direct (unsplit,
     // unpersisted) path must produce the identical result — the codec
     // and the lake round-trip add storage, never drift
-    val (ivf, pq) = LakeQueries.lastAnnIndexedTrainedModels.get
+    val ivf = PipelineQueries.ivfModelFromString(trace.note("ivf_model"))
+    val pq = PipelineQueries.pqModelFromString(trace.note("pq_model"))
     val e = graft.Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val direct = PipelineQueries.ivfPqSearch(spark, e, ivf, pq).collect().toSeq
@@ -1202,13 +1207,14 @@ class PipelineSpec extends SparkSpec {
 
   test("D2f persisted ANN index: an append encodes ONLY the increment, and " +
       "serving from committed codes equals the per-query path") {
-    val out = LakeQueries.d02_ann_indexed(spark, dir).collect().toSeq
+    val (out, trace) = Trace.capture(
+      LakeQueries.d02_ann_indexed(spark, dir).collect().toSeq)
     assert(out.nonEmpty)
     // 100 vectors arrived after the index was built (vec_id 400..499 at
     // this sf) — the maintenance commit must encode exactly those, never
     // re-encode the 400-vector committed corpus
-    assert(LakeQueries.lastAnnIndexedIncrementRows == 100L,
-      s"index maintenance encoded ${LakeQueries.lastAnnIndexedIncrementRows} rows")
+    assert(trace.count("increment_rows") == 100L,
+      s"index maintenance encoded ${trace.count("increment_rows")} rows")
     // the committed-index serve must be indistinguishable from running
     // the unsplit encode+serve machinery over the same vectors with the
     // same frozen models — the persisted index adds storage, not drift
@@ -1612,17 +1618,17 @@ class PipelineSpec extends SparkSpec {
       merged.map { case (st, en) => (id, st, en) }
     }.sortBy(x => (x._1, x._2))
     assert(expected.nonEmpty, "testdata should have cross-parity dup spans")
-    val got = LakeQueries.d01_substring_index(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val (got, trace) = Trace.capture(LakeQueries.d01_substring_index(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     assert(got == expected,
       s"gate spans diverged: ${(got.toSet diff expected.toSet).take(3)} vs " +
         s"${(expected.toSet diff got.toSet).take(3)}")
-    val (plan, locI) = LakeQueries.lastSubstrIndexGate.get
+    val (plan, locI) = (trace.note("plan"), trace.note("index_location"))
     assert(plan.contains(locI),
       s"gate does not scan the committed shingle index $locI:\n${plan.take(2000)}")
     val novel = incSh.map(_._3).toSet.diff(corpus)
-    assert(LakeQueries.lastSubstrIndexNewKeys == novel.size.toLong,
-      s"maintenance wrote ${LakeQueries.lastSubstrIndexNewKeys} keys != " +
+    assert(trace.count("maint_rows") == novel.size.toLong,
+      s"maintenance wrote ${trace.count("maint_rows")} keys != " +
         s"increment's ${novel.size} novel hashes")
   }
 
@@ -1719,7 +1725,7 @@ class PipelineSpec extends SparkSpec {
           }
         }
         .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
-        .groupBy(_._1._1).toSeq.flatMap { case (qid, byDoc) =>
+        .groupBy(_._1._1).toSeq.flatMap { case (_, byDoc) =>
           byDoc.sortBy { case ((_, id), sm) => (-sm, id) }
             .take(PipelineQueries.Bm25TopK).zipWithIndex
             .map { case (((q2, id), sm), i) =>
@@ -1737,14 +1743,14 @@ class PipelineSpec extends SparkSpec {
   test("D2p committed positional index: phrase serve reads position lists " +
       "from the INDEX TABLE, maintenance appends the increment's postings, " +
       "results equal the direct recompute") {
-    val indexed = LakeQueries.d02_phrase_index(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    val (indexed, trace) = Trace.capture(LakeQueries.d02_phrase_index(spark, dir)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq)
     val direct = PipelineQueries.d02_phrase_match(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     assert(indexed == direct,
       s"index serve diverged: ${(indexed.toSet diff direct.toSet).take(5)}")
     assert(indexed.nonEmpty, "corpus should contain phrase matches")
-    val (plan, loc) = LakeQueries.lastPhraseIndexServe.get
+    val (plan, loc) = (trace.note("plan"), trace.note("index_location"))
     assert(plan.contains(loc),
       s"serve does not scan the committed positional index $loc:\n${plan.take(2000)}")
     assert(!plan.contains("documents"),
@@ -1752,11 +1758,12 @@ class PipelineSpec extends SparkSpec {
     val odds = graft.Tables.t(spark, dir, "documents")
       .filter(pmod(col("doc_id"), lit(2)) === 1)
     val oddPostings = PipelineQueries.positionalPostings(odds).count()
-    assert(LakeQueries.lastPhraseIndexMaintRows == oddPostings,
-      s"maintenance rows ${LakeQueries.lastPhraseIndexMaintRows} != " +
+    assert(trace.count("maint_rows") == oddPostings,
+      s"maintenance rows ${trace.count("maint_rows")} != " +
         s"increment postings $oddPostings")
     // r12: phrase serve scan is layout-pruned like the BM25 serve
-    val (planned, total) = LakeQueries.lastPhraseServeFilePrune
+    val (planned, total) = (trace.count("phrase_files_planned"),
+      trace.count("phrase_files_total"))
     assert(planned > 0 && planned < total,
       s"serve scan not bucket-pruned: planned $planned of $total files")
   }
@@ -1824,16 +1831,16 @@ class PipelineSpec extends SparkSpec {
   test("D2i committed BM25 index: serve scans the INDEX TABLE (not a corpus " +
       "re-tokenize), maintenance appends exactly the increment's postings, " +
       "results equal the full recompute") {
-    val indexed = LakeQueries.d02_bm25_index(spark, dir)
+    val (indexed, trace) = Trace.capture(LakeQueries.d02_bm25_index(spark, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+        r.getDouble(3))).toSeq)
     val recomputed = PipelineQueries.d02_bm25_topk(spark, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).toSeq
     assert(indexed == recomputed,
       s"index serve diverged from recompute: ${
         (indexed.toSet diff recomputed.toSet).take(5)}")
-    val (plan, loc) = LakeQueries.lastBm25IndexServe.get
+    val (plan, loc) = (trace.note("plan"), trace.note("index_location"))
     assert(plan.contains(loc),
       s"serve does not scan the committed index table $loc:\n${plan.take(2000)}")
     // a regression back to corpus re-tokenize would scan the documents
@@ -1846,13 +1853,14 @@ class PipelineSpec extends SparkSpec {
     val odds = graft.Tables.t(spark, dir, "documents")
       .filter(pmod(col("doc_id"), lit(2)) === 1)
     val oddPostings = PipelineQueries.bm25Postings(odds).count()
-    assert(LakeQueries.lastBm25IndexMaintRows == oddPostings,
-      s"maintenance rows ${LakeQueries.lastBm25IndexMaintRows} != " +
+    assert(trace.count("maint_rows") == oddPostings,
+      s"maintenance rows ${trace.count("maint_rows")} != " +
         s"increment postings $oddPostings")
     // r12: the serve SCAN is layout-pruned — the probes' literal terms
     // hash into a strict subset of the 16 tkey buckets, so the scan must
     // plan strictly fewer files than the index holds
-    val (planned, total) = LakeQueries.lastBm25ServeFilePrune
+    val (planned, total) =
+      (trace.count("serve_files_planned"), trace.count("files_total"))
     assert(planned > 0 && planned < total,
       s"serve scan not bucket-pruned: planned $planned of $total files")
   }
@@ -1874,13 +1882,14 @@ class PipelineSpec extends SparkSpec {
         if (i % 3 == 0) Seq(probeVocab((i % probeVocab.size).toInt)) else Nil
       (i, (filler ++ probes).mkString(" "))
     }.toDF("doc_id", "text")
-    val res = LakeQueries.bm25IndexRun(spark,
+    val (res, trace) = Trace.capture(LakeQueries.bm25IndexRun(spark,
       docs.filter(pmod(col("doc_id"), lit(2)) === 0),
       docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-      rowsPerFile = 64L)
+      rowsPerFile = 64L))
     assert(res.count() > 0, "serve must return ranked rows")
-    val (planned, total) = LakeQueries.lastBm25ServeFilePrune
-    val bucketFiles = LakeQueries.lastBm25ServeBucketFiles
+    val (planned, total) =
+      (trace.count("serve_files_planned"), trace.count("files_total"))
+    val bucketFiles = trace.count("serve_bucket_files")
     assert(bucketFiles <= total)
     assert(bucketFiles > PipelineQueries.bm25QueryTkeys.size * 2,
       s"corpus too small to exercise the skip: $bucketFiles files across " +
@@ -1956,9 +1965,11 @@ class PipelineSpec extends SparkSpec {
   test("D2h indexed hybrid: both arms serve from COMMITTED index tables — " +
       "no corpus read, no cross join — and per-query output is a full " +
       "top-K ranking") {
-    val got = LakeQueries.d02_hybrid_indexed(spark, dir).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val (plan, locB, locI) = LakeQueries.lastHybridIndexedPlan.get
+    val (got, trace) = Trace.capture(
+      LakeQueries.d02_hybrid_indexed(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))))
+    val (plan, locB, locI) = (trace.note("plan"),
+      trace.note("bm25_location"), trace.note("ann_location"))
     assert(plan.contains(locB),
       s"lexical arm does not scan the committed BM25 index $locB")
     assert(plan.contains(locI),
@@ -2014,9 +2025,11 @@ class PipelineSpec extends SparkSpec {
     // "!!!!" makes the other 4 shingles novel so maintenance has keys to
     // append — still ≤5 skey buckets total
     val inc = Seq((5L, base.substring(0, L) + "!!!!")).toDF("doc_id", "text")
-    val spans = LakeQueries.substrIndexRun(spark, corpus, inc).collect()
+    val (spans, trace) =
+      Trace.capture(LakeQueries.substrIndexRun(spark, corpus, inc).collect())
     assert(spans.nonEmpty, "increment copies the corpus — gate must flag it")
-    val (planned, total) = LakeQueries.lastSubstrGateFilePrune
+    val (planned, total) = (trace.count("substr_files_planned"),
+      trace.count("substr_files_total"))
     assert(planned > 0 && planned <= 5 && planned < total,
       s"gate scan not bucket-pruned: planned $planned of $total files")
   }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkSpec, Trace}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.{col, expr, sha2}
@@ -165,7 +165,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("D1g: incremental-dedup bloom scales with the increment (100x the old literal)") {
-    import spark.implicits._
     // round-5 regression target: the bloom was a fixed 8192-item/64Kib
     // literal — an increment 100× that size saturates it, FP→1, and the
     // corpus prefilter silently becomes a pass-through. The NDV must now
@@ -176,9 +175,11 @@ class PlanSpec extends SparkSpec {
       sha2(col("id").cast("string").cast("binary"), 256).as("h"))
     val corpus = spark.range(n, n + 100000L)
       .select(sha2(col("id").cast("string").cast("binary"), 256).as("h"))
-    val out = LakeQueries.incrementalDedup(spark, inc, corpus)
+    val (out, trace) =
+      Trace.capture(LakeQueries.incrementalDedup(spark, inc, corpus))
     assert(out.count() == n, "disjoint corpus must drop nothing")
-    val (ndv, bits) = LakeQueries.lastIncDedupBloomParams.get
+    // sized from the increment: a regression back to fixed literals fails
+    val (ndv, bits) = (trace.count("bloom_ndv"), trace.count("bloom_bits"))
     assert(ndv >= n, s"bloom NDV $ndv not sized to the $n-row increment")
     assert(bits >= n * 10, s"bloom bits $bits below ~10 bits/item")
     // measure the prefilter's real selectivity: survivors of the bloom on
@@ -276,14 +277,15 @@ class PlanSpec extends SparkSpec {
       "gates with an algebraic count + streamed semi join — never a " +
       "row-buffering window — and releases its cache before returning") {
     spark.sqlContext.clearCache() // isolate: prove THIS entry's hygiene
-    PipelineQueries.d01_dedup_substring(spark, dir)
-      .write.mode("overwrite").format("noop").save()
+    val (_, trace) = Trace.capture(PipelineQueries
+      .d01_dedup_substring(spark, dir)
+      .write.mode("overwrite").format("noop").save())
     // the spans materialize INSIDE the call (self-contained lifecycle,
     // r14): the computing plan is the captured one, and the corpus-sized
     // shingle cache must be gone by the time the entry returns — a
     // production session must not depend on LRU pressure or a bench-side
     // clearCache to reclaim it
-    val p = PipelineQueries.lastSubstrSpansPlan
+    val p = trace.note("plan")
     assert(spark.sharedState.cacheManager.isEmpty,
       "shingle cache outlived the substring-dedup call")
     // r13: the persisted shingle space feeds both consumers, so the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 
-import graft.SparkSpec
+import graft.{SparkSpec, Trace, TraceRecord}
 import graft.lake._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -17,6 +17,13 @@ class StreamingSpec extends SparkSpec {
     s"${System.getProperty("java.io.tmpdir")}/graft-$prefix-${UUID.randomUUID()}"
 
   private val evSchema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
+
+  /** Per-run deltas of the `landed` total an entry traces before its runs
+    * and after each. */
+  private def perRun(trace: TraceRecord): Seq[Long] = {
+    val landed = trace.series("landed")
+    landed.zip(landed.tail).map { case (a, b) => b - a }
+  }
 
   /** Replay fixed JSON batches through a file stream in file order. */
   private def replay(files: Seq[Seq[String]], transform: org.apache.spark.sql.DataFrame
@@ -179,8 +186,9 @@ class StreamingSpec extends SparkSpec {
       "exactly once against the committed band index; verdicts equal the " +
       "batch gate") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamingQueries.d07_minhash_stream(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val (streamed, trace) = Trace.capture(
+      StreamingQueries.d07_minhash_stream(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
     val batch = graft.queries.LakeQueries.d01_minhash_incremental(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     // the waves union to the batch increment and both gates probe the
@@ -191,7 +199,7 @@ class StreamingSpec extends SparkSpec {
     // planted re-key docs — 20 exact, all of which must match, plus up
     // to 20 near re-keys). A replayed wave 1 would re-land its dup ids
     // and push the delta past the wave-2 ceiling.
-    val deltas = StreamingQueries.lastMinhashStreamRunDups
+    val deltas = perRun(trace)
     assert(deltas.size == 2, s"expected 2 gate runs, saw $deltas")
     assert(deltas(1) >= 20L && deltas(1) <= 40L,
       s"run-2 dup delta ${deltas(1)} outside wave 2's [20, 40] envelope " +
@@ -201,8 +209,8 @@ class StreamingSpec extends SparkSpec {
   test("D7e live fuzzy gate: arrivals gate against EARLIER ARRIVALS via " +
       "in-stream index maintenance; exactly-once across the restart") {
     val dir = "/root/testdata/sf0.001"
-    val out = StreamingQueries.d07_minhash_live(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val (out, trace) = Trace.capture(StreamingQueries.d07_minhash_live(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
     // +3M docs are exact re-keys of WAVE-1 arrivals: their bands entered
     // the index only through run-1's in-stream maintenance append — a
     // corpus-frozen gate (d07_minhash_stream's shape) would pass every
@@ -226,7 +234,7 @@ class StreamingSpec extends SparkSpec {
     // sum to the verdict total; run 2 must carry the 40 planted exact
     // re-keys plus the 20 twins (a replayed wave 1 would inflate it
     // past the wave-2 ceiling of 80)
-    val deltas = StreamingQueries.lastMinhashLiveRunDups
+    val deltas = perRun(trace)
     assert(deltas.size == 2, s"expected 2 gate runs, saw $deltas")
     assert(deltas.sum == out.count(_._2).toLong,
       s"per-run deltas $deltas don't sum to ${out.count(_._2)}")
@@ -234,15 +242,15 @@ class StreamingSpec extends SparkSpec {
       s"run-2 dup delta ${deltas(1)} outside wave 2's [60, 80] envelope")
     // the wave-grain oracle's premise: each AvailableNow run processed
     // its wave as exactly ONE micro-batch
-    assert(StreamingQueries.lastMinhashLiveRunEpochs == Seq(1L, 1L),
-      s"waves split across micro-batches: ${StreamingQueries.lastMinhashLiveRunEpochs}")
+    assert(trace.series("epochs") == Seq(1L, 1L),
+      s"waves split across micro-batches: ${trace.series("epochs")}")
   }
 
   test("D7g live semantic gate: wave-2 twins of wave-1 arrivals flag via " +
       "in-stream cell-index maintenance; exactly-once across the restart") {
     val dir = "/root/testdata/sf0.001"
-    val out = StreamingQueries.d07_semdedup_live(spark, dir)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+    val (out, trace) = Trace.capture(StreamingQueries.d07_semdedup_live(spark, dir)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap)
     // +10000 docs are exact twins of WAVE-1 vectors (cosine 1 to their
     // source): their cells entered the index only through run-1's
     // maintenance append — a corpus-frozen gate flags one only if its
@@ -272,7 +280,7 @@ class StreamingSpec extends SparkSpec {
       assert(out(k)._1 == out(k - 20000L)._1,
         s"twin $k landed in cell ${out(k)._1} != source cell ${out(k - 20000L)._1}")
     }
-    val deltas = StreamingQueries.lastSemLiveRunDups
+    val deltas = perRun(trace)
     assert(deltas.size == 2, s"expected 2 gate runs, saw $deltas")
     assert(deltas.sum == out.count(_._2._2).toLong,
       s"per-run deltas $deltas don't sum to ${out.count(_._2._2)}")
@@ -292,8 +300,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val data = LakeTable.create(locD, "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
-    val index = LakeTable.create(locI, P.BandIndexDdl,
-      TruncateSpec("bkey", 1L))
+    LakeTable.create(locI, P.BandIndexDdl, TruncateSpec("bkey", 1L))
     LakeTable.create(locR, "doc_id BIGINT", TruncateSpec("doc_id", 1000L))
     val textA = "the quick brown fox jumps over the lazy dog again and again"
     val textC = "completely different content with no shared shingles at all here"
@@ -347,8 +354,9 @@ class StreamingSpec extends SparkSpec {
       "exactly once against the committed cell index; verdicts equal the " +
       "batch gate") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamingQueries.d07_semdedup_stream(spark, dir)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+    val (streamed, trace) = Trace.capture(
+      StreamingQueries.d07_semdedup_stream(spark, dir)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap)
     val batch = graft.queries.LakeQueries.d01_semdedup_index(spark, dir)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     // waves union to the batch increment; both gates assign under the
@@ -361,7 +369,7 @@ class StreamingSpec extends SparkSpec {
     // a replayed wave 1 in run 2 would double-count its dups), and each
     // run must have landed at least one dup at this sf (planted twins
     // exist on both sides of the 450 split)
-    val deltas = StreamingQueries.lastSemStreamRunDups
+    val deltas = perRun(trace)
     assert(deltas.size == 2, s"expected 2 gate runs, saw $deltas")
     assert(deltas.sum == streamed.count(_._2._2).toLong,
       s"per-run dup deltas $deltas don't sum to the verdict total " +
@@ -410,12 +418,13 @@ class StreamingSpec extends SparkSpec {
   test("D7l continuous packing: restart packs only the new wave; the " +
       "completed stream equals the batch incremental pack") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamingQueries.d07_seqpack_stream(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
+    val (streamed, trace) = Trace.capture(
+      StreamingQueries.d07_seqpack_stream(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSet)
     // exactly-once across the checkpointed restart: both runs landed
     // rows, and together they account for every span exactly once
-    val runs = StreamingQueries.lastSeqPackStreamRunRows
+    val runs = perRun(trace)
     assert(runs.size == 2 && runs.forall(_ > 0),
       s"expected two productive runs, got $runs")
     assert(runs.sum == streamed.size.toLong)
@@ -434,12 +443,13 @@ class StreamingSpec extends SparkSpec {
       "batch recompute") {
     val dir = "/root/testdata/sf0.001"
     import org.apache.spark.sql.functions._
-    val served = StreamingQueries.d07_bm25_stream(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+    val (served, trace) = Trace.capture(
+      StreamingQueries.d07_bm25_stream(spark, dir)
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
+          r.getDouble(3))).toSeq)
     // exactly-once across the checkpointed restart: two productive runs,
     // each landing its own wave's postings (work ∝ the wave)
-    val runs = StreamingQueries.lastBm25StreamRunRows
+    val runs = perRun(trace)
     assert(runs.size == 2 && runs.forall(_ > 0),
       s"expected two productive maintenance runs, got $runs")
     val d = graft.Tables.t(spark, dir, "documents")
@@ -458,8 +468,8 @@ class StreamingSpec extends SparkSpec {
       s"stream-maintained serve diverged: ${(served.toSet diff batch.toSet).take(3)}")
     // default cap must never fire on the two-wave entry — the trigger is
     // for unbounded streams, not a behavior change here
-    assert(StreamingQueries.lastBm25StreamCompactions == 0,
-      s"default cap tripped ${StreamingQueries.lastBm25StreamCompactions}" +
+    assert(trace.count("compactions") == 0,
+      s"default cap tripped ${trace.count("compactions")}" +
         " compactions on the two-wave entry")
   }
 
@@ -467,20 +477,17 @@ class StreamingSpec extends SparkSpec {
       "trips the DEFAULT compaction mid-stream (declared sort-order " +
       "re-cluster) and the serve is unchanged") {
     val dir = "/root/testdata/sf0.001"
-    val prev = StreamingQueries.bm25StreamCompactPerBucketCap
-    StreamingQueries.bm25StreamCompactPerBucketCap = 2
-    try {
-      val served = StreamingQueries.d07_bm25_stream(spark, dir)
+    val (served, trace) = Trace.capture(
+      StreamingQueries.bm25StreamRun(spark, dir, compactPerBucketCap = 2)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
-          r.getDouble(3))).toSeq
-      assert(StreamingQueries.lastBm25StreamCompactions >= 1,
-        "lowered cap should trip at least one mid-stream compaction")
-      val batch = graft.queries.PipelineQueries.d02_bm25_topk(spark, dir)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
-          r.getDouble(3))).toSeq
-      assert(served == batch,
-        "mid-stream compaction changed the served ranking")
-    } finally StreamingQueries.bm25StreamCompactPerBucketCap = prev
+          r.getDouble(3))).toSeq)
+    assert(trace.count("compactions") >= 1,
+      "lowered cap should trip at least one mid-stream compaction")
+    val batch = graft.queries.PipelineQueries.d02_bm25_topk(spark, dir)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
+        r.getDouble(3))).toSeq
+    assert(served == batch,
+      "mid-stream compaction changed the served ranking")
   }
 
   test("D7n continuous hybrid retrieval: both stream-maintained arms drain " +
@@ -503,9 +510,10 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     import org.apache.spark.sql.functions._
     val L = graft.queries.PipelineQueries.SubstrShingle
-    val spans = StreamingQueries.d07_substring_live(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val runs = StreamingQueries.lastSubstrLiveRunHits
+    val (spans, trace) = Trace.capture(
+      StreamingQueries.d07_substring_live(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    val runs = perRun(trace)
     assert(runs.size == 2 && runs.forall(_ > 0),
       s"expected two productive gate runs, got $runs")
     // the +3M docs re-key WAVE-1 arrivals: their shingles entered the
@@ -540,8 +548,8 @@ class StreamingSpec extends SparkSpec {
         s"same-batch twin $id not whole-doc flagged: ${ss.toSeq} (len $len)")
     }
     // the wave-grain oracle's premise: one micro-batch per run
-    assert(StreamingQueries.lastSubstrLiveRunEpochs == Seq(1L, 1L),
-      s"waves split across micro-batches: ${StreamingQueries.lastSubstrLiveRunEpochs}")
+    assert(trace.series("epochs") == Seq(1L, 1L),
+      s"waves split across micro-batches: ${trace.series("epochs")}")
   }
 
   test("C17: streaming table ingest — moniker stream foreachBatch-appends into a LakeTable") {

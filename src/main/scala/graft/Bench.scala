@@ -224,11 +224,12 @@ object Bench {
     // that set the reported MIN — phases taken post-hoc came from the LAST
     // rep, so a taxed last rep made phases sum to 2× the reported wall
     // (r14's own artifact: ann phases 9.58 s vs entry 4.05 s). Each gets
-    // its spans, the serve's file-pruning counts where it records them,
-    // and phases_wall_s so sum-of-phases ≈ wall is checkable from the JSON.
+    // its spans, the zipf serves' file-pruning counts, and phases_wall_s
+    // so sum-of-phases ≈ wall is checkable from the JSON.
     val phaseEntries = Set("d02_ann_indexed", "d02_hybrid_indexed",
       "d02_phrase_index", "d02_bm25_zipf", "d02_phrase_zipf",
       "d02_hybrid_zipf")
+    val pruneEntries = Set("d02_bm25_zipf", "d02_phrase_zipf")
     val serveFileCounts =
       Set("serve_files_planned", "serve_bucket_files", "files_total")
     val minRepPhases =
@@ -268,12 +269,14 @@ object Bench {
           minSoFar = w
           if (phaseEntries(key))
             minRepPhases(key) = trace.spans ++ trace.counts.collect {
-              case (k, n) if serveFileCounts(k) => k -> n.toDouble
+              case (k, n) if pruneEntries(key) && serveFileCounts(k) =>
+                k -> n.toDouble
             } :+ ("phases_wall_s" -> w)
         }
         w
       }
-      f() // warmup — never probed, never sets the min
+      // warmup: runs what a rep runs, never probed, never sets the min
+      Trace.capture(f())
       val a = rep(); val b = rep()
       val best = if (a < 0 || b < 0) math.max(a, b) else math.min(a, b)
       if (best >= 0 && best < 1.5) {
@@ -983,9 +986,8 @@ object Bench {
         out += "substr_maint_s" -> trace.span("maint_s")
         out += "substr_gate_hits" -> n.toDouble
         out += "substr_files_planned" ->
-          trace.count("substr_files_planned").toDouble
-        out += "substr_files_total" ->
-          trace.count("substr_files_total").toDouble
+          trace.count("serve_files_planned").toDouble
+        out += "substr_files_total" -> trace.count("files_total").toDouble
       }
       System.err.println("[bench] zipf_retrieval: " + out.map {
         case (k, v) => f"$k=$v%.3f" }.mkString(" "))

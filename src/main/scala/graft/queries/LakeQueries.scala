@@ -1099,8 +1099,8 @@ object LakeQueries {
         Trace.note("index_location", loc)
         localize(out)
       }
-      Trace.count("phrase_files_planned", filesPlanned(loc))
-      Trace.count("phrase_files_total", idxT.files().size.toLong)
+      Trace.count("serve_files_planned", filesPlanned(loc))
+      Trace.count("files_total", idxT.files().size.toLong)
       res
     } finally LakeTable.drop(loc)
   }
@@ -1252,8 +1252,8 @@ object LakeQueries {
       // misreads as gate cost
       Trace.span("build_s", (System.nanoTime() - tStart) / 1e9)
       val gated = Trace.phase("gate_s")(localize(out))
-      Trace.count("substr_files_planned", filesPlanned(locI))
-      Trace.count("substr_files_total", idxT.files().size.toLong)
+      Trace.count("serve_files_planned", filesPlanned(locI))
+      Trace.count("files_total", idxT.files().size.toLong)
       // maintenance: one commit of the increment's NOVEL distinct hashes
       val i2 = Trace.phase("maint_s")(index.append(LakeWriter.writeDataFiles(
         keyed(incSh.select("shash").distinct()

@@ -1009,15 +1009,21 @@ class PipelineSpec extends SparkSpec {
     val direct = PipelineQueries.ivfPqSearch(spark, e, ivf, pq).collect().toSeq
     assert(out.collect().toSeq == direct,
       "trained committed-index serve diverged from the direct path")
-    // and the trained floats themselves round-trip bit-exactly
-    val ivf2 = PipelineQueries.ivfModelFromString(
-      PipelineQueries.ivfModelToString(ivf))
-    assert(ivf2.toSeq.map { case (c, v) => (c, v.toList) } ==
-      ivf.toSeq.map { case (c, v) => (c, v.toList) })
-    val pq2 = PipelineQueries.pqModelFromString(
-      PipelineQueries.pqModelToString(pq))
-    assert(pq2.map(_.map(_.toList).toList).toList ==
-      pq.map(_.map(_.toList).toList).toList)
+    // and the trained floats themselves round-trip bit-exactly: the
+    // models above already went through the codec, so the check trains
+    // its own in-memory instances on the same committed 400 vectors —
+    // full-precision Lloyd means, which a lossy codec would not survive
+    val committed = e.filter(col("vec_id") < 400)
+    val ivf0 = PipelineQueries.trainIvfCentroids(committed)
+    val pq0 = PipelineQueries.trainPqCodebooks(committed, seedMod = 23)
+    def ivfBits(m: Array[(Long, Seq[Float])]) =
+      m.toList.map { case (c, v) => (c, v.toList.map(java.lang.Float.floatToIntBits)) }
+    def pqBits(m: Array[Array[Seq[Double]]]) =
+      m.toList.map(_.toList.map(_.toList.map(java.lang.Double.doubleToLongBits)))
+    assert(ivfBits(PipelineQueries.ivfModelFromString(
+      PipelineQueries.ivfModelToString(ivf0))) == ivfBits(ivf0))
+    assert(pqBits(PipelineQueries.pqModelFromString(
+      PipelineQueries.pqModelToString(pq0))) == pqBits(pq0))
   }
 
   test("D2h rebuild_index: drifted-increment recall decays under frozen " +
@@ -1762,8 +1768,8 @@ class PipelineSpec extends SparkSpec {
       s"maintenance rows ${trace.count("maint_rows")} != " +
         s"increment postings $oddPostings")
     // r12: phrase serve scan is layout-pruned like the BM25 serve
-    val (planned, total) = (trace.count("phrase_files_planned"),
-      trace.count("phrase_files_total"))
+    val (planned, total) =
+      (trace.count("serve_files_planned"), trace.count("files_total"))
     assert(planned > 0 && planned < total,
       s"serve scan not bucket-pruned: planned $planned of $total files")
   }
@@ -2028,8 +2034,8 @@ class PipelineSpec extends SparkSpec {
     val (spans, trace) =
       Trace.capture(LakeQueries.substrIndexRun(spark, corpus, inc).collect())
     assert(spans.nonEmpty, "increment copies the corpus — gate must flag it")
-    val (planned, total) = (trace.count("substr_files_planned"),
-      trace.count("substr_files_total"))
+    val (planned, total) =
+      (trace.count("serve_files_planned"), trace.count("files_total"))
     assert(planned > 0 && planned <= 5 && planned < total,
       s"gate scan not bucket-pruned: planned $planned of $total files")
   }

@@ -1232,11 +1232,7 @@ object Bench {
         if (ph.nonEmpty) {
           System.err.println(s"[bench] $name phases: " + ph
             .map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
-          val wall = ph.collectFirst { case ("phases_wall_s", w) => w }
-          val timeSum = ph.collect {
-            case (k, v) if k.endsWith("_s") && k != "phases_wall_s" => v
-          }.sum
-          for (w <- wall if timeSum > w * 1.3 + 0.2)
+          for ((timeSum, w) <- phaseDrift(ph))
             System.err.println(f"[bench] WARNING: $name phase sum " +
               f"$timeSum%.2fs exceeds its min-rep wall $w%.2fs — " +
               "phase capture drifted from the reported rep")
@@ -1399,6 +1395,28 @@ object Bench {
 
   private def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) -1.0 else xs.sorted.apply((xs.size - 1) / 2)
+
+  /** Phases recorded as per-thread durations of work that runs at the same
+    * time: the hybrid entries build their lexical and ANN arms
+    * concurrently, so the two spans overlap on the wall.
+    */
+  private val concurrentPhases = Set("lex_build_s", "ann_build_s")
+
+  /** `(phase sum, wall)` when a rep's `_s` time phases add up past its
+    * `phases_wall_s` by more than capture noise, i.e. the split was not
+    * taken at the reported rep. Sequential phases add; the concurrent ones
+    * count once, as their longest.
+    */
+  private[graft] def phaseDrift(
+      phases: Seq[(String, Double)]): Option[(Double, Double)] = {
+    val (concurrent, sequential) = phases.collect {
+      case (k, v) if k.endsWith("_s") && k != "phases_wall_s" => k -> v
+    }.partition { case (k, _) => concurrentPhases(k) }
+    val timeSum = sequential.map(_._2).sum +
+      concurrent.map(_._2).maxOption.getOrElse(0.0)
+    phases.collectFirst { case ("phases_wall_s", w) => w }
+      .filter(w => timeSum > w * 1.3 + 0.2).map(timeSum -> _)
+  }
 
   /** The full report as one JSON tree of raw numbers, in artifact order. */
   private def report(m: Measured): ObjectNode = {

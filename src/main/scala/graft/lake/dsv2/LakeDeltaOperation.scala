@@ -45,7 +45,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * simply produces no delta rows, which is exactly correct.
   */
 final class LakeDeltaOperation(location: String,
-    cmd: RowLevelOperation.Command) extends RowLevelOperation with SupportsDelta {
+    cmd: RowLevelOperation.Command, viaCatalog: Boolean)
+  extends RowLevelOperation with SupportsDelta {
 
   // snapshot current when the operation was PLANNED; newScanBuilder pins
   // the scan to THIS snapshot, so the commit's capped-entry validation
@@ -83,7 +84,7 @@ final class LakeDeltaOperation(location: String,
     // capped entries conservatively (danglingDeleteRefs' expired branch)
     val pin = if (t.snapshots.exists(_.id == scanSnapshot)) Some(scanSnapshot)
       else None
-    new LakeScanBuilder(location, t, None, pin, None)
+    new LakeScanBuilder(location, t, None, pin, None, viaCatalog = viaCatalog)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =

@@ -43,7 +43,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * deleteWhere/compaction, now reachable as `MERGE INTO lake.ns.t ...`.
   */
 final class LakeRowLevelOperation(location: String,
-    cmd: RowLevelOperation.Command) extends RowLevelOperation {
+    cmd: RowLevelOperation.Command, viaCatalog: Boolean) extends RowLevelOperation {
 
   /** Files planned by this operation's scan (set at planInputPartitions
     * time, after runtime group filtering) — the groups the write replaces.
@@ -86,7 +86,7 @@ final class LakeRowLevelOperation(location: String,
           planListener = Some { fs =>
             scannedPaths = fs.map(_.path).toSet
             scanSnapshot = Some(snap.id)
-          })
+          }, viaCatalog = viaCatalog)
       }
     }
   }

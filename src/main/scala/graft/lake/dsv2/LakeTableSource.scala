@@ -86,8 +86,8 @@ final class LakeDsTable(location: String, asOf: Option[Long] = None,
       }
       val mor = LakeTable.load(location).tableMeta.properties
         .get(modeKey).contains(graft.lake.LakeFormat.DeleteModeMergeOnRead)
-      if (mor) new LakeDeltaOperation(location, info.command())
-      else new LakeRowLevelOperation(location, info.command())
+      if (mor) new LakeDeltaOperation(location, info.command(), viaCatalog)
+      else new LakeRowLevelOperation(location, info.command(), viaCatalog)
     }
 
   /** SQL `DELETE FROM`: pushed filters become one predicate Column for the
@@ -128,7 +128,8 @@ final class LakeDsTable(location: String, asOf: Option[Long] = None,
       // NOT applied — convertEqualityDeletes scans for the row positions
       // the pending eq keys retire, which the default scan would hide
       skipDeletes =
-        Option(options.get("skipDeleteApplication")).exists(_.toBoolean))
+        Option(options.get("skipDeleteApplication")).exists(_.toBoolean),
+      viaCatalog = viaCatalog)
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -177,7 +178,8 @@ final class LakeScanBuilder(location: String, table: LakeTable,
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None,
     endSnapshot: Option[Long] = None,
-    skipDeletes: Boolean = false)
+    skipDeletes: Boolean = false,
+    viaCatalog: Boolean = false)
   extends ScanBuilder with SupportsPushDownFilters
   with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
   with SupportsPushDownLimit {
@@ -315,7 +317,7 @@ final class LakeScanBuilder(location: String, table: LakeTable,
       new LakeBatchScan(location, table, required, pushed, startSnapshot, asOf,
         snap, maxFilesPerTrigger, pushedLimit = limit,
         maxBytesPerTrigger = maxBytesPerTrigger, endSnapshot = endSnapshot,
-        skipDeletes = skipDeletes)
+        skipDeletes = skipDeletes, viaCatalog = viaCatalog)
   }
 }
 
@@ -519,7 +521,10 @@ final class LakeBatchScan(location: String, table: LakeTable,
     // maintenance-internal: plan NO delete refs — the eq→pos conversion
     // scan needs the rows the deletes would mask (its `_pos` projection
     // still routes it down the row path; that is the position source)
-    skipDeletes: Boolean = false)
+    skipDeletes: Boolean = false,
+    // resolved through LakeCatalog, the only route by which Spark can
+    // resolve the reported truncate transform ([[keyGrouped]])
+    viaCatalog: Boolean = false)
   extends Scan with Batch with SupportsRuntimeFiltering
   with SupportsReportStatistics with SupportsReportPartitioning {
 
@@ -564,11 +569,18 @@ final class LakeBatchScan(location: String, table: LakeTable,
     }
   }
 
+  // per-file spec: partitionValue covers [start, start + OWN width)
+  private def accepts(filters: Array[Filter])(f: DataFileMeta): Boolean =
+    filters.forall(LakeMetaColumns.accept(table.specFor(f), statsAligned(f), _))
+
+  /** Files the pushed filters keep. Runtime filters and a pushed LIMIT
+    * only ever narrow this set, so a property checked here holds for every
+    * file the scan can end up planning.
+    */
+  private lazy val pushedFiles: Seq[DataFileMeta] = liveFiles.filter(accepts(pushed))
+
   private def prunedFiles: Seq[DataFileMeta] =
-    liveFiles.filter(f =>
-      // per-file spec: partitionValue covers [start, start + OWN width)
-      (pushed.iterator ++ runtime.iterator)
-        .forall(LakeMetaColumns.accept(table.specFor(f), statsAligned(f), _)))
+    if (runtime.isEmpty) pushedFiles else pushedFiles.filter(accepts(runtime))
 
   /** Files the scan actually plans: pruned, then cut to a pushed LIMIT
     * when that is sound (no filters of either kind — they drop rows
@@ -621,38 +633,79 @@ final class LakeBatchScan(location: String, table: LakeTable,
 
   override def filter(filters: Array[Filter]): Unit = runtime = filters
 
-  /** Storage-partitioned-join contract: rows are clustered by
-    * truncate_<width>(partitionCol), one partition value per scan task (the
-    * packer never mixes buckets). Catalyst resolves the named transform
-    * through the table's catalog ([[TruncateFunction]]); two laketable
-    * scans with the same width are then co-partitioned and a join on the
-    * partition column needs NO shuffle on either side — with
-    * `spark.sql.sources.v2.bucketing.pushPartValues.enabled`, bucket sets
-    * that don't line up zip with empty slots instead of falling back.
-    * Runtime file pruning composes: dropped buckets are a subset of the
-    * reported partition values, which BatchScanExec backfills as empty
-    * partitions. Path-based (non-catalog) reads can't resolve the
-    * transform name and ignore this — reporting is free there.
+  /** Whether Spark can use a key-grouped partitioning of this scan, decided
+    * once so that [[outputPartitioning]] and [[planInputPartitions]] cannot
+    * disagree. Three conditions, all required:
+    *  - the table came through [[LakeCatalog]]: Spark resolves the reported
+    *    truncate transform only through the relation's FunctionCatalog
+    *    ([[TruncateFunction]]), so a path-based read would drop the claim;
+    *  - the pruned read schema holds the partition column: Spark keeps the
+    *    claim only when its references are in the scan's output;
+    *  - the planned files share one spec width: mid-migration (before
+    *    compaction re-buckets old files) two widths bucket the column
+    *    differently, and a wrong co-partitioning claim would silently
+    *    mis-join where a missing one merely costs a shuffle.
+    * Evaluated on first use, which is Catalyst's partitioning query, before
+    * any runtime filter: runtime filters only drop files, so a one-width
+    * set stays one-width.
+    */
+  private lazy val keyGrouped: Boolean =
+    viaCatalog && required.fieldNames.contains(table.spec.column) &&
+      plannedFiles.map(table.specFor(_).widthMicros).distinct.size <= 1
+
+  /** Storage-partitioned-join contract. When [[keyGrouped]], rows are
+    * clustered by truncate_<width>(partitionCol), one partition value per
+    * scan task: two laketable scans with the same width are then
+    * co-partitioned and a join on the partition column needs NO shuffle on
+    * either side — with `spark.sql.sources.v2.bucketing.pushPartValues.enabled`,
+    * bucket sets that don't line up zip with empty slots instead of falling
+    * back. Runtime file pruning composes: dropped buckets are a subset of
+    * the reported partition values, which BatchScanExec backfills as empty
+    * partitions. Otherwise the scan reports no partitioning, and its tasks
+    * are free to span buckets.
     */
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.expressions.Expressions
+    if (!keyGrouped)
+      return new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     val files = plannedFiles
-    // Partition evolution: the key-grouped claim holds only under ONE
-    // width. Mixed spec vintages in the planned set (mid-migration, before
-    // compaction re-buckets the old files) report no partitioning — a
-    // wrong co-partitioning claim would silently mis-join; a missing one
-    // merely costs a shuffle.
-    val widths = files.map(f => table.specFor(f).widthMicros).distinct
-    if (widths.size > 1)
-      return new org.apache.spark.sql.connector.read.partitioning
-        .UnknownPartitioning(files.map(_.partitionValue).distinct.size)
-    val key = Expressions.apply(
-      TruncateFunction.nameFor(widths.headOption.getOrElse(table.spec.widthMicros)),
+    val width = files.headOption.map(table.specFor(_).widthMicros)
+      .getOrElse(table.spec.widthMicros)
+    val key = Expressions.apply(TruncateFunction.nameFor(width),
       Expressions.column(table.spec.column))
     new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
       Array(key), files.map(_.partitionValue).distinct.size)
   }
+
+  // merge-on-read deletes the scan applies (none for the maintenance scan)
+  private lazy val dels: Seq[graft.lake.DeleteFileMeta] =
+    if (skipDeletes) Nil else snap.deletes
+
+  /** Each file's candidate delete files (position entries range-pruned by
+    * data path, equality entries sequence-pruned); readers apply them as
+    * skip masks / key sets.
+    */
+  private lazy val deletesFor: DataFileMeta => Seq[DeleteSliceRef] =
+    if (dels.isEmpty) _ => Nil
+    else {
+      // qualified through the table's fs: the metadata's scheme-less
+      // form would make the reader's FileSplit resolve the DEFAULT fs.
+      // Qualified ONCE per delete entry (a small Seq) — inside the
+      // per-file closure it would re-run Path/URI construction once
+      // per (data file × matched delete), 10⁶+ times at planning scale
+      val qualified = dels.iterator
+        .map(d => d.path -> table.qualifiedDeletePath(d.path)).toMap
+      f => table.deletesFor(dels, f)
+        .map(d => DeleteSliceRef(qualified(d.path), d.sizeBytes, d.eqColumns))
+    }
+
+  /** Whether any file the pushed filters keep has a candidate delete — a
+    * superset of the files planned after runtime filtering, so a `false`
+    * here proves that no planned slice carries a delete.
+    */
+  private lazy val hasDeletes: Boolean =
+    dels.nonEmpty && pushedFiles.exists(table.deletesFor(dels, _).nonEmpty)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val files = plannedFiles
@@ -660,33 +713,16 @@ final class LakeBatchScan(location: String, table: LakeTable,
     // row-level (CoW) operations record the planned group here — the set
     // their ReplaceData commit swaps out (post-runtime-filter truth)
     planListener.foreach(_(files))
-    // merge-on-read: attach each file's candidate delete files (position
-    // entries range-pruned by data path, equality entries sequence-pruned);
-    // readers apply them as skip masks / key sets
-    val dels = if (skipDeletes) Nil else snap.deletes
-    val deletesFor: DataFileMeta => Seq[DeleteSliceRef] =
-      if (dels.isEmpty) _ => Nil
-      else {
-        // qualified through the table's fs: the metadata's scheme-less
-        // form would make the reader's FileSplit resolve the DEFAULT fs.
-        // Qualified ONCE per delete entry (a small Seq) — inside the
-        // per-file closure it would re-run Path/URI construction once
-        // per (data file × matched delete), 10⁶+ times at planning scale
-        val qualified = dels.iterator
-          .map(d => d.path -> table.qualifiedDeletePath(d.path)).toMap
-        f => table.deletesFor(dels, f)
-          .map(d => DeleteSliceRef(qualified(d.path),
-            d.sizeBytes, d.eqColumns))
-      }
-    LakePartitionPacker.pack(files, deletesFor)
+    LakePartitionPacker.pack(files, keyed = keyGrouped, deletesFor)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new LakeReaderFactory(required.toDDL, pushed ++ runtime,
-      // Spark rejects mixed columnar/row partition sets, so ANY pending
-      // delete sends the whole scan down the row path; delete-free scans
-      // (the overwhelming majority) stay columnar
-      hasDeletes = !skipDeletes && snap.deletes.nonEmpty,
+      // Spark rejects mixed columnar/row partition sets, so a candidate
+      // delete on ANY file the filters keep sends the whole scan down the
+      // row path; scans whose files carry none (the overwhelming
+      // majority) stay columnar
+      hasDeletes = hasDeletes,
       // full table schema: equality-delete key columns may lie outside the
       // projection and need their types for the injected read
       tableSchemaDdl = asOf.map(table.schemaAt).getOrElse(table.schema).toDDL,
@@ -762,12 +798,13 @@ final case class LakeFileSlice(
     // (resolved through field ids) instead of the current ones
     schemaId: Int = 0)
 
-/** One scan task = one bin-packed run of file ranges (below), all from one
-  * partition bucket. `bucket` doubles as the task's partition key
-  * (HasPartitionKey): when `spark.sql.sources.v2.bucketing.enabled` is on,
-  * Spark groups tasks by key and key-grouped joins/aggregations skip their
-  * shuffle entirely (storage-partitioned join). With the conf off the key
-  * is inert and tasks behave exactly as before.
+/** One scan task = one bin-packed run of file ranges (below). A task of a
+  * key-grouped scan ([[LakeBatchScan.keyGrouped]]) holds one partition
+  * bucket, and `bucket` is the task's partition key (HasPartitionKey):
+  * with `spark.sql.sources.v2.bucketing.enabled` on, Spark groups tasks by
+  * key and key-grouped joins/aggregations skip their shuffle
+  * (storage-partitioned join). Any other task may span buckets; its
+  * `bucket` is 0 and Spark never reads it.
   */
 final case class LakeInputPartition(files: Seq[LakeFileSlice], bucket: Long = 0L)
   extends InputPartition with HasPartitionKey {
@@ -784,14 +821,20 @@ final case class LakeInputPartition(files: Seq[LakeFileSlice], bucket: Long = 0L
   * Tiny-file tables still get one file per task (openCost floor), so
   * manifest pruning remains observable as partition counts.
   *
-  * Packing never mixes partition buckets inside one task: each task's
-  * rows share one partition value, making the task key-addressable for
-  * storage-partitioned joins. Task SIZING stays global (maxSplit computed
-  * over the whole file set), so per-bucket packing costs at most one
-  * underfull task per bucket.
+  * One next-fit loop walks the slices bucket by bucket, largest first
+  * within a bucket. `keyed` closes the open task at every bucket boundary,
+  * so each task's rows share one partition value and the task is
+  * key-addressable for a storage-partitioned join; only a scan whose
+  * key-grouped claim Spark can use asks for it ([[LakeBatchScan.keyGrouped]]).
+  * Every other scan lets a task run on into the next bucket, so a
+  * many-bucket read of small files runs a handful of tasks instead of one
+  * per file. Task SIZING is global either way (maxSplit over the whole
+  * file set), and since next-fit starting from a partly filled task never
+  * opens more tasks than starting from an empty one, the unkeyed plan is
+  * never larger than the keyed one.
   */
 object LakePartitionPacker {
-  def pack(files: Seq[DataFileMeta],
+  def pack(files: Seq[DataFileMeta], keyed: Boolean,
       deletesFor: DataFileMeta => Seq[DeleteSliceRef] = _ => Nil)
       : Array[InputPartition] = {
     val spark = org.apache.spark.sql.SparkSession.active
@@ -803,8 +846,17 @@ object LakePartitionPacker {
     val maxSplit = math.min(conf.filesMaxPartitionBytes,
       math.max(openCost, totalBytes / parallelism))
     val parts = Array.newBuilder[InputPartition]
+    val cur = Seq.newBuilder[LakeFileSlice]
+    var curSize = 0L
+    var curEmpty = true
+    var curBucket = 0L
+    def close(): Unit = if (!curEmpty) {
+      parts += LakeInputPartition(cur.result(), curBucket)
+      cur.clear(); curSize = 0L; curEmpty = true
+    }
     files.groupBy(_.partitionValue).toSeq.sortBy(_._1).foreach {
       case (bucket, group) =>
+        if (keyed) { close(); curBucket = bucket }
         val slices = group.flatMap { f =>
           val dels = deletesFor(f)
           if (f.sizeBytes <= maxSplit || maxSplit <= 0)
@@ -815,21 +867,14 @@ object LakePartitionPacker {
               off, math.min(maxSplit, f.sizeBytes - off), dels, f.schemaId)
           }
         }
-        val cur = Seq.newBuilder[LakeFileSlice]
-        var curSize = 0L
-        var curEmpty = true
-        def close(): Unit = if (!curEmpty) {
-          parts += LakeInputPartition(cur.result(), bucket)
-          cur.clear(); curSize = 0L; curEmpty = true
-        }
         slices.sortBy(-_.length).foreach { s =>
           if (curSize + s.length > maxSplit) close()
           cur += s
           curSize += s.length + openCost
           curEmpty = false
         }
-        close()
     }
+    close()
     parts.result()
   }
 }
@@ -961,11 +1006,12 @@ final class LakeReaderFactory(schemaDdl: String,
       case _ => true
     })
 
-  /** Scans over a snapshot with pending merge-on-read deletes take the row
+  /** Scans whose files carry candidate merge-on-read deletes take the row
     * path (per-row skip against the delete mask, and Spark requires the
-    * partition set to be uniformly columnar or row); delete-free snapshots
-    * — the overwhelming majority of reads, since compaction materializes
-    * deletes away — keep the columnar fast path.
+    * partition set to be uniformly columnar or row); delete-free scans —
+    * the overwhelming majority of reads, since compaction materializes
+    * deletes away and filters prune the files deletes touch — keep the
+    * columnar fast path.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     vectorizable && !hasDeletes && posIdx < 0
@@ -1498,8 +1544,9 @@ final class LakeMicroBatchStream(location: String, schema: StructType,
         .getOrElse(t.currentSnapshotId)
     val s = clamp(start.asInstanceOf[SnapshotOffset].id)
     val e = clamp(end.asInstanceOf[SnapshotOffset].id)
+    // a stream reports no partitioning, so its tasks may span buckets
     if (s >= e) Array.empty
-    else LakePartitionPacker.pack(t.addedFilesBetween(s, e))
+    else LakePartitionPacker.pack(t.addedFilesBetween(s, e), keyed = false)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

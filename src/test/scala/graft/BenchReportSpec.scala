@@ -136,6 +136,19 @@ class BenchReportSpec extends AnyFunSuite {
       (Bench.headline ++ Bench.heavyTail).size - 3)
   }
 
+  test("phase drift counts the concurrent hybrid arms once, as their longest") {
+    // d02_hybrid_zipf's recorded min rep: the two arms overlap on the wall
+    val hybrid = Seq("lex_build_s" -> 2.06, "ann_build_s" -> 3.20,
+      "fused_serve_s" -> 1.79, "serve_files_planned" -> 40.0,
+      "phases_wall_s" -> 5.04)
+    assert(Bench.phaseDrift(hybrid).isEmpty)
+    // sequential phases that add up far past the rep's wall still warn
+    val drifted = Seq("build_s" -> 2.06, "train_s" -> 3.20,
+      "serve_s" -> 1.79, "phases_wall_s" -> 5.04)
+    val (sum, wall) = Bench.phaseDrift(drifted).get
+    assert(math.abs(sum - 7.05) < 1e-9 && wall == 5.04)
+  }
+
   test("the stdout line fits the driver's 2,000-char tail capture") {
     assert(line.length < 2000, s"line is ${line.length} chars")
   }

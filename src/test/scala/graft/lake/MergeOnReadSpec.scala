@@ -1,6 +1,9 @@
 package graft.lake
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read position deletes (SURVEY §2 extension; the Iceberg v2
@@ -8,7 +11,7 @@ import org.apache.spark.sql.functions._
   * parquets instead of rewriting data; readers apply them as skip masks;
   * compaction materializes them away.
   */
-class MergeOnReadSpec extends SparkSpec {
+class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Width = 300000000L // 5 minutes in µs
   private def bucket(i: Int): Long = (7000000L + i) * Width
@@ -69,6 +72,30 @@ class MergeOnReadSpec extends SparkSpec {
     val byBucket = df.groupBy("timeperiod_loadedBy").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byBucket == Map(bucket(0) -> 70L, bucket(1) -> 50L))
+  }
+
+  test("a scan whose files no MoR delete touches stays columnar") {
+    val t = newMoRTable()
+    appendBatch(t, 100, bucket(0), seed = 3)
+    appendBatch(t, 50, bucket(1), seed = 4)
+    t.deleteWhere(spark,
+      col("message_id") < 30 && col("timeperiod_loadedBy") === bucket(0))
+    def read(b: Int): DataFrame = spark.read.format("laketable").load(t.location)
+      .filter(col("timeperiod_loadedBy") === bucket(b)).select("message_id", "data")
+    def columnar(df: DataFrame): Boolean = {
+      val scans = collect(df.queryExecution.executedPlan) { case s: BatchScanExec => s }
+      assert(scans.size == 1)
+      scans.head.supportsColumnar
+    }
+    // bucket 1: the delete's data-path list names no file the filter keeps
+    val clean = read(1)
+    assert(columnar(clean))
+    assert(clean.collect().length == 50)
+    // bucket 0: its file carries the delete, so the scan takes the row
+    // path and still masks the deleted rows
+    val masked = read(0)
+    assert(!columnar(masked))
+    assert(masked.collect().map(_.getLong(0)).sorted.toSeq == (30L until 100L))
   }
 
   test("stacked MoR deletes union; re-deleting a deleted row is a no-op") {

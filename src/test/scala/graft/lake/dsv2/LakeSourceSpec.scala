@@ -14,10 +14,17 @@ class LakeSourceSpec extends SparkSpec {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (5666666L + i) * Width
 
-  private def newTable(): LakeTable = {
-    val loc = tmpDir("dsv2")
+  private def newTable(loc: String = tmpDir("dsv2")): LakeTable = {
     LakeTable.drop(loc)
     LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+  }
+
+  /** A catalog whose tables live under one warehouse directory. */
+  private lazy val warehouse: String = {
+    val w = tmpDir("dsv2-warehouse")
+    spark.conf.set("spark.sql.catalog.srccat", classOf[LakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.srccat.warehouse", w)
+    w
   }
 
   private def appendBatch(t: LakeTable, rows: Long, micros: Long, seed: Long): Long =
@@ -98,9 +105,8 @@ class LakeSourceSpec extends SparkSpec {
 
   test("scan tasks bin-pack multiple files; chained reader preserves every row") {
     val t = newTable()
-    // five files in ONE bucket: packing is per-bucket (tasks stay
-    // key-addressable for storage-partitioned joins), so only same-bucket
-    // files may share a task
+    // five files in ONE bucket, so they share a task whether or not the
+    // scan packs per bucket
     for (i <- 0 until 5) appendBatch(t, 40, bucket(0), 10 + i)
     assert(t.files().size == 5)
     // openCost=0 + minPartitionNum=1 force all five files into ONE task —
@@ -119,13 +125,21 @@ class LakeSourceSpec extends SparkSpec {
       // that sums across all chained files)
       assert(df.agg(sum(length(col("data")))).head.getLong(0) == 200 * 32)
 
-      // cross-bucket isolation: files in distinct buckets never co-pack,
-      // even with zero open cost
-      val t2 = newTable()
+      // cross-bucket isolation: a catalog read that projects the
+      // partition column reports a key-grouped partitioning (the claim a
+      // storage-partitioned join uses), so files in distinct buckets never
+      // co-pack, even with zero open cost
+      val t2 = newTable(s"$warehouse/ns/binpack")
       for (i <- 0 until 3) appendBatch(t2, 10, bucket(i), 20 + i)
-      val df2 = spark.read.format("laketable").load(t2.location)
+      val df2 = spark.table("srccat.ns.binpack")
       assert(df2.rdd.getNumPartitions == 3)
       assert(df2.count() == 30)
+      // a path read of the same table cannot use that claim: its three
+      // buckets pack into one task, with the same rows
+      val byPath = spark.read.format("laketable").load(t2.location)
+      assert(byPath.rdd.getNumPartitions == 1)
+      assert(byPath.orderBy("message_id", "timeperiod_loadedBy").collect().toSeq ==
+        df2.orderBy("message_id", "timeperiod_loadedBy").collect().toSeq)
     } finally {
       spark.conf.unset("spark.sql.files.openCostInBytes")
       spark.conf.unset("spark.sql.files.minPartitionNum")
@@ -370,6 +384,33 @@ class LakeSourceSpec extends SparkSpec {
     appendBatch(t, 5, bucket(2), 3)
     runAvailable()
     assert(spark.table(name).head.getLong(0) == 35)
+  }
+
+  test("a catch-up trigger packs many single-bucket commits into fewer tasks") {
+    val t = newTable()
+    val start = t.currentSnapshotId
+    val n = 8
+    for (i <- 0 until n) appendBatch(t, 10 + i, bucket(i), 40 + i)
+    // a stream reports no partitioning, so one trigger's tasks span buckets
+    val stream = new LakeMicroBatchStream(t.location, t.schema, start)
+    val tasks = stream.planInputPartitions(SnapshotOffset(start),
+      SnapshotOffset(t.currentSnapshotId))
+    assert(tasks.length < n, s"${tasks.length} tasks for $n buckets")
+    val name = "lakecatchup" + System.nanoTime()
+    val q = spark.readStream.format("laketable")
+      .option("startSnapshotId", start.toString)
+      .load(t.location)
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", tmpDir("dsv2-catchup") + "/c")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1) // one trigger
+    // every appended row exactly once: (bucket, id) pairs are unique
+    val got = spark.table(name).select("timeperiod_loadedBy", "message_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val want = (0 until n).flatMap(i => (0L until 10L + i).map(bucket(i) -> _))
+    assert(got.sorted == want.sorted)
   }
 
   test("incremental read skips rewrite snapshots (no re-delivery after compaction)") {

@@ -31,29 +31,49 @@ class PackerPropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  private def tasks(files: Seq[DataFileMeta], keyed: Boolean): Seq[LakeInputPartition] =
+    LakePartitionPacker.pack(files, keyed).map(_.asInstanceOf[LakeInputPartition]).toSeq
+
+  /** Every byte of every file covered once, every rowCount attributed once. */
+  private def covers(files: Seq[DataFileMeta], parts: Seq[LakeInputPartition]): Boolean = {
+    val slices = parts.flatMap(_.files)
+    val byPath = slices.groupBy(_.path)
+    val coverOk = files.forall { f =>
+      byPath.get(f.path).exists { ss =>
+        val sorted = ss.sortBy(_.start)
+        sorted.head.start == 0L &&
+          sorted.last.start + sorted.last.length == f.sizeBytes &&
+          sorted.sliding(2).forall {
+            case Seq(a, b) => a.start + a.length == b.start
+            case _ => true
+          }
+      }
+    }
+    val rowsOk =
+      slices.map(_.rowCount).sum == files.map(_.rowCount).sum &&
+        files.forall(f => byPath(f.path).count(_.rowCount > 0) <= 1 ||
+          f.rowCount == 0)
+    coverOk && rowsOk && files.map(_.path).toSet.size == byPath.size
+  }
+
   test("pack covers every file byte exactly once and every rowCount exactly once") {
     spark // force session
     check(forAll(Gen.listOfN(12, fileGen)) { files =>
-      val parts = LakePartitionPacker.pack(files)
-        .map(_.asInstanceOf[LakeInputPartition]).toSeq
-      val slices = parts.flatMap(_.files)
-      val byPath = slices.groupBy(_.path)
-      val coverOk = files.forall { f =>
-        byPath.get(f.path).exists { ss =>
-          val sorted = ss.sortBy(_.start)
-          sorted.head.start == 0L &&
-            sorted.last.start + sorted.last.length == f.sizeBytes &&
-            sorted.sliding(2).forall {
-              case Seq(a, b) => a.start + a.length == b.start
-              case _ => true
-            }
-        }
-      }
-      val rowsOk =
-        slices.map(_.rowCount).sum == files.map(_.rowCount).sum &&
-          files.forall(f => byPath(f.path).count(_.rowCount > 0) <= 1 ||
-            f.rowCount == 0)
-      coverOk && rowsOk && files.map(_.path).toSet.size == byPath.size
+      covers(files, tasks(files, keyed = true)) &&
+        covers(files, tasks(files, keyed = false))
     })
+  }
+
+  test("keyed tasks never mix buckets; unkeyed packing plans no more tasks") {
+    spark
+    // a small open cost lets small files of different buckets share a task
+    spark.conf.set("spark.sql.files.openCostInBytes", "1048576")
+    try check(forAll(Gen.listOfN(12, fileGen)) { files =>
+      val keyed = tasks(files, keyed = true)
+      val bucketOf = files.map(f => f.path -> f.partitionValue).toMap
+      keyed.forall(p => p.files.forall(s => bucketOf(s.path) == p.bucket)) &&
+        tasks(files, keyed = false).size <= keyed.size
+    })
+    finally spark.conf.unset("spark.sql.files.openCostInBytes")
   }
 }

@@ -593,16 +593,11 @@ object Bench {
           // accept the partition-key prefix as co-partitioning (SpjSpec)
           "spark.sql.requireAllClusterKeysForCoPartition" -> (!spj).toString,
           "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        val prev = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
-        confs.foreach { case (key, v) => spark.conf.set(key, v) }
-        try {
+        SessionConf.withConf(spark, confs: _*) {
           val t0 = System.nanoTime()
           val row = spark.sql(q).head()
           assert(row.getLong(0) == 1000000L, s"spj join saw ${row.getLong(0)}")
           (System.nanoTime() - t0) / 1e9
-        } finally prev.foreach {
-          case (key, Some(v)) => spark.conf.set(key, v)
-          case (key, None) => spark.conf.unset(key)
         }
       }
       once(true); once(false) // warmup both shapes

@@ -46,7 +46,6 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       org.apache.spark.sql.types.StructType]()
-  private val inferenceLock = new Object
 
   /** Optional access recorder: when set, every t() call reports its table
     * name. Bench's deep-scale tier uses one dry plan-construction pass to
@@ -68,28 +67,15 @@ object Tables {
     // parquet behavior is left exactly as we found it — a library loader
     // must not silently flip how unrelated parquet reads infer types.
     val path = s"$dir/$name.parquet"
-    // inferenceLock serializes the whole capture-set-infer-restore window:
-    // two interleaved windows would capture each other's TRANSIENT conf as
-    // "previous" and restore it permanently — exactly the session-global
-    // leak this path exists to prevent. (Concurrent unrelated parquet
-    // reads during a window still see the flipped inference; the window is
-    // one footer read per (dir, table) per JVM, so exposure is bounded and
-    // first-use, not per-query.)
+    // Concurrent unrelated parquet reads during the window still see the
+    // flipped inference; the window is one footer read per (dir, table)
+    // per JVM, so exposure is bounded and first-use, not per-query.
     val schema = schemaCache.computeIfAbsent((dir, name), { _ =>
-      inferenceLock.synchronized {
-        val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-        val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-        val prevNtz = spark.conf.getOption(ntzKey)
-        val prevNanos = spark.conf.getOption(nanosKey)
-        try {
-          spark.conf.set(ntzKey, "false")
-          if (name == "events") spark.conf.set(nanosKey, "true")
-          spark.read.parquet(path).schema
-        } finally {
-          prevNtz.fold(spark.conf.unset(ntzKey))(spark.conf.set(ntzKey, _))
-          prevNanos.fold(spark.conf.unset(nanosKey))(spark.conf.set(nanosKey, _))
-        }
-      }
+      val nanos =
+        if (name == "events") Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+        else Nil
+      SessionConf.withConf(spark, ("spark.sql.parquet.inferTimestampNTZ.enabled"
+        -> "false") +: nanos: _*)(spark.read.parquet(path).schema)
     })
     val raw = spark.read.schema(schema).parquet(path)
     if (name == "events" &&

@@ -50,6 +50,20 @@ object Trace {
     } finally current.set(outer)
   }
 
+  /** Whether a capture is open on this thread. */
+  private[graft] def active: Boolean = current.get != null
+
+  /** Append what another thread's capture recorded to this thread's open
+    * capture, if any (an overlapped branch's record, at its join). */
+  private[graft] def append(rec: TraceRecord): Unit = {
+    val r = current.get
+    if (r != null) {
+      r.spans ++= rec.spans
+      r.counts ++= rec.counts
+      r.notes ++= rec.notes
+    }
+  }
+
   def span(name: String, seconds: => Double): Unit = {
     val r = current.get
     if (r != null) r.spans += name -> seconds

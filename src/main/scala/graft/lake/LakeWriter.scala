@@ -27,43 +27,6 @@ final case class LakeEvent(
   */
 object LakeWriter {
 
-  /** Reentrant, per-session scope for the INT64-µs parquet timestamp conf:
-    * the OUTERMOST enter captures the user's value, every nested/concurrent
-    * enter just counts, and the LAST exit restores — so concurrent
-    * writeDataFiles calls (independent index/data builds overlapped per
-    * guide §2.6) can never capture each other's MICROS as the value to
-    * restore. The lock guards only the conf get/set, never a write.
-    */
-  private object TsScope {
-    private val Key = "spark.sql.parquet.outputTimestampType"
-    private final class State { var depth = 0; var prev: Option[String] = None }
-    private val bySession =
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, State]()
-    def enter(spark: SparkSession): Unit = {
-      val st = bySession.computeIfAbsent(spark, _ => new State)
-      st.synchronized {
-        if (st.depth == 0) {
-          st.prev = spark.conf.getOption(Key)
-          spark.conf.set(Key, "TIMESTAMP_MICROS")
-        }
-        st.depth += 1
-      }
-    }
-    def exit(spark: SparkSession): Unit = {
-      val st = bySession.get(spark)
-      if (st != null) st.synchronized {
-        st.depth -= 1
-        if (st.depth == 0) {
-          st.prev match {
-            case Some(v) => spark.conf.set(Key, v)
-            case None => spark.conf.unset(Key)
-          }
-          bySession.remove(spark)
-        }
-      }
-    }
-  }
-
   /** The reference's single table schema (Constants.java:26-31). */
   val EventSchemaDdl: String =
     "message_id BIGINT NOT NULL, data STRING, timestamp TIMESTAMP, " +
@@ -145,15 +108,6 @@ object LakeWriter {
     val fs = loc.getFileSystem(conf)
     val tmpDir = new Path(loc, s"_tmp-write-${UUID.randomUUID()}")
 
-    // INT64 µs timestamps (not Spark's INT96 default): footer stats stay
-    // long-typed and the DSv2 Group reader consumes them directly. Scoped:
-    // restored after the (eager) write so user writes in the same session
-    // keep their configured format. The scope is REENTRANT per session
-    // (TsScope): independent builds may now run writeDataFiles from
-    // concurrent driver threads (guide §2.6 — overlap independent jobs),
-    // and a naive set/restore pair racing another write could capture the
-    // other write's MICROS as "previous" and leak it past both scopes.
-    TsScope.enter(spark)
     val withPart = df.withColumn("__part",
       col(spec.column) - pmod(col(spec.column), lit(spec.widthMicros)))
     val repartitioned =
@@ -198,8 +152,14 @@ object LakeWriter {
     val bloomed = graft.lake.dsv2.LakeDataWriter.bloomColumnsFor(table)
       .foldLeft(sized)((w, c) =>
         w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    try bloomed.parquet(tmpDir.toString)
-    finally TsScope.exit(spark)
+    // INT64 µs timestamps (not Spark's INT96 default): footer stats stay
+    // long-typed and the DSv2 Group reader consumes them directly. Scoped
+    // to the (eager) write so user writes in the same session keep their
+    // configured format; concurrent writes on other driver threads share
+    // the scope (SessionConf.withConf).
+    graft.SessionConf.withConf(spark,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
+      bloomed.parquet(tmpDir.toString))
 
     // per-file move + footer harvest through a fixed I/O pool — the
     // reference hides per-file storage latency behind 8-thread pools

@@ -24,9 +24,6 @@ object LakeQueries {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (5666666L + i) * Width
 
-  private def scratch(prefix: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-$prefix-${UUID.randomUUID()}"
-
   /** Materialize a SMALL result (these are all few-row aggregates) to the
     * driver and re-wrap it as a local DataFrame. The scratch inputs these
     * queries derive from are dropped before returning, and the former
@@ -37,27 +34,11 @@ object LakeQueries {
     out.sparkSession.createDataFrame(
       java.util.Arrays.asList(out.collect(): _*), out.schema)
 
-  /** Stage a batch's data FILES on a driver future while the caller
-    * commits earlier snapshots (guide §2.6). File writes are independent
-    * of table state — rows land in the data layout but are invisible
-    * until the returned metas commit via `append`, and these scratch
-    * tables never change schema/spec between the write and its commit —
-    * so `t.append(awaitFiles(f))` preserves the exact snapshot order
-    * while the parquet encode of batch N+1 overlaps the commit + reads
-    * of batch N.
-    */
-  private def stageFiles(df: DataFrame, table: LakeTable)
-      : scala.concurrent.Future[Seq[DataFileMeta]] =
-    scala.concurrent.Future(LakeWriter.writeDataFiles(df, table))(
-      scala.concurrent.ExecutionContext.global)
-  private def awaitFiles(f: scala.concurrent.Future[Seq[DataFileMeta]])
-      : Seq[DataFileMeta] =
-    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-
   /** Deterministic 3-snapshot scratch table shared by B2/B3. */
-  private def stagedTable(spark: SparkSession): (LakeTable, Seq[Long]) = {
-    val loc = scratch("laketable")
-    val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+  private def stagedTable(spark: SparkSession,
+      sc: Scratch.Scope): (LakeTable, Seq[Long]) = {
+    val table = sc.table("laketable", LakeWriter.EventSchemaDdl,
+      LakeWriter.EventSpec)
     val snaps = Seq(100L, 50L, 25L).zipWithIndex.map { case (rows, i) =>
       table.append(LakeWriter.writeDataFiles(
         LakeWriter.generateBatch(spark, rows, bucket(i), seed = i + 1), table))
@@ -70,27 +51,25 @@ object LakeQueries {
   // the appends are 1, 2, 3) and the batch sizes are declared in
   // [[stagedTable]] (100, +50, +25) — the oracle reconstructs
   // (id, cumulative count) as constants.
-  def b02_snapshot_scan(s: SparkSession, dir: String): DataFrame = {
-    val (table, snaps) = stagedTable(s)
+  def b02_snapshot_scan(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val (table, snaps) = stagedTable(s, sc)
     import s.implicits._
     val rows = snaps.map(id => (id, table.snapshotDF(s, id).count()))
-    val out = localize(rows.toDF("snapshot_id", "cnt").orderBy("snapshot_id"))
-    LakeTable.drop(table.location)
-    out
+    localize(rows.toDF("snapshot_id", "cnt").orderBy("snapshot_id"))
   }
 
   // B3 — incremental scan: added rows between consecutive snapshots.
   // Hash-oracled like B2: the (from, to] diff counts are the declared
   // second and third batch sizes.
-  def b03_incremental_scan(s: SparkSession, dir: String): DataFrame = {
-    val (table, snaps) = stagedTable(s)
+  def b03_incremental_scan(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val (table, snaps) = stagedTable(s, sc)
     import s.implicits._
     val pairs = snaps.sliding(2).toSeq.map {
       case Seq(a, b) => (a, b, table.changesBetween(s, a, b).count())
     }
-    val out = localize(pairs.toDF("from_id", "to_id", "added").orderBy("from_id"))
-    LakeTable.drop(table.location)
-    out
+    localize(pairs.toDF("from_id", "to_id", "added").orderBy("from_id"))
   }
 
   // B3b — the SAME incremental contract through the DSv2 OPTIONS surface
@@ -98,8 +77,9 @@ object LakeQueries {
   // "endSnapshotId")): a SQL/DataFrame-only consumer gets batch CDC reads
   // with no Scala API — previously the batch path silently ignored the
   // option. Counts must equal b03's changesBetween walk exactly.
-  def b03b_incremental_options(s: SparkSession, dir: String): DataFrame = {
-    val (table, snaps) = stagedTable(s)
+  def b03b_incremental_options(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val (table, snaps) = stagedTable(s, sc)
     import s.implicits._
     val pairs = snaps.sliding(2).toSeq.map {
       case Seq(a, b) => (a, b,
@@ -108,22 +88,18 @@ object LakeQueries {
           .option("endSnapshotId", b.toString)
           .load(table.location).count())
     }
-    val out = localize(pairs.toDF("from_id", "to_id", "added").orderBy("from_id"))
-    LakeTable.drop(table.location)
-    out
+    localize(pairs.toDF("from_id", "to_id", "added").orderBy("from_id"))
   }
 
   // B4 — parquet sink round-trip: write lineitem, re-read, aggregate.
-  def b04_parquet_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratch("pq")
+  def b04_parquet_roundtrip(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tmp = sc.dir("pq")
     t(s, dir, "lineitem").write.mode("overwrite").parquet(tmp)
-    val out = s.read.parquet(tmp).agg(
+    localize(s.read.parquet(tmp).agg(
       count(lit(1)).as("cnt"),
       min("l_orderkey").as("min_ok"),
-      max("l_orderkey").as("max_ok"))
-    val local = localize(out)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp))
-    local
+      max("l_orderkey").as("max_ok")))
   }
 
   // B4b — DSv2 sink round-trip: deterministic generated events through
@@ -133,21 +109,19 @@ object LakeQueries {
   // md5 bodies of exactly 50 × 32 = 1600 bytes), so the per-bucket rollup
   // reconstructs from range() arithmetic. LakeSinkSpec asserts the
   // commit/layout/fencing semantics.
-  def b04b_lake_sink(s: SparkSession, dir: String): DataFrame = {
-    val loc = scratch("laketable-sink")
-    LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+  def b04b_lake_sink(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val loc = sc.table("laketable-sink", LakeWriter.EventSchemaDdl,
+      LakeWriter.EventSpec).location
     LakeWriter.generateBatch(s, 100, bucket(0), seed = 11)
       .union(LakeWriter.generateBatch(s, 50, bucket(1), seed = 12))
       .write.format("laketable").mode("append").save(loc)
-    val out = s.read.format("laketable").load(loc)
+    localize(s.read.format("laketable").load(loc)
       .groupBy(col("timeperiod_loadedBy").as("bucket"))
       .agg(count(lit(1)).as("cnt"),
         sum("message_id").as("sum_id"),
         sum(length(col("message_body"))).as("body_bytes"))
-      .orderBy("bucket")
-    val local = localize(out)
-    LakeTable.drop(loc)
-    local
+      .orderBy("bucket"))
   }
 
   // B5b — ORC sink/scan round-trip: the remaining columnar format Spark
@@ -160,42 +134,39 @@ object LakeQueries {
   // any column class (int key, char flag, decimal measures) diverges the
   // hash. DuckDB cannot read ORC; the roundtrip is identity, so the
   // oracle replays the same aggregate over the original parquet table.
-  def b05b_orc_roundtrip(s: SparkSession, dir: String): DataFrame = {
+  def b05b_orc_roundtrip(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     import graft.Tables.dec4
-    val tmp = scratch("orc")
+    val tmp = sc.dir("orc")
     t(s, dir, "lineitem").write.mode("overwrite").orc(tmp)
-    val out = s.read.orc(tmp)
+    localize(s.read.orc(tmp)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("cnt"),
         min("l_orderkey").as("min_ok"),
         max("l_orderkey").as("max_ok"),
         dec4(sum(col("l_quantity"))).as("sum_qty"),
         dec4(sum(col("l_extendedprice"))).as("sum_price"))
-      .orderBy("l_returnflag")
-    val local = localize(out)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp))
-    local
+      .orderBy("l_returnflag"))
   }
 
   // B5 — avro sink/scan round-trip (A8): events subset through Avro
   // container files and back.
-  def b05_avro_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratch("avro")
+  def b05_avro_roundtrip(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tmp = sc.dir("avro")
     val src = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     AvroIO.write(src, tmp)
-    val out = AvroIO.read(s, tmp, src.schema).agg(
+    localize(AvroIO.read(s, tmp, src.schema).agg(
       count(lit(1)).as("cnt"),
       sum("user_id").as("sum_uid"),
-      countDistinct("event_type").as("n_types"))
-    val local = localize(out)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp))
-    local
+      countDistinct("event_type").as("n_types")))
   }
 
   // B6 — JSON + CSV scan round-trip.
-  def b06_json_csv(s: SparkSession, dir: String): DataFrame = {
-    val tmpJ = scratch("json"); val tmpC = scratch("csv")
+  def b06_json_csv(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tmpJ = sc.dir("json"); val tmpC = sc.dir("csv")
     val src = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"))
     src.write.mode("overwrite").json(tmpJ)
@@ -204,10 +175,7 @@ object LakeQueries {
       .agg(count(lit(1)).as("json_cnt"), sum("user_id").as("json_sum"))
     val c = s.read.schema(src.schema).option("header", "true").csv(tmpC)
       .agg(count(lit(1)).as("csv_cnt"), sum("user_id").as("csv_sum"))
-    val out = localize(j.crossJoin(c))
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmpJ))
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmpC))
-    out
+    localize(j.crossJoin(c))
   }
 
   /** Session-stable V2 catalog for the SQL-DML entries (MERGE/UPDATE need
@@ -219,7 +187,7 @@ object LakeQueries {
     if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.lake.dsv2.LakeCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", scratch("dml-wh"))
+      s.conf.set(s"spark.sql.catalog.$cat.warehouse", Scratch.location("dml-wh"))
     }
     cat
   }
@@ -346,16 +314,11 @@ object LakeQueries {
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
       "FROM graft_orders_dyn_src WHERE o_orderkey < 1200")
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try s.sql(s"INSERT OVERWRITE $tbl " +
-      "SELECT o_orderkey, o_totalprice * 2, o_orderstatus " +
-      "FROM graft_orders_dyn_src WHERE o_orderkey >= 400 AND o_orderkey < 800")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    graft.SessionConf.withConf(s,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+      s.sql(s"INSERT OVERWRITE $tbl " +
+        "SELECT o_orderkey, o_totalprice * 2, o_orderstatus " +
+        "FROM graft_orders_dyn_src WHERE o_orderkey >= 400 AND o_orderkey < 800"))
     val out = localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
     s.sql(s"DROP TABLE $tbl")
@@ -407,22 +370,14 @@ object LakeQueries {
       s.sql(s"INSERT INTO $tbl SELECT event_id, user_id, value " +
         s"FROM graft_events_src WHERE event_id % 2 = $parity")
     }
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    val out =
-      try localize(s.sql(
-        s"""SELECT a.user_id AS user_id, count(*) AS pairs,
-           |  sum(a.event_id + b.event_id) AS id_sum
-           |FROM $ta a JOIN $tb b ON a.user_id = b.user_id
-           |GROUP BY a.user_id ORDER BY user_id""".stripMargin))
-      finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+    val out = graft.SessionConf.withConf(s,
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(localize(s.sql(
+      s"""SELECT a.user_id AS user_id, count(*) AS pairs,
+         |  sum(a.event_id + b.event_id) AS id_sum
+         |FROM $ta a JOIN $tb b ON a.user_id = b.user_id
+         |GROUP BY a.user_id ORDER BY user_id""".stripMargin)))
     s.sql(s"DROP TABLE $ta")
     s.sql(s"DROP TABLE $tb")
     out
@@ -521,10 +476,10 @@ object LakeQueries {
   // BranchSpec), audit it via the branch read, publish atomically. The
   // emitted rows interleave the phase counts with the final content, all
   // pure-SQL reconstructable over `orders` → hash-oracled.
-  def b41_wap(s: SparkSession, dir: String): DataFrame = {
+  def b41_wap(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     import s.implicits._
-    val loc = scratch("wap")
-    val table = LakeTable.create(loc,
+    val table = sc.table("wap",
       "o_orderkey BIGINT,o_totalprice DOUBLE,o_orderstatus STRING",
       TruncateSpec("o_orderkey", 400L))
     val orders = t(s, dir, "orders")
@@ -542,9 +497,7 @@ object LakeQueries {
       ("main_during_audit", mainDuringAudit),
       ("audit_sees", auditSees),
       ("after_publish", afterPublish)).toDF("phase", "cnt")
-    val out = localize(counts.orderBy("phase"))
-    LakeTable.drop(loc)
-    out
+    localize(counts.orderBy("phase"))
   }
 
   // B42 — rename/drop schema evolution (field-id resolution, metadata-only
@@ -707,10 +660,10 @@ object LakeQueries {
   // table; false positives die in the exact anti-join. The content
   // round-trips the laketable unchanged, so the final survivor set is
   // pure-SQL reconstructable → hash-oracled.
-  def d01_dedup_incremental(s: SparkSession, dir: String): DataFrame = {
-    val loc = scratch("incdedup")
+  def d01_dedup_incremental(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val table = LakeTable.create(loc, "doc_id BIGINT,text STRING",
+    val table = sc.table("incdedup", "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
     // the corpus carries no natural exact dups, so the increment plants
     // both kinds deterministically (same derivation in the oracle):
@@ -724,9 +677,13 @@ object LakeQueries {
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
       .union(odds.filter(col("doc_id") < 41)
         .select((col("doc_id") + 20000).as("doc_id"), col("text")))
-    val incF = stageFiles(increment, table)
+    // the increment's data FILES stage on a branch while the corpus
+    // commits: written files stay invisible until their append, and the
+    // table never changes schema/spec in between, so
+    // `append(incF.join())` keeps the exact snapshot order
+    val incF = sc.overlap(LakeWriter.writeDataFiles(increment, table))
     val s1 = table.append(LakeWriter.writeDataFiles(evens, table))
-    val s2 = table.append(awaitFiles(incF))
+    val s2 = table.append(incF.join())
     val h = sha2(col("text").cast("binary"), 256)
     val w = Window.partitionBy("h").orderBy("doc_id")
     val inc = table.changesBetween(s, s1, s2)
@@ -738,11 +695,9 @@ object LakeQueries {
     // Spark jobs — without it the count() action executes the whole
     // within-batch dedup pipeline (window included) a second time
     val incRows = table.addedFilesBetween(s1, s2).map(_.rowCount).sum
-    val out = localize(
+    localize(
       incrementalDedup(s, inc, table.snapshotDF(s, s1).select(h.as("h")),
         expectedItems = Some(incRows)))
-    LakeTable.drop(loc)
-    out
   }
 
   /** The dedup dataflow of [[d01_dedup_incremental]], factored for plan
@@ -810,40 +765,39 @@ object LakeQueries {
   // because the scratch table lives only for the query. Exact-twin
   // arithmetic end to end → hash-oracled (shares the assignment CTE
   // block with d01_semdedup_exact).
-  def d01_semdedup_incremental(s: SparkSession, dir: String): DataFrame = {
+  def d01_semdedup_incremental(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     graft.functions.CosineSimilarity.register(s)
     val P = graft.queries.PipelineQueries
-    val loc = scratch("incsem")
     val q = t(s, dir, "embeddings").select(col("vec_id"), expr(
       s"""transform(embedding, x ->
          |  CAST(round(CAST(x AS DOUBLE) * ${P.SemDeDupExactScale}D) AS FLOAT))"""
         .stripMargin).as("embedding"))
-    val table = LakeTable.create(loc, "vec_id BIGINT,embedding ARRAY<FLOAT>",
+    val table = sc.table("incsem", "vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("vec_id", 100L))
-    try {
-      val incF = stageFiles(q.filter(col("vec_id") >= 400), table)
-      val s1 = table.append(LakeWriter.writeDataFiles(
-        q.filter(col("vec_id") < 400), table))
-      val s2 = table.append(awaitFiles(incF))
-      val committed = table.snapshotDF(s, s1)
-      // fixed centroids = the committed corpus's first K quantized
-      // vectors (vec_ids 0..K-1 — the same centroid set the full-corpus
-      // twin derives, so the oracle shares its assignment block verbatim)
-      val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-      val aCom = P.assignCellsHier(committed, cents)
-        .select(col("cell"), col("vec_id").as("c_id"),
-          col("embedding").as("ce"))
-      val aInc = P.assignCellsHier(table.changesBetween(s, s1, s2), cents)
-      val dups = aInc.join(aCom, "cell")
-        .filter(expr("cosine_sim(embedding, ce)") > 0.43)
-        .select("vec_id").distinct()
-      localize(aInc
-        .join(dups.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cell"),
-          coalesce(col("is_dup"), lit(false)).as("is_dup"))
-        .orderBy("vec_id"))
-    } finally LakeTable.drop(loc)
+    val incF = sc.overlap(LakeWriter.writeDataFiles(
+      q.filter(col("vec_id") >= 400), table))
+    val s1 = table.append(LakeWriter.writeDataFiles(
+      q.filter(col("vec_id") < 400), table))
+    val s2 = table.append(incF.join())
+    val committed = table.snapshotDF(s, s1)
+    // fixed centroids = the committed corpus's first K quantized
+    // vectors (vec_ids 0..K-1 — the same centroid set the full-corpus
+    // twin derives, so the oracle shares its assignment block verbatim)
+    val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val aCom = P.assignCellsHier(committed, cents)
+      .select(col("cell"), col("vec_id").as("c_id"),
+        col("embedding").as("ce"))
+    val aInc = P.assignCellsHier(table.changesBetween(s, s1, s2), cents)
+    val dups = aInc.join(aCom, "cell")
+      .filter(expr("cosine_sim(embedding, ce)") > 0.43)
+      .select("vec_id").distinct()
+    localize(aInc
+      .join(dups.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cell"),
+        coalesce(col("is_dup"), lit(false)).as("is_dup"))
+      .orderBy("vec_id"))
   }
 
   // D1i — INCREMENTAL MinHash near-dup: the FUZZY gate for a newly-
@@ -868,9 +822,9 @@ object LakeQueries {
   // re-keys share all 4 bands; near-dup re-keys with 3 appended tokens
   // share the surviving bands) are derived identically in the oracle →
   // hash-oracled end to end.
-  def d01_minhash_incremental(s: SparkSession, dir: String): DataFrame = {
+  def d01_minhash_incremental(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val loc = scratch("incmh")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
     val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
@@ -880,30 +834,28 @@ object LakeQueries {
       .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 80)
         .select((col("doc_id") + 2000000).as("doc_id"),
           concat(col("text"), lit(" zq zr zs")).as("text")))
-    val table = LakeTable.create(loc, "doc_id BIGINT,text STRING",
+    val table = sc.table("incmh", "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
-    try {
-      val incF = stageFiles(increment, table)
-      val s1 = table.append(LakeWriter.writeDataFiles(evens, table))
-      val s2 = table.append(awaitFiles(incF))
-      // committed signature space: band-bucket KEYS only (DISTINCT), so
-      // the semi-join's per-key width is 1 regardless of how many
-      // committed docs share a band bucket
-      val comBands = P.explodeBands(P.md5MinhashSigs(table.snapshotDF(s, s1)))
-        .select("band", "h0", "h1").distinct()
-      val inc = table.changesBetween(s, s1, s2)
-      val incBands = P.explodeBands(P.md5MinhashSigs(inc))
-      val dups = incBands.join(comBands, Seq("band", "h0", "h1"), "left_semi")
-        .select("doc_id").distinct()
-      val out = inc.select("doc_id")
-        .join(dups.withColumn("is_fuzzy_dup", lit(true)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
-        .orderBy("doc_id")
-      // the spec pins the semi-join/distinct-keys shape, never a pairing join
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      localize(out)
-    } finally LakeTable.drop(loc)
+    val incF = sc.overlap(LakeWriter.writeDataFiles(increment, table))
+    val s1 = table.append(LakeWriter.writeDataFiles(evens, table))
+    val s2 = table.append(incF.join())
+    // committed signature space: band-bucket KEYS only (DISTINCT), so
+    // the semi-join's per-key width is 1 regardless of how many
+    // committed docs share a band bucket
+    val comBands = P.explodeBands(P.md5MinhashSigs(table.snapshotDF(s, s1)))
+      .select("band", "h0", "h1").distinct()
+    val inc = table.changesBetween(s, s1, s2)
+    val incBands = P.explodeBands(P.md5MinhashSigs(inc))
+    val dups = incBands.join(comBands, Seq("band", "h0", "h1"), "left_semi")
+      .select("doc_id").distinct()
+    val out = inc.select("doc_id")
+      .join(dups.withColumn("is_fuzzy_dup", lit(true)), Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
+      .orderBy("doc_id")
+    // the spec pins the semi-join/distinct-keys shape, never a pairing join
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    localize(out)
   }
 
   /** The incremental packer's table property: the committed stream's
@@ -926,43 +878,42 @@ object LakeQueries {
   // increment by doc_id) — the packed positions of committed docs are
   // immutable, exactly what a training loader requires of shard indexes
   // it has already consumed.
-  def d04_seqpack_incremental(s: SparkSession, dir: String): DataFrame = {
+  def d04_seqpack_incremental(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val loc = scratch("seqpackinc")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
     val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val table = LakeTable.create(loc, "doc_id BIGINT,text STRING",
+    val table = sc.table("seqpackinc", "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
-    try {
-      val oddsF = stageFiles(odds, table)
-      val s1 = table.append(LakeWriter.writeDataFiles(evens, table))
-      // pack state at corpus commit: one aggregate, one property commit
-      val total = table.snapshotDF(s, s1)
-        .agg(sum(size(split(col("text"), " ")).cast("long"))).head().getLong(0)
-      table.setProperty(SeqPackTotalProp, total.toString)
-      val s2 = table.append(awaitFiles(oddsF))
-      // arrival pack: base from a FRESH load's properties (self-contained
-      // — nothing the packer uses exists outside the table), rows from
-      // the incremental scan only
-      val base = LakeTable.load(loc).tableMeta
-        .properties(SeqPackTotalProp).toLong
-      val inc = table.changesBetween(s, s1, s2)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tok"))
-      val out = P.packStreamSpans(inc, base)
-      // one relation only (the increment); a corpus rescan would add a second
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      val localized = localize(out)
-      // maintenance half: advance the committed total by the increment's
-      // tokens (derivable from the spans just computed — no extra scan)
-      val incTok = localized.agg(sum("tok_len")).head().getLong(0)
-      table.setProperty(SeqPackTotalProp, (base + incTok).toString)
-      require(LakeTable.load(loc).tableMeta
-        .properties(SeqPackTotalProp).toLong == base + incTok,
-        "pack state must roll forward with the arrival")
-      localized
-    } finally LakeTable.drop(loc)
+    val loc = table.location
+    val oddsF = sc.overlap(LakeWriter.writeDataFiles(odds, table))
+    val s1 = table.append(LakeWriter.writeDataFiles(evens, table))
+    // pack state at corpus commit: one aggregate, one property commit
+    val total = table.snapshotDF(s, s1)
+      .agg(sum(size(split(col("text"), " ")).cast("long"))).head().getLong(0)
+    table.setProperty(SeqPackTotalProp, total.toString)
+    val s2 = table.append(oddsF.join())
+    // arrival pack: base from a FRESH load's properties (self-contained
+    // — nothing the packer uses exists outside the table), rows from
+    // the incremental scan only
+    val base = LakeTable.load(loc).tableMeta
+      .properties(SeqPackTotalProp).toLong
+    val inc = table.changesBetween(s, s1, s2)
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("n_tok"))
+    val out = P.packStreamSpans(inc, base)
+    // one relation only (the increment); a corpus rescan would add a second
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    val localized = localize(out)
+    // maintenance half: advance the committed total by the increment's
+    // tokens (derivable from the spans just computed — no extra scan)
+    val incTok = localized.agg(sum("tok_len")).head().getLong(0)
+    table.setProperty(SeqPackTotalProp, (base + incTok).toString)
+    require(LakeTable.load(loc).tableMeta
+      .properties(SeqPackTotalProp).toLong == base + incTok,
+      "pack state must roll forward with the arrival")
+    localized
   }
 
   // D3f — the MinHash band space as a first-class TABLE citizen,
@@ -983,10 +934,9 @@ object LakeQueries {
   // three integers — small enough to co-locate, incremental to maintain,
   // and shared across every ingesting stream. Same planted dups and
   // verdict shape as d01_minhash_incremental → the same hash oracle.
-  def d03_minhash_index(s: SparkSession, dir: String): DataFrame = {
+  def d03_minhash_index(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val locD = scratch("mhidx-data")
-    val locI = scratch("mhidx-idx")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
     val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
@@ -996,56 +946,49 @@ object LakeQueries {
       .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 80)
         .select((col("doc_id") + 2000000).as("doc_id"),
           concat(col("text"), lit(" zq zr zs")).as("text")))
-    val data = LakeTable.create(locD, "doc_id BIGINT,text STRING",
+    val data = sc.table("mhidx-data", "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
     // layout key = xxhash64(band,h0,h1) pmod 16 (PipelineQueries
     // .withBandKey): band keys are minima, so partitioning on h0 itself
     // piled ~70% of files into the low quarter — the uniformized re-key
     // spreads maintenance appends and compaction evenly
-    val index = LakeTable.create(locI, P.BandIndexDdl,
+    val index = sc.table("mhidx-idx", P.BandIndexDdl,
       TruncateSpec("bkey", 1L))
-    try {
-      val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
-      // the corpus band-key index build reads only the immutable d1
-      // snapshot and writes the INDEX table; the increment's DATA append
-      // needs only d1 — independent, so they overlap (guide §2.6)
-      val i1F = scala.concurrent.Future {
-        index.append(LakeWriter.writeDataFiles(
-          P.withBandKey(P.explodeBands(P.md5MinhashSigs(data.snapshotDF(s, d1)))
-            .select("band", "h0", "h1").distinct()), index))
-      }(scala.concurrent.ExecutionContext.global)
-      val d2 = data.append(LakeWriter.writeDataFiles(increment, data))
-      val i1 = scala.concurrent.Await.result(i1F,
-        scala.concurrent.duration.Duration.Inf)
-      val inc = data.changesBetween(s, d1, d2)
-      val incBands = P.explodeBands(P.md5MinhashSigs(inc))
-      // the gate serves from a FRESH load of the committed index — the
-      // index table is self-contained (the d02_ann_indexed discipline)
-      val comBands = LakeTable.load(locI).snapshotDF(s, i1)
-      val dups = incBands.join(comBands, Seq("band", "h0", "h1"), "left_semi")
-        .select("doc_id").distinct()
-      val out = inc.select("doc_id")
-        .join(dups.withColumn("is_fuzzy_dup", lit(true)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
-        .orderBy("doc_id")
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      Trace.note("index_location", locI)
-      val gated = localize(out)
-      // maintenance: one commit of the increment's NOVEL distinct keys —
-      // probe work ∝ increment, write work ∝ novel keys
-      val i2 = index.append(LakeWriter.writeDataFiles(
-        P.withBandKey(incBands.select("band", "h0", "h1").distinct()
-          .join(comBands.drop("bkey"), Seq("band", "h0", "h1"),
-            "left_anti")), index))
-      // ∝ the increment's novel keys, never the corpus band space
-      Trace.count("maint_rows",
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
-      gated
-    } finally {
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
-    }
+    val locI = index.location
+    val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
+    // the corpus band-key index build reads only the immutable d1
+    // snapshot and writes the INDEX table; the increment's DATA append
+    // needs only d1 — independent, so they overlap (guide §2.6)
+    val i1F = sc.overlap(index.append(LakeWriter.writeDataFiles(
+      P.withBandKey(P.explodeBands(P.md5MinhashSigs(data.snapshotDF(s, d1)))
+        .select("band", "h0", "h1").distinct()), index)))
+    val d2 = data.append(LakeWriter.writeDataFiles(increment, data))
+    val i1 = i1F.join()
+    val inc = data.changesBetween(s, d1, d2)
+    val incBands = P.explodeBands(P.md5MinhashSigs(inc))
+    // the gate serves from a FRESH load of the committed index — the
+    // index table is self-contained (the d02_ann_indexed discipline)
+    val comBands = LakeTable.load(locI).snapshotDF(s, i1)
+    val dups = incBands.join(comBands, Seq("band", "h0", "h1"), "left_semi")
+      .select("doc_id").distinct()
+    val out = inc.select("doc_id")
+      .join(dups.withColumn("is_fuzzy_dup", lit(true)), Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
+      .orderBy("doc_id")
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    Trace.note("index_location", locI)
+    val gated = localize(out)
+    // maintenance: one commit of the increment's NOVEL distinct keys —
+    // probe work ∝ increment, write work ∝ novel keys
+    val i2 = index.append(LakeWriter.writeDataFiles(
+      P.withBandKey(incBands.select("band", "h0", "h1").distinct()
+        .join(comBands.drop("bkey"), Seq("band", "h0", "h1"),
+          "left_anti")), index))
+    // ∝ the increment's novel keys, never the corpus band space
+    Trace.count("maint_rows",
+      index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+    gated
   }
 
   // D2p-index — the POSITIONAL inverted index as a committed table: one
@@ -1059,9 +1002,9 @@ object LakeQueries {
   // derived/serve-time, so appends never rewrite), and the serve loads
   // the committed index FRESH. End state = full-corpus phrase results →
   // the same hash oracle as d02_phrase_match.
-  def d02_phrase_index(s: SparkSession, dir: String): DataFrame = {
+  def d02_phrase_index(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val loc = scratch("phrase-idx")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
     val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
@@ -1069,40 +1012,39 @@ object LakeQueries {
       .withColumn("thash", xxhash64(col("term")))
       .withColumn("tkey", pmod(col("thash"), lit(16L)))
       .select("tkey", "thash", "term", "doc_id", "tf", "dl", "positions")
-    val index = LakeTable.create(loc,
+    val index = sc.table("phrase-idx",
       "tkey BIGINT,thash BIGINT,term STRING,doc_id BIGINT,tf BIGINT," +
         "dl BIGINT,positions ARRAY<BIGINT>",
       TruncateSpec("tkey", 1L))
+    val loc = index.location
     index.setProperty("write.sort-order", "thash") // compaction keeps it
     // same two-level layout as the BM25 index: thash-clustered files with
     // disjoint ranges per bucket, so the serve skips within buckets too
     def write(postings: DataFrame) = LakeWriter.writeDataFiles(
       keyed(postings), index, sortBy = Seq("thash"),
       maxRecordsPerFile = P.Bm25IndexRowsPerFile)
-    try {
-      // phase split (build = corpus-half postings, maint = the increment's
-      // postings, serve = the adjacency probe): an unsplit drift of this
-      // entry was once unattributable
-      val i1 = Trace.phase("build_s")(index.append(write(P.positionalPostings(evens))))
-      val i2 = Trace.phase("maint_s")(index.append(write(P.positionalPostings(odds))))
-      // work ∝ the increment's postings
-      Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
-      val idxT = LakeTable.load(loc)
-      // serve-side layout pruning, same bucket-aware predicate as the
-      // BM25 serve: each OR branch pins a tkey bucket and footer-skips
-      // within it on that bucket's own term hashes
-      val res = Trace.phase("serve_s") {
-        val out = P.phraseServe(
-          idxT.toDF(s).filter(P.phraseLayoutPredicate)
-            .select("term", "doc_id", "positions"))
-        Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-        Trace.note("index_location", loc)
-        localize(out)
-      }
-      Trace.count("serve_files_planned", filesPlanned(loc))
-      Trace.count("files_total", idxT.files().size.toLong)
-      res
-    } finally LakeTable.drop(loc)
+    // phase split (build = corpus-half postings, maint = the increment's
+    // postings, serve = the adjacency probe): an unsplit drift of this
+    // entry was once unattributable
+    val i1 = Trace.phase("build_s")(index.append(write(P.positionalPostings(evens))))
+    val i2 = Trace.phase("maint_s")(index.append(write(P.positionalPostings(odds))))
+    // work ∝ the increment's postings
+    Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+    val idxT = LakeTable.load(loc)
+    // serve-side layout pruning, same bucket-aware predicate as the
+    // BM25 serve: each OR branch pins a tkey bucket and footer-skips
+    // within it on that bucket's own term hashes
+    val res = Trace.phase("serve_s") {
+      val out = P.phraseServe(
+        idxT.toDF(s).filter(P.phraseLayoutPredicate)
+          .select("term", "doc_id", "positions"))
+      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+      Trace.note("index_location", loc)
+      localize(out)
+    }
+    Trace.count("serve_files_planned", filesPlanned(loc))
+    Trace.count("files_total", idxT.files().size.toLong)
+    res
   }
 
   // D2pz — PHRASE adjacency under the REALISTIC Zipf vocabulary (r14
@@ -1117,9 +1059,9 @@ object LakeQueries {
   // pair survival is ~1/100 and the organic corpus holds only ~30
   // adjacencies per base pair). Hash-oracled end to end: DuckDB replays
   // the same replication, expansion and adjacency self-join.
-  def d02_phrase_zipf(s: SparkSession, dir: String): DataFrame = {
+  def d02_phrase_zipf(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val loc = scratch("phrase-zipf")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     // ×16 deterministic replication, single corpus scan (broadcast range)
     // the broadcast cross-join INHERITS the corpus scan's partitioning —
@@ -1134,39 +1076,38 @@ object LakeQueries {
       .withColumn("doc_id",
         col("doc_id") + col("ri") * lit(P.ZipfPhraseShift))
       .select("doc_id", "text")
-    val index = LakeTable.create(loc,
+    val index = sc.table("phrase-zipf",
       "tkey BIGINT,thash BIGINT,term STRING,doc_id BIGINT,tf BIGINT," +
         "dl BIGINT,positions ARRAY<BIGINT>",
       TruncateSpec("tkey", 1L))
+    val loc = index.location
     index.setProperty("write.sort-order", "thash")
-    try {
-      Trace.phase("build_s")(index.append(LakeWriter.writeDataFiles(
-        P.zipfPositionalPostings(rdocs)
-          .withColumn("thash", xxhash64(col("term")))
-          .withColumn("tkey", pmod(col("thash"), lit(16L)))
-          .select("tkey", "thash", "term", "doc_id", "tf", "dl",
-            "positions"),
-        // 16× the sibling indexes' file sizing: the ×16-replicated corpus
-        // would otherwise roll ~1,100 files at sf0.1 (4.3M posting rows /
-        // 4096) — per-row work is identical, but a thousand scratch files
-        // price file-open overhead, not the serve. ~70 files at sf0.1
-        // still splits every bucket 4–5 ways, so the within-bucket footer
-        // skip stays exercised where the prune counts are reported.
-        index, sortBy = Seq("thash"),
-        maxRecordsPerFile = P.Bm25IndexRowsPerFile * 16,
-        // 8 thash RANGES per tkey bucket (arithmetic shift = monotone in
-        // thash): the ×16 corpus's 4.2 M posting rows otherwise write
-        // through ≤16 tasks — the bucket count, not the core count, was
-        // the build's parallelism cap. Files stay disjoint in thash.
-        splitBy = Seq(shiftright(col("thash"), 61)))))
-      val idxT = LakeTable.load(loc)
-      val res = Trace.phase("serve_s")(localize(P.phraseServe(
-        idxT.toDF(s).filter(P.zipfPhraseLayoutPredicate)
-          .select("term", "doc_id", "positions"),
-        P.ZipfPhraseQueries)))
-      serveFilePrune(loc, idxT, P.zipfPhraseQueryTkeys)
-      res
-    } finally LakeTable.drop(loc)
+    Trace.phase("build_s")(index.append(LakeWriter.writeDataFiles(
+      P.zipfPositionalPostings(rdocs)
+        .withColumn("thash", xxhash64(col("term")))
+        .withColumn("tkey", pmod(col("thash"), lit(16L)))
+        .select("tkey", "thash", "term", "doc_id", "tf", "dl",
+          "positions"),
+      // 16× the sibling indexes' file sizing: the ×16-replicated corpus
+      // would otherwise roll ~1,100 files at sf0.1 (4.3M posting rows /
+      // 4096) — per-row work is identical, but a thousand scratch files
+      // price file-open overhead, not the serve. ~70 files at sf0.1
+      // still splits every bucket 4–5 ways, so the within-bucket footer
+      // skip stays exercised where the prune counts are reported.
+      index, sortBy = Seq("thash"),
+      maxRecordsPerFile = P.Bm25IndexRowsPerFile * 16,
+      // 8 thash RANGES per tkey bucket (arithmetic shift = monotone in
+      // thash): the ×16 corpus's 4.2 M posting rows otherwise write
+      // through ≤16 tasks — the bucket count, not the core count, was
+      // the build's parallelism cap. Files stay disjoint in thash.
+      splitBy = Seq(shiftright(col("thash"), 61)))))
+    val idxT = LakeTable.load(loc)
+    val res = Trace.phase("serve_s")(localize(P.phraseServe(
+      idxT.toDF(s).filter(P.zipfPhraseLayoutPredicate)
+        .select("term", "doc_id", "positions"),
+      P.ZipfPhraseQueries)))
+    serveFilePrune(loc, idxT, P.zipfPhraseQueryTkeys)
+    res
   }
 
   // D1i — the SUBSTRING shingle space as a first-class TABLE citizen,
@@ -1195,75 +1136,66 @@ object LakeQueries {
     * increment — the entry splits the documents table by parity; specs
     * drive tiny corpora to pin gate/maintenance/pruning invariants. */
   private[graft] def substrIndexRun(s: SparkSession, evens: DataFrame,
-      odds: DataFrame): DataFrame = {
+      odds: DataFrame): DataFrame = Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
     val tStart = System.nanoTime()
-    val locD = scratch("substr-data")
-    val locI = scratch("substr-idx")
-    val data = LakeTable.create(locD, "doc_id BIGINT,text STRING",
+    val data = sc.table("substr-data", "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
-    val index = LakeTable.create(locI, "skey BIGINT,shash BIGINT",
+    val index = sc.table("substr-idx", "skey BIGINT,shash BIGINT",
       TruncateSpec("skey", 1L))
+    val locI = index.location
     def keyed(hashes: DataFrame): DataFrame = hashes
       .withColumn("skey", pmod(col("shash"), lit(16L)))
       .select("skey", "shash")
-    try {
-      val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
-      // corpus shingle-index build (reads the immutable d1 snapshot,
-      // writes the index table) overlaps the increment's data append
-      // (needs only d1) — guide §2.6, same shape as d03_minhash_index
-      val i1F = scala.concurrent.Future {
-        index.append(LakeWriter.writeDataFiles(
-          keyed(P.shingleHashes(data.snapshotDF(s, d1)).select("shash")
-            .distinct()), index))
-      }(scala.concurrent.ExecutionContext.global)
-      val d2 = data.append(LakeWriter.writeDataFiles(odds, data))
-      val i1 = scala.concurrent.Await.result(i1F,
-        scala.concurrent.duration.Duration.Inf)
-      val inc = data.changesBetween(s, d1, d2)
-      val incSh = P.shingleHashes(inc)
-      // gate-side LAYOUT pruning (r11 verdict item 2): the increment's
-      // shingles hash into a bounded skey set (≤16 by construction) —
-      // one increment-sized distinct-key aggregate derives it, and the
-      // IN predicate prunes the committed index SCAN to those buckets at
-      // the manifest. Any committed hash equal to an increment hash
-      // shares its bucket, so the pruned scan is sufficient for BOTH the
-      // gate probe and the novelty anti-join below.
-      val incKeys = incSh.select(pmod(col("shash"), lit(16L)).as("skey"))
-        .distinct().collect().map(_.getLong(0)).toSeq.sorted // ≤16 rows
-      val idxT = LakeTable.load(locI)
-      // the gate serves from a FRESH load of the committed index — the
-      // shingle space is self-contained, shared by every arrival
-      val comSh = idxT.snapshotDF(s, i1)
-        .filter(col("skey").isin(incKeys: _*)).select("shash")
-      val selfDup = incSh.groupBy("shash").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2).select("shash")
-      val dupKeys = comSh.union(selfDup).distinct()
-      val hits = incSh.join(dupKeys, Seq("shash"), "left_semi")
-        .select(col("doc_id"), col("p").as("st"),
-          (col("p") + P.SubstrShingle).as("en"))
-      val out = P.mergeSpans(hits)
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      Trace.note("index_location", locI)
-      // phase walls (r13): everything above is the ONE-TIME corpus
-      // build (table commits + whole-corpus shingle index); the
-      // localize below is the GATE SERVE — the increment-proportional
-      // part a probe must report separately or the build dominates and
-      // misreads as gate cost
-      Trace.span("build_s", (System.nanoTime() - tStart) / 1e9)
-      val gated = Trace.phase("gate_s")(localize(out))
-      Trace.count("serve_files_planned", filesPlanned(locI))
-      Trace.count("files_total", idxT.files().size.toLong)
-      // maintenance: one commit of the increment's NOVEL distinct hashes
-      val i2 = Trace.phase("maint_s")(index.append(LakeWriter.writeDataFiles(
-        keyed(incSh.select("shash").distinct()
-          .join(comSh, Seq("shash"), "left_anti")), index)))
-      Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
-      gated
-    } finally {
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
-    }
+    val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
+    // corpus shingle-index build (reads the immutable d1 snapshot,
+    // writes the index table) overlaps the increment's data append
+    // (needs only d1) — guide §2.6, same shape as d03_minhash_index
+    val i1F = sc.overlap(index.append(LakeWriter.writeDataFiles(
+      keyed(P.shingleHashes(data.snapshotDF(s, d1)).select("shash")
+        .distinct()), index)))
+    val d2 = data.append(LakeWriter.writeDataFiles(odds, data))
+    val i1 = i1F.join()
+    val inc = data.changesBetween(s, d1, d2)
+    val incSh = P.shingleHashes(inc)
+    // gate-side LAYOUT pruning (r11 verdict item 2): the increment's
+    // shingles hash into a bounded skey set (≤16 by construction) —
+    // one increment-sized distinct-key aggregate derives it, and the
+    // IN predicate prunes the committed index SCAN to those buckets at
+    // the manifest. Any committed hash equal to an increment hash
+    // shares its bucket, so the pruned scan is sufficient for BOTH the
+    // gate probe and the novelty anti-join below.
+    val incKeys = incSh.select(pmod(col("shash"), lit(16L)).as("skey"))
+      .distinct().collect().map(_.getLong(0)).toSeq.sorted // ≤16 rows
+    val idxT = LakeTable.load(locI)
+    // the gate serves from a FRESH load of the committed index — the
+    // shingle space is self-contained, shared by every arrival
+    val comSh = idxT.snapshotDF(s, i1)
+      .filter(col("skey").isin(incKeys: _*)).select("shash")
+    val selfDup = incSh.groupBy("shash").agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2).select("shash")
+    val dupKeys = comSh.union(selfDup).distinct()
+    val hits = incSh.join(dupKeys, Seq("shash"), "left_semi")
+      .select(col("doc_id"), col("p").as("st"),
+        (col("p") + P.SubstrShingle).as("en"))
+    val out = P.mergeSpans(hits)
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    Trace.note("index_location", locI)
+    // phase walls (r13): everything above is the ONE-TIME corpus
+    // build (table commits + whole-corpus shingle index); the
+    // localize below is the GATE SERVE — the increment-proportional
+    // part a probe must report separately or the build dominates and
+    // misreads as gate cost
+    Trace.span("build_s", (System.nanoTime() - tStart) / 1e9)
+    val gated = Trace.phase("gate_s")(localize(out))
+    Trace.count("serve_files_planned", filesPlanned(locI))
+    Trace.count("files_total", idxT.files().size.toLong)
+    // maintenance: one commit of the increment's NOVEL distinct hashes
+    val i2 = Trace.phase("maint_s")(index.append(LakeWriter.writeDataFiles(
+      keyed(incSh.select("shash").distinct()
+        .join(comSh, Seq("shash"), "left_anti")), index)))
+    Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+    gated
   }
 
   /** Files the latest scan of the table at `loc` planned, -1 if none. */
@@ -1338,31 +1270,30 @@ object LakeQueries {
   // fixed probes spanning ten df octaves — head rank-1 terms through
   // octave-9 tail terms. Hash-oracled end-to-end: the oracle rebuilds
   // the same expansion and scores with the shared micro-unit BM25 CTE.
-  def d02_bm25_zipf(s: SparkSession, dir: String): DataFrame = {
+  def d02_bm25_zipf(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val loc = scratch("bm25-zipf")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val index = LakeTable.create(loc, P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
+    val index = sc.table("bm25-zipf", P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
+    val loc = index.location
     index.setProperty("write.sort-order", "thash")
-    try {
-      // the serve wall tracks separately from the build, at realistic
-      // selectivity (the head-term serves measure only the worst case)
-      val st = Trace.phase("build_s") {
-        val r = d.agg(count(lit(1)),
-          sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
-        index.append(LakeWriter.writeDataFiles(
-          P.bm25Keyed(P.zipfPostings(d)), index, sortBy = Seq("thash"),
-          maxRecordsPerFile = P.Bm25IndexRowsPerFile))
-        r
-      }
-      val idxT = LakeTable.load(loc)
-      val res = Trace.phase("serve_s")(localize(P.bm25Serve(
-        idxT.toDF(s).filter(P.zipfLayoutPredicate)
-          .select("term", "doc_id", "tf", "dl"),
-        st.getLong(0), st.getLong(1), P.ZipfQueries)))
-      serveFilePrune(loc, idxT, P.zipfQueryTkeys)
-      res
-    } finally LakeTable.drop(loc)
+    // the serve wall tracks separately from the build, at realistic
+    // selectivity (the head-term serves measure only the worst case)
+    val st = Trace.phase("build_s") {
+      val r = d.agg(count(lit(1)),
+        sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
+      index.append(LakeWriter.writeDataFiles(
+        P.bm25Keyed(P.zipfPostings(d)), index, sortBy = Seq("thash"),
+        maxRecordsPerFile = P.Bm25IndexRowsPerFile))
+      r
+    }
+    val idxT = LakeTable.load(loc)
+    val res = Trace.phase("serve_s")(localize(P.bm25Serve(
+      idxT.toDF(s).filter(P.zipfLayoutPredicate)
+        .select("term", "doc_id", "tf", "dl"),
+      st.getLong(0), st.getLong(1), P.ZipfQueries)))
+    serveFilePrune(loc, idxT, P.zipfQueryTkeys)
+    res
   }
 
   /** The committed-BM25-index lifecycle with caller-chosen corpus halves
@@ -1370,16 +1301,16 @@ object LakeQueries {
     * specs drive small rowsPerFile over a generated corpus to pin the
     * within-bucket footer-skip invariant on many-file buckets. */
   private[graft] def bm25IndexRun(s: SparkSession, evens: DataFrame,
-      odds: DataFrame, rowsPerFile: Long): DataFrame = {
+      odds: DataFrame, rowsPerFile: Long): DataFrame = Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val loc = scratch("bm25-idx")
     def stats(docs: DataFrame): (Long, Long) = {
       val r = docs.agg(count(lit(1)),
         sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
       (r.getLong(0), r.getLong(1)) // 1-row corpus-stats agg — bounded
     }
     def keyed(postings: DataFrame): DataFrame = P.bm25Keyed(postings)
-    val index = LakeTable.create(loc, P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
+    val index = sc.table("bm25-idx", P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
+    val loc = index.location
     // the clustering is DECLARED on the table, not left to caller
     // discipline: compaction with no explicit sortBy re-sorts by the
     // declared order, so maintenance can never silently widen the files'
@@ -1392,39 +1323,37 @@ object LakeQueries {
     def write(postings: DataFrame) = LakeWriter.writeDataFiles(
       keyed(postings), index, sortBy = Seq("thash"),
       maxRecordsPerFile = rowsPerFile)
-    try {
-      val (n1, s1) = stats(evens)
-      val i1 = index.append(write(P.bm25Postings(evens)))
-      index.setProperty(bm25StatsKey("build"), s"$n1:$s1")
-      // increment arrives: its OWN postings append + its OWN stats shard
-      // — existing postings and the build shard untouched; readers fold
-      val (n2, s2) = stats(odds)
-      val i2 = index.append(write(P.bm25Postings(odds)))
-      index.setProperty(bm25StatsKey("maint"), s"$n2:$s2")
-      // ∝ the increment's postings, never a rebuild of the corpus postings
-      Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
-      // serve from a FRESH load of the committed index — self-contained:
-      // postings rows + the folded stats shards are everything BM25 needs
-      val idxT = LakeTable.load(loc)
-      val (nd, sdl) = bm25FoldStats(idxT.tableMeta.properties)
-      // serve-side LAYOUT pruning (r11 verdict item 2), two levels in one
-      // bucket-aware predicate: the query terms are literals, so both
-      // layout keys are plan-time constants — each OR branch pins a tkey
-      // bucket (manifest prune) and tests ONLY that bucket's term hashes
-      // against the thash-sorted files' footer ranges (within-bucket
-      // skip). See layoutPredicate for why the flat two-IN form barely
-      // skipped. Rows were already term-filtered downstream, so results
-      // are unchanged.
-      val out = P.bm25Serve(
-        idxT.toDF(s).filter(P.bm25LayoutPredicate)
-          .select("term", "doc_id", "tf", "dl"),
-        nd, sdl)
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      Trace.note("index_location", loc)
-      val res = localize(out)
-      serveFilePrune(loc, idxT, P.bm25QueryTkeys)
-      res
-    } finally LakeTable.drop(loc)
+    val (n1, s1) = stats(evens)
+    val i1 = index.append(write(P.bm25Postings(evens)))
+    index.setProperty(bm25StatsKey("build"), s"$n1:$s1")
+    // increment arrives: its OWN postings append + its OWN stats shard
+    // — existing postings and the build shard untouched; readers fold
+    val (n2, s2) = stats(odds)
+    val i2 = index.append(write(P.bm25Postings(odds)))
+    index.setProperty(bm25StatsKey("maint"), s"$n2:$s2")
+    // ∝ the increment's postings, never a rebuild of the corpus postings
+    Trace.count("maint_rows", index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+    // serve from a FRESH load of the committed index — self-contained:
+    // postings rows + the folded stats shards are everything BM25 needs
+    val idxT = LakeTable.load(loc)
+    val (nd, sdl) = bm25FoldStats(idxT.tableMeta.properties)
+    // serve-side LAYOUT pruning (r11 verdict item 2), two levels in one
+    // bucket-aware predicate: the query terms are literals, so both
+    // layout keys are plan-time constants — each OR branch pins a tkey
+    // bucket (manifest prune) and tests ONLY that bucket's term hashes
+    // against the thash-sorted files' footer ranges (within-bucket
+    // skip). See layoutPredicate for why the flat two-IN form barely
+    // skipped. Rows were already term-filtered downstream, so results
+    // are unchanged.
+    val out = P.bm25Serve(
+      idxT.toDF(s).filter(P.bm25LayoutPredicate)
+        .select("term", "doc_id", "tf", "dl"),
+      nd, sdl)
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    Trace.note("index_location", loc)
+    val res = localize(out)
+    serveFilePrune(loc, idxT, P.bm25QueryTkeys)
+    res
   }
 
   // D2h — INDEXED hybrid retrieval (r11 verdict item 6): both arms of
@@ -1455,12 +1384,9 @@ object LakeQueries {
     hybridIndexedRun(s, dir, zipfLex = true)
 
   private def hybridIndexedRun(s: SparkSession, dir: String,
-      zipfLex: Boolean): DataFrame = {
+      zipfLex: Boolean): DataFrame = Scratch.scoped(s) { sc =>
     graft.functions.CosineSimilarity.register(s)
     val P = graft.queries.PipelineQueries
-    val locB = scratch("hyb-bm25")
-    val locD = scratch("hyb-ann-data")
-    val locI = scratch("hyb-ann-idx")
     // the three zipf-vs-base knobs: postings expansion, serve-side layout
     // predicate (each probe set prunes on its own terms' hashes), probes
     val lexPostings: DataFrame => DataFrame =
@@ -1470,94 +1396,84 @@ object LakeQueries {
     val queries = if (zipfLex) P.ZipfQueries else P.Bm25Queries
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val bm25 = LakeTable.create(locB, P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
+    val bm25 = sc.table("hyb-bm25", P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
     bm25.setProperty("write.sort-order", "thash")
-    val data = LakeTable.create(locD, "vec_id BIGINT,embedding ARRAY<FLOAT>",
+    val data = sc.table("hyb-ann-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("vec_id", 100L))
-    val index = LakeTable.create(locI,
-      P.AnnIndexDdl, P.AnnIndexSpec)
-    try {
-      val tPhase0 = System.nanoTime()
-      def secsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
-      // lexical index: the corpus postings + same-commit stats property
-      // (maintenance mechanics are d02_bm25_index's concern; the hybrid
-      // needs the committed END STATE both entries share). The two arm
-      // BUILDS are independent — different tables, no shared state — so
-      // the lexical build runs on a driver-side future while the caller
-      // thread builds the semantic arm (guide §2.6: actions are only
-      // sequential because driver code calls them sequentially; FIFO
-      // scheduling back-fills each build's stage tails with the other's
-      // tasks). Phase walls are now PER-THREAD durations: they overlap,
-      // so lex_build_s + ann_build_s can exceed the entry wall.
-      val lexBuild = scala.concurrent.Future {
-        val st = d.agg(count(lit(1)),
-          sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
-        bm25.append(LakeWriter.writeDataFiles(
-          P.bm25Keyed(lexPostings(d)), bm25, sortBy = Seq("thash"),
-          maxRecordsPerFile = P.Bm25IndexRowsPerFile))
-        bm25.setProperty(bm25StatsKey("build"),
-          s"${st.getLong(0)}:${st.getLong(1)}")
-        secsSince(tPhase0)
-      }(scala.concurrent.ExecutionContext.global)
-      val tPhase1 = System.nanoTime()
-      // semantic index: the d02_ann_indexed lifecycle — committed-batch
-      // frozen models, corpus encode, increment encode
-      val d1 = data.append(LakeWriter.writeDataFiles(
-        e.filter(col("vec_id") < 400), data))
-      // same §2.6 overlap as d02_ann_indexed: the increment's data append
-      // needs only d1, so it rides a future under the model/encode work
-      val d2F = scala.concurrent.Future {
-        data.append(LakeWriter.writeDataFiles(
-          e.filter(col("vec_id") >= 400), data))
-      }(scala.concurrent.ExecutionContext.global)
-      val committed = data.snapshotDF(s, d1)
-      val (ivf, pq) = P.annSeedModels(committed)
-      index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-      index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-      index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, committed, ivf, pq), index))
-      val d2 = scala.concurrent.Await.result(d2F,
-        scala.concurrent.duration.Duration.Inf)
-      val i2 = index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
-      val tAnnBuild = secsSince(tPhase1)
-      val tLexBuild = scala.concurrent.Await.result(lexBuild,
-        scala.concurrent.duration.Duration.Inf)
-      val tPhase2 = System.nanoTime()
-      // both serves from FRESH loads of the committed tables
-      val bT = LakeTable.load(locB)
-      val (nd, sdl) = bm25FoldStats(bT.tableMeta.properties)
-      val lex = P.bm25Serve(
-        bT.toDF(s).filter(lexPredicate)
-          .select("term", "doc_id", "tf", "dl"), nd, sdl, queries)
-        .select(col("qid"), col("doc_id"), col("rn").as("rl"))
-      val iT = LakeTable.load(locI)
-      val ivf2 = P.ivfModelFromString(iT.tableMeta.properties(P.AnnIvfProp))
-      val pq2 = P.pqModelFromString(iT.tableMeta.properties(P.AnnPqProp))
-      val sem = P.ivfPqServe(s, iT.snapshotDF(s, i2), data.snapshotDF(s, d2),
-          ivf2, pq2,
-          probeFilter = col("vec_id").between(1, queries.length),
-          topK = P.Bm25TopK)
-        .select(col("qid").cast("int").as("qid"),
-          col("oid").as("doc_id"), col("rn").as("rs"))
-      val out = P.rrfFuse(lex, sem)
-      // both arms serve their COMMITTED index tables: no corpus read and
-      // no cross join anywhere in the fused plan
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      Trace.note("bm25_location", locB)
-      Trace.note("ann_location", locI)
-      val res = localize(out)
-      // the phase split makes the heavy tail's biggest entry's drift
-      // attributable from the artifact
-      Trace.span("lex_build_s", tLexBuild)
-      Trace.span("ann_build_s", tAnnBuild)
-      Trace.span("fused_serve_s", secsSince(tPhase2))
-      res
-    } finally {
-      LakeTable.drop(locB)
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
+    val index = sc.table("hyb-ann-idx", P.AnnIndexDdl, P.AnnIndexSpec)
+    val (locB, locI) = (bm25.location, index.location)
+    val tPhase0 = System.nanoTime()
+    def secsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
+    // lexical index: the corpus postings + same-commit stats property
+    // (maintenance mechanics are d02_bm25_index's concern; the hybrid
+    // needs the committed END STATE both entries share). The two arm
+    // BUILDS are independent — different tables, no shared state — so
+    // the lexical build runs on an overlap branch while the caller
+    // thread builds the semantic arm (guide §2.6: actions are only
+    // sequential because driver code calls them sequentially; FIFO
+    // scheduling back-fills each build's stage tails with the other's
+    // tasks). Phase walls are now PER-THREAD durations: they overlap,
+    // so lex_build_s + ann_build_s can exceed the entry wall.
+    val lexBuild = sc.overlap {
+      val st = d.agg(count(lit(1)),
+        sum(size(split(col("text"), " ")).cast("long"))).collect()(0)
+      bm25.append(LakeWriter.writeDataFiles(
+        P.bm25Keyed(lexPostings(d)), bm25, sortBy = Seq("thash"),
+        maxRecordsPerFile = P.Bm25IndexRowsPerFile))
+      bm25.setProperty(bm25StatsKey("build"),
+        s"${st.getLong(0)}:${st.getLong(1)}")
+      secsSince(tPhase0)
     }
+    val tPhase1 = System.nanoTime()
+    // semantic index: the d02_ann_indexed lifecycle — committed-batch
+    // frozen models, corpus encode, increment encode
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") < 400), data))
+    // same §2.6 overlap as d02_ann_indexed: the increment's data append
+    // needs only d1, so it rides a branch under the model/encode work
+    val d2F = sc.overlap(data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") >= 400), data)))
+    val committed = data.snapshotDF(s, d1)
+    val (ivf, pq) = P.annSeedModels(committed)
+    index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
+    index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
+    index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, committed, ivf, pq), index))
+    val d2 = d2F.join()
+    val i2 = index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
+    val tAnnBuild = secsSince(tPhase1)
+    val tLexBuild = lexBuild.join()
+    val tPhase2 = System.nanoTime()
+    // both serves from FRESH loads of the committed tables
+    val bT = LakeTable.load(locB)
+    val (nd, sdl) = bm25FoldStats(bT.tableMeta.properties)
+    val lex = P.bm25Serve(
+      bT.toDF(s).filter(lexPredicate)
+        .select("term", "doc_id", "tf", "dl"), nd, sdl, queries)
+      .select(col("qid"), col("doc_id"), col("rn").as("rl"))
+    val iT = LakeTable.load(locI)
+    val ivf2 = P.ivfModelFromString(iT.tableMeta.properties(P.AnnIvfProp))
+    val pq2 = P.pqModelFromString(iT.tableMeta.properties(P.AnnPqProp))
+    val sem = P.ivfPqServe(s, iT.snapshotDF(s, i2), data.snapshotDF(s, d2),
+        ivf2, pq2,
+        probeFilter = col("vec_id").between(1, queries.length),
+        topK = P.Bm25TopK)
+      .select(col("qid").cast("int").as("qid"),
+        col("oid").as("doc_id"), col("rn").as("rs"))
+    val out = P.rrfFuse(lex, sem)
+    // both arms serve their COMMITTED index tables: no corpus read and
+    // no cross join anywhere in the fused plan
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    Trace.note("bm25_location", locB)
+    Trace.note("ann_location", locI)
+    val res = localize(out)
+    // the phase split makes the heavy tail's biggest entry's drift
+    // attributable from the artifact
+    Trace.span("lex_build_s", tLexBuild)
+    Trace.span("ann_build_s", tAnnBuild)
+    Trace.span("fused_serve_s", secsSince(tPhase2))
+    res
   }
 
   /** Centroid model property on the semantic cell-index table (same
@@ -1589,76 +1505,68 @@ object LakeQueries {
   // corpus-wide assignment to an increment-sized one. Same planted
   // layout and verdict shape as d01_semdedup_incremental → the same
   // hash oracle.
-  def d01_semdedup_index(s: SparkSession, dir: String): DataFrame = {
+  def d01_semdedup_index(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     graft.functions.CosineSimilarity.register(s)
     val P = graft.queries.PipelineQueries
-    val locD = scratch("semidx-data")
-    val locI = scratch("semidx-idx")
     val q = t(s, dir, "embeddings").select(col("vec_id"), expr(
       s"""transform(embedding, x ->
          |  CAST(round(CAST(x AS DOUBLE) * ${P.SemDeDupExactScale}D) AS FLOAT))"""
         .stripMargin).as("embedding"))
-    val data = LakeTable.create(locD, "vec_id BIGINT,embedding ARRAY<FLOAT>",
+    val data = sc.table("semidx-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("vec_id", 100L))
     // cell-partitioned (width 8 over K=100 centroid ids): the gate's
     // cell-equality join and a targeted compaction both prune to the
     // touched buckets
-    val index = LakeTable.create(locI,
+    val index = sc.table("semidx-idx",
       "cell BIGINT,vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("cell", 8L))
-    try {
-      val d1 = data.append(LakeWriter.writeDataFiles(
-        q.filter(col("vec_id") < 400), data))
-      val committed = data.snapshotDF(s, d1)
-      // frozen centroids = the committed corpus's first K quantized
-      // vectors (the d01_semdedup_incremental exact-twin constants); a
-      // frozen index must not peek at future arrivals
-      val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-      index.setProperty(SemCentroidsProp, P.ivfModelToString(cents))
-      // corpus assignment build (immutable d1 snapshot -> index table)
-      // overlaps the increment's data append (guide §2.6, the
-      // d03_minhash_index shape)
-      val i1F = scala.concurrent.Future {
-        index.append(LakeWriter.writeDataFiles(
-          P.assignCellsHier(committed, cents)
-            .select(col("cell"), col("vec_id"), col("embedding")), index))
-      }(scala.concurrent.ExecutionContext.global)
-      val d2 = data.append(LakeWriter.writeDataFiles(
-        q.filter(col("vec_id") >= 400), data))
-      val i1 = scala.concurrent.Await.result(i1F,
-        scala.concurrent.duration.Duration.Inf)
-      val inc = data.changesBetween(s, d1, d2)
-      // the gate serves from a FRESH load of the committed index:
-      // centroids parsed back from its properties, cells from its scan
-      val idxT = LakeTable.load(locI)
-      val cents2 = P.ivfModelFromString(idxT.tableMeta.properties(SemCentroidsProp))
-      val aInc = P.assignCellsHier(inc, cents2)
-      val comIdx = idxT.snapshotDF(s, i1)
-        .select(col("cell"), col("vec_id").as("c_id"),
-          col("embedding").as("ce"))
-      val dups = aInc.join(comIdx, "cell")
-        .filter(expr("cosine_sim(embedding, ce)") > 0.43)
-        .select("vec_id").distinct()
-      val out = aInc
-        .join(dups.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cell"),
-          coalesce(col("is_dup"), lit(false)).as("is_dup"))
-        .orderBy("vec_id")
-      Trace.note("plan", out.queryExecution.optimizedPlan.toString)
-      Trace.note("index_location", locI)
-      val gated = localize(out)
-      // maintenance: one commit of the increment's assignments — assign
-      // and write work ∝ increment
-      val i2 = index.append(LakeWriter.writeDataFiles(
-        aInc.select(col("cell"), col("vec_id"), col("embedding")), index))
-      Trace.count("maint_rows",
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
-      gated
-    } finally {
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
-    }
+    val locI = index.location
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      q.filter(col("vec_id") < 400), data))
+    val committed = data.snapshotDF(s, d1)
+    // frozen centroids = the committed corpus's first K quantized
+    // vectors (the d01_semdedup_incremental exact-twin constants); a
+    // frozen index must not peek at future arrivals
+    val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    index.setProperty(SemCentroidsProp, P.ivfModelToString(cents))
+    // corpus assignment build (immutable d1 snapshot -> index table)
+    // overlaps the increment's data append (guide §2.6, the
+    // d03_minhash_index shape)
+    val i1F = sc.overlap(index.append(LakeWriter.writeDataFiles(
+      P.assignCellsHier(committed, cents)
+        .select(col("cell"), col("vec_id"), col("embedding")), index)))
+    val d2 = data.append(LakeWriter.writeDataFiles(
+      q.filter(col("vec_id") >= 400), data))
+    val i1 = i1F.join()
+    val inc = data.changesBetween(s, d1, d2)
+    // the gate serves from a FRESH load of the committed index:
+    // centroids parsed back from its properties, cells from its scan
+    val idxT = LakeTable.load(locI)
+    val cents2 = P.ivfModelFromString(idxT.tableMeta.properties(SemCentroidsProp))
+    val aInc = P.assignCellsHier(inc, cents2)
+    val comIdx = idxT.snapshotDF(s, i1)
+      .select(col("cell"), col("vec_id").as("c_id"),
+        col("embedding").as("ce"))
+    val dups = aInc.join(comIdx, "cell")
+      .filter(expr("cosine_sim(embedding, ce)") > 0.43)
+      .select("vec_id").distinct()
+    val out = aInc
+      .join(dups.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cell"),
+        coalesce(col("is_dup"), lit(false)).as("is_dup"))
+      .orderBy("vec_id")
+    Trace.note("plan", out.queryExecution.optimizedPlan.toString)
+    Trace.note("index_location", locI)
+    val gated = localize(out)
+    // maintenance: one commit of the increment's assignments — assign
+    // and write work ∝ increment
+    val i2 = index.append(LakeWriter.writeDataFiles(
+      aInc.select(col("cell"), col("vec_id"), col("embedding")), index))
+    Trace.count("maint_rows",
+      index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+    gated
   }
 
   // D2f — the ANN index as a first-class TABLE citizen: every other d02
@@ -1679,67 +1587,57 @@ object LakeQueries {
   // diverge from it. Untrained models + sequential-fold arithmetic end
   // to end → the whole dataflow hash-oracles against the ivfPqExact
   // replay with the committed-batch seed predicate.
-  def d02_ann_indexed(s: SparkSession, dir: String): DataFrame = {
+  def d02_ann_indexed(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val locD = scratch("annidx-data")
-    val locI = scratch("annidx-idx")
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val data = LakeTable.create(locD, "vec_id BIGINT,embedding ARRAY<FLOAT>",
+    val data = sc.table("annidx-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("vec_id", 100L))
-    val index = LakeTable.create(locI,
-      P.AnnIndexDdl, P.AnnIndexSpec)
-    try {
-      val tPhase0 = System.nanoTime()
-      def secsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
-      val d1 = data.append(LakeWriter.writeDataFiles(
-        e.filter(col("vec_id") < 400), data))
-      // phase split: a drift of this entry on untouched code was once
-      // unattributable to any phase
-      Trace.span("data_commit_s", secsSince(tPhase0))
-      val tPhase1 = System.nanoTime()
-      // the increment's DATA append needs only d1 — overlap it with the
-      // model derivation + corpus encode on a driver future (guide §2.6);
-      // snapshot reads of d1 are immutable, and only this thread appends
-      // to the data table, so there is no commit contention
-      val d2F = scala.concurrent.Future {
-        data.append(LakeWriter.writeDataFiles(
-          e.filter(col("vec_id") >= 400), data))
-      }(scala.concurrent.ExecutionContext.global)
-      val committed = data.snapshotDF(s, d1)
-      val (ivf, pq) = P.annSeedModels(committed)
-      // the frozen models commit WITH the index (table properties, exact
-      // text codec) — the index table is self-contained: serving below
-      // uses ONLY what a fresh session could load from the two tables
-      index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-      index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-      Trace.span("models_s", secsSince(tPhase1))
-      val tPhase2 = System.nanoTime()
-      val i1 = index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, committed, ivf, pq), index))
-      Trace.span("encode_commit_s", secsSince(tPhase2))
-      val tPhase3 = System.nanoTime()
-      val d2 = scala.concurrent.Await.result(d2F,
-        scala.concurrent.duration.Duration.Inf)
-      val i2 = index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
-      // encode work ∝ the increment, never the corpus
-      Trace.count("increment_rows",
-        index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
-      Trace.span("increment_s", secsSince(tPhase3))
-      val tPhase4 = System.nanoTime()
-      // serve from a FRESH load: committed codes + models parsed back
-      // from the table's own properties (bit-exact round-trip)
-      val served = LakeTable.load(locI)
-      val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
-      val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
-      val out = localize(P.ivfPqServe(s, served.snapshotDF(s, i2),
-        data.snapshotDF(s, d2), ivf2, pq2))
-      Trace.span("serve_s", secsSince(tPhase4))
-      out
-    } finally {
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
-    }
+    val index = sc.table("annidx-idx", P.AnnIndexDdl, P.AnnIndexSpec)
+    val tPhase0 = System.nanoTime()
+    def secsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") < 400), data))
+    // phase split: a drift of this entry on untouched code was once
+    // unattributable to any phase
+    Trace.span("data_commit_s", secsSince(tPhase0))
+    val tPhase1 = System.nanoTime()
+    // the increment's DATA append needs only d1 — overlap it with the
+    // model derivation + corpus encode on a branch (guide §2.6);
+    // snapshot reads of d1 are immutable, and only the branch appends
+    // to the data table, so there is no commit contention
+    val d2F = sc.overlap(data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") >= 400), data)))
+    val committed = data.snapshotDF(s, d1)
+    val (ivf, pq) = P.annSeedModels(committed)
+    // the frozen models commit WITH the index (table properties, exact
+    // text codec) — the index table is self-contained: serving below
+    // uses ONLY what a fresh session could load from the two tables
+    index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
+    index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
+    Trace.span("models_s", secsSince(tPhase1))
+    val tPhase2 = System.nanoTime()
+    val i1 = index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, committed, ivf, pq), index))
+    Trace.span("encode_commit_s", secsSince(tPhase2))
+    val tPhase3 = System.nanoTime()
+    val d2 = d2F.join()
+    val i2 = index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
+    // encode work ∝ the increment, never the corpus
+    Trace.count("increment_rows",
+      index.addedFilesBetween(i1, i2).map(_.rowCount).sum)
+    Trace.span("increment_s", secsSince(tPhase3))
+    val tPhase4 = System.nanoTime()
+    // serve from a FRESH load: committed codes + models parsed back
+    // from the table's own properties (bit-exact round-trip)
+    val served = LakeTable.load(index.location)
+    val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
+    val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
+    val out = localize(P.ivfPqServe(s, served.snapshotDF(s, i2),
+      data.snapshotDF(s, d2), ivf2, pq2))
+    Trace.span("serve_s", secsSince(tPhase4))
+    out
   }
 
   // D2g — the committed ANN index under TRAINED models: d02_ann_indexed
@@ -1754,54 +1652,44 @@ object LakeQueries {
   // models run-order-sensitive in the last ulp → rows-only + recall
   // floor (the d02_ann_ivfpq convention); the codec round-trip and
   // serve-equality claims are spec'd through the model texts it traces.
-  def d02_ann_indexed_trained(s: SparkSession, dir: String): DataFrame = {
+  def d02_ann_indexed_trained(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val locD = scratch("annidxt-data")
-    val locI = scratch("annidxt-idx")
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val data = LakeTable.create(locD, "vec_id BIGINT,embedding ARRAY<FLOAT>",
+    val data = sc.table("annidxt-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("vec_id", 100L))
-    val index = LakeTable.create(locI,
-      P.AnnIndexDdl, P.AnnIndexSpec)
-    try {
-      val d1 = data.append(LakeWriter.writeDataFiles(
-        e.filter(col("vec_id") < 400), data))
-      // overlap the increment's data append with the Lloyd training loops
-      // (guide §2.6) — training reads only the immutable d1 snapshot
-      val d2F = scala.concurrent.Future {
-        data.append(LakeWriter.writeDataFiles(
-          e.filter(col("vec_id") >= 400), data))
-      }(scala.concurrent.ExecutionContext.global)
-      val committed = data.snapshotDF(s, d1)
-      val ivf = P.trainIvfCentroids(committed)
-      // every-23rd seeds (vs the full-corpus default 31): the committed
-      // 400-vector corpus must still yield the 16 codewords per subspace
-      // pqCode's argmin iterates over
-      val pq = P.trainPqCodebooks(committed, seedMod = 23)
-      val ivfText = P.ivfModelToString(ivf)
-      val pqText = P.pqModelToString(pq)
-      index.setProperty(P.AnnIvfProp, ivfText)
-      index.setProperty(P.AnnPqProp, pqText)
-      // the spec re-serves the direct path under these exact models
-      Trace.note("ivf_model", ivfText)
-      Trace.note("pq_model", pqText)
-      index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, committed, ivf, pq), index))
-      val d2 = scala.concurrent.Await.result(d2F,
-        scala.concurrent.duration.Duration.Inf)
-      val i2 = index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
-      // serve from a FRESH load: committed codes + models parsed back
-      // from the table's own properties — self-contained, no retraining
-      val served = LakeTable.load(locI)
-      val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
-      val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
-      localize(P.ivfPqServe(s, served.snapshotDF(s, i2),
-        data.snapshotDF(s, d2), ivf2, pq2))
-    } finally {
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
-    }
+    val index = sc.table("annidxt-idx", P.AnnIndexDdl, P.AnnIndexSpec)
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") < 400), data))
+    // overlap the increment's data append with the Lloyd training loops
+    // (guide §2.6) — training reads only the immutable d1 snapshot
+    val d2F = sc.overlap(data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") >= 400), data)))
+    val committed = data.snapshotDF(s, d1)
+    val ivf = P.trainIvfCentroids(committed)
+    // every-23rd seeds (vs the full-corpus default 31): the committed
+    // 400-vector corpus must still yield the 16 codewords per subspace
+    // pqCode's argmin iterates over
+    val pq = P.trainPqCodebooks(committed, seedMod = 23)
+    val ivfText = P.ivfModelToString(ivf)
+    val pqText = P.pqModelToString(pq)
+    index.setProperty(P.AnnIvfProp, ivfText)
+    index.setProperty(P.AnnPqProp, pqText)
+    // the spec re-serves the direct path under these exact models
+    Trace.note("ivf_model", ivfText)
+    Trace.note("pq_model", pqText)
+    index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, committed, ivf, pq), index))
+    val d2 = d2F.join()
+    val i2 = index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
+    // serve from a FRESH load: committed codes + models parsed back
+    // from the table's own properties — self-contained, no retraining
+    val served = LakeTable.load(index.location)
+    val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
+    val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
+    localize(P.ivfPqServe(s, served.snapshotDF(s, i2),
+      data.snapshotDF(s, d2), ivf2, pq2))
   }
 
   /** `CALL rebuild_index` — the committed-ANN-index retraining procedure
@@ -1948,45 +1836,38 @@ object LakeQueries {
   // the current corpus. The TRAINED path's drift-recovery claim
   // (recall decays under a drifted increment, recovers post-rebuild)
   // is spec'd in LakeIndexSpec, rows-only by the d02 convention.
-  def d02_ann_index_rebuild(s: SparkSession, dir: String): DataFrame = {
+  def d02_ann_index_rebuild(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val P = graft.queries.PipelineQueries
-    val locD = scratch("annrbd-data")
-    val locI = scratch("annrbd-idx")
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val data = LakeTable.create(locD, "vec_id BIGINT,embedding ARRAY<FLOAT>",
+    val data = sc.table("annrbd-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
       TruncateSpec("vec_id", 100L))
-    val index = LakeTable.create(locI,
-      P.AnnIndexDdl, P.AnnIndexSpec)
-    try {
-      val d1 = data.append(LakeWriter.writeDataFiles(
-        e.filter(col("vec_id") < 400), data))
-      val committed = data.snapshotDF(s, d1)
-      val (ivf, pq) = P.annSeedModels(committed)
-      index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-      index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-      index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, committed, ivf, pq), index))
-      // the drift phase: the whole remaining corpus arrives and is
-      // encoded under the STALE frozen models — exactly what incremental
-      // maintenance does, and exactly the debt the rebuild retires
-      val d2 = data.append(LakeWriter.writeDataFiles(
-        e.filter(col("vec_id") >= 400), data))
-      index.append(LakeWriter.writeDataFiles(
-        P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
-      // the procedure under test: retrain on the full corpus, re-encode,
-      // one-commit swap
-      val swapId = rebuildAnnIndex(s, data, index, trained = false)
-      // serve from a FRESH load of the swapped index — codes and models
-      // both come from the post-rebuild commit
-      val served = LakeTable.load(locI)
-      val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
-      val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
-      localize(P.ivfPqServe(s, served.snapshotDF(s, swapId),
-        data.snapshotDF(s, d2), ivf2, pq2))
-    } finally {
-      LakeTable.drop(locD)
-      LakeTable.drop(locI)
-    }
+    val index = sc.table("annrbd-idx", P.AnnIndexDdl, P.AnnIndexSpec)
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") < 400), data))
+    val committed = data.snapshotDF(s, d1)
+    val (ivf, pq) = P.annSeedModels(committed)
+    index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
+    index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
+    index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, committed, ivf, pq), index))
+    // the drift phase: the whole remaining corpus arrives and is
+    // encoded under the STALE frozen models — exactly what incremental
+    // maintenance does, and exactly the debt the rebuild retires
+    val d2 = data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") >= 400), data))
+    index.append(LakeWriter.writeDataFiles(
+      P.ivfPqEncode(s, data.changesBetween(s, d1, d2), ivf, pq), index))
+    // the procedure under test: retrain on the full corpus, re-encode,
+    // one-commit swap
+    val swapId = rebuildAnnIndex(s, data, index, trained = false)
+    // serve from a FRESH load of the swapped index — codes and models
+    // both come from the post-rebuild commit
+    val served = LakeTable.load(index.location)
+    val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
+    val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
+    localize(P.ivfPqServe(s, served.snapshotDF(s, swapId),
+      data.snapshotDF(s, d2), ivf2, pq2))
   }
 
   // B47 — `$history` lineage audit: CREATE + two appends on main, one
@@ -2167,9 +2048,9 @@ object LakeQueries {
   // LakeTableSpec), and rollback is not an "append" snapshot, so an
   // incremental reader crossing it never re-delivers. Fully
   // reconstructable over `orders` → hash-oracled.
-  def b64_rollback(s: SparkSession, dir: String): DataFrame = {
-    val loc = scratch("rollback")
-    val table = LakeTable.create(loc,
+  def b64_rollback(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val table = sc.table("rollback",
       "o_orderkey BIGINT,o_totalprice DOUBLE,o_orderstatus STRING",
       TruncateSpec("o_orderkey", 400L))
     val orders = t(s, dir, "orders")
@@ -2185,11 +2066,9 @@ object LakeQueries {
     // the rolled-past head stays readable by snapshot id (pre-expiry)
     require(table.snapshotDF(s, s2).count() == preRollbackRows,
       "rolled-past snapshot must stay time-travelable until expiry")
-    val out = localize(table.toDF(s)
+    localize(table.toDF(s)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey"))
-    LakeTable.drop(loc)
-    out
   }
 
   // B66 — position-delete COMPACTION (`CALL rewrite_position_deletes`,

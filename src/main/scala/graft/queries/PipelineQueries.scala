@@ -2493,25 +2493,22 @@ object PipelineQueries {
   // through the DSv2 scan. Hash-oracled end to end: the shard math
   // replays in SQL and the lake round-trip must return the content
   // byte-identically.
-  def d06_pipeline_shards(s: SparkSession, dir: String): DataFrame = {
-    import graft.lake._
+  def d06_pipeline_shards(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val sharded = shardedCorpus(s, dir)
-    val loc = s"${System.getProperty("java.io.tmpdir")}/graft-d06c-${java.util.UUID.randomUUID()}"
-    LakeTable.create(loc,
+    val loc = sc.table("d06c",
       "lang STRING,doc_id BIGINT,n_tok BIGINT,cum_tok BIGINT," +
         "shard BIGINT,redacted_sha STRING",
-      TruncateSpec("shard", 1L))
-    try {
-      sharded.write.format("laketable").mode("append").save(loc)
-      val back = s.read.format("laketable").load(loc)
-        .select("lang", "shard", "doc_id", "n_tok", "cum_tok", "redacted_sha")
-        .orderBy("lang", "shard", "cum_tok", "doc_id")
-      // localize is the VERIFICATION harness (the scratch table must drop
-      // before returning), not the operator: in production the export ENDS
-      // at the committed shard table — consumers read the buckets in
-      // place, nothing corpus-sized ever reaches the driver
-      s.createDataFrame(java.util.Arrays.asList(back.collect(): _*), back.schema)
-    } finally LakeTable.drop(loc)
+      graft.lake.TruncateSpec("shard", 1L)).location
+    sharded.write.format("laketable").mode("append").save(loc)
+    val back = s.read.format("laketable").load(loc)
+      .select("lang", "shard", "doc_id", "n_tok", "cum_tok", "redacted_sha")
+      .orderBy("lang", "shard", "cum_tok", "doc_id")
+    // localize is the VERIFICATION harness (the scratch table must drop
+    // before returning), not the operator: in production the export ENDS
+    // at the committed shard table — consumers read the buckets in
+    // place, nothing corpus-sized ever reaches the driver
+    s.createDataFrame(java.util.Arrays.asList(back.collect(): _*), back.schema)
   }
 
   /** Shard token budget for [[d06_pipeline_shards]] — shared with its
@@ -2929,41 +2926,39 @@ object PipelineQueries {
   // in rank order). Scale: map-side expression chain over the corpus —
   // the 12-deep replace nest is constant work per char; the only
   // shuffle is the output sort.
-  def d04_bpe_encode(s: SparkSession, dir: String): DataFrame = {
+  def d04_bpe_encode(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     import graft.lake._
-    val loc = s"${System.getProperty("java.io.tmpdir")}/graft-d04bpe-${java.util.UUID.randomUUID()}"
-    LakeTable.create(loc, "rank INT,lhs STRING,rhs STRING",
+    val model = sc.table("d04bpe", "rank INT,lhs STRING,rhs STRING",
       TruncateSpec("rank", 1000L))
-      .setProperty(BpeMergesProp, bpeMergesToString(BpeMerges))
-    try {
-      // serve path: merges parsed back from the committed model table
-      val merges =
-        bpeMergesFromString(LakeTable.load(loc).tableMeta.properties(BpeMergesProp))
-      val vocab = ('a' to 'z').map(_.toString) ++ merges.map { case (a, b) => a + b }
-      val vocabSql = vocab.map(v => s"'$v'").mkString("array(", ", ", ")")
-      val mergeChain = merges.foldLeft("wrapped") { case (acc, (a, b)) =>
-        s"replace($acc, '<$a><$b>', '<$a$b>')"
-      }
-      t(s, dir, "documents")
-        .withColumn("norm",
-          trim(regexp_replace(lower(col("text")), "[^a-z ]", "")))
-        .filter(expr("length(replace(norm, ' ', ''))") > 0)
-        .withColumn("wrapped", expr(
-          """concat_ws('|', transform(filter(split(norm, ' '), x -> x != ''),
-            |  w -> regexp_replace(w, '(.)', '<$1>')))""".stripMargin))
-        .withColumn("merged", expr(mergeChain))
-        .withColumn("syms", expr(
-          "split(substring(merged, 2, length(merged) - 2), '>\\\\|?<')"))
-        .withColumn("ids", expr(
-          s"transform(syms, x -> array_position($vocabSql, x) - 1)"))
-        .select(col("doc_id"),
-          expr("cast(length(replace(norm, ' ', '')) as long)").as("n_chars"),
-          size(col("syms")).cast("long").as("n_tokens"),
-          expr("concat_ws(',', ids)").as("token_ids"))
-        .withColumn("compression",
-          dec4(col("n_chars").cast("double") / col("n_tokens")))
-        .orderBy("doc_id")
-    } finally LakeTable.drop(loc)
+    model.setProperty(BpeMergesProp, bpeMergesToString(BpeMerges))
+    // serve path: merges parsed back from the committed model table
+    val merges = bpeMergesFromString(
+      LakeTable.load(model.location).tableMeta.properties(BpeMergesProp))
+    val vocab = ('a' to 'z').map(_.toString) ++ merges.map { case (a, b) => a + b }
+    val vocabSql = vocab.map(v => s"'$v'").mkString("array(", ", ", ")")
+    val mergeChain = merges.foldLeft("wrapped") { case (acc, (a, b)) =>
+      s"replace($acc, '<$a><$b>', '<$a$b>')"
+    }
+    t(s, dir, "documents")
+      .withColumn("norm",
+        trim(regexp_replace(lower(col("text")), "[^a-z ]", "")))
+      .filter(expr("length(replace(norm, ' ', ''))") > 0)
+      .withColumn("wrapped", expr(
+        """concat_ws('|', transform(filter(split(norm, ' '), x -> x != ''),
+          |  w -> regexp_replace(w, '(.)', '<$1>')))""".stripMargin))
+      .withColumn("merged", expr(mergeChain))
+      .withColumn("syms", expr(
+        "split(substring(merged, 2, length(merged) - 2), '>\\\\|?<')"))
+      .withColumn("ids", expr(
+        s"transform(syms, x -> array_position($vocabSql, x) - 1)"))
+      .select(col("doc_id"),
+        expr("cast(length(replace(norm, ' ', '')) as long)").as("n_chars"),
+        size(col("syms")).cast("long").as("n_tokens"),
+        expr("concat_ws(',', ids)").as("token_ids"))
+      .withColumn("compression",
+        dec4(col("n_chars").cast("double") / col("n_tokens")))
+      .orderBy("doc_id")
   }
 
   /** Original fixture passage for the PRODUCTION-VOCAB BPE model
@@ -3127,58 +3122,56 @@ object PipelineQueries {
   // (DuckDB's binder caps expression recursion at 128), so the entry
   // stays hash-green — the greedy loop and the rank-order chain are
   // provably the same function on a valid merge list.
-  def d04_bpe_encode_full(s: SparkSession, dir: String): DataFrame = {
+  def d04_bpe_encode_full(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     import graft.lake._
-    val loc = s"${System.getProperty("java.io.tmpdir")}/graft-d04bpef-${java.util.UUID.randomUUID()}"
-    LakeTable.create(loc, "rank INT,lhs STRING,rhs STRING",
+    val model = sc.table("d04bpef", "rank INT,lhs STRING,rhs STRING",
       TruncateSpec("rank", 1000L))
-      .setProperty(BpeMergesProp, bpeMergesToString(BpeFullMerges))
-    try {
-      val merges = bpeMergesFromString(
-        LakeTable.load(loc).tableMeta.properties(BpeMergesProp))
-      val vocabIdx: Map[String, Int] =
-        (('a' to 'z').map(_.toString) ++
-          merges.map { case (a, b) => a + b }).zipWithIndex.toMap
-      val ranks: Map[(String, String), Int] = merges.zipWithIndex.toMap
-      val pairByRank = merges.toArray
-      // one copy per executor, not per task — at 1000 executors the
-      // model ships once each, and a 50k-merge table is still only ~MBs
-      val bc = s.sparkContext.broadcast((ranks, pairByRank, vocabIdx))
-      import s.implicits._
-      val enc = t(s, dir, "documents")
-        .withColumn("norm",
-          trim(regexp_replace(lower(col("text")), "[^a-z ]", "")))
-        .filter(expr("length(replace(norm, ' ', ''))") > 0)
-        .select(col("doc_id"), col("norm")).as[(Long, String)]
-        .mapPartitions { iter =>
-          val (rk, byRank, vIdx) = bc.value
-          val cache = new java.util.HashMap[String, Array[Int]]()
-          iter.map { case (docId, norm) =>
-            var nChars = 0L
-            var nTok = 0L
-            val sb = new java.lang.StringBuilder
-            norm.split(' ').foreach { w =>
-              if (w.nonEmpty) {
-                nChars += w.length
-                val ids = cache.computeIfAbsent(w,
-                  _ => bpeEncodeWord(w, rk, byRank).map(vIdx).toArray)
-                var i = 0
-                while (i < ids.length) {
-                  if (sb.length > 0) sb.append(',')
-                  sb.append(ids(i))
-                  i += 1
-                }
-                nTok += ids.length
+    model.setProperty(BpeMergesProp, bpeMergesToString(BpeFullMerges))
+    val merges = bpeMergesFromString(
+      LakeTable.load(model.location).tableMeta.properties(BpeMergesProp))
+    val vocabIdx: Map[String, Int] =
+      (('a' to 'z').map(_.toString) ++
+        merges.map { case (a, b) => a + b }).zipWithIndex.toMap
+    val ranks: Map[(String, String), Int] = merges.zipWithIndex.toMap
+    val pairByRank = merges.toArray
+    // one copy per executor, not per task — at 1000 executors the
+    // model ships once each, and a 50k-merge table is still only ~MBs
+    val bc = s.sparkContext.broadcast((ranks, pairByRank, vocabIdx))
+    import s.implicits._
+    val enc = t(s, dir, "documents")
+      .withColumn("norm",
+        trim(regexp_replace(lower(col("text")), "[^a-z ]", "")))
+      .filter(expr("length(replace(norm, ' ', ''))") > 0)
+      .select(col("doc_id"), col("norm")).as[(Long, String)]
+      .mapPartitions { iter =>
+        val (rk, byRank, vIdx) = bc.value
+        val cache = new java.util.HashMap[String, Array[Int]]()
+        iter.map { case (docId, norm) =>
+          var nChars = 0L
+          var nTok = 0L
+          val sb = new java.lang.StringBuilder
+          norm.split(' ').foreach { w =>
+            if (w.nonEmpty) {
+              nChars += w.length
+              val ids = cache.computeIfAbsent(w,
+                _ => bpeEncodeWord(w, rk, byRank).map(vIdx).toArray)
+              var i = 0
+              while (i < ids.length) {
+                if (sb.length > 0) sb.append(',')
+                sb.append(ids(i))
+                i += 1
               }
+              nTok += ids.length
             }
-            BpeEncoded(docId, nChars, nTok, sb.toString)
           }
+          BpeEncoded(docId, nChars, nTok, sb.toString)
         }
-      enc.toDF()
-        .withColumn("compression",
-          dec4(col("n_chars").cast("double") / col("n_tokens")))
-        .orderBy("doc_id")
-    } finally LakeTable.drop(loc)
+      }
+    enc.toDF()
+      .withColumn("compression",
+        dec4(col("n_chars").cast("double") / col("n_tokens")))
+      .orderBy("doc_id")
   }
 
   // D4h — within-doc repetition ratio (the Gopher/RefinedWeb repetition
@@ -3345,11 +3338,9 @@ object PipelineQueries {
     // full session parallelism. Results are partitioning-invariant (all
     // per-round ops aggregate or join by key).
     val nEdges = edges.count()
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevParts = session.conf.get(spKey)
-    session.conf.set(spKey, math.max(1L, math.min(
+    val width = math.max(1L, math.min(
       session.sessionState.conf.numShufflePartitions.toLong,
-      (nEdges + 1999999L) / 2000000L)).toInt.toString)
+      (nEdges + 1999999L) / 2000000L))
     // init fuses the first propagation: label₀ = min(id, min neighbor) —
     // one groupBy replaces the distinct AND round 1's neighbor-min join,
     // shaving a full fixpoint round (each round is a multi-stage job,
@@ -3359,7 +3350,8 @@ object PipelineQueries {
     var pinned: Option[DataFrame] = None
     var changed = 1L
     var rounds = 0
-    try while (changed > 0) {
+    graft.SessionConf.withConf(session,
+        "spark.sql.shuffle.partitions" -> width.toString)(while (changed > 0) {
       if (rounds >= maxRounds) {
         pinned.foreach(_.unpersist())
         edges.unpersist()
@@ -3405,7 +3397,7 @@ object PipelineQueries {
       val labels = jumped.select(col("id"), col("comp"))
       comp = session.createDataFrame(labels.rdd, labels.schema)
       rounds += 1
-    } finally session.conf.set(spKey, prevParts)
+    })
     val out = Scratch.persist(comp, "cc")
     pinned.foreach(_.unpersist())
     edges.unpersist()

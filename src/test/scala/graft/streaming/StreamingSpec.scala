@@ -591,4 +591,23 @@ class StreamingSpec extends SparkSpec {
     table.refresh()
     assert(table.toDF(spark).count() == 10 + 11 + 12) // dupe deduped
   }
+
+  test("memory-sink entries drop their sink view: no m<uuid> view (and its " +
+      "rows) outlives the call") {
+    def sinkViews(): Set[String] = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.matches("m[0-9a-f]{32}"))
+      .map(_.name).toSet
+    val dir = tmpDir("sinkviews")
+    spark.range(40).selectExpr("id AS event_id", "id % 3 AS user_id",
+        "IF(id % 2 = 0, 'click', 'view') AS event_type",
+        "CAST(id AS DOUBLE) AS value", "timestamp_seconds(1700000000 + id * 60) AS ts")
+      .write.parquet(s"$dir/events.parquet")
+    val before = sinkViews()
+    // runStream's sink, and the two entries that start their own
+    assert(StreamingQueries.c10_stream_tumbling(spark, dir).count() > 0)
+    assert(StreamingQueries.c13_watermark_latedrop(spark, dir).count() > 0)
+    assert(StreamingQueries.c18_stream_stream_join(spark, dir).count() > 0)
+    assert(sinkViews() -- before == Set.empty,
+      s"sink views left behind: ${sinkViews() -- before}")
+  }
 }

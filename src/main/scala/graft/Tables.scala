@@ -84,10 +84,6 @@ object Tables {
     else raw
   }
 
-  /** Register every testdata table as a temp view (for spark.sql queries). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
-
   /** Round to 4 dp via DECIMAL(28,4), emit as DOUBLE — the oracle hashing
     * convention. The decimal hop makes both engines agree on the rounded
     * value exactly; the final double cast serializes identically on both

@@ -1,13 +1,18 @@
 package graft.lake
 
-import java.util.UUID
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.connector.write.WriterCommitMessage
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import scala.jdk.CollectionConverters._
 
@@ -71,11 +76,13 @@ object LakeWriter {
 
   /** Write a DataFrame into the table's data layout (A5–A7): rows land in
     * `data/<col>_trunc=<bucket>/<uuid>.parquet` directories keyed by the
-    * truncate transform; returns DataFileMeta with footer-harvested stats.
-    * `filesPerPartition` > 1 emulates the reference's multi-file batches
-    * (A9, Writer.java:126-137).
-    */
-  /** `splitBy` (optional) appends caller-computed columns to the write-
+    * truncate transform; returns the files' DataFileMeta, uncommitted.
+    * The tasks write through [[dsv2.LakeDataWriter]] straight to the final
+    * paths and take stats from their own in-memory footers, the shape of
+    * the reference's writers (Writer.java:84-97). `filesPerPartition` > 1
+    * emulates the reference's multi-file batches (A9, Writer.java:126-137).
+    *
+    * `splitBy` (optional) appends caller-computed columns to the write-
     * clustering key, letting ONE bucket's rows spread over several write
     * tasks. Contract: each splitBy column must be a MONOTONE COARSENING of
     * the leading sort key (e.g. `shiftright(thash, 61)` when sorting by
@@ -103,131 +110,96 @@ object LakeWriter {
         s"${expected.mkString(",")} — align names to the current schema")
     val spark = df.sparkSession
     val spec = table.spec
-    val conf = LakeTable.hadoopConf
-    val loc = new Path(table.location)
-    val fs = loc.getFileSystem(conf)
-    val tmpDir = new Path(loc, s"_tmp-write-${UUID.randomUUID()}")
-
-    val withPart = df.withColumn("__part",
-      col(spec.column) - pmod(col(spec.column), lit(spec.widthMicros)))
-    val repartitioned =
-      if (filesPerPartition <= 1)
-        // EXPLICIT partition count: AQE treats a keyless
-        // REPARTITION_BY_COL exchange as coalescible and can fold all
-        // populated buckets into ~one task, serializing the per-bucket
-        // sort + parquet encode that follows. Routing is still by
-        // __part alone, so each bucket lands whole in exactly one task
-        // either way — the file count and the per-bucket sort-column
-        // disjointness (footer-skip contract) are unchanged; only the
-        // write-side parallelism is.
-        // r16 adjudication of the r15 pin's suspected tiny-write tax
-        // (VERDICT item 2): same-JVM A/B of this explicit count vs an
-        // AQE-coalescible repartition(col) across d02_ann_indexed_trained,
-        // d03_minhash_index and d01_substring_index read within noise
-        // (3.48 vs 3.41-3.71 s, 2.65 vs 2.58-3.08, 3.57 vs 3.32-3.51) —
-        // the r15 driver regressions were epoch weather, not the pin.
-        // The explicit count stays: it is AQE-proof for the expansion-
-        // built index writes that measurably need the parallelism.
-        withPart.repartition(
-          spark.sessionState.conf.numShufflePartitions,
-          (col("__part") +: splitBy): _*)
-      else withPart.repartition(filesPerPartition, col("__part"),
-        pmod(col("message_id"), lit(filesPerPartition)))
-    // clustering: sort inside each partition task so the writer's
-    // maxRecordsPerFile splits produce files with DISJOINT sort-column
-    // ranges (each file then prunes independently via footer stats);
-    // sortExprs carries computed keys (e.g. a z-order curve) that must
-    // order the rows without being written to the files
-    val keys = sortExprs ++ sortBy.map(col)
-    val clustered =
-      if (keys.isEmpty) repartitioned
-      else repartitioned.sortWithinPartitions((col("__part") +: keys): _*)
-    val writer = clustered.write.partitionBy("__part")
-    val sized =
-      if (maxRecordsPerFile > 0)
-        writer.option("maxRecordsPerFile", maxRecordsPerFile)
-      else writer
-    // declared bloom columns survive rewrites/compaction: the per-column
-    // parquet option rides the datasource write's hadoop conf
-    val bloomed = graft.lake.dsv2.LakeDataWriter.bloomColumnsFor(table)
-      .foldLeft(sized)((w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    // INT64 µs timestamps (not Spark's INT96 default): footer stats stay
-    // long-typed and the DSv2 Group reader consumes them directly. Scoped
-    // to the (eager) write so user writes in the same session keep their
-    // configured format; concurrent writes on other driver threads share
-    // the scope (SessionConf.withConf).
-    graft.SessionConf.withConf(spark,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
-      bloomed.parquet(tmpDir.toString))
-
-    // per-file move + footer harvest through a fixed I/O pool — the
-    // reference hides per-file storage latency behind 8-thread pools
-    // (FileBasedBookkeeper.java:28-29,130-150); on object stores each
-    // rename/footer round-trip is milliseconds, so serializing them makes
-    // the publish step O(files) in LATENCY, not just work
-    val moves = for {
-      partDir <- fs.listStatus(tmpDir).toSeq if partDir.isDirectory
-      partVal = partDir.getPath.getName.stripPrefix("__part=").toLong
-      f <- fs.listStatus(partDir.getPath).toSeq
-      if f.getPath.getName.endsWith(".parquet")
-    } yield (f.getPath, partVal)
-    moves.foreach { case (_, pv) =>
-      fs.mkdirs(new Path(new Path(loc, LakeFormat.DataDir), spec.dirName(pv)))
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, moves.size)))
-    try {
-      val futures = moves.map { case (src, partVal) =>
-        pool.submit(new java.util.concurrent.Callable[DataFileMeta] {
-          override def call(): DataFileMeta = {
-            val destDir = new Path(new Path(loc, LakeFormat.DataDir),
-              spec.dirName(partVal))
-            val dest = new Path(destDir, s"${UUID.randomUUID()}.parquet")
-            // FileSystem instances are cached per-scheme and thread-safe
-            if (!fs.rename(src, dest))
-              throw new java.io.IOException(s"move failed: $src -> $dest")
-            footerMeta(conf, dest, partVal)
+    // a one-bucket local batch (the reference's writer, perfbench's
+    // ingest batch) already lands whole in one task: write it there, with
+    // no exchange and no sort
+    val plain = filesPerPartition <= 1 && sortBy.isEmpty &&
+      sortExprs.isEmpty && splitBy.isEmpty
+    val (qe, rdd) =
+      if (plain && oneBucket(df, spec))
+        (df.queryExecution, df.queryExecution.toRdd.coalesce(1))
+      else {
+        val withPart = df.withColumn("__part",
+          col(spec.column) - pmod(col(spec.column), lit(spec.widthMicros)))
+        val repartitioned =
+          if (filesPerPartition <= 1)
+            // EXPLICIT partition count: AQE treats a keyless
+            // REPARTITION_BY_COL exchange as coalescible and can fold all
+            // populated buckets into ~one task, serializing the per-bucket
+            // sort + parquet encode that follows. Routing is still by
+            // __part alone, so each bucket lands whole in exactly one task
+            // either way — the file count and the per-bucket sort-column
+            // disjointness (footer-skip contract) are unchanged; only the
+            // write-side parallelism is. (r16: same-JVM A/B against an
+            // AQE-coalescible repartition(col) read within noise on three
+            // small index writes; the count stays AQE-proof for the
+            // expansion-built index writes that need the parallelism.)
+            withPart.repartition(
+              spark.sessionState.conf.numShufflePartitions,
+              (col("__part") +: splitBy): _*)
+          else withPart.repartition(filesPerPartition, col("__part"),
+            pmod(col("message_id"), lit(filesPerPartition)))
+        // bucket first, so each task visits its buckets one after another
+        // and holds one open file; then the clustering keys, so the
+        // maxRecordsPerFile rolls of a bucket hold DISJOINT sort-column
+        // ranges (each file prunes independently via footer stats).
+        // sortExprs carries computed keys (e.g. a z-order curve) that must
+        // order the rows without being written to the files
+        val clustered = repartitioned.sortWithinPartitions(
+          (col("__part") +: (sortExprs ++ sortBy.map(col))): _*).drop("__part")
+        (clustered.queryExecution, clustered.queryExecution.toRdd)
+      }
+    val factory = new dsv2.LakeWriterFactory(table.location, df.schema.toDDL,
+      spec.column, spec.widthMicros, dsv2.LakeDataWriter.targetFor(table),
+      dsv2.LakeDataWriter.bloomColumnsFor(table), sequentialBuckets = true,
+      maxRecordsPerFile,
+      spark.sessionState.newHadoopConf().getValByRegex("^parquet\\.").asScala.toMap)
+    val written = new Array[Seq[DataFileMeta]](rdd.getNumPartitions)
+    try SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
+      spark.sparkContext.runJob(rdd,
+        (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+          val msg = DataWritingSparkTask.run(factory, ctx, rows, false, Map.empty)
+            .writerCommitMessage
+          // killed while writing (a sibling task failed the job): the
+          // driver drops a killed task's result, so drop its files here
+          if (ctx.isInterrupted()) {
+            dsv2.LakeWriteCommit.deleteAll(dsv2.LakeWriteCommit.collect(Array(msg)))
+            throw new TaskKilledException("write job cancelled")
           }
-        })
-      }
-      // await EVERY future before inspecting outcomes, so a failure never
-      // leaves in-flight moves racing the cleanup below
-      val results: Seq[Either[Throwable, DataFileMeta]] = futures.map { f =>
-        try Right(f.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
-          case e: InterruptedException => Left(e)
-        }
-      }
-      results.collectFirst { case Left(e) => e }.foreach { e =>
-        // abort: files already moved to final paths are referenced by no
-        // manifest (the commit only happens after this method returns) —
-        // delete them so a failed publish leaves nothing behind
-        results.foreach {
-          case Right(m) =>
-            try fs.delete(new Path(m.path), false)
-            catch { case _: java.io.IOException => }
-          case _ => ()
-        }
-        throw new java.io.IOException("data-file publish failed; staged files removed", e)
-      }
-      // stamp the schema AND partition-spec vintages the rows were WRITTEN
-      // under (the table's current defs at write time): a rename or width
-      // change committed between this write and its commit still resolves
-      // these files' physical names / bucket widths correctly
-      val sid = table.currentSchemaId
-      val pid = table.currentSpecId
-      results.collect { case Right(m) =>
-        if (sid == 0 && pid == 0) m
-        else m.copy(schemaId = sid, specId = pid) }
-    } finally {
-      pool.shutdown()
-      // staging dir cleanup must run on BOTH paths — a failed future
-      // otherwise leaks the whole temp write
-      try fs.delete(tmpDir, true) catch { case _: java.io.IOException => }
+          msg
+        },
+        (i: Int, msg: WriterCommitMessage) =>
+          written(i) = dsv2.LakeWriteCommit.collect(Array(msg)))
+    } catch { case e: Throwable =>
+      // a failed or killed task removed its own files; the finished tasks'
+      // files are referenced by no manifest yet — remove them too
+      dsv2.LakeWriteCommit.deleteAll(written.toSeq.filter(_ != null).flatten)
+      throw e
     }
+    // stamp the schema AND partition-spec vintages the rows were WRITTEN
+    // under (the table's current defs at write time): a rename or width
+    // change committed between this write and its commit still resolves
+    // these files' physical names / bucket widths correctly
+    dsv2.LakeWriteCommit.stamp(written.toSeq.flatten,
+      table.currentSchemaId, table.currentSpecId)
   }
+
+  /** Does `df` plan to an in-memory relation whose rows all fall in at
+    * most one bucket? Exact, on the driver, where those rows already are.
+    * A NULL partition value counts in no bucket: the writer rejects it
+    * whichever way the rows are routed. Plans that read anything but
+    * local rows are not optimized here.
+    */
+  private def oneBucket(df: DataFrame, spec: TruncateSpec): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      (df.queryExecution.optimizedPlan match {
+        case l: LocalRelation =>
+          val i = l.output.indexWhere(_.name == spec.column)
+          i >= 0 && l.output(i).dataType == LongType &&
+            l.data.iterator.collect { case r if !r.isNullAt(i) => spec(r.getLong(i)) }
+              .distinct.take(2).size <= 1
+        case _ => false
+      })
 
   /** Parquet footer → DataFileMeta (A18): row count plus per-column stats
     * (long min/max, truncated ASCII string min/max, null/value counts),

@@ -2,10 +2,10 @@ package graft.lake.dsv2
 
 import java.util.UUID
 
-import graft.lake.{DataFileMeta, LakeTable, LakeWriter, TruncateSpec}
+import graft.lake.{bestEffort, DataFileMeta, LakeTable, LakeWriter, TruncateSpec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.catalyst.InternalRow
@@ -197,7 +197,7 @@ final class LakeWriteBuilder(location: String, info: LogicalWriteInfo,
   }
 }
 
-private[dsv2] object LakeWriteCommit {
+private[lake] object LakeWriteCommit {
   def collect(messages: Array[WriterCommitMessage]): Seq[DataFileMeta] =
     messages.toSeq.collect {
       case LakeCommitMessage(files) => files
@@ -216,19 +216,15 @@ private[dsv2] object LakeWriteCommit {
     if (schemaId == 0 && specId == 0) files
     else files.map(_.copy(schemaId = schemaId, specId = specId))
 
-  def deleteAll(files: Seq[DataFileMeta]): Unit =
-    files.foreach { f =>
-      val p = new Path(f.path)
-      try p.getFileSystem(LakeTable.hadoopConf).delete(p, false)
-      catch { case _: java.io.IOException => }
-    }
+  def deleteAll(files: Seq[DataFileMeta]): Unit = files.foreach(f => delete(f.path))
 
   def deleteDeleteFiles(dels: Seq[graft.lake.DeleteFileMeta]): Unit =
-    dels.foreach { d =>
-      val p = new Path(d.path)
-      try p.getFileSystem(LakeTable.hadoopConf).delete(p, false)
-      catch { case _: java.io.IOException => }
-    }
+    dels.foreach(d => delete(d.path))
+
+  private def delete(path: String): Unit = {
+    val p = new Path(path)
+    bestEffort("delete", p)(p.getFileSystem(LakeTable.hadoopConf).delete(p, false))
+  }
 }
 
 final case class LakeCommitMessage(files: Seq[DataFileMeta])
@@ -354,13 +350,15 @@ final class LakeWriterFactory(location: String, schemaDdl: String,
     specColumn: String, specWidth: Long,
     targetBytes: Long = LakeDataWriter.DefaultTargetBytes,
     bloomColumns: Seq[String] = Nil,
-    sequentialBuckets: Boolean = false)
+    sequentialBuckets: Boolean = false,
+    maxRecordsPerFile: Long = 0L,
+    parquetConf: Map[String, String] = Map.empty)
   extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(location, StructType.fromDDL(schemaDdl),
       TruncateSpec(specColumn, specWidth), targetBytes, bloomColumns,
-      sequentialBuckets)
+      sequentialBuckets, maxRecordsPerFile, parquetConf)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -394,9 +392,9 @@ object LakeDataWriter {
 /** One executor task's writer: routes each row to a per-bucket parquet
   * writer (`data/<col>_trunc=<bucket>/<uuid>.parquet`), encoding through
   * Spark's own ParquetWriteSupport — the identical binary layout (INT64 µs
-  * timestamps, footer stats) the table's write path and vectorized reader
-  * already speak. Files are invisible until the driver's manifest commit,
-  * so direct-to-final-path writes are safe; abort deletes them.
+  * timestamps, footer stats) the table's vectorized reader already speaks.
+  * Files are invisible until the driver's manifest commit, so
+  * direct-to-final-path writes are safe; abort deletes them.
   *
   * Rolling: once a file's in-flight size crosses `targetBytes`
   * (write.target-file-size-bytes, default 512 MB) it closes and a fresh
@@ -404,19 +402,27 @@ object LakeDataWriter {
   * writes ONE multi-GB file that no byte-range split can decode in
   * parallel row groups fairly, and compaction bin-packing has nothing to
   * work with. Size is polled every [[LakeDataWriter.RollCheckRows]] rows
-  * (getDataSize walks column buffers — too hot for per-row).
+  * of a file (getDataSize walks column buffers — too hot for per-row).
+  * `maxRecordsPerFile` > 0 also rolls a file at that many rows.
+  *
+  * `parquetConf` carries `parquet.*` settings from the driver's session
+  * (row-group and page sizes, dictionary, writer version); they apply as
+  * Spark's file-source writer applies them.
   */
 final class LakeDataWriter(location: String, schema: StructType,
     spec: TruncateSpec,
     targetBytes: Long = LakeDataWriter.DefaultTargetBytes,
     bloomColumns: Seq[String] = Nil,
-    sequentialBuckets: Boolean = false)
+    sequentialBuckets: Boolean = false,
+    maxRecordsPerFile: Long = 0L,
+    parquetConf: Map[String, String] = Map.empty)
   extends DataWriter[InternalRow] {
 
   private val partIdx = schema.fieldIndex(spec.column)
   private val conf: Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val c = new Configuration(LakeTable.hadoopConf)
+    parquetConf.foreach { case (k, v) => c.set(k, v) }
     org.apache.spark.sql.execution.datasources.parquet
       .ParquetWriteSupport.setSchema(schema, c)
     c.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
@@ -425,12 +431,13 @@ final class LakeDataWriter(location: String, schema: StructType,
     c.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
     c
   }
-  private val writers =
-    scala.collection.mutable.LinkedHashMap.empty[Long, (Path, ParquetWriter[InternalRow])]
+
+  private final class OpenFile(val path: Path, val writer: ParquetWriter[InternalRow]) {
+    var rows = 0L
+  }
+  private val open = scala.collection.mutable.LinkedHashMap.empty[Long, OpenFile]
   // files already rolled closed this task, in commit-message order
   private val rolled = Seq.newBuilder[DataFileMeta]
-  private val rowsSinceCheck =
-    scala.collection.mutable.LinkedHashMap.empty[Long, Int]
 
   private final class Builder(path: Path)
     extends ParquetWriter.Builder[InternalRow, Builder](path) {
@@ -440,21 +447,25 @@ final class LakeDataWriter(location: String, schema: StructType,
         .asInstanceOf[WriteSupport[InternalRow]]
   }
 
-  private def writerFor(bucket: Long): ParquetWriter[InternalRow] =
-    writers.getOrElseUpdate(bucket, {
-      val dir = new Path(new Path(location, graft.lake.LakeFormat.DataDir),
-        spec.dirName(bucket))
-      dir.getFileSystem(conf).mkdirs(dir)
-      val path = new Path(dir, s"${UUID.randomUUID()}.parquet")
-      val b = new Builder(path)
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-      // declared bloom columns: the filter bytes land in THIS file's
-      // footer region; readers' row-group filtering consults them for
-      // pushed equality predicates with no extra wiring
-      bloomColumns.foreach(c => b.withBloomFilterEnabled(c, true))
-      (path, b.build())
-    })._2
+  // no mkdirs: a FileSystem's create makes the missing parents itself,
+  // and on an object store a directory marker is one more request
+  private def openFile(bucket: Long): OpenFile = {
+    val path = new Path(new Path(new Path(location, graft.lake.LakeFormat.DataDir),
+      spec.dirName(bucket)), s"${UUID.randomUUID()}.parquet")
+    val b = new Builder(path)
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(ParquetOutputFormat.getPageSize(conf))
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+      .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+    // declared bloom columns: the filter bytes land in THIS file's
+    // footer region; readers' row-group filtering consults them for
+    // pushed equality predicates with no extra wiring
+    bloomColumns.foreach(c => b.withBloomFilterEnabled(c, true))
+    new OpenFile(path, b.build())
+  }
 
   override def write(row: InternalRow): Unit = {
     if (row.isNullAt(partIdx))
@@ -465,23 +476,19 @@ final class LakeDataWriter(location: String, schema: StructType,
     // means the previous one is FINISHED — close it now instead of holding
     // one open (row-group-buffering) parquet writer per bucket for the
     // task's whole lifetime
-    if (sequentialBuckets && !writers.contains(bucket) && writers.nonEmpty) {
-      writers.foreach { case (b, (path, w)) =>
-        rolled += closedMeta(path, w, b)
-      }
-      writers.clear()
-      rowsSinceCheck.clear()
+    if (sequentialBuckets && !open.contains(bucket)) {
+      open.foreach { case (b, f) => rolled += closedMeta(f, b) }
+      open.clear()
     }
-    writerFor(bucket).write(row)
-    val n = rowsSinceCheck.getOrElse(bucket, 0) + 1
-    if (n >= LakeDataWriter.RollCheckRows) {
-      rowsSinceCheck(bucket) = 0
-      val (path, w) = writers(bucket)
-      if (w.getDataSize >= targetBytes) {
-        rolled += closedMeta(path, w, bucket)
-        writers.remove(bucket)
-      }
-    } else rowsSinceCheck(bucket) = n
+    val f = open.getOrElseUpdate(bucket, openFile(bucket))
+    f.writer.write(row)
+    f.rows += 1
+    if ((maxRecordsPerFile > 0 && f.rows >= maxRecordsPerFile) ||
+        (f.rows % LakeDataWriter.RollCheckRows == 0 &&
+          f.writer.getDataSize >= targetBytes)) {
+      rolled += closedMeta(f, bucket)
+      open.remove(bucket)
+    }
   }
 
   /** Close the writer and harvest stats from ITS OWN in-memory footer
@@ -490,37 +497,28 @@ final class LakeDataWriter(location: String, schema: StructType,
     * remains for the exact on-disk size (footer+magic bytes are not in
     * `getDataSize`), a metadata round-trip, not a data read.
     */
-  private def closedMeta(path: Path, w: ParquetWriter[InternalRow],
-      bucket: Long): DataFileMeta = {
-    w.close()
-    LakeWriter.metaFromFooter(w.getFooter, path,
-      path.getFileSystem(conf).getFileStatus(path).getLen, bucket)
+  private def closedMeta(f: OpenFile, bucket: Long): DataFileMeta = {
+    f.writer.close()
+    LakeWriter.metaFromFooter(f.writer.getFooter, f.path,
+      f.path.getFileSystem(conf).getFileStatus(f.path).getLen, bucket)
   }
 
   override def commit(): WriterCommitMessage = {
-    val metas = writers.toSeq.map { case (bucket, (path, w)) =>
-      closedMeta(path, w, bucket)
-    }
-    writers.clear()
+    val metas = open.toSeq.map { case (bucket, f) => closedMeta(f, bucket) }
+    open.clear()
     LakeCommitMessage(rolled.result() ++ metas)
   }
 
   override def abort(): Unit = {
-    writers.values.foreach { case (path, w) =>
-      try w.close() catch { case _: java.io.IOException => }
-      try path.getFileSystem(conf).delete(path, false)
-      catch { case _: java.io.IOException => }
-    }
-    writers.clear()
-    rolled.result().foreach { f =>
-      try new Path(f.path).getFileSystem(conf).delete(new Path(f.path), false)
-      catch { case _: java.io.IOException => }
-    }
+    val paths = open.values.map { f =>
+      bestEffort("close", f.path)(f.writer.close())
+      f.path
+    } ++ rolled.result().map(m => new Path(m.path))
+    open.clear()
     rolled.clear()
+    paths.foreach(p => bestEffort("delete", p)(p.getFileSystem(conf).delete(p, false)))
   }
 
   override def close(): Unit =
-    writers.values.foreach { case (_, w) =>
-      try w.close() catch { case _: java.io.IOException => }
-    }
+    open.values.foreach(f => bestEffort("close", f.path)(f.writer.close()))
 }

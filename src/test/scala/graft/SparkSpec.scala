@@ -10,14 +10,28 @@ trait SparkSpec extends AnyFunSuite {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir", SparkSpec.warehouse)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def tmpDir(prefix: String): String = {
+  def tmpDir(prefix: String): String = SparkSpec.scratchDir(prefix)
+}
+
+/** Scratch directories of the test JVM: each is deleted, with everything
+  * in it, when the JVM exits (`deleteOnExit` removes only empty ones).
+  */
+object SparkSpec {
+  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))))
+
+  def scratchDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
+    dirs.add(d)
     d.toString
   }
+
+  /** One warehouse per JVM, however many suites build the session. */
+  lazy val warehouse: String = scratchDir("graft-warehouse")
 }

@@ -1573,7 +1573,7 @@ final class LakeTable private (val location: String,
               dataPaths = r.getSeq[String](4))
           }.toSeq
     } finally {
-      try fs.delete(tmp, true) catch { case _: java.io.IOException => }
+      bestEffort("delete", tmp)(fs.delete(tmp, true))
     }
   }
 

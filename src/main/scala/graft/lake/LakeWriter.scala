@@ -150,10 +150,10 @@ object LakeWriter {
         (clustered.queryExecution, clustered.queryExecution.toRdd)
       }
     val factory = new dsv2.LakeWriterFactory(table.location, df.schema.toDDL,
-      spec.column, spec.widthMicros, dsv2.LakeDataWriter.targetFor(table),
+      spec.column, spec.widthMicros, dsv2.LakeDataWriter.sessionParquetConf(spark),
+      dsv2.LakeDataWriter.targetFor(table),
       dsv2.LakeDataWriter.bloomColumnsFor(table), sequentialBuckets = true,
-      maxRecordsPerFile,
-      spark.sessionState.newHadoopConf().getValByRegex("^parquet\\.").asScala.toMap)
+      maxRecordsPerFile = maxRecordsPerFile)
     val written = new Array[Seq[DataFileMeta]](rdd.getNumPartitions)
     try SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
       spark.sparkContext.runJob(rdd,

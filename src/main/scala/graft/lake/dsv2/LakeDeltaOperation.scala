@@ -2,7 +2,7 @@ package graft.lake.dsv2
 
 import java.util.UUID
 
-import graft.lake.{DataFileMeta, DeleteFileMeta, LakeFormat, LakeTable, TruncateSpec}
+import graft.lake.{bestEffort, DataFileMeta, DeleteFileMeta, LakeFormat, LakeTable, TruncateSpec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
@@ -114,7 +114,8 @@ final class LakeDeltaBatchWrite(location: String,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
     new LakeDeltaWriterFactory(location, writeSchemaDdl,
-      writeSpec.column, writeSpec.widthMicros)
+      writeSpec.column, writeSpec.widthMicros, LakeDataWriter.sessionParquetConf(
+        org.apache.spark.sql.SparkSession.active))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val (data, dels) = messages.foldLeft(
@@ -131,22 +132,19 @@ final class LakeDeltaBatchWrite(location: String,
     messages.foreach {
       case LakeDeltaCommitMessage(data, dels) =>
         LakeWriteCommit.deleteAll(data)
-        dels.foreach { d =>
-          val p = new Path(d.path)
-          try p.getFileSystem(LakeTable.hadoopConf).delete(p, false)
-          catch { case _: java.io.IOException => }
-        }
+        LakeWriteCommit.deleteDeleteFiles(dels)
       case _ =>
     }
 }
 
 final class LakeDeltaWriterFactory(location: String, schemaDdl: String,
-    specColumn: String, specWidth: Long) extends DeltaWriterFactory {
+    specColumn: String, specWidth: Long,
+    parquetConf: Map[String, String]) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new LakeDeltaWriter(location, StructType.fromDDL(schemaDdl),
-      TruncateSpec(specColumn, specWidth))
+      TruncateSpec(specColumn, specWidth), parquetConf)
 }
 
 /** One task's delta writer: inserts ride the ordinary per-bucket data
@@ -155,9 +153,10 @@ final class LakeDeltaWriterFactory(location: String, schemaDdl: String,
   * lazily so insert-only tasks write no delete file (and vice versa).
   */
 final class LakeDeltaWriter(location: String, schema: StructType,
-    spec: TruncateSpec) extends DeltaWriter[InternalRow] {
+    spec: TruncateSpec, parquetConf: Map[String, String])
+  extends DeltaWriter[InternalRow] {
 
-  private val data = new LakeDataWriter(location, schema, spec)
+  private val data = new LakeDataWriter(location, schema, spec, parquetConf)
   private var dels: LakeDeletePositionsWriter = _
 
   override def insert(row: InternalRow): Unit = data.write(row)
@@ -266,13 +265,11 @@ final class LakeDeletePositionsWriter(location: String) {
   }
 
   def abortAndDelete(): Unit = {
-    try writer.close() catch { case _: java.io.IOException => }
-    try path.getFileSystem(conf).delete(path, false)
-    catch { case _: java.io.IOException => }
+    bestEffort("close", path)(writer.close())
+    bestEffort("delete", path)(path.getFileSystem(conf).delete(path, false))
   }
 
-  def close(): Unit =
-    try writer.close() catch { case _: java.io.IOException => }
+  def close(): Unit = bestEffort("close", path)(writer.close())
 }
 
 object LakeDeletePositionsWriter {
@@ -369,11 +366,9 @@ final class LakeEqualityDeleteWriter(location: String,
   }
 
   def abortAndDelete(): Unit = {
-    try writer.close() catch { case _: java.io.IOException => }
-    try path.getFileSystem(conf).delete(path, false)
-    catch { case _: java.io.IOException => }
+    bestEffort("close", path)(writer.close())
+    bestEffort("delete", path)(path.getFileSystem(conf).delete(path, false))
   }
 
-  def close(): Unit =
-    try writer.close() catch { case _: java.io.IOException => }
+  def close(): Unit = bestEffort("close", path)(writer.close())
 }

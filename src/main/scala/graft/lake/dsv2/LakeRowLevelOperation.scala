@@ -135,7 +135,8 @@ final class LakeReplaceDataWrite(location: String,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LakeCoWWriterFactory(
       new LakeWriterFactory(location, schema.toDDL, writeSpec.column,
-        writeSpec.widthMicros, targetBytes),
+        writeSpec.widthMicros, LakeDataWriter.sessionParquetConf(
+          org.apache.spark.sql.SparkSession.active), targetBytes),
       schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

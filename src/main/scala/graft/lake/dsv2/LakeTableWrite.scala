@@ -244,7 +244,9 @@ final class LakeBatchWrite(location: String, schema: StructType,
   }
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LakeWriterFactory(location, schema.toDDL, writeSpec.column,
-      writeSpec.widthMicros, targetBytes, bloomCols, sequentialBuckets)
+      writeSpec.widthMicros, LakeDataWriter.sessionParquetConf(
+        org.apache.spark.sql.SparkSession.active),
+      targetBytes, bloomCols, sequentialBuckets)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = LakeWriteCommit.stamp(
       LakeWriteCommit.collect(messages), writeSchemaId, writeSpecId)
@@ -275,13 +277,16 @@ final class LakeStreamingWrite(location: String, schema: StructType,
       LakeDataWriter.bloomColumnsFor(t))
   }
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val parquetConf = LakeDataWriter.sessionParquetConf(
+      org.apache.spark.sql.SparkSession.active)
     if (upsertKeys.isEmpty)
       new LakeWriterFactory(location, schema.toDDL, writeSpec.column,
-        writeSpec.widthMicros, targetBytes, bloomCols)
+        writeSpec.widthMicros, parquetConf, targetBytes, bloomCols)
     else
       new LakeUpsertWriterFactory(location, schema.toDDL, writeSpec.column,
-        writeSpec.widthMicros, upsertKeys)
+        writeSpec.widthMicros, upsertKeys, parquetConf)
+  }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val files = LakeWriteCommit.stamp(
@@ -306,13 +311,15 @@ final class LakeStreamingWrite(location: String, schema: StructType,
   * data writer AND records its key in the task's equality-delete file.
   */
 final class LakeUpsertWriterFactory(location: String, schemaDdl: String,
-    specColumn: String, specWidth: Long, keys: Seq[String])
+    specColumn: String, specWidth: Long, keys: Seq[String],
+    parquetConf: Map[String, String])
   extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
     val schema = StructType.fromDDL(schemaDdl)
-    val data = new LakeDataWriter(location, schema, TruncateSpec(specColumn, specWidth))
+    val data = new LakeDataWriter(location, schema,
+      TruncateSpec(specColumn, specWidth), parquetConf)
     new DataWriter[InternalRow] {
       private var eq: LakeEqualityDeleteWriter = _
       override def write(row: InternalRow): Unit = {
@@ -348,17 +355,17 @@ final class LakeUpsertWriterFactory(location: String, schemaDdl: String,
   */
 final class LakeWriterFactory(location: String, schemaDdl: String,
     specColumn: String, specWidth: Long,
+    parquetConf: Map[String, String],
     targetBytes: Long = LakeDataWriter.DefaultTargetBytes,
     bloomColumns: Seq[String] = Nil,
     sequentialBuckets: Boolean = false,
-    maxRecordsPerFile: Long = 0L,
-    parquetConf: Map[String, String] = Map.empty)
+    maxRecordsPerFile: Long = 0L)
   extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(location, StructType.fromDDL(schemaDdl),
-      TruncateSpec(specColumn, specWidth), targetBytes, bloomColumns,
-      sequentialBuckets, maxRecordsPerFile, parquetConf)
+      TruncateSpec(specColumn, specWidth), parquetConf, targetBytes,
+      bloomColumns, sequentialBuckets, maxRecordsPerFile)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -368,6 +375,15 @@ final class LakeWriterFactory(location: String, schemaDdl: String,
 object LakeDataWriter {
   /** Default rolling threshold (Iceberg's write.target-file-size default). */
   val DefaultTargetBytes: Long = 512L << 20
+
+  /** The session's `parquet.*` settings (row-group and page sizes,
+    * dictionary, writer version), read where the write is planned and
+    * shipped with a writer factory: what Spark's file-source writer
+    * would apply. */
+  def sessionParquetConf(spark: org.apache.spark.sql.SparkSession): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    spark.sessionState.newHadoopConf().getValByRegex("^parquet\\.").asScala.toMap
+  }
 
   /** Size-poll cadence: at most this many rows of overshoot per check. */
   val RollCheckRows: Int = 1000
@@ -405,17 +421,17 @@ object LakeDataWriter {
   * of a file (getDataSize walks column buffers — too hot for per-row).
   * `maxRecordsPerFile` > 0 also rolls a file at that many rows.
   *
-  * `parquetConf` carries `parquet.*` settings from the driver's session
-  * (row-group and page sizes, dictionary, writer version); they apply as
-  * Spark's file-source writer applies them.
+  * `parquetConf` carries the writing session's `parquet.*` settings
+  * ([[LakeDataWriter.sessionParquetConf]]); they apply as Spark's
+  * file-source writer applies them.
   */
 final class LakeDataWriter(location: String, schema: StructType,
     spec: TruncateSpec,
+    parquetConf: Map[String, String],
     targetBytes: Long = LakeDataWriter.DefaultTargetBytes,
     bloomColumns: Seq[String] = Nil,
     sequentialBuckets: Boolean = false,
-    maxRecordsPerFile: Long = 0L,
-    parquetConf: Map[String, String] = Map.empty)
+    maxRecordsPerFile: Long = 0L)
   extends DataWriter[InternalRow] {
 
   private val partIdx = schema.fieldIndex(spec.column)

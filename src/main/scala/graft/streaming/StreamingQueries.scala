@@ -4,10 +4,11 @@ import java.util.UUID
 
 import graft.Tables.{t, us}
 import graft.Trace
-import graft.queries.Scratch
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.lake._
+import graft.queries.{LakeQueries => L, PipelineQueries => P, Scratch}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** SURVEY.md §2 Part C (C10–C16) — Structured Streaming surface.
   *
@@ -16,8 +17,56 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * and must equal the equivalent batch query — which is exactly what the
   * DuckDB oracle computes. This is the batch-equivalence test strategy of
   * SURVEY §5.4, wired straight into the correctness gate.
+  *
+  * Every stream runs through [[drain]] (or its `foreachBatch` form
+  * [[drainBatches]]); every live dedup entry gates and maintains its
+  * index through [[liveGate]].
   */
 object StreamingQueries {
+
+  /** Run `out` to completion as one AvailableNow query checkpointed at
+    * `ckpt`, started at `sink` when the sink takes a path. A restarted
+    * run passes the same `ckpt`, so it resumes from the source offsets the
+    * earlier run checkpointed: exactly-once across the restart comes from
+    * there. Source options, output mode and sink format stay with the
+    * caller's `out`.
+    */
+  private[graft] def drain(ckpt: String, out: DataStreamWriter[Row],
+      sink: Option[String] = None): Unit = {
+    val w = out.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+    sink.fold(w.start())(w.start).awaitTermination()
+  }
+
+  /** [[drain]] with `body` run on each micro-batch (`foreachBatch`); the
+    * run's micro-batch count is traced as `epochs`. */
+  private[graft] def drainBatches(ckpt: String, out: DataStreamWriter[Row])(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val epochs = new java.util.concurrent.atomic.AtomicLong(0L)
+    drain(ckpt, out.foreachBatch { (batch: DataFrame, epoch: Long) =>
+      epochs.incrementAndGet()
+      body(batch, epoch)
+    })
+    Trace.count("epochs", epochs.get())
+  }
+
+  /** The live gate of one micro-batch: two epoch-fenced appends, in this
+    * order. First `hits`, the batch's matches against the index at
+    * `locI`, land in the verdict table at `locR`; then `novel`, the
+    * batch's keys the index lacks, append to the index. Each side is
+    * handed the index as committed when its own append runs, so gating
+    * before maintaining is what lets batch N+1 see batch N's keys while
+    * no batch matches its own — also when a replay follows a crash
+    * between the two appends. A replayed epoch re-lands neither: the
+    * exactly-once of the format sink.
+    */
+  private[graft] def liveGate(locR: String, locI: String, epoch: Long)(
+      hits: DataFrame => DataFrame, novel: DataFrame => DataFrame): Unit = {
+    def committed = SparkSession.active.read.format("laketable").load(locI)
+    val res = LakeTable.load(locR)
+    res.appendEpoch(LakeWriter.writeDataFiles(hits(committed), res), "live-gate", epoch)
+    val idx = LakeTable.load(locI)
+    idx.appendEpoch(LakeWriter.writeDataFiles(novel(committed), idx), "live-maint", epoch)
+  }
 
   /** Materialize a completed stream's (small) result to the driver and
     * re-wrap as a local DataFrame — the replay/checkpoint scratch dirs and
@@ -27,6 +76,25 @@ object StreamingQueries {
   private def localize(out: DataFrame): DataFrame =
     out.sparkSession.createDataFrame(
       java.util.Arrays.asList(out.collect(): _*), out.schema)
+
+  /** `rows` with a boolean `flag` column — whether the row's `key` landed
+    * in the verdict table at `locR` — ordered by `key`, localized. */
+  private def verdicts(rows: DataFrame, locR: String, key: String,
+      flag: String): DataFrame = {
+    val hit = rows.sparkSession.read.format("laketable").load(locR)
+      .select(key).distinct().withColumn(flag, lit(true))
+    localize(rows.join(hit, Seq(key), "left")
+      .select(rows.columns.toSeq.map(col) :+ coalesce(col(flag), lit(false)).as(flag): _*)
+      .orderBy(key))
+  }
+
+  /** Corpus stats of `docs`: document count and summed token count (a
+    * one-row agg). */
+  private def stats(docs: DataFrame): (Long, Long) = {
+    val r = docs.agg(count(lit(1)),
+      sum(size(split(col("text"), " ")).cast("long"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** Write `input` as parquet replay input into a scope dir; returns it. */
   private def replayDir(sc: Scratch.Scope, input: DataFrame,
@@ -45,18 +113,11 @@ object StreamingQueries {
     val src = input.getOrElse(t(s, dir, "events"))
     val in = replayDir(sc, src, nFiles)
     val name = sc.view("m")
-    val stream = s.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(in)
-    val q = transform(stream).writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .option("checkpointLocation", sc.dir("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(sc.dir("ckpt"), transform(s.readStream
+        .schema(src.schema)
+        .option("maxFilesPerTrigger", "2")
+        .parquet(in))
+      .writeStream.format("memory").queryName(name).outputMode(mode))
     localize(s.table(name))
   }
 
@@ -137,18 +198,14 @@ object StreamingQueries {
       f.setLastModified(1700000000000L + i * 60000) // deterministic batch order
     }
     val name = sc.view("m")
-    val stream = s.readStream
+    drain(sc.dir("ckpt"), s.readStream
       .schema("event_id BIGINT, ts TIMESTAMP")
       .option("maxFilesPerTrigger", "1")
       .json(in)
-    val q = stream.withWatermark("ts", "10 minutes")
+      .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes")).agg(count(lit(1)).as("n"))
       .writeStream
-      .format("memory").queryName(name).outputMode(OutputMode.Append())
-      .option("checkpointLocation", sc.dir("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .format("memory").queryName(name).outputMode(OutputMode.Append()))
     localize(s.table(name)
       .select(us(col("window.start")).as("w_us"), col("n"))
       .orderBy("w_us"))
@@ -192,6 +249,14 @@ object StreamingQueries {
     }.orderBy("event_id")
   }
 
+  /** The documents with a synthesized event time (1 s apart by doc_id
+    * from a fixed base), and the watermark delay covering its span. */
+  private def timedDocs(s: SparkSession, dir: String): (DataFrame, String) = {
+    val docs = t(s, dir, "documents").withColumn("ts",
+      timestamp_micros(lit(1700000000000000L) + col("doc_id") * 1000000L))
+    (docs, s"${spanDays(docs)} days")
+  }
+
   // D7 — the training-data pipeline running CONTINUOUSLY: the d06 quality
   // gate (stateless column ops, unchanged from the batch plan) followed by
   // bounded-state exact dedup (withWatermark + dropDuplicatesWithinWatermark,
@@ -209,12 +274,10 @@ object StreamingQueries {
   // doc_id and bounded by the watermark — the per-key state Spark expires
   // as event time advances, not an ever-growing set.
   def d07_stream_pipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").withColumn("ts",
-      timestamp_micros(lit(1700000000000000L) + col("doc_id") * 1000000L))
-    val delay = s"${spanDays(docs)} days"
+    val (docs, delay) = timedDocs(s, dir)
     runStream(s, dir, OutputMode.Append(), nFiles = 4,
       input = Some(docs.union(docs))) { in =>
-      graft.queries.PipelineQueries.gateDf(in)
+      P.gateDf(in)
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark("doc_id")
         .select(col("doc_id"), col("lang"), col("n_tok"))
@@ -240,13 +303,11 @@ object StreamingQueries {
   // exactly what the DuckDB oracle computes; the kept-doc semantics are
   // covered by the StreamingSpec scenario with controlled batch placement).
   def d07_stream_fuzzy(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").withColumn("ts",
-      timestamp_micros(lit(1700000000000000L) + col("doc_id") * 1000000L))
-    val delay = s"${spanDays(docs)} days"
+    val (docs, delay) = timedDocs(s, dir)
     runStream(s, dir, OutputMode.Append(), nFiles = 4,
       input = Some(docs.union(docs))) { in =>
-      graft.queries.PipelineQueries.gateDf(in)
-        .withColumn("sig", graft.queries.PipelineQueries.simhashSig)
+      P.gateDf(in)
+        .withColumn("sig", P.simhashSig)
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark("sig")
         .select(col("sig"))
@@ -266,23 +327,17 @@ object StreamingQueries {
   def d07_pipeline_lake(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
     val loc = sc.table("d07b", "doc_id BIGINT,lang STRING,n_tok BIGINT",
-      graft.lake.TruncateSpec("doc_id", 100L)).location
-    val docs = t(s, dir, "documents").withColumn("ts",
-      timestamp_micros(lit(1700000000000000L) + col("doc_id") * 1000000L))
-    val delay = s"${spanDays(docs)} days"
+      TruncateSpec("doc_id", 100L)).location
+    val (docs, delay) = timedDocs(s, dir)
     val src = docs.union(docs)
     val in = replayDir(sc, src, 4)
-    val q = graft.queries.PipelineQueries.gateDf(
+    drain(sc.dir("ckpt"), P.gateDf(
         s.readStream.schema(src.schema)
           .option("maxFilesPerTrigger", "2").parquet(in))
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("doc_id")
       .select(col("doc_id"), col("lang"), col("n_tok"))
-      .writeStream.format("laketable")
-      .option("checkpointLocation", sc.dir("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start(loc)
-    q.awaitTermination()
+      .writeStream.format("laketable"), Some(loc))
     localize(s.read.format("laketable").load(loc)
       .select("doc_id", "lang", "n_tok").orderBy("doc_id"))
   }
@@ -320,17 +375,13 @@ object StreamingQueries {
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
         col("ts").as("vts"))
       .withWatermark("vts", delay)
-    val q = clicks.join(views,
+    drain(sc.dir("ckpt"), clicks.join(views,
         col("user_id") === col("v_user") &&
           col("vts") >= col("cts") &&
           col("vts") <= col("cts") + expr("INTERVAL 6 HOURS"))
       .select(col("click_id"), col("view_id"))
       .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", sc.dir("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode(OutputMode.Append()))
     localize(s.table(name).orderBy("click_id", "view_id"))
   }
 
@@ -343,7 +394,6 @@ object StreamingQueries {
   // exact counts asserted in StreamingSpec "C17".
   def c17_moniker_ingest(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
     val Width = 300000000L
     val table = sc.table("c17", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
     val loc = table.location
@@ -355,29 +405,22 @@ object StreamingQueries {
     }
     Monikers.publish(loc, published.head) // duplicate moniker (at-least-once)
     val pending = s"$loc/${LakeFormat.PendingCommitsDir}"
-    val stream = s.readStream
+    drainBatches(sc.dir("ckpt"), s.readStream
       .schema("files ARRAY<STRUCT<path: STRING, sizeBytes: BIGINT, rowCount: BIGINT, partitionValue: BIGINT, format: STRING>>")
       .option("maxFilesPerTrigger", "2")
       .option("multiLine", "true") // monikers are pretty-printed JSON
       .json(pending)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", sc.dir("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // driver-side collect is metadata-bounded: ≤500 file entries per
-        // moniker (queue-commit cap), never data rows
-        val files = batch.selectExpr("explode(files) AS f").select("f.*")
-          .collect().map { r =>
-            DataFileMeta(r.getAs[String]("path"), r.getAs[Long]("sizeBytes"),
-              r.getAs[Long]("rowCount"), r.getAs[Long]("partitionValue"),
-              r.getAs[String]("format"))
-          }
-        if (files.nonEmpty) table.append(files.toSeq)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+      .writeStream.outputMode(OutputMode.Append())) { (batch, _) =>
+      // driver-side collect is metadata-bounded: ≤500 file entries per
+      // moniker (queue-commit cap), never data rows
+      val files = batch.selectExpr("explode(files) AS f").select("f.*")
+        .collect().map { r =>
+          DataFileMeta(r.getAs[String]("path"), r.getAs[Long]("sizeBytes"),
+            r.getAs[Long]("rowCount"), r.getAs[Long]("partitionValue"),
+            r.getAs[String]("format"))
+        }
+      if (files.nonEmpty) table.append(files.toSeq)
+    }
     table.refresh()
     // deterministic summary: per-partition-bucket row counts (dupe deduped)
     localize(table.toDF(s).groupBy(col("timeperiod_loadedBy"))
@@ -397,7 +440,7 @@ object StreamingQueries {
   // exactly-once variant — MERGE-per-batch trades that for upsert power.)
   def c19_stream_upsert(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    val cat = graft.queries.LakeQueries.dmlCatalog(s)
+    val cat = L.dmlCatalog(s)
     val name = s"s${UUID.randomUUID().toString.replace("-", "")}"
     val tbl = s"$cat.ns.$name"
     s.sql(
@@ -406,34 +449,27 @@ object StreamingQueries {
          |PARTITIONED BY (truncate(1000, user_id))""".stripMargin)
     val in = replayDir(sc, t(s, dir, "events"), 4)
     val view = sc.view("c19_src_")
-    val q = s.readStream
+    drainBatches(sc.dir("ckpt"), s.readStream
       .schema(t(s, dir, "events").schema)
       .option("maxFilesPerTrigger", "2")
       .parquet(in)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", sc.dir("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.groupBy("user_id")
-          .agg(count(lit(1)).as("cnt"),
-            max(struct(us(col("ts")).as("tsu"), col("event_id").as("eid"))).as("m"))
-          .select(col("user_id"), col("cnt"),
-            col("m.tsu").as("tsu"), col("m.eid").as("eid"))
-          .createOrReplaceTempView(view)
-        batch.sparkSession.sql(
-          s"""MERGE INTO $tbl t USING $view s ON t.user_id = s.user_id
-             |WHEN MATCHED AND (s.tsu > t.last_ts_us
-             |    OR (s.tsu = t.last_ts_us AND s.eid > t.last_event_id))
-             |  THEN UPDATE SET last_event_id = s.eid, last_ts_us = s.tsu,
-             |    n_events = t.n_events + s.cnt
-             |WHEN MATCHED THEN UPDATE SET n_events = t.n_events + s.cnt
-             |WHEN NOT MATCHED THEN INSERT (user_id, last_event_id, last_ts_us, n_events)
-             |  VALUES (s.user_id, s.eid, s.tsu, s.cnt)""".stripMargin)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+      .writeStream.outputMode(OutputMode.Update())) { (batch, _) =>
+      batch.groupBy("user_id")
+        .agg(count(lit(1)).as("cnt"),
+          max(struct(us(col("ts")).as("tsu"), col("event_id").as("eid"))).as("m"))
+        .select(col("user_id"), col("cnt"),
+          col("m.tsu").as("tsu"), col("m.eid").as("eid"))
+        .createOrReplaceTempView(view)
+      batch.sparkSession.sql(
+        s"""MERGE INTO $tbl t USING $view s ON t.user_id = s.user_id
+           |WHEN MATCHED AND (s.tsu > t.last_ts_us
+           |    OR (s.tsu = t.last_ts_us AND s.eid > t.last_event_id))
+           |  THEN UPDATE SET last_event_id = s.eid, last_ts_us = s.tsu,
+           |    n_events = t.n_events + s.cnt
+           |WHEN MATCHED THEN UPDATE SET n_events = t.n_events + s.cnt
+           |WHEN NOT MATCHED THEN INSERT (user_id, last_event_id, last_ts_us, n_events)
+           |  VALUES (s.user_id, s.eid, s.tsu, s.cnt)""".stripMargin)
+    }
     val out = localize(s.sql(
       s"SELECT user_id, last_event_id, last_ts_us, n_events FROM $tbl ORDER BY user_id"))
     s.sql(s"DROP TABLE $tbl")
@@ -509,24 +545,19 @@ object StreamingQueries {
     * ranges drained through the laketable sink's `upsertKeys` mode into
     * a scope table; returns the table. */
   private def upsertReplays(s: SparkSession, dir: String, sc: Scratch.Scope,
-      prefix: String): graft.lake.LakeTable = {
+      prefix: String): LakeTable = {
     val table = sc.table(prefix,
       "o_orderkey BIGINT,o_totalprice DOUBLE,o_orderstatus STRING",
-      graft.lake.TruncateSpec("o_orderkey", 400L))
-    def drain(src: DataFrame): Unit = {
-      val q = s.readStream.schema(src.schema)
+      TruncateSpec("o_orderkey", 400L))
+    def upsert(src: DataFrame): Unit = drain(sc.dir("ckpt"),
+      s.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", "1").parquet(replayDir(sc, src, 2))
-        .writeStream.format("laketable")
-        .option("checkpointLocation", sc.dir("ckpt"))
-        .option("upsertKeys", "o_orderkey")
-        .trigger(Trigger.AvailableNow())
-        .start(table.location)
-      q.awaitTermination()
-    }
+        .writeStream.format("laketable").option("upsertKeys", "o_orderkey"),
+      Some(table.location))
     val orders = t(s, dir, "orders")
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    drain(orders.filter(col("o_orderkey") < 1000))
-    drain(orders.filter(col("o_orderkey") >= 500 && col("o_orderkey") < 1500)
+    upsert(orders.filter(col("o_orderkey") < 1000))
+    upsert(orders.filter(col("o_orderkey") >= 500 && col("o_orderkey") < 1500)
       .withColumn("o_totalprice", col("o_totalprice") * 3)
       .withColumn("o_orderstatus", lit("U")))
     table
@@ -547,7 +578,6 @@ object StreamingQueries {
   // c20: conversion must be invisible to readers).
   def b68_convert_eq_deletes(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
     val table = upsertReplays(s, dir, sc, "b68")
     def byKind(kind: String): Seq[DeleteFileMeta] =
       table.refresh().deleteFilesMeta().filter(_.kind == kind)
@@ -567,6 +597,37 @@ object StreamingQueries {
       .orderBy("o_orderkey"))
   }
 
+  /** The ANN maintenance of d07_ann_index_stream, d07_ann_serve_live and
+    * d07_hybrid_stream's semantic arm (see d07_ann_index_stream): frozen
+    * IVF+PQ seed models fit on the corpus embeddings (vec_id < 400), and
+    * committed into the index's properties when `publish`; a checkpointed
+    * stream encodes the corpus into the index, then, restarted, only the
+    * rest of the embeddings. Returns the data and index tables. */
+  private def annMaintained(s: SparkSession, dir: String, sc: Scratch.Scope,
+      prefix: String, publish: Boolean): (LakeTable, LakeTable) = {
+    val ckpt = sc.dir("ckpt")
+    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val data = sc.table(s"$prefix-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
+      TruncateSpec("vec_id", 100L))
+    val index = sc.table(s"$prefix-idx", P.AnnIndexDdl, P.AnnIndexSpec)
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") < 400), data))
+    val (ivf, pq) = P.annSeedModels(data.snapshotDF(s, d1))
+    if (publish) {
+      index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
+      index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
+    }
+    def maintain(): Unit = drain(ckpt, P.ivfPqEncode(s,
+        s.readStream.format("laketable")
+          .option("startSnapshotId", "0").load(data.location), ivf, pq)
+      .writeStream.format("laketable"), Some(index.location))
+    maintain() // index the committed corpus
+    data.append(LakeWriter.writeDataFiles(
+      e.filter(col("vec_id") >= 400), data))
+    maintain() // restart: only the new snapshot's files flow
+    (data, index)
+  }
+
   // D7c — the ANN index maintained CONTINUOUSLY: a streaming job reads
   // the DATA table's own incremental scan (the laketable source, A25),
   // encodes each arriving micro-batch under the frozen models
@@ -583,35 +644,42 @@ object StreamingQueries {
   // full corpus (annIndexOracleSql).
   def d07_ann_index_stream(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val ckpt = sc.dir("ckpt")
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val data = sc.table("d07ann-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("vec_id", 100L))
-    val locI = sc.table("d07ann-idx", P.AnnIndexDdl, P.AnnIndexSpec).location
-    val locD = data.location
-    val d1 = data.append(LakeWriter.writeDataFiles(
-      e.filter(col("vec_id") < 400), data))
-    val committed = data.snapshotDF(s, d1)
-    val (ivf, pq) = P.annSeedModels(committed)
-    def runMaintenance(): Unit = {
-      val q = P.ivfPqEncode(s,
-          s.readStream.format("laketable")
-            .option("startSnapshotId", "0").load(locD), ivf, pq)
-        .writeStream.format("laketable")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start(locI)
-      q.awaitTermination()
-    }
-    runMaintenance() // index the committed corpus
-    data.append(LakeWriter.writeDataFiles(
-      e.filter(col("vec_id") >= 400), data))
-    runMaintenance() // restart: only the new snapshot's files flow
-    localize(s.read.format("laketable").load(locI)
+    val (_, index) = annMaintained(s, dir, sc, "d07ann", publish = false)
+    localize(s.read.format("laketable").load(index.location)
       .select("vec_id", "cell", "c0", "c1", "c2", "c3")
       .orderBy("vec_id"))
+  }
+
+  /** A scope table of documents (doc_id, text), laid out by doc_id. */
+  private def docTable(sc: Scratch.Scope, prefix: String): LakeTable =
+    sc.table(prefix, "doc_id BIGINT,text STRING", TruncateSpec("doc_id", 1000L))
+
+  /** The documents' (doc_id, text), split by doc_id parity: (evens, odds). */
+  private def docsByParity(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    (d.filter(pmod(col("doc_id"), lit(2)) === 0),
+      d.filter(pmod(col("doc_id"), lit(2)) === 1))
+  }
+
+  /** The fuzzy wave entries' common start (d07_minhash_stream,
+    * d07_minhash_live): the even documents commit to a data table and
+    * their distinct band keys to a band index, beside an empty verdict
+    * table. Returns the data table, the index and verdict locations, and
+    * the corpus snapshot. */
+  private def bandIndexed(s: SparkSession, sc: Scratch.Scope, prefix: String,
+      evens: DataFrame): (LakeTable, String, String, Long) = {
+    val data = docTable(sc, s"$prefix-data")
+    // layout key = xxhash64(band,h0,h1) pmod 16 (P.withBandKey) — h0 is
+    // a minhash minimum and skews low; the uniform re-key spreads
+    // maintenance appends evenly across the 16 buckets
+    val index = sc.table(s"$prefix-idx", P.BandIndexDdl, TruncateSpec("bkey", 1L))
+    val locR = sc.table(s"$prefix-res", "doc_id BIGINT",
+      TruncateSpec("doc_id", 1000000L)).location
+    val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
+    index.append(LakeWriter.writeDataFiles(
+      P.withBandKey(P.explodeBands(P.md5MinhashSigs(data.snapshotDF(s, d1)))
+        .select("band", "h0", "h1").distinct()), index))
+    (data, index.location, locR, d1)
   }
 
   // D7d — the FUZZY gate run CONTINUOUSLY against the committed band
@@ -636,12 +704,8 @@ object StreamingQueries {
   // hash oracle replays the verdict set.
   def d07_minhash_stream(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
     val ckpt = sc.dir("ckpt")
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
+    val (evens, odds) = docsByParity(s, dir)
     // wave 2 = the planted cross-batch dups (exact re-keys share all 4
     // bands; near re-keys with 3 appended tokens keep most lanes)
     val wave2 = evens.filter(col("doc_id") < 40)
@@ -649,20 +713,7 @@ object StreamingQueries {
       .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 80)
         .select((col("doc_id") + 2000000).as("doc_id"),
           concat(col("text"), lit(" zq zr zs")).as("text")))
-    val data = sc.table("d07mh-data", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
-    // layout key = xxhash64(band,h0,h1) pmod 16 (P.withBandKey) — h0 is
-    // a minhash minimum and skews low; the uniform re-key spreads
-    // maintenance appends evenly across the 16 buckets
-    val index = sc.table("d07mh-idx", P.BandIndexDdl,
-      TruncateSpec("bkey", 1L))
-    val locR = sc.table("d07mh-res", "doc_id BIGINT",
-      TruncateSpec("doc_id", 1000000L)).location
-    val (locD, locI) = (data.location, index.location)
-    val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
-    index.append(LakeWriter.writeDataFiles(
-      P.withBandKey(P.explodeBands(P.md5MinhashSigs(data.snapshotDF(s, d1)))
-        .select("band", "h0", "h1").distinct()), index))
+    val (data, locI, locR, d1) = bandIndexed(s, sc, "d07mh", evens)
     // the static side: the committed index table, read once per
     // micro-batch planning — shared by every gate stream
     val comBands = s.read.format("laketable").load(locI)
@@ -671,16 +722,12 @@ object StreamingQueries {
     def landed = s.read.format("laketable").load(locR)
       .select("doc_id").distinct().count()
     def runGate(): Unit = {
-      val q = P.explodeBands(P.md5MinhashSigs(
+      drain(ckpt, P.explodeBands(P.md5MinhashSigs(
           s.readStream.format("laketable")
-            .option("startSnapshotId", d1.toString).load(locD)))
+            .option("startSnapshotId", d1.toString).load(data.location)))
         .join(comBands, Seq("band", "h0", "h1"), "left_semi")
         .select("doc_id")
-        .writeStream.format("laketable")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start(locR)
-      q.awaitTermination()
+        .writeStream.format("laketable"), Some(locR))
       Trace.count("landed", landed)
     }
     Trace.count("landed", landed)
@@ -688,13 +735,8 @@ object StreamingQueries {
     runGate() // wave 1: the fresh odd docs
     val d3 = data.append(LakeWriter.writeDataFiles(wave2, data))
     runGate() // restart: only wave 2's files flow
-    val dups = s.read.format("laketable").load(locR)
-      .select("doc_id").distinct().withColumn("is_fuzzy_dup", lit(true))
-    localize(data.changesBetween(s, d1, d3).select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
-      .orderBy("doc_id"))
+    verdicts(data.changesBetween(s, d1, d3).select("doc_id"), locR,
+      "doc_id", "is_fuzzy_dup")
   }
 
   // D7h — LIVE ANN SERVING: the full production loop in one entry —
@@ -712,37 +754,10 @@ object StreamingQueries {
   // hash-equal), so the d02_ann_indexed exact replay oracles the serve.
   def d07_ann_serve_live(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val ckpt = sc.dir("ckpt")
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val data = sc.table("d07asl-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("vec_id", 100L))
-    val index = sc.table("d07asl-idx", P.AnnIndexDdl, P.AnnIndexSpec)
-    val (locD, locI) = (data.location, index.location)
-    val d1 = data.append(LakeWriter.writeDataFiles(
-      e.filter(col("vec_id") < 400), data))
-    val committed = data.snapshotDF(s, d1)
-    val (ivf, pq) = P.annSeedModels(committed)
-    index.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-    index.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-    def runMaintenance(): Unit = {
-      val q = P.ivfPqEncode(s,
-          s.readStream.format("laketable")
-            .option("startSnapshotId", "0").load(locD), ivf, pq)
-        .writeStream.format("laketable")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start(locI)
-      q.awaitTermination()
-    }
-    runMaintenance() // encode the committed corpus
-    data.append(LakeWriter.writeDataFiles(
-      e.filter(col("vec_id") >= 400), data))
-    runMaintenance() // restart: only the increment encodes
+    val (data, index) = annMaintained(s, dir, sc, "d07asl", publish = true)
     // serve from a fresh load: stream-maintained codes + models parsed
     // back from the index's own properties
-    val served = LakeTable.load(locI)
+    val served = LakeTable.load(index.location)
     val ivf2 = P.ivfModelFromString(served.tableMeta.properties(P.AnnIvfProp))
     val pq2 = P.pqModelFromString(served.tableMeta.properties(P.AnnPqProp))
     localize(P.ivfPqServe(s, served.toDF(s), data.refresh().toDF(s),
@@ -766,8 +781,6 @@ object StreamingQueries {
   // vs-brute-force floor per arrival is spec-asserted in StreamingSpec).
   def d07_ann_ordered(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
     // register BEFORE the stream starts: the micro-batch session is a
     // CLONE taken at start — functions registered later don't reach it
     graft.functions.CosineSimilarity.register(s)
@@ -794,30 +807,24 @@ object StreamingQueries {
         data))
     }
     val vectors = data.toDF(s) // float source for probes + exact refine
-    val q = s.readStream.format("laketable")
+    drainBatches(ckpt, s.readStream.format("laketable")
       .option("startSnapshotId", "0")
       .option("maxFilesPerTrigger", "1") // one arrival per micro-batch
       .load(locD)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val idx = LakeTable.load(locI)
-        val ivf2 = P.ivfModelFromString(idx.tableMeta.properties(P.AnnIvfProp))
-        val pq2 = P.pqModelFromString(idx.tableMeta.properties(P.AnnPqProp))
-        idx.appendEpoch(LakeWriter.writeDataFiles(
-          P.ivfPqEncode(s, batch, ivf2, pq2), idx), "ann-maint", epoch)
-        // serve AFTER maintenance: the index as of arrival epoch+1
-        val grown = LakeTable.load(locI)
-        val res = LakeTable.load(locR)
-        res.appendEpoch(LakeWriter.writeDataFiles(
-          P.ivfPqServe(s, grown.toDF(s), vectors, ivf2, pq2)
-            .select(lit(epoch + 1).as("arr"), col("qid"), col("rn"),
-              col("oid"), col("cos")), res), "ann-serve", epoch)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .writeStream) { (batch, epoch) =>
+      val idx = LakeTable.load(locI)
+      val ivf2 = P.ivfModelFromString(idx.tableMeta.properties(P.AnnIvfProp))
+      val pq2 = P.pqModelFromString(idx.tableMeta.properties(P.AnnPqProp))
+      idx.appendEpoch(LakeWriter.writeDataFiles(
+        P.ivfPqEncode(s, batch, ivf2, pq2), idx), "ann-maint", epoch)
+      // serve AFTER maintenance: the index as of arrival epoch+1
+      val grown = LakeTable.load(locI)
+      val res = LakeTable.load(locR)
+      res.appendEpoch(LakeWriter.writeDataFiles(
+        P.ivfPqServe(s, grown.toDF(s), vectors, ivf2, pq2)
+          .select(lit(epoch + 1).as("arr"), col("qid"), col("rn"),
+            col("oid"), col("cos")), res), "ann-serve", epoch)
+    }
     localize(s.read.format("laketable").load(locR)
       .orderBy("arr", "qid", "rn"))
   }
@@ -839,16 +846,11 @@ object StreamingQueries {
   // corpus-first full-stream replay oracles both (batch-equivalence).
   def d07_seqpack_stream(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     val ckpt = sc.dir("ckpt")
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val oddMid = d.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val data = sc.table("d07sp-data", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
+    val (evens, odds) = docsByParity(s, dir)
+    val oddMid = t(s, dir, "documents")
+      .agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
+    val data = docTable(sc, "d07sp-data")
     val spans = sc.table("d07sp-idx",
       "doc_id BIGINT,seq_id BIGINT,tok_start BIGINT,tok_len BIGINT,off_in_seq BIGINT",
       TruncateSpec("seq_id", 64L))
@@ -863,30 +865,24 @@ object StreamingQueries {
     // restart must pack ONLY the new wave
     def landed = s.read.format("laketable").load(locI).count()
     def runPack(): Unit = {
-      val q = s.readStream.format("laketable")
-        .option("startSnapshotId", s1.toString).load(locD)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val idx = LakeTable.load(locI) // fresh: committed state only
-          val base = idx.tableMeta.properties(L.SeqPackTotalProp).toLong
-          // three consumers (quantile cuts, the token sum, the span
-          // write) read the batch once through the cache, not 3×
-          val b = batch.select(col("doc_id"), nTok).persist()
-          try {
-            val packed = P.packStreamSpans(b, base)
-            val batchTok = b.agg(sum("n_tok")).head().getLong(0)
-            // spans + the advanced scalar in ONE fenced commit: a
-            // replay re-lands neither
-            idx.appendEpoch(LakeWriter.writeDataFiles(packed, idx),
-              "seqpack", epoch, extraProps =
-                Map(L.SeqPackTotalProp -> (base + batchTok).toString))
-          } finally b.unpersist()
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainBatches(ckpt, s.readStream.format("laketable")
+          .option("startSnapshotId", s1.toString).load(locD).writeStream) {
+        (batch, epoch) =>
+        val idx = LakeTable.load(locI) // fresh: committed state only
+        val base = idx.tableMeta.properties(L.SeqPackTotalProp).toLong
+        // three consumers (quantile cuts, the token sum, the span
+        // write) read the batch once through the cache, not 3×
+        val b = batch.select(col("doc_id"), nTok).persist()
+        try {
+          val packed = P.packStreamSpans(b, base)
+          val batchTok = b.agg(sum("n_tok")).head().getLong(0)
+          // spans + the advanced scalar in ONE fenced commit: a
+          // replay re-lands neither
+          idx.appendEpoch(LakeWriter.writeDataFiles(packed, idx),
+            "seqpack", epoch, extraProps =
+              Map(L.SeqPackTotalProp -> (base + batchTok).toString))
+        } finally b.unpersist()
+      }
       Trace.count("landed", landed)
     }
     Trace.count("landed", landed)
@@ -900,6 +896,24 @@ object StreamingQueries {
       .orderBy("doc_id", "seq_id"))
   }
 
+  /** Wave 2 of the live wave gates (d07_minhash_live, d07_substring_live):
+    * re-keys of the CORPUS (+1M — any gate catches these), of WAVE 1 (+3M
+    * exact, +4M suffix-extended — they entered the index during run 1, so
+    * only a live gate flags them), and of EACH OTHER (+5M/+6M
+    * reversed-text twins in the same batch, novel everywhere else — only
+    * the within-batch self-dup term flags them). */
+  private def plantedWave2(evens: DataFrame, odds: DataFrame): DataFrame = {
+    def rekey(src: DataFrame, ids: Column, by: Int, text: Column) =
+      src.filter(ids).select((col("doc_id") + by).as("doc_id"), text.as("text"))
+    val id = col("doc_id")
+    rekey(evens, id < 40, 1000000, col("text"))
+      .union(rekey(odds, id < 40, 3000000, col("text")))
+      .union(rekey(odds, id >= 40 && id < 80, 4000000,
+        concat(col("text"), lit(" zq zr zs"))))
+      .union(rekey(evens, id >= 40 && id < 60, 5000000, reverse(col("text"))))
+      .union(rekey(evens, id >= 40 && id < 60, 6000000, reverse(col("text"))))
+  }
+
   // D7m — the LIVE substring gate: the committed shingle index
   // (d01_substring_index) gated AND maintained in the same continuous
   // job, so an arrival's copied spans are detected against EARLIER
@@ -910,47 +924,24 @@ object StreamingQueries {
   // repeats within the batch itself (the d01_substring_index selfDup
   // term: same-batch twins must flag even though the index learns their
   // hashes only after gating), (3) append the batch's NOVEL hashes;
-  // both commits ride the epoch fence, so a replayed batch re-lands
-  // neither. Wave 2 plants re-keys of the CORPUS (+1M — any gate
-  // catches these), of WAVE 1 (+3M exact, +4M suffix-extended — their
-  // shingles entered the index during run 1, so only a live gate flags
-  // them), and of EACH OTHER (+5M/+6M reversed-text twins in the same
-  // batch — only the within-batch term flags them). The final result
-  // merges all landed hit positions into maximal per-doc spans.
+  // both commits ride the epoch fence (liveGate), so a replayed batch
+  // re-lands neither. Wave 2 plants re-keys of the CORPUS, of WAVE 1 and
+  // of EACH OTHER (plantedWave2). The final result merges all landed hit
+  // positions into maximal per-doc spans.
   def d07_substring_live(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val L = P.SubstrShingle
+    val sh = P.SubstrShingle
     val ckpt = sc.dir("ckpt")
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= L)
-    val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
-    // +5M/+6M: SAME-BATCH twins — two arrivals whose reversed-text
-    // shingles exist nowhere in the corpus or wave 1 and duplicate only
-    // EACH OTHER inside wave 2; only the within-batch self-dup term can
-    // flag them (r11 verdict item 4 — the gate's former blind spot)
-    val wave2 = evens.filter(col("doc_id") < 40)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      .union(odds.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 3000000).as("doc_id"), col("text")))
-      .union(odds.filter(col("doc_id") >= 40 && col("doc_id") < 80)
-        .select((col("doc_id") + 4000000).as("doc_id"),
-          concat(col("text"), lit(" zq zr zs")).as("text")))
-      .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-        .select((col("doc_id") + 5000000).as("doc_id"),
-          reverse(col("text")).as("text")))
-      .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-        .select((col("doc_id") + 6000000).as("doc_id"),
-          reverse(col("text")).as("text")))
-    val data = sc.table("d07ss-data", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
+    val long = length(col("text")) >= sh
+    val (evens, odds) = docsByParity(s, dir) match {
+      case (e, o) => (e.filter(long), o.filter(long))
+    }
+    val data = docTable(sc, "d07ss-data")
     val index = sc.table("d07ss-idx", "skey BIGINT,shash BIGINT",
       TruncateSpec("skey", 1L))
     val locR = sc.table("d07ss-res", "doc_id BIGINT,st BIGINT,en BIGINT",
       TruncateSpec("doc_id", 1000000L)).location
-    def keyed(hashes: org.apache.spark.sql.DataFrame) = hashes
+    def keyed(hashes: DataFrame) = hashes
       .withColumn("skey", pmod(col("shash"), lit(16L)))
       .select("skey", "shash")
     val (locD, locI) = (data.location, index.location)
@@ -963,47 +954,30 @@ object StreamingQueries {
     // per wave, so an admission cap must never shift batch boundaries
     def landed = s.read.format("laketable").load(locR).count()
     def runLive(): Unit = {
-      val epochs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = s.readStream.format("laketable")
-        .option("startSnapshotId", d1.toString).load(locD)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          epochs.incrementAndGet()
-          // committed shingle space AS OF THIS BATCH — includes every
-          // earlier batch's maintenance; both appends are epoch-fenced
-          val com = s.read.format("laketable").load(locI).select("shash")
-          val bsh = P.shingleHashes(batch)
-          // within-batch self-dup (the d01_substring_index selfDup
-          // term): two arrivals in the SAME micro-batch copying each
-          // other are flagged here — the committed index only learns
-          // the batch's hashes AFTER gating, so membership alone
-          // would pass both
-          val selfDup = bsh.groupBy("shash").agg(count(lit(1)).as("n"))
-            .filter(col("n") >= 2).select("shash")
-          val dupKeys = com.union(selfDup).distinct()
-          val res = LakeTable.load(locR)
-          res.appendEpoch(LakeWriter.writeDataFiles(
-            bsh.join(dupKeys, Seq("shash"), "left_semi")
-              .select(col("doc_id"), col("p").as("st"),
-                (col("p") + L).as("en")), res), "substr-gate", epoch)
-          val idx = LakeTable.load(locI)
-          idx.appendEpoch(LakeWriter.writeDataFiles(
-            keyed(bsh.select("shash").distinct()
-              .join(com, Seq("shash"), "left_anti")), idx),
-            "substr-maint", epoch)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainBatches(ckpt, s.readStream.format("laketable")
+          .option("startSnapshotId", d1.toString).load(locD).writeStream) {
+        (batch, epoch) =>
+        val bsh = P.shingleHashes(batch)
+        // within-batch self-dup: two arrivals in the SAME micro-batch
+        // copying each other flag here — the committed index learns the
+        // batch's hashes only AFTER gating
+        val selfDup = bsh.groupBy("shash").agg(count(lit(1)).as("n"))
+          .filter(col("n") >= 2).select("shash")
+        // the committed shingle space AS OF THIS BATCH includes every
+        // earlier batch's maintenance
+        liveGate(locR, locI, epoch)(
+          com => bsh.join(com.select("shash").union(selfDup).distinct(),
+            Seq("shash"), "left_semi")
+            .select(col("doc_id"), col("p").as("st"), (col("p") + sh).as("en")),
+          com => keyed(bsh.select("shash").distinct()
+            .join(com.select("shash"), Seq("shash"), "left_anti")))
+      }
       Trace.count("landed", landed)
-      Trace.count("epochs", epochs.get())
     }
     Trace.count("landed", landed)
     data.append(LakeWriter.writeDataFiles(odds, data))
     runLive() // wave 1: gated against the corpus; its hashes join the index
-    data.append(LakeWriter.writeDataFiles(wave2, data))
+    data.append(LakeWriter.writeDataFiles(plantedWave2(evens, odds), data))
     runLive() // restart: wave 2 gated against corpus ∪ wave 1
     localize(P.mergeSpans(s.read.format("laketable").load(locR)
       .select("doc_id", "st", "en")))
@@ -1034,9 +1008,6 @@ object StreamingQueries {
   private def bm25MaintainEpoch(locI: String, shard: String,
       queryId: String, batch: DataFrame, epoch: Long,
       compactPerBucketCap: Int): Boolean = {
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     val idx = LakeTable.load(locI)
     val own = L.bm25StatsKey(shard)
     val Array(n0, sd0) = idx.tableMeta.properties
@@ -1045,14 +1016,12 @@ object StreamingQueries {
     // through the cache, not twice
     val b = batch.select(col("doc_id"), col("text")).persist()
     try {
-      val r = b.agg(count(lit(1)),
-        sum(size(split(col("text"), " ")).cast("long"))).head()
+      val (n, sd) = stats(b)
       idx.appendEpoch(
         LakeWriter.writeDataFiles(P.bm25Keyed(P.bm25Postings(b)), idx,
           sortBy = Seq("thash"),
           maxRecordsPerFile = P.Bm25IndexRowsPerFile),
-        queryId, epoch, extraProps =
-          Map(own -> s"${n0 + r.getLong(0)}:${sd0 + r.getLong(1)}"))
+        queryId, epoch, extraProps = Map(own -> s"${n0 + n}:${sd0 + sd}"))
       val post = LakeTable.load(locI)
       val perBucket = post.files().groupBy(_.partitionValue)
         .values.map(_.size).maxOption.getOrElse(0)
@@ -1061,6 +1030,26 @@ object StreamingQueries {
         maxRecordsPerFile = P.Bm25IndexRowsPerFile)
       compact
     } finally b.unpersist()
+  }
+
+  /** A BM25 index over the even documents (the d02_bm25_index build:
+    * thash-clustered postings, stats under the "build" shard) whose data
+    * table then receives `rest`; returns the data table, the index and
+    * the build snapshot a maintenance stream starts after. */
+  private def bm25Built(s: SparkSession, sc: Scratch.Scope, evens: DataFrame,
+      dataPrefix: String, idxPrefix: String): (LakeTable, LakeTable, Long) = {
+    val data = docTable(sc, dataPrefix)
+    val index = sc.table(idxPrefix, P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
+    index.setProperty("write.sort-order", "thash") // compaction keeps it
+    val s1 = data.append(LakeWriter.writeDataFiles(evens, data))
+    // same thash-clustered file layout as the batch index (bm25IndexRun)
+    // so the stream-maintained serve skips within buckets too
+    index.append(LakeWriter.writeDataFiles(
+      P.bm25Keyed(P.bm25Postings(data.snapshotDF(s, s1))), index,
+      sortBy = Seq("thash"), maxRecordsPerFile = P.Bm25IndexRowsPerFile))
+    val (n1, sd1) = stats(data.snapshotDF(s, s1))
+    index.setProperty(L.bm25StatsKey("build"), s"$n1:$sd1")
+    (data, index, s1)
   }
 
   // D7k — the BM25 inverted index maintained BY A STREAM, completing the
@@ -1083,53 +1072,27 @@ object StreamingQueries {
     * parameter, so a spec can trip the mid-stream compaction. */
   private[graft] def bm25StreamRun(s: SparkSession, dir: String,
       compactPerBucketCap: Int): DataFrame = Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     val ckpt = sc.dir("ckpt")
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val oddMid = d.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    def stats(docs: DataFrame): (Long, Long) = {
-      val r = docs.agg(count(lit(1)),
-        sum(size(split(col("text"), " ")).cast("long"))).head()
-      (r.getLong(0), r.getLong(1)) // 1-row corpus-stats agg — bounded
-    }
-    val data = sc.table("d07bm-data", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
-    val index = sc.table("d07bm-idx", P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
-    index.setProperty("write.sort-order", "thash") // compaction keeps it
+    val (evens, odds) = docsByParity(s, dir)
+    val oddMid = t(s, dir, "documents")
+      .agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
+    val (data, index, s1) = bm25Built(s, sc, evens, "d07bm-data", "d07bm-idx")
     val (locD, locI) = (data.location, index.location)
-    val s1 = data.append(LakeWriter.writeDataFiles(evens, data))
-    // same thash-clustered file layout as the batch index (bm25IndexRun)
-    // so the stream-maintained serve skips within buckets too
-    index.append(LakeWriter.writeDataFiles(
-      P.bm25Keyed(P.bm25Postings(data.snapshotDF(s, s1))), index,
-      sortBy = Seq("thash"), maxRecordsPerFile = P.Bm25IndexRowsPerFile))
-    val (n1, sd1) = stats(data.snapshotDF(s, s1))
-    index.setProperty(L.bm25StatsKey("build"), s"$n1:$sd1")
     // posting rows landed, traced before the runs and after each: each
     // wave writes exactly its own postings, once
     def landed = s.read.format("laketable").load(locI).count()
     // summed on the stream thread, traced by this one after the runs
     val compactions = new java.util.concurrent.atomic.AtomicLong(0L)
     def runMaint(): Unit = {
-      val q = s.readStream.format("laketable")
-        .option("startSnapshotId", s1.toString).load(locD)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          // the shared maintainer step: sharded stats + thash-sorted
-          // postings in one epoch-fenced commit, then the
-          // small-file-debt check (see bm25MaintainEpoch)
-          if (bm25MaintainEpoch(locI, "stream", "bm25idx", batch, epoch,
-              compactPerBucketCap)) compactions.incrementAndGet()
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainBatches(ckpt, s.readStream.format("laketable")
+          .option("startSnapshotId", s1.toString).load(locD).writeStream) {
+        (batch, epoch) =>
+        // the shared maintainer step: sharded stats + thash-sorted
+        // postings in one epoch-fenced commit, then the
+        // small-file-debt check (see bm25MaintainEpoch)
+        if (bm25MaintainEpoch(locI, "stream", "bm25idx", batch, epoch,
+            compactPerBucketCap)) compactions.incrementAndGet()
+      }
       Trace.count("landed", landed)
     }
     Trace.count("landed", landed)
@@ -1167,81 +1130,30 @@ object StreamingQueries {
   // arrivals, never rebuilt, fused at query time.
   def d07_hybrid_stream(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     graft.functions.CosineSimilarity.register(s)
-    val ckptB = sc.dir("d07hyb-ckptb"); val ckptA = sc.dir("d07hyb-ckpta")
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    def stats(docs: DataFrame): (Long, Long) = {
-      val r = docs.agg(count(lit(1)),
-        sum(size(split(col("text"), " ")).cast("long"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val dataD = sc.table("d07hyb-docs", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
-    val idxB = sc.table("d07hyb-bm25", P.Bm25IndexDdl, TruncateSpec("tkey", 1L))
-    idxB.setProperty("write.sort-order", "thash")
-    val dataE = sc.table("d07hyb-vecs", "vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("vec_id", 100L))
-    val idxI = sc.table("d07hyb-ann", P.AnnIndexDdl, P.AnnIndexSpec)
-    val (locD, locB) = (dataD.location, idxB.location)
-    val (locE, locI) = (dataE.location, idxI.location)
+    val (evens, odds) = docsByParity(s, dir)
     // ---- lexical arm: build half + stream-maintained half ----
-    val s1 = dataD.append(LakeWriter.writeDataFiles(evens, dataD))
-    idxB.append(LakeWriter.writeDataFiles(
-      P.bm25Keyed(P.bm25Postings(dataD.snapshotDF(s, s1))), idxB,
-      sortBy = Seq("thash"), maxRecordsPerFile = P.Bm25IndexRowsPerFile))
-    val (n1, sd1) = stats(dataD.snapshotDF(s, s1))
-    idxB.setProperty(L.bm25StatsKey("build"), s"$n1:$sd1")
+    val (dataD, idxB, s1) = bm25Built(s, sc, evens, "d07hyb-docs", "d07hyb-bm25")
     dataD.append(LakeWriter.writeDataFiles(odds, dataD))
-    val qB = s.readStream.format("laketable")
-      .option("startSnapshotId", s1.toString).load(locD)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        // the SAME maintainer step as d07_bm25_stream (sharded stats,
-        // thash-sorted epoch-fenced append, small-file-debt check) —
-        // shared so the two flows cannot diverge
-        bm25MaintainEpoch(locB, "stream", "hybbm25", batch, epoch,
-          Bm25CompactPerBucketCap)
-        ()
-      }
-      .option("checkpointLocation", ckptB)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    qB.awaitTermination()
-    // ---- semantic arm: frozen committed-batch models, streamed encode ----
-    val d1 = dataE.append(LakeWriter.writeDataFiles(
-      e.filter(col("vec_id") < 400), dataE))
-    val committed = dataE.snapshotDF(s, d1)
-    val (ivf, pq) = P.annSeedModels(committed)
-    idxI.setProperty(P.AnnIvfProp, P.ivfModelToString(ivf))
-    idxI.setProperty(P.AnnPqProp, P.pqModelToString(pq))
-    def runAnnMaint(): Unit = {
-      val q = P.ivfPqEncode(s,
-          s.readStream.format("laketable")
-            .option("startSnapshotId", "0").load(locE), ivf, pq)
-        .writeStream.format("laketable")
-        .option("checkpointLocation", ckptA)
-        .trigger(Trigger.AvailableNow())
-        .start(locI)
-      q.awaitTermination()
+    drainBatches(sc.dir("d07hyb-ckptb"), s.readStream.format("laketable")
+        .option("startSnapshotId", s1.toString).load(dataD.location).writeStream) {
+      (batch, epoch) =>
+      // the SAME maintainer step as d07_bm25_stream (sharded stats,
+      // thash-sorted epoch-fenced append, small-file-debt check) —
+      // shared so the two flows cannot diverge
+      bm25MaintainEpoch(idxB.location, "stream", "hybbm25", batch, epoch,
+        Bm25CompactPerBucketCap)
     }
-    runAnnMaint() // index the committed corpus
-    dataE.append(LakeWriter.writeDataFiles(
-      e.filter(col("vec_id") >= 400), dataE))
-    runAnnMaint() // restart: only the increment's files flow
+    // ---- semantic arm: frozen committed-batch models, streamed encode ----
+    val (dataE, idxI) = annMaintained(s, dir, sc, "d07hyb-ann", publish = true)
     // ---- fused serve from FRESH loads of both committed indexes ----
-    val bT = LakeTable.load(locB)
+    val bT = LakeTable.load(idxB.location)
     val (nd, sdl) = L.bm25FoldStats(bT.tableMeta.properties)
     val lex = P.bm25Serve(
       bT.toDF(s).filter(P.bm25LayoutPredicate)
         .select("term", "doc_id", "tf", "dl"), nd, sdl)
       .select(col("qid"), col("doc_id"), col("rn").as("rl"))
-    val iT = LakeTable.load(locI)
+    val iT = LakeTable.load(idxI.location)
     val ivf2 = P.ivfModelFromString(iT.tableMeta.properties(P.AnnIvfProp))
     val pq2 = P.pqModelFromString(iT.tableMeta.properties(P.AnnPqProp))
     val sem = P.ivfPqServe(s, iT.toDF(s), dataE.toDF(s), ivf2, pq2,
@@ -1262,12 +1174,11 @@ object StreamingQueries {
   // a fresh load that includes every previous batch's maintenance — and
   // land matches in the verdict table, (3) append the batch's NOVEL keys
   // (left-anti vs the same committed space, DISTINCT within batch) as
-  // one index commit. Work per batch stays ∝ batch (two semi/anti joins
-  // against the committed key space, per-key width 1); the corpus is
-  // never re-banded. Wave 2 plants re-keys of WAVE-1 docs (+3M exact,
-  // +4M near) alongside corpus re-keys (+1M) and SAME-BATCH twins
-  // (+5M/+6M reversed-text pairs that duplicate only each other): the
-  // frozen-index gate would pass the +3M/+4M docs, the live gate must
+  // one index commit (liveGate). Work per batch stays ∝ batch (two
+  // semi/anti joins against the committed key space, per-key width 1);
+  // the corpus is never re-banded. Wave 2 (plantedWave2) plants re-keys
+  // of WAVE-1 docs alongside corpus re-keys and SAME-BATCH twins: the
+  // frozen-index gate would pass the wave-1 re-keys, the live gate must
   // flag the exact ones, and only the within-batch self-dup term can
   // flag the twins — the oracle replays the wave-ordered band spaces
   // (side-2 arrivals probe side-0 ∪ side-1, plus per-side self-dups).
@@ -1275,101 +1186,42 @@ object StreamingQueries {
   // new wave (per-run dup deltas spec-asserted).
   def d07_minhash_live(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
     val ckpt = sc.dir("ckpt")
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val evens = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val odds = d.filter(pmod(col("doc_id"), lit(2)) === 1)
-    // wave 2: corpus re-keys (+1M — any gate catches these) and WAVE-1
-    // re-keys (+3M exact, +4M near — only a live, self-maintaining gate
-    // can catch these: their bands entered the index during run 1)
-    // +5M/+6M: SAME-BATCH twins — reversed-text arrivals duplicating
-    // only EACH OTHER inside wave 2; the within-batch self-dup term is
-    // the only gate that can flag them (r11 verdict item 4)
-    val wave2 = evens.filter(col("doc_id") < 40)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      .union(odds.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 3000000).as("doc_id"), col("text")))
-      .union(odds.filter(col("doc_id") >= 40 && col("doc_id") < 80)
-        .select((col("doc_id") + 4000000).as("doc_id"),
-          concat(col("text"), lit(" zq zr zs")).as("text")))
-      .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-        .select((col("doc_id") + 5000000).as("doc_id"),
-          reverse(col("text")).as("text")))
-      .union(evens.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-        .select((col("doc_id") + 6000000).as("doc_id"),
-          reverse(col("text")).as("text")))
-    val data = sc.table("d07live-data", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
-    // layout key = xxhash64(band,h0,h1) pmod 16 (P.withBandKey) — h0 is
-    // a minhash minimum and skews low; the uniform re-key spreads
-    // maintenance appends evenly across the 16 buckets
-    val index = sc.table("d07live-idx", P.BandIndexDdl,
-      TruncateSpec("bkey", 1L))
-    val locR = sc.table("d07live-res", "doc_id BIGINT",
-      TruncateSpec("doc_id", 1000000L)).location
-    val (locD, locI) = (data.location, index.location)
-    val d1 = data.append(LakeWriter.writeDataFiles(evens, data))
-    index.append(LakeWriter.writeDataFiles(
-      P.withBandKey(P.explodeBands(P.md5MinhashSigs(data.snapshotDF(s, d1)))
-        .select("band", "h0", "h1").distinct()), index))
+    val (evens, odds) = docsByParity(s, dir)
+    val (data, locI, locR, d1) = bandIndexed(s, sc, "d07live", evens)
     // distinct dup ids landed, traced before the runs and after each,
     // and each run's micro-batches (the wave-grain oracle's premise)
     def landed = s.read.format("laketable").load(locR)
       .select("doc_id").distinct().count()
     def runLive(): Unit = {
-      val epochs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = s.readStream.format("laketable")
-        .option("startSnapshotId", d1.toString).load(locD)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          epochs.incrementAndGet()
-          // the committed band space AS OF THIS BATCH — includes every
-          // earlier batch's maintenance append. Both appends ride the
-          // epoch fence (appendEpoch): a foreachBatch replay after a
-          // mid-batch crash is a per-table no-op — the same
-          // exactly-once guarantee the format sink gives.
-          val com = s.read.format("laketable").load(locI)
-          val bands = P.explodeBands(P.md5MinhashSigs(batch))
-          // within-batch self-dup: a band key shared by two arrivals
-          // of the SAME micro-batch flags both — the index learns the
-          // batch's keys only after gating, so membership alone would
-          // pass a same-batch twin pair (r11 verdict item 4)
-          val selfDup = bands.groupBy("band", "h0", "h1")
-            .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-            .select("band", "h0", "h1")
-          val dupKeys = com.select("band", "h0", "h1").union(selfDup)
-          val res = LakeTable.load(locR)
-          res.appendEpoch(LakeWriter.writeDataFiles(
-            bands.join(dupKeys, Seq("band", "h0", "h1"), "left_semi")
-              .select("doc_id"), res), "live-gate", epoch)
-          val idx = LakeTable.load(locI)
-          idx.appendEpoch(LakeWriter.writeDataFiles(
-            P.withBandKey(bands.select("band", "h0", "h1").distinct()
-              .join(com, Seq("band", "h0", "h1"), "left_anti")), idx),
-            "live-maint", epoch)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainBatches(ckpt, s.readStream.format("laketable")
+          .option("startSnapshotId", d1.toString).load(data.location).writeStream) {
+        (batch, epoch) =>
+        val bands = P.explodeBands(P.md5MinhashSigs(batch))
+        // within-batch self-dup: a band key shared by two arrivals
+        // of the SAME micro-batch flags both — the index learns the
+        // batch's keys only after gating, so membership alone would
+        // pass a same-batch twin pair (r11 verdict item 4)
+        val selfDup = bands.groupBy("band", "h0", "h1")
+          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
+          .select("band", "h0", "h1")
+        // the committed band space AS OF THIS BATCH includes every
+        // earlier batch's maintenance append
+        liveGate(locR, locI, epoch)(
+          com => bands.join(com.select("band", "h0", "h1").union(selfDup),
+            Seq("band", "h0", "h1"), "left_semi").select("doc_id"),
+          com => P.withBandKey(bands.select("band", "h0", "h1").distinct()
+            .join(com, Seq("band", "h0", "h1"), "left_anti")))
+      }
       Trace.count("landed", landed)
-      Trace.count("epochs", epochs.get())
     }
     Trace.count("landed", landed)
     data.append(LakeWriter.writeDataFiles(odds, data))
     runLive() // wave 1: gated against the corpus; its bands join the index
-    val d3 = data.append(LakeWriter.writeDataFiles(wave2, data))
+    val d3 = data.append(LakeWriter.writeDataFiles(plantedWave2(evens, odds), data))
     runLive() // restart: wave 2 gated against corpus ∪ wave 1
-    val dups = s.read.format("laketable").load(locR)
-      .select("doc_id").distinct().withColumn("is_fuzzy_dup", lit(true))
-    localize(data.changesBetween(s, d1, d3).select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
-      .orderBy("doc_id"))
+    verdicts(data.changesBetween(s, d1, d3).select("doc_id"), locR,
+      "doc_id", "is_fuzzy_dup")
   }
 
   // D7i — the live fuzzy gate at ARRIVAL grain, hash-oracled: eight
@@ -1386,24 +1238,18 @@ object StreamingQueries {
   // a1/a2/a4/a6/a8 derive from distinct source docs.
   def d07_minhash_ordered(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    val P = graft.queries.PipelineQueries
     val ckpt = sc.dir("ckpt")
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     // (arrival doc_id, source doc_id, append ' zq zr zs'?)
     val plan = Seq((101L, 0L, false), (102L, 2L, false), (103L, 0L, false),
       (104L, 4L, false), (105L, 2L, true), (106L, 6L, false),
       (107L, 6L, false), (108L, 8L, false))
-    val data = sc.table("d07ord-data", "doc_id BIGINT,text STRING",
-      TruncateSpec("doc_id", 1000L))
-    // layout key = xxhash64(band,h0,h1) pmod 16 (P.withBandKey) — h0 is
-    // a minhash minimum and skews low; the uniform re-key spreads
-    // maintenance appends evenly across the 16 buckets
+    val data = docTable(sc, "d07ord-data")
+    // the band-key layout of bandIndexed
     val locI = sc.table("d07ord-idx", P.BandIndexDdl,
       TruncateSpec("bkey", 1L)).location
     val locR = sc.table("d07ord-res", "doc_id BIGINT",
       TruncateSpec("doc_id", 1000L)).location
-    val locD = data.location
     plan.foreach { case (id, srcId, near) =>
       val text =
         if (near) concat(col("text"), lit(" zq zr zs")) else col("text")
@@ -1411,37 +1257,66 @@ object StreamingQueries {
         d.filter(col("doc_id") === srcId)
           .select(lit(id).as("doc_id"), text.as("text")), data))
     }
-    val q = s.readStream.format("laketable")
+    drainBatches(ckpt, s.readStream.format("laketable")
       .option("startSnapshotId", "0")
       .option("maxFilesPerTrigger", "1") // one arrival per micro-batch
-      .load(locD)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val com = s.read.format("laketable").load(locI)
-        val bands = P.explodeBands(P.md5MinhashSigs(batch))
-        val res = LakeTable.load(locR)
-        res.appendEpoch(LakeWriter.writeDataFiles(
-          bands.join(com, Seq("band", "h0", "h1"), "left_semi")
-            .select("doc_id"), res), "live-gate", epoch)
-        val idx = LakeTable.load(locI)
-        idx.appendEpoch(LakeWriter.writeDataFiles(
-          P.withBandKey(bands.select("band", "h0", "h1").distinct()
-            .join(com, Seq("band", "h0", "h1"), "left_anti")), idx),
-          "live-maint", epoch)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dups = s.read.format("laketable").load(locR)
-      .select("doc_id").distinct().withColumn("is_fuzzy_dup", lit(true))
-    localize(data.refresh().toDF(s).select("doc_id")
-      .join(dups, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("is_fuzzy_dup"), lit(false)).as("is_fuzzy_dup"))
-      .orderBy("doc_id"))
+      .load(data.location)
+      .writeStream) { (batch, epoch) =>
+      val bands = P.explodeBands(P.md5MinhashSigs(batch))
+      liveGate(locR, locI, epoch)(
+        com => bands.join(com, Seq("band", "h0", "h1"), "left_semi").select("doc_id"),
+        com => P.withBandKey(bands.select("band", "h0", "h1").distinct()
+          .join(com, Seq("band", "h0", "h1"), "left_anti")))
+    }
+    verdicts(data.refresh().toDF(s).select("doc_id"), locR,
+      "doc_id", "is_fuzzy_dup")
   }
+
+  /** The semantic entries' common start: the quantized embeddings, a data
+    * table holding the corpus (vec_id < 400), a verdict table, and a cell
+    * index over the corpus under frozen first-K centroids, which the
+    * index keeps in its properties. Returns the embeddings, the data and
+    * index tables, the verdict table's location, and the corpus snapshots
+    * of data and index. */
+  private def cellIndexed(s: SparkSession, dir: String, sc: Scratch.Scope,
+      prefix: String): (DataFrame, LakeTable, LakeTable, String, Long, Long) = {
+    graft.functions.CosineSimilarity.register(s)
+    val q = t(s, dir, "embeddings").select(col("vec_id"), expr(
+      s"""transform(embedding, x ->
+         |  CAST(round(CAST(x AS DOUBLE) * ${P.SemDeDupExactScale}D) AS FLOAT))"""
+        .stripMargin).as("embedding"))
+    val data = sc.table(s"$prefix-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
+      TruncateSpec("vec_id", 100L))
+    val index = sc.table(s"$prefix-idx", "cell BIGINT,vec_id BIGINT,embedding ARRAY<FLOAT>",
+      TruncateSpec("cell", 8L))
+    val locR = sc.table(s"$prefix-res", "vec_id BIGINT",
+      TruncateSpec("vec_id", 100L)).location
+    val d1 = data.append(LakeWriter.writeDataFiles(
+      q.filter(col("vec_id") < 400), data))
+    val committed = data.snapshotDF(s, d1)
+    val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    index.setProperty(L.SemCentroidsProp, P.ivfModelToString(cents))
+    val i1 = index.append(LakeWriter.writeDataFiles(
+      P.assignCellsHier(committed, cents)
+        .select(col("cell"), col("vec_id"), col("embedding")), index))
+    (q, data, index, locR, d1, i1)
+  }
+
+  /** The batch's cell assignment under the centroids in the index's own
+    * properties (frozen at corpus build). foreachBatch hands a plain batch
+    * DataFrame, so the BATCH hier assignment (routing join + groupBy)
+    * applies directly. */
+  private def cellsOf(locI: String, batch: DataFrame): DataFrame =
+    P.assignCellsHier(batch, P.ivfModelFromString(
+      LakeTable.load(locI).tableMeta.properties(L.SemCentroidsProp)))
+
+  /** The ids of `cells` with a same-cell vector above the cosine bar in
+    * the committed cell index `com`. */
+  private def cosineHits(cells: DataFrame, com: DataFrame): DataFrame =
+    cells.join(com.select(col("cell"), col("embedding").as("ce")), "cell")
+      .filter(expr("cosine_sim(embedding, ce)") > 0.43)
+      .select("vec_id")
 
   // D7f — the SEMANTIC gate run CONTINUOUSLY against the committed cell
   // index, completing the streaming committed-index trio (ANN:
@@ -1468,34 +1343,11 @@ object StreamingQueries {
   // completed stream (batch-equivalence).
   def d07_semdedup_stream(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    graft.functions.CosineSimilarity.register(s)
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     val ckpt = sc.dir("ckpt")
-    val q = t(s, dir, "embeddings").select(col("vec_id"), expr(
-      s"""transform(embedding, x ->
-         |  CAST(round(CAST(x AS DOUBLE) * ${P.SemDeDupExactScale}D) AS FLOAT))"""
-        .stripMargin).as("embedding"))
-    val data = sc.table("d07sem-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("vec_id", 100L))
-    val index = sc.table("d07sem-idx", "cell BIGINT,vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("cell", 8L))
-    val locR = sc.table("d07sem-res", "vec_id BIGINT",
-      TruncateSpec("vec_id", 100L)).location
-    val (locD, locI) = (data.location, index.location)
-    val d1 = data.append(LakeWriter.writeDataFiles(
-      q.filter(col("vec_id") < 400), data))
-    val committed = data.snapshotDF(s, d1)
-    val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    index.setProperty(L.SemCentroidsProp, P.ivfModelToString(cents))
-    val i1 = index.append(LakeWriter.writeDataFiles(
-      P.assignCellsHier(committed, cents)
-        .select(col("cell"), col("vec_id"), col("embedding")), index))
+    val (q, data, index, locR, d1, i1) = cellIndexed(s, dir, sc, "d07sem")
     // everything the gate stream uses reloads from the committed index:
     // centroids from its properties, cells from its corpus snapshot
-    val idxT = LakeTable.load(locI)
+    val idxT = LakeTable.load(index.location)
     val cents2 = P.ivfModelFromString(idxT.tableMeta.properties(L.SemCentroidsProp))
     val comIdx = idxT.snapshotDF(s, i1)
       .select(col("cell"), col("vec_id").as("c_id"), col("embedding").as("ce"))
@@ -1504,17 +1356,13 @@ object StreamingQueries {
     def landed = s.read.format("laketable").load(locR)
       .select("vec_id").distinct().count()
     def runGate(): Unit = {
-      val gq = P.assignCellsHierExpr(
+      drain(ckpt, P.assignCellsHierExpr(
           s.readStream.format("laketable")
-            .option("startSnapshotId", d1.toString).load(locD), cents2)
+            .option("startSnapshotId", d1.toString).load(data.location), cents2)
         .join(comIdx, "cell")
         .filter(expr("cosine_sim(embedding, ce)") > 0.43)
         .select("vec_id")
-        .writeStream.format("laketable")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start(locR)
-      gq.awaitTermination()
+        .writeStream.format("laketable"), Some(locR))
       Trace.count("landed", landed)
     }
     Trace.count("landed", landed)
@@ -1524,15 +1372,8 @@ object StreamingQueries {
     val d3 = data.append(LakeWriter.writeDataFiles(
       q.filter(col("vec_id") >= 450), data))
     runGate() // restart: only wave 2's files flow
-    val dups = s.read.format("laketable").load(locR)
-      .select("vec_id").distinct().withColumn("is_dup", lit(true))
-    localize(
-      P.assignCellsHierExpr(data.changesBetween(s, d1, d3), cents2)
-        .select("vec_id", "cell")
-        .join(dups, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cell"),
-          coalesce(col("is_dup"), lit(false)).as("is_dup"))
-        .orderBy("vec_id"))
+    verdicts(P.assignCellsHierExpr(data.changesBetween(s, d1, d3), cents2)
+      .select("vec_id", "cell"), locR, "vec_id", "is_dup")
   }
 
   // D7g — the LIVE semantic gate: the d07_minhash_live shape applied to
@@ -1556,78 +1397,35 @@ object StreamingQueries {
   // vector space.
   def d07_semdedup_live(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    graft.functions.CosineSimilarity.register(s)
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     val ckpt = sc.dir("ckpt")
-    val q = t(s, dir, "embeddings").select(col("vec_id"), expr(
-      s"""transform(embedding, x ->
-         |  CAST(round(CAST(x AS DOUBLE) * ${P.SemDeDupExactScale}D) AS FLOAT))"""
-        .stripMargin).as("embedding"))
-    val data = sc.table("d07sml-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("vec_id", 100L))
-    val index = sc.table("d07sml-idx", "cell BIGINT,vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("cell", 8L))
-    val locR = sc.table("d07sml-res", "vec_id BIGINT",
-      TruncateSpec("vec_id", 100L)).location
+    val (q, data, index, locR, d1, _) = cellIndexed(s, dir, sc, "d07sml")
     val (locD, locI) = (data.location, index.location)
-    val d1 = data.append(LakeWriter.writeDataFiles(
-      q.filter(col("vec_id") < 400), data))
-    val committed = data.snapshotDF(s, d1)
-    val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    index.setProperty(L.SemCentroidsProp, P.ivfModelToString(cents))
-    index.append(LakeWriter.writeDataFiles(
-      P.assignCellsHier(committed, cents)
-        .select(col("cell"), col("vec_id"), col("embedding")), index))
     // distinct dup ids landed, traced before the runs and after each
     def landed = s.read.format("laketable").load(locR)
       .select("vec_id").distinct().count()
     def runLive(): Unit = {
-      val sq = s.readStream.format("laketable")
-        .option("startSnapshotId", d1.toString).load(locD)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val idx = LakeTable.load(locI)
-          val cents2 =
-            P.ivfModelFromString(idx.tableMeta.properties(L.SemCentroidsProp))
-          // foreachBatch hands a plain batch DataFrame, so the BATCH
-          // hier assignment (routing join + groupBy) applies directly.
-          // Both appends ride the epoch fence (appendEpoch): a replayed
-          // batch is a per-table no-op — the format sink's exactly-once.
-          val aInc = P.assignCellsHier(batch, cents2)
-          val com = s.read.format("laketable").load(locI)
-            .select(col("cell"), col("embedding").as("ce"))
-          // within-batch self-dup: two SAME-BATCH arrivals in the same
-          // cell above the cosine bar flag each other — the index
-          // learns the batch's vectors only after gating, so the
-          // membership probe alone would pass a same-batch twin pair
-          // (r12 verdict item 8; the d07_minhash_live selfDup shape
-          // applied to the semantic regime). Per-cell bounded × batch
-          // width — never corpus-wide.
-          val selfDup = aInc
-            .select(col("cell"), col("vec_id"), col("embedding"))
-            .join(aInc.select(col("cell"), col("vec_id").as("ovid"),
-              col("embedding").as("oe")), "cell")
-            .filter(col("vec_id") =!= col("ovid"))
-            .filter(expr("cosine_sim(embedding, oe)") > 0.43)
-            .select("vec_id")
-          val res = LakeTable.load(locR)
-          res.appendEpoch(LakeWriter.writeDataFiles(
-            aInc.join(com, "cell")
-              .filter(expr("cosine_sim(embedding, ce)") > 0.43)
-              .select("vec_id").union(selfDup).distinct(), res),
-            "live-gate", epoch)
-          idx.appendEpoch(LakeWriter.writeDataFiles(
-            aInc.select(col("cell"), col("vec_id"), col("embedding")), idx),
-            "live-maint", epoch)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      drainBatches(ckpt, s.readStream.format("laketable")
+          .option("startSnapshotId", d1.toString).load(locD).writeStream) {
+        (batch, epoch) =>
+        val aInc = cellsOf(locI, batch)
+        // within-batch self-dup: two SAME-BATCH arrivals in the same
+        // cell above the cosine bar flag each other — the index
+        // learns the batch's vectors only after gating, so the
+        // membership probe alone would pass a same-batch twin pair
+        // (r12 verdict item 8; the d07_minhash_live selfDup shape
+        // applied to the semantic regime). Per-cell bounded × batch
+        // width — never corpus-wide.
+        val selfDup = aInc
+          .select(col("cell"), col("vec_id"), col("embedding"))
+          .join(aInc.select(col("cell"), col("vec_id").as("ovid"),
+            col("embedding").as("oe")), "cell")
+          .filter(col("vec_id") =!= col("ovid"))
+          .filter(expr("cosine_sim(embedding, oe)") > 0.43)
+          .select("vec_id")
+        liveGate(locR, locI, epoch)(
+          com => cosineHits(aInc, com).union(selfDup).distinct(),
+          _ => aInc.select(col("cell"), col("vec_id"), col("embedding")))
+      }
       Trace.count("landed", landed)
     }
     Trace.count("landed", landed)
@@ -1649,16 +1447,10 @@ object StreamingQueries {
           .select((col("vec_id") + 20000).as("vec_id"), col("embedding"))),
       data))
     runLive() // restart: wave 2 gated against corpus ∪ wave 1
-    val dups = s.read.format("laketable").load(locR)
-      .select("vec_id").distinct().withColumn("is_dup", lit(true))
     // serve the arrivals' assignments from the MAINTAINED index table
-    localize(s.read.format("laketable").load(locI)
-      .filter(col("vec_id") >= 400)
-      .select("vec_id", "cell")
-      .join(dups, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("is_dup"), lit(false)).as("is_dup"))
-      .orderBy("vec_id"))
+    verdicts(s.read.format("laketable").load(locI)
+      .filter(col("vec_id") >= 400).select("vec_id", "cell"),
+      locR, "vec_id", "is_dup")
   }
 
   // D7j — the SEMANTIC analog of d07_minhash_ordered: six vector batches
@@ -1674,75 +1466,30 @@ object StreamingQueries {
   // their cells enter the index only via in-run maintenance.
   def d07_semdedup_ordered(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    import graft.lake._
-    graft.functions.CosineSimilarity.register(s)
-    val P = graft.queries.PipelineQueries
-    val L = graft.queries.LakeQueries
     val ckpt = sc.dir("ckpt")
-    val q = t(s, dir, "embeddings").select(col("vec_id"), expr(
-      s"""transform(embedding, x ->
-         |  CAST(round(CAST(x AS DOUBLE) * ${P.SemDeDupExactScale}D) AS FLOAT))"""
-        .stripMargin).as("embedding"))
+    val (q, data, index, locR, d1, _) = cellIndexed(s, dir, sc, "d07sord")
+    val locI = index.location
     def range(lo: Long, hi: Long) =
       q.filter(col("vec_id") >= lo && col("vec_id") < hi)
     def twins(lo: Long, hi: Long) = range(lo, hi)
       .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
     // ord 1..6: fresh, fresh, twins-of-1, fresh, twins-of-4, fresh
-    val arrivals = Seq(range(400, 410), range(410, 420), twins(400, 410),
+    Seq(range(400, 410), range(410, 420), twins(400, 410),
       range(420, 430), twins(420, 430), range(430, 440))
-    val data = sc.table("d07sord-data", "vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("vec_id", 100L))
-    val index = sc.table("d07sord-idx", "cell BIGINT,vec_id BIGINT,embedding ARRAY<FLOAT>",
-      TruncateSpec("cell", 8L))
-    val locR = sc.table("d07sord-res", "vec_id BIGINT",
-      TruncateSpec("vec_id", 100L)).location
-    val (locD, locI) = (data.location, index.location)
-    val d1 = data.append(LakeWriter.writeDataFiles(
-      q.filter(col("vec_id") < 400), data))
-    val committed = data.snapshotDF(s, d1)
-    val cents = committed.orderBy("vec_id").limit(P.SemDeDupExactK)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    index.setProperty(L.SemCentroidsProp, P.ivfModelToString(cents))
-    index.append(LakeWriter.writeDataFiles(
-      P.assignCellsHier(committed, cents)
-        .select(col("cell"), col("vec_id"), col("embedding")), index))
-    arrivals.foreach(a =>
-      data.append(LakeWriter.writeDataFiles(a, data)))
-    val sq = s.readStream.format("laketable")
+      .foreach(a => data.append(LakeWriter.writeDataFiles(a, data)))
+    drainBatches(ckpt, s.readStream.format("laketable")
       .option("startSnapshotId", d1.toString)
       .option("maxFilesPerTrigger", "1") // one arrival per micro-batch
-      .load(locD)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val idx = LakeTable.load(locI)
-        val cents2 =
-          P.ivfModelFromString(idx.tableMeta.properties(L.SemCentroidsProp))
-        val aInc = P.assignCellsHier(batch, cents2)
-        val com = s.read.format("laketable").load(locI)
-          .select(col("cell"), col("embedding").as("ce"))
-        val res = LakeTable.load(locR)
-        res.appendEpoch(LakeWriter.writeDataFiles(
-          aInc.join(com, "cell")
-            .filter(expr("cosine_sim(embedding, ce)") > 0.43)
-            .select("vec_id").distinct(), res), "live-gate", epoch)
-        idx.appendEpoch(LakeWriter.writeDataFiles(
-          aInc.select(col("cell"), col("vec_id"), col("embedding")), idx),
-          "live-maint", epoch)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    sq.awaitTermination()
-    val dups = s.read.format("laketable").load(locR)
-      .select("vec_id").distinct().withColumn("is_dup", lit(true))
-    localize(s.read.format("laketable").load(locI)
-      .filter(col("vec_id") >= 400)
-      .select("vec_id", "cell")
-      .join(dups, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("is_dup"), lit(false)).as("is_dup"))
-      .orderBy("vec_id"))
+      .load(data.location)
+      .writeStream) { (batch, epoch) =>
+      val aInc = cellsOf(locI, batch)
+      liveGate(locR, locI, epoch)(
+        com => cosineHits(aInc, com).distinct(),
+        _ => aInc.select(col("cell"), col("vec_id"), col("embedding")))
+    }
+    verdicts(s.read.format("laketable").load(locI)
+      .filter(col("vec_id") >= 400).select("vec_id", "cell"),
+      locR, "vec_id", "is_dup")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

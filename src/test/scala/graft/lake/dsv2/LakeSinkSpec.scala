@@ -48,6 +48,24 @@ class LakeSinkSpec extends SparkSpec {
     assert(viaSource.filter(col("timestamp").isNull).count() == 0)
   }
 
+  test("batch append through format(laketable) applies the session's parquet.* settings") {
+    val t = newTable()
+    // 2,000 events in one bucket hold a few MB, far past a 64 KiB row group
+    graft.SessionConf.withConf(spark, "parquet.block.size" -> (64 * 1024).toString) {
+      LakeWriter.generateBatch(spark, 2000, bucket(0), seed = 3)
+        .write.format("laketable").mode("append").save(t.location)
+    }
+    def rowGroups(path: String): Int = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), LakeTable.hadoopConf))
+      try r.getRowGroups.size finally r.close()
+    }
+    val groups = t.refresh().files().map(f => rowGroups(f.path))
+    assert(groups.nonEmpty && groups.max > 1,
+      s"row groups per file $groups: the session's parquet.block.size was not applied")
+  }
+
   test("sink write then API write interleave; pruning sees both") {
     val t = newTable()
     LakeWriter.generateBatch(spark, 30, bucket(0), seed = 3)

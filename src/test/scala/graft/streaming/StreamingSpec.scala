@@ -5,16 +5,13 @@ import java.util.UUID
 import graft.{SparkSpec, Trace, TraceRecord}
 import graft.lake._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming semantics not expressible as batch-equivalence oracles
   * (SURVEY C13/C14/C17): watermark late-data drop, stateful dedup, and the
   * reference's core ingest loop as a Structured Streaming pipeline.
   */
 class StreamingSpec extends SparkSpec {
-
-  private def tmp(prefix: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-$prefix-${UUID.randomUUID()}"
 
   private val evSchema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
 
@@ -28,24 +25,18 @@ class StreamingSpec extends SparkSpec {
   /** Replay fixed JSON batches through a file stream in file order. */
   private def replay(files: Seq[Seq[String]], transform: org.apache.spark.sql.DataFrame
       => org.apache.spark.sql.DataFrame, mode: OutputMode): org.apache.spark.sql.DataFrame = {
-    val in = tmp("replay"); val ckpt = tmp("ckpt")
-    new java.io.File(in).mkdirs()
+    val in = tmpDir("graft-replay")
     files.zipWithIndex.foreach { case (rows, i) =>
       val f = new java.io.File(in, f"b$i%03d.json")
       java.nio.file.Files.write(f.toPath, rows.mkString("\n").getBytes)
       f.setLastModified(1700000000000L + i * 60000) // deterministic batch order
     }
     val name = "m" + UUID.randomUUID().toString.replace("-", "")
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(evSchema))
-      .option("maxFilesPerTrigger", "1")
-      .json(in)
-    val q = transform(stream).writeStream
-      .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamingQueries.drain(tmpDir("graft-ckpt"), transform(spark.readStream
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(evSchema))
+        .option("maxFilesPerTrigger", "1")
+        .json(in))
+      .writeStream.format("memory").queryName(name).outputMode(mode))
     spark.table(name)
   }
 
@@ -137,8 +128,7 @@ class StreamingSpec extends SparkSpec {
     val textC = (0 until 25).map(i => s"other${('z' - i % 26).toChar}$i").mkString(" ")
     def doc(id: Long, ts: String, text: String) =
       s"""{"doc_id":$id,"ts":"$ts","text":"$text"}"""
-    val in = tmp("fuzzy-replay"); val ckpt = tmp("fuzzy-ckpt")
-    new java.io.File(in).mkdirs()
+    val in = tmpDir("graft-fuzzy-replay")
     Seq(
       Seq(doc(1, "2024-01-01 10:00:00", textA)),
       Seq(doc(2, "2024-01-01 10:01:00", textB),
@@ -149,8 +139,8 @@ class StreamingSpec extends SparkSpec {
         f.setLastModified(1700000000000L + i * 60000)
     }
     val name = "m" + UUID.randomUUID().toString.replace("-", "")
-    val q = graft.queries.PipelineQueries.gateDf(
-        spark.readStream
+    StreamingQueries.drain(tmpDir("graft-fuzzy-ckpt"),
+      graft.queries.PipelineQueries.gateDf(spark.readStream
           .schema(org.apache.spark.sql.types.StructType
             .fromDDL("doc_id BIGINT, ts TIMESTAMP, text STRING"))
           .option("maxFilesPerTrigger", "1")
@@ -160,11 +150,7 @@ class StreamingSpec extends SparkSpec {
       .dropDuplicatesWithinWatermark("sig")
       .select(col("doc_id"), col("sig"))
       .writeStream
-      .format("memory").queryName(name).outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .format("memory").queryName(name).outputMode(OutputMode.Append()))
     val out = spark.table(name).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // one survivor per signature: docA won its group (first arrival, batch
@@ -295,8 +281,8 @@ class StreamingSpec extends SparkSpec {
     // single AvailableNow run splits its backlog, and batch N+1 must see
     // batch N's band keys in the index (gate-then-maintain per batch).
     val P = graft.queries.PipelineQueries
-    val locD = tmp("live-arr-data"); val locI = tmp("live-arr-idx")
-    val locR = tmp("live-arr-res"); val ckpt = tmp("live-arr-ckpt")
+    val locD = tmpDir("graft-live-arr-data"); val locI = tmpDir("graft-live-arr-idx")
+    val locR = tmpDir("graft-live-arr-res")
     import spark.implicits._
     val data = LakeTable.create(locD, "doc_id BIGINT,text STRING",
       TruncateSpec("doc_id", 1000L))
@@ -304,50 +290,35 @@ class StreamingSpec extends SparkSpec {
     LakeTable.create(locR, "doc_id BIGINT", TruncateSpec("doc_id", 1000L))
     val textA = "the quick brown fox jumps over the lazy dog again and again"
     val textC = "completely different content with no shared shingles at all here"
-    try {
-      // backlog of two snapshots: doc 1, then its exact re-key + a fresh doc
-      data.append(LakeWriter.writeDataFiles(
-        Seq((1L, textA)).toDF("doc_id", "text"), data))
-      data.append(LakeWriter.writeDataFiles(
-        Seq((2L, textA), (3L, textC)).toDF("doc_id", "text"), data))
-      val q = spark.readStream.format("laketable")
+    // backlog of two snapshots: doc 1, then its exact re-key + a fresh doc
+    data.append(LakeWriter.writeDataFiles(
+      Seq((1L, textA)).toDF("doc_id", "text"), data))
+    data.append(LakeWriter.writeDataFiles(
+      Seq((2L, textA), (3L, textC)).toDF("doc_id", "text"), data))
+    // the entries' own gate (StreamingQueries.liveGate), one file per batch
+    StreamingQueries.drainBatches(tmpDir("graft-live-arr-ckpt"),
+      spark.readStream.format("laketable")
         .option("startSnapshotId", "0")
         .option("maxFilesPerTrigger", "1") // force per-file batches
         .load(locD)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-          val com = spark.read.format("laketable").load(locI)
-          val bands = P.explodeBands(P.md5MinhashSigs(batch))
-          val res = LakeTable.load(locR)
-          res.appendEpoch(LakeWriter.writeDataFiles(
-            bands.join(com, Seq("band", "h0", "h1"), "left_semi")
-              .select("doc_id"), res), "live-gate", epoch)
-          val idx = LakeTable.load(locI)
-          idx.appendEpoch(LakeWriter.writeDataFiles(
-            P.withBandKey(bands.select("band", "h0", "h1").distinct()
-              .join(com, Seq("band", "h0", "h1"), "left_anti")), idx),
-            "live-maint", epoch)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dups = spark.read.format("laketable").load(locR)
-        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-      // doc 2's bands matched doc 1's — indexed by an EARLIER batch of
-      // the SAME run; doc 3 is fresh and must pass
-      assert(dups == Set(2L),
-        s"expected exactly doc 2 flagged (intra-run dedup), got $dups")
-      // and the index holds each band key exactly once (left_anti dedup)
-      val keys = spark.read.format("laketable").load(locI)
-        .groupBy("band", "h0", "h1").count()
-        .filter(col("count") > 1).count()
-      assert(keys == 0L, s"$keys band keys duplicated in the live index")
-    } finally {
-      LakeTable.drop(locD); LakeTable.drop(locI); LakeTable.drop(locR)
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ckpt))
+        .writeStream) { (batch, epoch) =>
+      val bands = P.explodeBands(P.md5MinhashSigs(batch))
+      StreamingQueries.liveGate(locR, locI, epoch)(
+        com => bands.join(com, Seq("band", "h0", "h1"), "left_semi").select("doc_id"),
+        com => P.withBandKey(bands.select("band", "h0", "h1").distinct()
+          .join(com, Seq("band", "h0", "h1"), "left_anti")))
     }
+    val dups = spark.read.format("laketable").load(locR)
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    // doc 2's bands matched doc 1's — indexed by an EARLIER batch of
+    // the SAME run; doc 3 is fresh and must pass
+    assert(dups == Set(2L),
+      s"expected exactly doc 2 flagged (intra-run dedup), got $dups")
+    // and the index holds each band key exactly once (left_anti dedup)
+    val keys = spark.read.format("laketable").load(locI)
+      .groupBy("band", "h0", "h1").count()
+      .filter(col("count") > 1).count()
+    assert(keys == 0L, s"$keys band keys duplicated in the live index")
   }
 
   test("D7f continuous semantic gate: two checkpointed runs gate each wave " +
@@ -555,7 +526,7 @@ class StreamingSpec extends SparkSpec {
   test("C17: streaming table ingest — moniker stream foreachBatch-appends into a LakeTable") {
     val Width = 300000000L
     def bucket(i: Int): Long = (5666666L + i) * Width
-    val loc = tmp("ingest-table")
+    val loc = tmpDir("graft-ingest-table")
     val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
     // writers publish three batches (with one duplicate publish)
     val published = (0 until 3).map { i =>
@@ -565,29 +536,21 @@ class StreamingSpec extends SparkSpec {
       files
     }
     Monikers.publish(loc, published.head) // duplicate moniker (at-least-once)
-    val ckpt = tmp("ingest-ckpt")
     val pending = s"$loc/${LakeFormat.PendingCommitsDir}"
-    val stream = spark.readStream
+    StreamingQueries.drainBatches(tmpDir("graft-ingest-ckpt"), spark.readStream
       .schema("files ARRAY<STRUCT<path: STRING, sizeBytes: BIGINT, rowCount: BIGINT, partitionValue: BIGINT, format: STRING>>")
       .option("maxFilesPerTrigger", "2")
       .option("multiLine", "true") // monikers are pretty-printed JSON
       .json(pending)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val files = batch.selectExpr("explode(files) AS f").select("f.*")
-          .collect().map { r =>
-            DataFileMeta(r.getAs[String]("path"), r.getAs[Long]("sizeBytes"),
-              r.getAs[Long]("rowCount"), r.getAs[Long]("partitionValue"),
-              r.getAs[String]("format"))
-          }
-        if (files.nonEmpty) table.append(files.toSeq)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+      .writeStream.outputMode(OutputMode.Append())) { (batch, _) =>
+      val files = batch.selectExpr("explode(files) AS f").select("f.*")
+        .collect().map { r =>
+          DataFileMeta(r.getAs[String]("path"), r.getAs[Long]("sizeBytes"),
+            r.getAs[Long]("rowCount"), r.getAs[Long]("partitionValue"),
+            r.getAs[String]("format"))
+        }
+      if (files.nonEmpty) table.append(files.toSeq)
+    }
     table.refresh()
     assert(table.toDF(spark).count() == 10 + 11 + 12) // dupe deduped
   }

@@ -36,7 +36,9 @@ import org.apache.spark.sql.types.StructType
   *
   * `meta` is volatile: staging futures (LakeQueries) read a handle's
   * metadata on another thread while its owner commits, so every refresh
-  * and commit must publish the new TableMeta to them.
+  * and commit must publish the new TableMeta to them. Each commit attempt
+  * reads it once and derives everything from that base; each read method
+  * takes one copy per call.
   */
 final class LakeTable private (val location: String,
     @volatile private var meta: TableMeta) {
@@ -53,19 +55,20 @@ final class LakeTable private (val location: String,
     */
   def spec: TruncateSpec = meta.currentSpec
   /** The partition-spec vintage `f` was written under. */
-  def specFor(f: DataFileMeta): TruncateSpec =
-    TruncateSpec(meta.spec.column, meta.specWidth(f.specId))
+  def specFor(f: DataFileMeta): TruncateSpec = {
+    val m = meta
+    TruncateSpec(m.spec.column, m.specWidth(f.specId))
+  }
   /** Id of the [[SpecDef]] writers stamp on new files. */
   def currentSpecId: Int = meta.currentSpecId
-  def schema: StructType = StructType.fromDDL(meta.schemaDdl)
+  def schema: StructType = meta.schema
 
   /** Schema as of a snapshot (schema evolution): snapshots committed before
     * evolution support existed fall back to the table-level schema.
     */
   def schemaAt(snapshotId: Long): StructType = {
-    val s = meta.snapshot(snapshotId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $snapshotId"))
-    StructType.fromDDL(s.schemaDdl.getOrElse(meta.schemaDdl))
+    val m = meta
+    StructType.fromDDL(m.requireSnapshot(snapshotId).schemaDdl.getOrElse(m.schemaDdl))
   }
   def currentSnapshotId: Long = meta.currentSnapshotId
   def snapshots: Seq[Snapshot] = meta.snapshots
@@ -79,17 +82,19 @@ final class LakeTable private (val location: String,
     * the DDL history is append-only, so a column's position — hence id —
     * never changed.
     */
-  def schemaDefAt(snapshotId: Long): SchemaDef = {
-    val s = meta.snapshot(snapshotId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $snapshotId"))
+  def schemaDefAt(snapshotId: Long): SchemaDef = schemaDefAt(meta, snapshotId)
+  private def schemaDefAt(m: TableMeta, snapshotId: Long): SchemaDef = {
+    val s = m.requireSnapshot(snapshotId)
     s.schemaId match {
-      case Some(id) if meta.schemas.exists(_.id == id) => meta.schemaDef(id)
-      case _ => SchemaDef(0, s.schemaDdl.getOrElse(meta.schemaDdl), Nil)
+      case Some(id) if m.schemas.exists(_.id == id) => m.schemaDef(id)
+      case _ => SchemaDef(0, s.schemaDdl.getOrElse(m.schemaDdl), Nil)
     }
   }
-  def currentSchemaDef: SchemaDef =
-    if (meta.snapshots.isEmpty) meta.currentSchemaDef
-    else schemaDefAt(meta.currentSnapshotId)
+  def currentSchemaDef: SchemaDef = {
+    val m = meta
+    if (m.snapshots.isEmpty) m.currentSchemaDef
+    else schemaDefAt(m, m.currentSnapshotId)
+  }
 
   def refresh(): LakeTable = {
     meta = LakeTable.readMeta(location)
@@ -128,12 +133,13 @@ final class LakeTable private (val location: String,
   private[lake] def readManifest(name: String): Seq[DataFileMeta] =
     readManifests(Seq(name))
 
-  /** All live data files at a snapshot (current by default). */
-  def files(snapshotId: Long = meta.currentSnapshotId): Seq[DataFileMeta] =
-    meta.snapshot(snapshotId) match {
-      case None => throw new IllegalArgumentException(s"no snapshot $snapshotId")
-      case Some(s) => readManifests(s.manifests)
-    }
+  /** All live data files of the current snapshot. */
+  def files(): Seq[DataFileMeta] = filesOf(meta)
+  /** All data files of snapshot `snapshotId`. */
+  def files(snapshotId: Long): Seq[DataFileMeta] =
+    readManifests(meta.requireSnapshot(snapshotId).manifests)
+  private def filesOf(m: TableMeta): Seq[DataFileMeta] =
+    readManifests(m.currentManifests)
 
   /** The delete files listed by delete manifests `names`, in manifest
     * order; same immutable-name LRU as [[readManifests]].
@@ -141,13 +147,14 @@ final class LakeTable private (val location: String,
   private def readDeleteManifests(names: Seq[String]): Seq[DeleteFileMeta] =
     cachedManifests(names, LakeTable.deleteManifestCache)(Json.deleteManifestFromJson)
 
-  /** Live position-delete files at a snapshot (merge-on-read deletes). */
-  def deleteFilesMeta(
-      snapshotId: Long = meta.currentSnapshotId): Seq[DeleteFileMeta] =
-    meta.snapshot(snapshotId) match {
-      case None => throw new IllegalArgumentException(s"no snapshot $snapshotId")
-      case Some(s) => readDeleteManifests(s.deleteManifests)
-    }
+  /** Live position-delete files of the current snapshot (merge-on-read
+    * deletes). */
+  def deleteFilesMeta(): Seq[DeleteFileMeta] = deleteFilesOf(meta)
+  /** Position-delete files of snapshot `snapshotId`. */
+  def deleteFilesMeta(snapshotId: Long): Seq[DeleteFileMeta] =
+    readDeleteManifests(meta.requireSnapshot(snapshotId).deleteManifests)
+  private def deleteFilesOf(m: TableMeta): Seq[DeleteFileMeta] =
+    readDeleteManifests(m.currentDeleteManifests)
 
   /** The delete files that can mark rows of data file `f` — position
     * deletes by exact path membership (or the [min, max] data-path range
@@ -181,11 +188,10 @@ final class LakeTable private (val location: String,
     * so the monotone seen-set never over-filters).
     */
   def addedFilesBySnapshot(fromId: Long, toId: Long): Seq[(Long, Seq[DataFileMeta])] = {
-    val fromSnap = meta.snapshot(fromId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $fromId"))
-    meta.snapshot(toId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $toId"))
-    val ids = meta.snapshots.map(_.id)
+    val m = meta
+    val fromSnap = m.requireSnapshot(fromId)
+    m.requireSnapshot(toId)
+    val ids = m.snapshots.map(_.id)
       .filter(id => id > fromId && id <= toId).sorted
     if (ids.isEmpty) return Nil
     val seen = scala.collection.mutable.HashSet.empty[String]
@@ -193,7 +199,7 @@ final class LakeTable private (val location: String,
     var prevManifests = fromSnap.manifests.toSet
     val out = Seq.newBuilder[(Long, Seq[DataFileMeta])]
     for (id <- ids) {
-      val s = meta.snapshot(id).get
+      val s = m.snapshot(id).get
       // "stage" snapshots fork OFF the main lineage (WAP branches): their
       // files must not enter the seen-set, or the publish commit that
       // folds them into main would deliver nothing to incremental readers
@@ -232,16 +238,9 @@ final class LakeTable private (val location: String,
     name
   }
 
-  /** The sequence the NEXT commit will land as (commitAttempt computes the
-    * same value from the same refreshed metadata a retry body sees) —
-    * stamped onto new data files and equality-delete entries inside commit
-    * bodies so "older than" comparisons are exact across retries.
-    */
-  private def nextSeq: Long =
-    meta.snapshots.map(_.id).maxOption.getOrElse(-1L) + 1
-
-  private def stamp(fm: Seq[DataFileMeta]): Seq[DataFileMeta] = {
-    val s = nextSeq
+  /** `fm` stamped with the sequence a commit derived from `base` lands as. */
+  private def stamp(base: TableMeta, fm: Seq[DataFileMeta]): Seq[DataFileMeta] = {
+    val s = base.nextSnapshotId
     fm.map(_.copy(seq = s))
   }
 
@@ -254,10 +253,10 @@ final class LakeTable private (val location: String,
     * applied to every full-list rewrite site). Empty input = no
     * manifest, matching the callers' previous isEmpty guards.
     */
-  private def writeManifests(fm: Seq[DataFileMeta]): Seq[String] =
+  private def writeManifests(base: TableMeta, fm: Seq[DataFileMeta]): Seq[String] =
     if (fm.isEmpty) Nil
     else {
-      val cap = math.max(1, meta.properties
+      val cap = math.max(1, base.properties
         .getOrElse(PropManifestMergeMaxEntries,
           DefaultManifestMergeMaxEntries.toString).toInt)
       fm.grouped(cap).map(g => writeManifest(g)).toSeq
@@ -307,18 +306,18 @@ final class LakeTable private (val location: String,
     * between that scan and the rewrite's commit is NOT reflected in the
     * rewritten files — and since those files carry a NEWER sequence and
     * the old ones leave the manifest, committing would silently resurrect
-    * the deleted rows. Called inside the rewrite's retry body (fresh
-    * metadata every attempt): any delete file added since `sinceSnapshot`
+    * the deleted rows. Called inside the rewrite's commit body (the
+    * attempt's base): any delete file added since `sinceSnapshot`
     * that can apply to a file being replaced aborts the commit; the
     * caller re-runs against current state. An expired `sinceSnapshot`
     * degrades conservatively (every current delete counts as new).
     */
-  private def assertNoNewDeletes(sinceSnapshot: Long,
+  private def assertNoNewDeletes(base: TableMeta, sinceSnapshot: Long,
       replaced: Seq[DataFileMeta], op: String): Unit = {
-    val before = meta.snapshot(sinceSnapshot)
+    val before = base.snapshot(sinceSnapshot)
       .map(s => readDeleteManifests(s.deleteManifests).map(_.path).toSet)
       .getOrElse(Set.empty[String])
-    val fresh = readDeleteManifests(meta.current.map(_.deleteManifests).getOrElse(Nil))
+    val fresh = deleteFilesOf(base)
       .filterNot(d => before.contains(d.path))
     val hit = fresh.filter(d => replaced.exists(d.applies))
     if (hit.nonEmpty)
@@ -331,10 +330,11 @@ final class LakeTable private (val location: String,
   /** Rewrite-vs-rewrite conflict: every file this rewrite replaces must
     * still be live — if a concurrent rewrite already swapped one out,
     * committing would ADD this rewrite's copies next to the other's
-    * (duplicated rows). Called inside the retry body (fresh metadata).
+    * (duplicated rows). Called inside the commit body (the attempt's base).
     */
-  private def assertReplacedLive(replaced: Set[String], op: String): Unit = {
-    val live = files().map(_.path).toSet
+  private def assertReplacedLive(base: TableMeta, replaced: Set[String],
+      op: String): Unit = {
+    val live = filesOf(base).map(_.path).toSet
     val missing = replaced.diff(live)
     if (missing.nonEmpty)
       throw new java.util.ConcurrentModificationException(
@@ -349,8 +349,9 @@ final class LakeTable private (val location: String,
     * growing forever. Orphaned delete parquets stay on disk for older
     * snapshots until expiry GCs them.
     */
-  private def carryDeleteManifests(kept: Seq[DataFileMeta]): Seq[String] = {
-    val curManifests = meta.current.map(_.deleteManifests).getOrElse(Nil)
+  private def carryDeleteManifests(base: TableMeta,
+      kept: Seq[DataFileMeta]): Seq[String] = {
+    val curManifests = base.currentDeleteManifests
     if (curManifests.isEmpty) return Nil
     val dels = readDeleteManifests(curManifests)
     val keptPaths = kept.map(_.path).sorted.toArray
@@ -375,6 +376,21 @@ final class LakeTable private (val location: String,
     else Seq(writeDeleteManifest(live))
   }
 
+  /** The plan of a REWRITE commit whose whole new file list is `kept`. */
+  private def rewritePlan(base: TableMeta, kept: Seq[DataFileMeta]): CommitPlan =
+    new CommitPlan(base)(manifests = writeManifests(base, kept),
+      deleteManifests = carryDeleteManifests(base, kept))
+
+  /** `base`'s delete manifests plus one listing `dels`, whose equality
+    * entries are stamped with the sequence the commit lands as. */
+  private def withDeletes(base: TableMeta, dels: Seq[DeleteFileMeta]): Seq[String] =
+    if (dels.isEmpty) base.currentDeleteManifests
+    else {
+      val s = base.nextSnapshotId
+      base.currentDeleteManifests :+ writeDeleteManifest(dels.map(d =>
+        if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))
+    }
+
   /** Publish through the per-scheme commit CAS ([[CommitCas]]): hard-link
     * on local FS, rename-if-absent on namespace stores, a registered
     * store-native conditional-put on flat object stores. Throws
@@ -383,8 +399,11 @@ final class LakeTable private (val location: String,
   private def writeAtomic(dest: Path, content: String): Unit =
     CommitCas.forScheme(fs.getScheme).publish(fs, dest, content)
 
-  private def maxRetries: Int =
-    meta.properties.getOrElse(PropCommitRetries, "100").toInt
+  private def maxRetries(base: TableMeta): Int =
+    base.properties.getOrElse(PropCommitRetries, "100").toInt
+
+  private def retryWaitMs(base: TableMeta): Long =
+    base.properties.getOrElse(PropCommitRetryWaitMs, DefaultCommitRetryWaitMs).toLong
 
   /** Jittered exponential backoff between lost-CAS retries. Without it,
     * racing committers stay phase-locked (each re-derives at full speed
@@ -407,11 +426,10 @@ final class LakeTable private (val location: String,
     * is a few win cycles, not ladder-cap multiples. Base is per-table
     * ([[LakeFormat.PropCommitRetryWaitMs]]), 0 disables.
     */
-  private def retryBackoff(attempt: Int): Unit = {
-    val base = meta.properties.getOrElse(PropCommitRetryWaitMs,
-      DefaultCommitRetryWaitMs).toLong
-    if (base > 0 && attempt > 0) {
-      val (lo, hi) = LakeTable.backoffWindowMs(base, attempt)
+  private def retryBackoff(base: TableMeta, attempt: Int): Unit = {
+    val wait = retryWaitMs(base)
+    if (wait > 0 && attempt > 0) {
+      val (lo, hi) = LakeTable.backoffWindowMs(wait, attempt)
       val ms = lo +
         java.util.concurrent.ThreadLocalRandom.current().nextLong(hi - lo + 1)
       if (ms > 0) Thread.sleep(ms)
@@ -419,62 +437,62 @@ final class LakeTable private (val location: String,
   }
 
   /** Everything one commit changes, as a [[commit]] body derives it from
-    * the metadata it just read. Every default carries its field forward
-    * unchanged from that metadata, so a body names only what it changes.
-    * Defaults read `meta` when the plan is built: build plans inside the
-    * body, never outside it.
+    * the attempt's `base`. Every default carries its field forward
+    * unchanged from `base`, so a body names only what it changes.
     */
-  private case class CommitPlan(
-      manifests: Seq[String] = meta.current.map(_.manifests).getOrElse(Nil),
-      keepSnapshots: Seq[Snapshot] = meta.snapshots,
-      props: Map[String, String] = Map.empty,
-      propsRemove: Set[String] = Set.empty,
-      schemaDdl: String = meta.schemaDdl,
-      deleteManifests: Seq[String] =
-        meta.current.map(_.deleteManifests).getOrElse(Nil),
+  private final class CommitPlan(base: TableMeta)(
+      val manifests: Seq[String] = base.currentManifests,
+      val keepSnapshots: Seq[Snapshot] = base.snapshots,
+      val props: Map[String, String] = Map.empty,
+      val propsRemove: Set[String] = Set.empty,
+      val schemaDdl: String = base.schemaDdl,
+      val deleteManifests: Seq[String] = base.currentDeleteManifests,
       // WAP staging: a "stage" snapshot forks from its branch head and
       // leaves what main readers see untouched
-      parentOverride: Option[Long] = None,
-      advanceCurrent: Boolean = true,
+      val parentOverride: Option[Long] = None,
+      val advanceCurrent: Boolean = true,
       // rename/drop evolution: new registry entries + the id to make
       // current (entries are append-only; ids never reused)
-      schemasUpdate: Option[(Seq[SchemaDef], Int)] = None,
+      val schemasUpdate: Option[(Seq[SchemaDef], Int)] = None,
       // partition-width evolution: same append-only contract
-      specsUpdate: Option[(Seq[SpecDef], Int)] = None)
+      val specsUpdate: Option[(Seq[SpecDef], Int)] = None)
 
-  /** One CAS attempt: only the metadata write can signal a conflict;
-    * everything after the CAS lands is best-effort maintenance and must
-    * never be mistaken for contention (a retry after a landed commit would
-    * apply the operation twice).
+  /** One CAS attempt: publishes `base` with `plan` applied as version
+    * `base.nextSnapshotId`. A `base` older than the table's head targets
+    * a version that already exists, so its CAS is lost. Only the metadata
+    * write can signal a conflict; everything after the CAS lands is
+    * best-effort maintenance and must never be mistaken for contention (a
+    * retry after a landed commit would apply the operation twice).
     */
-  private def commitAttempt(op: String, plan: CommitPlan): Long = {
-    val cur = meta
-    val nextVersion = cur.snapshots.map(_.id).maxOption.getOrElse(-1L) + 1
-    val newSchemaId = plan.schemasUpdate.map(_._2).getOrElse(cur.currentSchemaId)
+  private def commitAttempt(op: String, base: TableMeta, plan: CommitPlan): Long = {
+    val nextVersion = base.nextSnapshotId
+    val newSchemaId = plan.schemasUpdate.map(_._2).getOrElse(base.currentSchemaId)
     // every snapshot pins the schema current as of its commit, so time
     // travel reads old vintages with their own column set
     val snap = Snapshot(nextVersion,
-      plan.parentOverride.getOrElse(cur.currentSnapshotId),
+      plan.parentOverride.getOrElse(base.currentSnapshotId),
       System.currentTimeMillis(), op, plan.manifests, Some(plan.schemaDdl),
       plan.deleteManifests, schemaId = Some(newSchemaId))
-    val next = cur.copy(schemaDdl = plan.schemaDdl,
-      properties = (cur.properties -- plan.propsRemove) ++ plan.props,
+    val next = base.copy(schemaDdl = plan.schemaDdl,
+      properties = (base.properties -- plan.propsRemove) ++ plan.props,
       snapshots = plan.keepSnapshots :+ snap,
       currentSnapshotId =
-        if (plan.advanceCurrent) nextVersion else cur.currentSnapshotId,
-      schemas = cur.schemas ++ plan.schemasUpdate.map(_._1).getOrElse(Nil),
+        if (plan.advanceCurrent) nextVersion else base.currentSnapshotId,
+      schemas = base.schemas ++ plan.schemasUpdate.map(_._1).getOrElse(Nil),
       currentSchemaId = newSchemaId,
-      specs = cur.specs ++ plan.specsUpdate.map(_._1).getOrElse(Nil),
-      currentSpecId = plan.specsUpdate.map(_._2).getOrElse(cur.currentSpecId))
+      specs = base.specs ++ plan.specsUpdate.map(_._1).getOrElse(Nil),
+      currentSpecId = plan.specsUpdate.map(_._2).getOrElse(base.currentSpecId))
     writeAtomic(new Path(metaDir, s"v$nextVersion.json"), Json.metaToJson(next))
     meta = next
     // Pointer update is advisory (recovery lists metadata/ for max v).
-    try {
-      val hint = new Path(metaDir, VersionHint)
+    val hint = new Path(metaDir, VersionHint)
+    bestEffort("version-hint rewrite", hint,
+      "stale hint left; readers recover the version by listing") {
       fs.delete(hint, false)
       writeAtomic(hint, nextVersion.toString)
-    } catch { case _: java.io.IOException => }
-    try cleanupOldMetadata(next) catch { case _: java.io.IOException => }
+    }
+    bestEffort("metadata cleanup", metaDir,
+      "superseded v*.json files left for a later cleanup")(cleanupOldMetadata(next))
     nextVersion
   }
 
@@ -503,39 +521,41 @@ final class LakeTable private (val location: String,
     * stuck in the refresh window. Fairness from purely local signals —
     * no coordination object, no reads.
     */
-  private def chainBreakYield(): Unit =
+  private def chainBreakYield(base: TableMeta): Unit =
     if (conflictSeen && chainWins > 0 && chainWins % 3 == 0) {
-      val base = meta.properties.getOrElse(PropCommitRetryWaitMs,
-        DefaultCommitRetryWaitMs).toLong
-      if (base > 0) {
+      val wait = retryWaitMs(base)
+      if (wait > 0) {
         val ms = java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(base * 3 + 1)
+          .nextLong(wait * 3 + 1)
         if (ms > 0) Thread.sleep(ms)
       }
     }
 
   /** The one optimistic commit primitive every table change goes through.
-    * `plan` is re-evaluated against REFRESHED metadata on every attempt —
-    * commit content must never be computed from pre-conflict state (a
-    * stale manifest list would silently drop a concurrent committer's
-    * files: the lost-update hazard). `None` from `plan` means nothing to
-    * commit (-1). Only a lost CAS ([[FileAlreadyExistsException]] from
-    * [[CommitCas.publish]]) is retried, up to `commit.retry.num-retries`
+    * Each attempt reads the metadata ONCE, as `base`, and derives the whole
+    * commit from it: `plan(base)` and the published version both come from
+    * that one read, so a commit can never be planned from one version and
+    * published on top of another (that splice would silently drop the
+    * newer version's files: the lost-update hazard). `None` from `plan`
+    * means nothing to commit (-1). Only a lost CAS
+    * ([[FileAlreadyExistsException]] from [[CommitCas.publish]]) is
+    * retried, on refreshed metadata, up to `commit.retry.num-retries`
     * times with [[retryBackoff]] between; any other failure surfaces from
     * the attempt that hit it.
     */
-  private def commit(op: String)(plan: () => Option[CommitPlan]): Long = {
+  private def commit(op: String)(plan: TableMeta => Option[CommitPlan]): Long = {
     var attempt = 0
     var yielded = false
     while (true) {
-      plan() match {
+      val base = meta
+      plan(base) match {
         case None => return -1L
         case Some(p) =>
           // yield only when there is actually something to commit — a
           // no-op body (idempotent replay) must never pay the beat
-          if (!yielded) { chainBreakYield(); yielded = true }
+          if (!yielded) { chainBreakYield(base); yielded = true }
           try {
-            val id = commitAttempt(op, p)
+            val id = commitAttempt(op, base, p)
             chainWins = if (attempt == 0) chainWins + 1 else 0
             if (chainWins >= LakeTable.ChainCalmWins) {
               conflictSeen = false
@@ -547,10 +567,10 @@ final class LakeTable private (val location: String,
               attempt += 1
               conflictSeen = true
               LakeTable.commitRetries.incrementAndGet()
-              if (attempt >= maxRetries)
+              if (attempt >= maxRetries(base))
                 throw new IllegalStateException(
                   s"$op commit failed after $attempt retries")
-              retryBackoff(attempt)
+              retryBackoff(base, attempt)
               refresh()
           }
       }
@@ -577,14 +597,14 @@ final class LakeTable private (val location: String,
   // every manifest (O(table files) per commit, breaking fast-append O(1)).
   @volatile private var knownPathsCache: (Long, Set[String]) = (-2L, Set.empty)
 
-  private def knownPaths(): Set[String] = {
-    val id = meta.currentSnapshotId
-    if (knownPathsCache._1 != id) {
-      val paths = readManifests(meta.current.map(_.manifests).getOrElse(Nil))
-        .map(_.path).toSet
-      knownPathsCache = (id, paths)
+  private def knownPaths(base: TableMeta): Set[String] = {
+    val (cachedId, cached) = knownPathsCache
+    if (cachedId == base.currentSnapshotId) cached
+    else {
+      val paths = filesOf(base).map(_.path).toSet
+      knownPathsCache = (base.currentSnapshotId, paths)
+      paths
     }
-    knownPathsCache._2
   }
 
   /** Register EXTERNALLY-WRITTEN parquet files into the table —
@@ -676,11 +696,10 @@ final class LakeTable private (val location: String,
     // cache forward without re-reading manifests (see below)
     var lastKnown: Set[String] = null
     var lastFresh: Seq[String] = Nil
-    val id = commit("append") { () =>
-      val existing = meta.current.map(_.manifests).getOrElse(Nil)
+    val id = commit("append") { base =>
       // dedupe within the batch too: one sweep can carry the same file
       // twice (at-least-once event redelivery)
-      val known = knownPaths()
+      val known = knownPaths(base)
       val fresh = newFiles.distinctBy(_.path).filterNot(f => known.contains(f.path))
       lastKnown = known
       lastFresh = fresh.map(_.path)
@@ -689,8 +708,9 @@ final class LakeTable private (val location: String,
       // from minting an empty snapshot per redelivery — idempotent means
       // no new rows AND no history growth
       if (fresh.isEmpty) None
-      else Some(CommitPlan(
-        manifests = maybeMerge(existing :+ writeManifest(stamp(fresh))),
+      else Some(new CommitPlan(base)(
+        manifests = maybeMerge(base,
+          base.currentManifests :+ writeManifest(stamp(base, fresh))),
         props = props))
     }
     // Roll the cache forward: the new snapshot's path set is exactly the
@@ -712,11 +732,11 @@ final class LakeTable private (val location: String,
     * compactFiles, driven by the DSv2 truncate-write path.
     */
   def overwrite(newFiles: Seq[DataFileMeta]): Long =
-    commit("rewrite") { () =>
+    commit("rewrite") { base =>
       val fresh = newFiles.distinctBy(_.path)
       // full replacement: no pre-existing file survives, so no pending
       // delete can reference a live file
-      Some(CommitPlan(manifests = writeManifests(stamp(fresh)),
+      Some(new CommitPlan(base)(manifests = writeManifests(base, stamp(base, fresh)),
         deleteManifests = Nil))
     }
 
@@ -730,9 +750,9 @@ final class LakeTable private (val location: String,
     */
   def overwriteWithProps(newFiles: Seq[DataFileMeta],
       props: Map[String, String]): Long =
-    commit("rewrite") { () =>
+    commit("rewrite") { base =>
       val fresh = newFiles.distinctBy(_.path)
-      Some(CommitPlan(manifests = writeManifests(stamp(fresh)),
+      Some(new CommitPlan(base)(manifests = writeManifests(base, stamp(base, fresh)),
         props = props, deleteManifests = Nil))
     }
 
@@ -758,25 +778,17 @@ final class LakeTable private (val location: String,
       // they merge, so state advances exactly once per epoch
       extraProps: Map[String, String] = Map.empty): Long = {
     val key = s"$PropStreamEpochPrefix$queryId"
-    commit("append") { () =>
-      if (meta.properties.get(key)
+    commit("append") { base =>
+      if (base.properties.get(key)
           .exists(v => LakeTable.parseEpochValue(v)._1 >= epochId)) None
       else {
-        assertEqColumnsResolvable(newDeletes, "streaming epoch")
-        val existing = meta.current.map(_.manifests).getOrElse(Nil)
-        val known = knownPaths()
+        assertEqColumnsResolvable(base, newDeletes, "streaming epoch")
+        val existing = base.currentManifests
+        val known = knownPaths(base)
         val fresh = newFiles.distinctBy(_.path).filterNot(f => known.contains(f.path))
         val withNew =
           if (fresh.isEmpty) existing
-          else existing :+ writeManifest(stamp(fresh))
-        val curD = meta.current.map(_.deleteManifests).getOrElse(Nil)
-        val withDels =
-          if (newDeletes.isEmpty) curD
-          else {
-            val s = nextSeq
-            curD :+ writeDeleteManifest(newDeletes.map(d =>
-              if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))
-          }
+          else existing :+ writeManifest(stamp(base, fresh))
         // Watermark GC: epoch entries are stamped with their commit time;
         // entries idle past stream.epoch.ttl-ms (default 30 days) belong to
         // dead queries and are dropped here — without this, table metadata
@@ -785,22 +797,22 @@ final class LakeTable private (val location: String,
         // its fence (documented: keep checkpoint lag under the TTL, the
         // same class of contract as snapshot retention vs stream lag).
         val now = System.currentTimeMillis()
-        val ttl = meta.properties.getOrElse(PropStreamEpochTtlMs,
+        val ttl = base.properties.getOrElse(PropStreamEpochTtlMs,
           DefaultStreamEpochTtlMs).toLong
-        val stale = meta.properties.keysIterator
+        val stale = base.properties.keysIterator
           .filter(k => k.startsWith(PropStreamEpochPrefix) && k != key)
-          .filter(k => now - LakeTable.parseEpochValue(meta.properties(k))._2 >= ttl)
+          .filter(k => now - LakeTable.parseEpochValue(base.properties(k))._2 >= ttl)
           .toSet
-        Some(CommitPlan(manifests = maybeMerge(withNew),
+        Some(new CommitPlan(base)(manifests = maybeMerge(base, withNew),
           props = extraProps + (key -> s"$epochId:$now"), propsRemove = stale,
-          deleteManifests = withDels))
+          deleteManifests = withDeletes(base, newDeletes)))
       }
     }
   }
 
   /** Table-property update as one metadata commit (SQL SET TBLPROPERTIES). */
   def setProperty(key: String, value: String): Long =
-    commit("alter") { () => Some(CommitPlan(props = Map(key -> value))) }
+    commit("alter") { base => Some(new CommitPlan(base)(props = Map(key -> value))) }
 
   /** Schema evolution: ADD COLUMN (nullable, appended last). One metadata
     * commit bumping schemaDdl — no data file is touched; files written
@@ -815,20 +827,20 @@ final class LakeTable private (val location: String,
     */
   def addColumn(name: String,
       dataType: org.apache.spark.sql.types.DataType): Long =
-    commit("alter") { () =>
-      if (schema.fieldNames.exists(_.equalsIgnoreCase(name)))
+    commit("alter") { base =>
+      val fields = base.schema.fields
+      if (fields.exists(_.name.equalsIgnoreCase(name)))
         throw new IllegalArgumentException(s"column $name already exists")
-      val newDdl = StructType(schema.fields :+
+      val newDdl = StructType(fields :+
         org.apache.spark.sql.types.StructField(name, dataType, nullable = true)).toDDL
       val schemasUpd =
-        if (meta.schemas.isEmpty) None
+        if (base.schemas.isEmpty) None
         else {
-          val cur = meta.currentSchemaDef
-          val nextId = meta.schemas.map(_.id).max + 1
+          val nextId = base.schemas.map(_.id).max + 1
           Some((Seq(SchemaDef(nextId, newDdl,
-            cur.ids :+ (meta.lastFieldId + 1))), nextId))
+            base.currentSchemaDef.ids :+ (base.lastFieldId + 1))), nextId))
         }
-      Some(CommitPlan(schemaDdl = newDdl, schemasUpdate = schemasUpd))
+      Some(new CommitPlan(base)(schemaDdl = newDdl, schemasUpdate = schemasUpd))
     }
 
   /** Schema evolution: RENAME COLUMN. Mints a new [[SchemaDef]] carrying
@@ -840,23 +852,23 @@ final class LakeTable private (val location: String,
     * under before the top-level DDL diverges from it.
     */
   def renameColumn(oldName: String, newName: String): Long =
-    commit("alter") { () =>
-      val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(oldName))
+    commit("alter") { base =>
+      val fields = base.schema.fields.clone()
+      val idx = fields.indexWhere(_.name.equalsIgnoreCase(oldName))
       if (idx < 0) throw new IllegalArgumentException(s"no column $oldName")
-      if (schema.fieldNames.exists(_.equalsIgnoreCase(newName)))
+      if (fields.exists(_.name.equalsIgnoreCase(newName)))
         throw new IllegalArgumentException(s"column $newName already exists")
-      if (meta.spec.column.equalsIgnoreCase(oldName))
+      if (base.spec.column.equalsIgnoreCase(oldName))
         throw new UnsupportedOperationException(
-          s"cannot rename partition column ${meta.spec.column}")
-      assertNoEqDeletesOn(oldName, "rename")
-      val (base, nextId) = mintBase()
-      val fields = schema.fields.clone()
+          s"cannot rename partition column ${base.spec.column}")
+      assertNoEqDeletesOn(base, oldName, "rename")
+      val (minted, nextId) = mintBase(base)
       fields(idx) = fields(idx).copy(name = newName)
       val newDdl = StructType(fields).toDDL
-      Some(CommitPlan(schemaDdl = newDdl,
-        schemasUpdate = Some((base :+ SchemaDef(nextId, newDdl,
-          meta.currentSchemaDef.ids), nextId)),
-        props = rewriteColumnListProps(oldName, Some(newName))))
+      Some(new CommitPlan(base)(schemaDdl = newDdl,
+        schemasUpdate = Some((minted :+ SchemaDef(nextId, newDdl,
+          base.currentSchemaDef.ids), nextId)),
+        props = rewriteColumnListProps(base, oldName, Some(newName))))
     }
 
   /** Schema evolution: WIDEN COLUMN TYPE (`ALTER COLUMN x TYPE t`) — the
@@ -880,11 +892,12 @@ final class LakeTable private (val location: String,
     */
   def widenColumnType(name: String,
       newType: org.apache.spark.sql.types.DataType): Long =
-    commit("alter") { () =>
+    commit("alter") { base =>
       import org.apache.spark.sql.types._
-      val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+      val fields = base.schema.fields.clone()
+      val idx = fields.indexWhere(_.name.equalsIgnoreCase(name))
       if (idx < 0) throw new IllegalArgumentException(s"no column $name")
-      val cur = schema.fields(idx).dataType
+      val cur = fields(idx).dataType
       val legal = (cur, newType) match {
         case (IntegerType, LongType) => true
         case (FloatType, DoubleType) => true
@@ -896,17 +909,16 @@ final class LakeTable private (val location: String,
         s"illegal type change $cur -> $newType for $name " +
           "(only INT -> BIGINT, FLOAT -> DOUBLE, and same-scale DECIMAL " +
           "precision growth widen in place)")
-      if (meta.spec.column.equalsIgnoreCase(name))
+      if (base.spec.column.equalsIgnoreCase(name))
         throw new UnsupportedOperationException(
-          s"cannot change the partition column ${meta.spec.column}'s type")
-      assertNoEqDeletesOn(name, "widen")
-      val (base, nextId) = mintBase()
-      val fields = schema.fields.clone()
+          s"cannot change the partition column ${base.spec.column}'s type")
+      assertNoEqDeletesOn(base, name, "widen")
+      val (minted, nextId) = mintBase(base)
       fields(idx) = fields(idx).copy(dataType = newType)
       val newDdl = StructType(fields).toDDL
-      Some(CommitPlan(schemaDdl = newDdl,
-        schemasUpdate = Some((base :+ SchemaDef(nextId, newDdl,
-          meta.currentSchemaDef.ids), nextId))))
+      Some(new CommitPlan(base)(schemaDdl = newDdl,
+        schemasUpdate = Some((minted :+ SchemaDef(nextId, newDdl,
+          base.currentSchemaDef.ids), nextId))))
     }
 
   /** Schema evolution: DROP COLUMN. Metadata-only — the column's field id
@@ -915,30 +927,30 @@ final class LakeTable private (val location: String,
     * snapshots still reads it through their pinned schema.
     */
   def dropColumn(name: String): Long =
-    commit("alter") { () =>
-      val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+    commit("alter") { base =>
+      val fields = base.schema.fields
+      val idx = fields.indexWhere(_.name.equalsIgnoreCase(name))
       if (idx < 0) throw new IllegalArgumentException(s"no column $name")
-      if (schema.fields.length == 1)
+      if (fields.length == 1)
         throw new UnsupportedOperationException("cannot drop the only column")
-      if (meta.spec.column.equalsIgnoreCase(name))
+      if (base.spec.column.equalsIgnoreCase(name))
         throw new UnsupportedOperationException(
-          s"cannot drop partition column ${meta.spec.column}")
-      assertNoEqDeletesOn(name, "drop")
-      val (base, nextId) = mintBase()
-      val newDdl = StructType(
-        schema.fields.patch(idx, Nil, 1)).toDDL
-      Some(CommitPlan(schemaDdl = newDdl,
-        schemasUpdate = Some((base :+ SchemaDef(nextId, newDdl,
-          meta.currentSchemaDef.ids.patch(idx, Nil, 1)), nextId)),
-        props = rewriteColumnListProps(name, None)))
+          s"cannot drop partition column ${base.spec.column}")
+      assertNoEqDeletesOn(base, name, "drop")
+      val (minted, nextId) = mintBase(base)
+      val newDdl = StructType(fields.patch(idx, Nil, 1)).toDDL
+      Some(new CommitPlan(base)(schemaDdl = newDdl,
+        schemasUpdate = Some((minted :+ SchemaDef(nextId, newDdl,
+          base.currentSchemaDef.ids.patch(idx, Nil, 1)), nextId)),
+        props = rewriteColumnListProps(base, name, None)))
     }
 
   /** Pending equality-delete files key rows BY NAME; renaming/dropping a
     * key column out from under them would silently stop retiring the rows
     * they target. Compaction materializes them away — require that first.
     */
-  private def assertNoEqDeletesOn(col: String, op: String): Unit = {
-    val eq = deleteFilesMeta().filter(_.kind == DeleteFileMeta.KindEq)
+  private def assertNoEqDeletesOn(base: TableMeta, col: String, op: String): Unit = {
+    val eq = deleteFilesOf(base).filter(_.kind == DeleteFileMeta.KindEq)
     if (eq.exists(_.eqColumns.exists(_.equalsIgnoreCase(col))))
       throw new IllegalStateException(
         s"cannot $op column $col: pending equality-delete files key on it " +
@@ -953,12 +965,12 @@ final class LakeTable private (val location: String,
     * the retired name afterwards; every subsequent scan of files it
     * applies to would then throw resolving the mask, leaving the table
     * unreadable until the entry is dug out by hand. Validated inside the
-    * commit retry body (fresh metadata per attempt); a miss aborts the
-    * DELETE/epoch so the caller re-runs against the current schema.
+    * commit body (the attempt's base); a miss aborts the DELETE/epoch so
+    * the caller re-runs against the current schema.
     */
-  private def assertEqColumnsResolvable(dels: Seq[DeleteFileMeta],
-      op: String): Unit = {
-    val names = schema.fieldNames
+  private def assertEqColumnsResolvable(base: TableMeta,
+      dels: Seq[DeleteFileMeta], op: String): Unit = {
+    val names = base.schema.fieldNames
     val missing = dels.iterator.filter(_.kind == DeleteFileMeta.KindEq)
       .flatMap(_.eqColumns)
       .filterNot(c => names.exists(_.equalsIgnoreCase(c))).toSeq.distinct
@@ -972,12 +984,10 @@ final class LakeTable private (val location: String,
     * drop, schema 0 itself (current DDL, explicit positional ids). Returns
     * (entries, next def id).
     */
-  private def mintBase(): (Seq[SchemaDef], Int) =
-    if (meta.schemas.isEmpty) {
-      val names = schema.fieldNames
-      (Seq(SchemaDef(0, meta.schemaDdl, names.indices.map(_ + 1).toSeq)),
-        meta.schemas.map(_.id).maxOption.getOrElse(0) + 1)
-    } else (Nil, meta.schemas.map(_.id).max + 1)
+  private def mintBase(base: TableMeta): (Seq[SchemaDef], Int) =
+    if (base.schemas.isEmpty)
+      (Seq(SchemaDef(0, base.schemaDdl, base.schema.fields.indices.map(_ + 1).toSeq)), 1)
+    else (Nil, base.schemas.map(_.id).max + 1)
 
   /** Column-list properties (`write.sort-order`, `write.bloom.columns`)
     * rewritten for a rename (newName = Some) or drop (None) of `oldName`.
@@ -987,10 +997,10 @@ final class LakeTable private (val location: String,
     * read-side [[LakeFormat.sortOrderColumns]] filter stays as
     * defense-in-depth for tables evolved before this rewrite existed.
     */
-  private def rewriteColumnListProps(oldName: String,
+  private def rewriteColumnListProps(base: TableMeta, oldName: String,
       newName: Option[String]): Map[String, String] =
     Seq(LakeFormat.PropSortOrder, LakeFormat.PropBloomColumns).flatMap { key =>
-      meta.properties.get(key).flatMap { v =>
+      base.properties.get(key).flatMap { v =>
         val cols = v.split(',').map(_.trim).filter(_.nonEmpty).toSeq
         if (!cols.exists(_.equalsIgnoreCase(oldName))) None
         else Some(key -> cols.flatMap { c =>
@@ -1007,10 +1017,10 @@ final class LakeTable private (val location: String,
     * into permanent loss of the declaration. Only emits keys whose value
     * actually changes.
     */
-  private def translateColumnListProps(from: SchemaDef,
+  private def translateColumnListProps(base: TableMeta, from: SchemaDef,
       to: SchemaDef): Map[String, String] =
     Seq(LakeFormat.PropSortOrder, LakeFormat.PropBloomColumns).flatMap { key =>
-      meta.properties.get(key).flatMap { v =>
+      base.properties.get(key).flatMap { v =>
         val cols = v.split(',').map(_.trim).filter(_.nonEmpty).toSeq
         val translated = cols.map { c =>
           val i = from.names.indexWhere(_.equalsIgnoreCase(c))
@@ -1032,28 +1042,24 @@ final class LakeTable private (val location: String,
     */
   def setPartitionWidth(newWidthMicros: Long): Long = {
     require(newWidthMicros > 0, "truncate width must be positive")
-    commit("alter") { () =>
-      if (newWidthMicros == spec.widthMicros)
+    commit("alter") { base =>
+      if (newWidthMicros == base.currentSpec.widthMicros)
         throw new IllegalArgumentException(
           s"partition width is already $newWidthMicros")
       // first evolution materializes spec 0 (the creation width) so every
       // pre-evolution file's id resolves through the registry too
-      val (base, nextId) =
-        if (meta.specs.isEmpty) (Seq(SpecDef(0, meta.spec.widthMicros)), 1)
-        else (Nil, meta.specs.map(_.id).max + 1)
-      Some(CommitPlan(
-        specsUpdate = Some((base :+ SpecDef(nextId, newWidthMicros), nextId))))
+      val (minted, nextId) =
+        if (base.specs.isEmpty) (Seq(SpecDef(0, base.spec.widthMicros)), 1)
+        else (Nil, base.specs.map(_.id).max + 1)
+      Some(new CommitPlan(base)(
+        specsUpdate = Some((minted :+ SpecDef(nextId, newWidthMicros), nextId))))
     }
   }
 
   // ---- snapshot refs: tags + rollback ------------------------------------
 
   /** Named snapshot refs ("tags"): `ref.tag.<name>` -> snapshot id. */
-  def tags: Map[String, Long] =
-    meta.properties.collect {
-      case (k, v) if k.startsWith(PropTagPrefix) =>
-        k.stripPrefix(PropTagPrefix) -> v.toLong
-    }
+  def tags: Map[String, Long] = meta.tags
 
   /** Tag `snapshotId` with `name` — a property update committed through
     * the CAS loop (atomic vs concurrent committers), recorded as a
@@ -1067,10 +1073,11 @@ final class LakeTable private (val location: String,
   def createTag(name: String, snapshotId: Long): Long = {
     require(name.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid tag name: $name (must start with a letter)")
-    commit("tag") { () =>
-      if (meta.snapshot(snapshotId).isEmpty)
+    commit("tag") { base =>
+      if (base.snapshot(snapshotId).isEmpty)
         throw new IllegalArgumentException(s"no snapshot $snapshotId to tag")
-      Some(CommitPlan(props = Map(s"$PropTagPrefix$name" -> snapshotId.toString)))
+      Some(new CommitPlan(base)(
+        props = Map(s"$PropTagPrefix$name" -> snapshotId.toString)))
     }
   }
 
@@ -1078,19 +1085,15 @@ final class LakeTable private (val location: String,
     * when the tag doesn't exist.
     */
   def dropTag(name: String): Long =
-    commit("untag") { () =>
-      if (!meta.properties.contains(s"$PropTagPrefix$name")) None
-      else Some(CommitPlan(propsRemove = Set(s"$PropTagPrefix$name")))
+    commit("untag") { base =>
+      if (!base.properties.contains(s"$PropTagPrefix$name")) None
+      else Some(new CommitPlan(base)(propsRemove = Set(s"$PropTagPrefix$name")))
     }
 
   // ---- WAP branches: stage → audit → publish -----------------------------
 
   /** Branch refs: `ref.branch.<name>` -> head snapshot id. */
-  def branches: Map[String, Long] =
-    meta.properties.collect {
-      case (k, v) if k.startsWith(PropBranchPrefix) =>
-        k.stripPrefix(PropBranchPrefix) -> v.toLong
-    }
+  def branches: Map[String, Long] = meta.branches
 
   def branchHead(name: String): Option[Long] = branches.get(name)
 
@@ -1104,21 +1107,21 @@ final class LakeTable private (val location: String,
   def stageAppend(newFiles: Seq[DataFileMeta], branch: String): Long = {
     require(branch.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid branch name: $branch (must start with a letter)")
-    commit("stage") { () =>
-      val base = branchHead(branch)
-        .map(id => meta.snapshot(id).getOrElse(throw new IllegalStateException(
+    commit("stage") { base =>
+      val head = base.branches.get(branch)
+        .map(id => base.snapshot(id).getOrElse(throw new IllegalStateException(
           s"branch $branch points at missing snapshot $id")))
-        .orElse(meta.current)
+        .orElse(base.current)
         .getOrElse(throw new IllegalStateException("cannot stage on an empty table"))
-      val known = readManifests(base.manifests).map(_.path).toSet
+      val known = readManifests(head.manifests).map(_.path).toSet
       val fresh = newFiles.distinctBy(_.path).filterNot(f => known.contains(f.path))
       val manifests =
-        if (fresh.isEmpty) base.manifests
-        else base.manifests :+ writeManifest(stamp(fresh))
-      Some(CommitPlan(manifests = manifests,
-        props = Map(s"$PropBranchPrefix$branch" -> nextSeq.toString),
-        deleteManifests = base.deleteManifests,
-        parentOverride = Some(base.id), advanceCurrent = false))
+        if (fresh.isEmpty) head.manifests
+        else head.manifests :+ writeManifest(stamp(base, fresh))
+      Some(new CommitPlan(base)(manifests = manifests,
+        props = Map(s"$PropBranchPrefix$branch" -> base.nextSnapshotId.toString),
+        deleteManifests = head.deleteManifests,
+        parentOverride = Some(head.id), advanceCurrent = false))
     }
   }
 
@@ -1131,27 +1134,27 @@ final class LakeTable private (val location: String,
     */
   def publishBranch(branch: String): Long = {
     val key = s"$PropBranchPrefix$branch"
-    commit("append") { () =>
-      branchHead(branch) match {
+    commit("append") { base =>
+      base.branches.get(branch) match {
         case None => None
         case Some(headId) =>
-          val head = meta.snapshot(headId).getOrElse(
+          val head = base.snapshot(headId).getOrElse(
             throw new IllegalStateException(
               s"branch $branch points at missing snapshot $headId"))
           // the stage chain's base = first non-"stage" ancestor
           var baseSnap = head
           while (baseSnap.operation == "stage")
-            baseSnap = meta.snapshot(baseSnap.parentId).getOrElse(
+            baseSnap = base.snapshot(baseSnap.parentId).getOrElse(
               throw new IllegalStateException(
                 s"stage chain of $branch broken at ${baseSnap.parentId}"))
           val baseManifests = baseSnap.manifests.toSet
           val staged = head.manifests.filterNot(baseManifests.contains)
           if (staged.isEmpty) None
           else {
-            val cur = meta.current.map(_.manifests).getOrElse(Nil)
+            val cur = base.currentManifests
             val curSet = cur.toSet
-            Some(CommitPlan(
-              manifests = maybeMerge(cur ++ staged.filterNot(curSet.contains)),
+            Some(new CommitPlan(base)(
+              manifests = maybeMerge(base, cur ++ staged.filterNot(curSet.contains)),
               propsRemove = Set(key)))
           }
       }
@@ -1163,9 +1166,9 @@ final class LakeTable private (val location: String,
     */
   def dropBranch(branch: String): Long = {
     val key = s"$PropBranchPrefix$branch"
-    commit("unbranch") { () =>
-      if (!meta.properties.contains(key)) None
-      else Some(CommitPlan(propsRemove = Set(key)))
+    commit("unbranch") { base =>
+      if (!base.properties.contains(key)) None
+      else Some(new CommitPlan(base)(propsRemove = Set(key)))
     }
   }
 
@@ -1178,10 +1181,10 @@ final class LakeTable private (val location: String,
     * rollback never re-delivers.
     */
   def rollbackTo(snapshotId: Long): Long =
-    commit("rollback") { () =>
-      val target = meta.snapshot(snapshotId).getOrElse(
+    commit("rollback") { base =>
+      val target = base.snapshot(snapshotId).getOrElse(
         throw new IllegalArgumentException(s"no snapshot $snapshotId to roll back to"))
-      val restoredDdl = target.schemaDdl.getOrElse(meta.schemaDdl)
+      val restoredDdl = target.schemaDdl.getOrElse(base.schemaDdl)
       // Restore the target's schema ID too, so post-rollback writes stamp
       // (and reads resolve) the restored name space. A pre-registry target
       // (schemaId None) cannot blindly map to def 0: def 0 is frozen at
@@ -1194,13 +1197,13 @@ final class LakeTable private (val location: String,
       // reuse a def with the identical DDL, else mint one.
       val schemasUpd: (Seq[SchemaDef], Int) = target.schemaId match {
         case Some(id) => (Nil, id)
-        case None if meta.schemas.isEmpty => (Nil, 0)
-        case None => meta.schemas.find(_.ddl == restoredDdl) match {
+        case None if base.schemas.isEmpty => (Nil, 0)
+        case None => base.schemas.find(_.ddl == restoredDdl) match {
           case Some(d) => (Nil, d.id)
           case None =>
             val n = org.apache.spark.sql.types.StructType
               .fromDDL(restoredDdl).fields.length
-            val nextId = meta.schemas.map(_.id).max + 1
+            val nextId = base.schemas.map(_.id).max + 1
             (Seq(SchemaDef(nextId, restoredDdl, (1 to n).toSeq)), nextId)
         }
       }
@@ -1209,17 +1212,17 @@ final class LakeTable private (val location: String,
       // the target's pinned SCHEMA (doc above), so a property naming a
       // post-target rename would otherwise dangle as a phantom.
       val propsUpd: Map[String, String] =
-        if (meta.schemas.isEmpty) Map.empty
+        if (base.schemas.isEmpty) Map.empty
         else {
           val restoredDef: Option[SchemaDef] = schemasUpd match {
             case (minted, id) =>
-              minted.find(_.id == id).orElse(meta.schemas.find(_.id == id))
-                .orElse(if (id == 0) Some(meta.schemaDef(0)) else None)
+              minted.find(_.id == id).orElse(base.schemas.find(_.id == id))
+                .orElse(if (id == 0) Some(base.schemaDef(0)) else None)
           }
           restoredDef.fold(Map.empty[String, String])(
-            translateColumnListProps(meta.currentSchemaDef, _))
+            translateColumnListProps(base, base.currentSchemaDef, _))
         }
-      Some(CommitPlan(manifests = target.manifests, props = propsUpd,
+      Some(new CommitPlan(base)(manifests = target.manifests, props = propsUpd,
         schemaDdl = restoredDdl, deleteManifests = target.deleteManifests,
         schemasUpdate = Some(schemasUpd)))
     }
@@ -1235,10 +1238,10 @@ final class LakeTable private (val location: String,
     * snapshot, never re-delivered). Returns -1 when already consolidated.
     */
   def rewriteManifests(): Long =
-    commit("compact") { () =>
-      val cur = meta.current.map(_.manifests).getOrElse(Nil)
+    commit("compact") { base =>
+      val cur = base.currentManifests
       if (cur.size <= 1) None
-      else Some(CommitPlan(manifests = writeManifests(readManifests(cur))))
+      else Some(new CommitPlan(base)(manifests = writeManifests(base, readManifests(cur))))
     }
 
   /** Manifest compaction once the count crosses the merge threshold.
@@ -1251,14 +1254,14 @@ final class LakeTable private (val location: String,
     * bounded by one bin, and each merge rewrites only the small-tail
     * entries instead of the whole inventory every `threshold` commits.
     */
-  private def maybeMerge(manifests: Seq[String]): Seq[String] = {
-    val threshold = meta.properties.getOrElse(PropManifestMinMerge, "200").toInt
+  private def maybeMerge(base: TableMeta, manifests: Seq[String]): Seq[String] = {
+    val threshold = base.properties.getOrElse(PropManifestMinMerge, "200").toInt
     if (manifests.size < threshold) manifests
     else {
       // clamped ONCE and reused for both the big/small threshold and the
       // bin flush: a property value of 0 must not make every buffered
       // entry flush into its own single-file manifest (manifest explosion)
-      val cap = math.max(1, meta.properties
+      val cap = math.max(1, base.properties
         .getOrElse(PropManifestMergeMaxEntries,
           DefaultManifestMergeMaxEntries.toString).toInt)
       val sized = manifests.map(m => m -> readManifest(m).size)
@@ -1283,17 +1286,16 @@ final class LakeTable private (val location: String,
     * Returns the new snapshot id, or -1 if nothing matched.
     */
   def deleteOlderThan(cutoffMicros: Long): Long = {
-    commit("delete") { () =>
-      // recomputed from fresh metadata on every attempt so a concurrent
+    commit("delete") { base =>
+      // recomputed from each attempt's base so a concurrent
       // append's files survive the rewrite of the manifest list. A file is
       // droppable iff its WHOLE bucket sits below the cutoff — judged per
       // file under the width of its own spec vintage (equivalent to the
       // reference's aligned-cutoff comparison when widths are uniform)
-      val (dropped, kept) = files().partition(f =>
-        f.partitionValue + meta.specWidth(f.specId) <= cutoffMicros)
+      val (dropped, kept) = filesOf(base).partition(f =>
+        f.partitionValue + base.specWidth(f.specId) <= cutoffMicros)
       if (dropped.isEmpty) None
-      else Some(CommitPlan(manifests = writeManifests(kept),
-        deleteManifests = carryDeleteManifests(kept)))
+      else Some(rewritePlan(base, kept))
     }
   }
 
@@ -1302,7 +1304,7 @@ final class LakeTable private (val location: String,
     * `merge-on-read` writes position-delete files ([[deleteWhereMoR]]).
     */
   def deleteWhere(spark: SparkSession, predicate: org.apache.spark.sql.Column): Long =
-    if (meta.properties.get(LakeFormat.PropDeleteMode)
+    if (tableMeta.properties.get(LakeFormat.PropDeleteMode)
         .contains(LakeFormat.DeleteModeMergeOnRead))
       deleteWhereMoR(spark, predicate)
     else deleteWhereCoW(spark, predicate)
@@ -1340,19 +1342,19 @@ final class LakeTable private (val location: String,
       predicate: org.apache.spark.sql.Column,
       extra: Seq[DataFileMeta]): Long = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val scanSnapshot = meta.currentSnapshotId
-    val live = files()
+    val scan = meta
+    val scanSnapshot = scan.currentSnapshotId
+    val schema = scan.schema
+    val live = filesOf(scan)
     if (live.isEmpty && extra.isEmpty) return -1L
     if (live.isEmpty) // overwrite into an empty table = plain append
-      return commit("rewrite") { () =>
-        val kept = files() ++ stamp(extra)
-        Some(CommitPlan(manifests = writeManifests(kept),
-          deleteManifests = carryDeleteManifests(kept)))
+      return commit("rewrite") { base =>
+        Some(rewritePlan(base, filesOf(base) ++ stamp(base, extra)))
       }
     // Pending MoR deletes must be honored throughout: a deleted row that
     // matched the scan would mis-classify its file; one that survived a
     // rewrite unfiltered would RESURRECT.
-    val matchedPerFile = readWithDeletes(spark, schema, live,
+    val matchedPerFile = readWithDeletes(spark, schema, live, scanSnapshot,
         keepPathCol = Some("__path"))
       .filter(predicate <=> lit(true))
       .groupBy("__path").agg(count(lit(1)).as("matched"))
@@ -1364,7 +1366,7 @@ final class LakeTable private (val location: String,
     // masked by pending equality deletes merely make a whole-file drop
     // classify conservatively as a partial rewrite, which stays correct —
     // the rewrite reads through readWithDeletes and re-applies all masks.
-    val dels = deleteFilesMeta().filter(_.kind == DeleteFileMeta.KindPos)
+    val dels = deleteFilesOf(scan).filter(_.kind == DeleteFileMeta.KindPos)
     val delCounts: Option[DataFrame] = pendingPosMarkCounts(spark, dels)
       .map(_.withColumnRenamed("file_path", "path"))
     // Classification stays a DATAFLOW end-to-end: files-meta (manifests
@@ -1374,7 +1376,7 @@ final class LakeTable private (val location: String,
     // untouched files. O(matched files) strings is the floor: the commit
     // needs the replaced-path set to rewrite the manifest list.
     val decisions = LakeTable.classifyDeleteDecisions(
-      filesDF(spark).select(col("path"), col("row_count")),
+      filesDF(spark, scanSnapshot).select(col("path"), col("row_count")),
       matchedPerFile, delCounts).collect()
     val partialPaths =
       decisions.collect { case r if !r.getBoolean(1) => r.getString(0) }.toSet
@@ -1389,20 +1391,18 @@ final class LakeTable private (val location: String,
         // keep-filter must RETAIN rows where the predicate evaluates to
         // NULL (they don't match the delete predicate); a bare !predicate
         // would drop them — <=> true makes NULL explicit
-        val keepRows = readWithDeletes(spark, schema, partial)
+        val keepRows = readWithDeletes(spark, schema, partial, scanSnapshot)
           .filter(!(predicate <=> org.apache.spark.sql.functions.lit(true)))
         LakeWriter.writeDataFiles(keepRows, this)
       }
     val replaced = (partial ++ fullyDropped).map(_.path).toSet
-    commit("rewrite") { () =>
-      assertNoNewDeletes(scanSnapshot, partial ++ fullyDropped, "delete")
-      assertReplacedLive(replaced, "delete")
-      // recompute survivors from fresh metadata: concurrent appends since
-      // the scan must not be dropped by this manifest rewrite
-      val kept = files().filterNot(f => replaced.contains(f.path)) ++
-        stamp(rewritten) ++ stamp(extra)
-      Some(CommitPlan(manifests = writeManifests(kept),
-        deleteManifests = carryDeleteManifests(kept)))
+    commit("rewrite") { base =>
+      assertNoNewDeletes(base, scanSnapshot, partial ++ fullyDropped, "delete")
+      assertReplacedLive(base, replaced, "delete")
+      // recompute survivors from the attempt's base: concurrent appends
+      // since the scan must not be dropped by this manifest rewrite
+      Some(rewritePlan(base, filesOf(base).filterNot(f => replaced.contains(f.path)) ++
+        stamp(base, rewritten ++ extra)))
     }
   }
 
@@ -1431,13 +1431,15 @@ final class LakeTable private (val location: String,
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val fresh = newFiles.distinctBy(_.path)
     if (fresh.isEmpty) return -1L
-    val scanSnapshot = meta.currentSnapshotId
-    val width = meta.specWidth(writeSpecId)
+    val scan = meta
+    val scanSnapshot = scan.currentSnapshotId
+    val width = scan.specWidth(writeSpecId)
     val touched = fresh.map(_.partitionValue).distinct.toSet
     // the write-width buckets a live file's interval [pv, pv+ownWidth)
-    // overlaps — evaluated under the file's OWN spec vintage
+    // overlaps — evaluated under the file's OWN spec vintage (spec ids
+    // are never reused, so any version's registry resolves them)
     def writeBuckets(f: DataFileMeta): Seq[Long] = {
-      val wf = meta.specWidth(f.specId)
+      val wf = scan.specWidth(f.specId)
       val lo = f.partitionValue - java.lang.Math.floorMod(f.partitionValue, width)
       Iterator.iterate(lo)(_ + width)
         .takeWhile(_ < f.partitionValue + wf).toSeq
@@ -1445,21 +1447,22 @@ final class LakeTable private (val location: String,
     // straddling = intersects a touched bucket but is not fully contained
     // (only possible across spec widths); its surviving rows rewrite once,
     // BEFORE the commit loop — the conflict check below re-validates
-    val straddling = files().filter { f =>
+    val straddling = filesOf(scan).filter { f =>
       val bs = writeBuckets(f)
       bs.exists(touched) && !bs.forall(touched)
     }
     val rewritten: Seq[DataFileMeta] =
       if (straddling.isEmpty) Nil
       else {
-        val bucketCol = col(spec.column) - pmod(col(spec.column), lit(width))
-        val keepRows = readWithDeletes(spark, schema, straddling)
+        val c = col(scan.spec.column)
+        val bucketCol = c - pmod(c, lit(width))
+        val keepRows = readWithDeletes(spark, scan.schema, straddling, scanSnapshot)
           .filter(!bucketCol.isin(touched.toSeq: _*))
         LakeWriter.writeDataFiles(keepRows, this)
       }
     val straddlingPaths = straddling.map(_.path).toSet
-    commit("rewrite") { () =>
-      val cur = files()
+    commit("rewrite") { base =>
+      val cur = filesOf(base)
       // lost-update guard: files added since the scan that overlap a
       // touched bucket would be silently swallowed by the swap
       val conflicting = cur.filter(f => f.seq > scanSnapshot &&
@@ -1468,13 +1471,11 @@ final class LakeTable private (val location: String,
         throw new java.util.ConcurrentModificationException(
           s"dynamic overwrite: concurrent commit added " +
             s"${conflicting.size} file(s) into overwritten buckets")
-      assertReplacedLive(straddlingPaths, "rewrite")
-      assertNoNewDeletes(scanSnapshot, straddling, "rewrite")
-      val kept = cur.filter { f =>
+      assertReplacedLive(base, straddlingPaths, "rewrite")
+      assertNoNewDeletes(base, scanSnapshot, straddling, "rewrite")
+      Some(rewritePlan(base, cur.filter { f =>
         !straddlingPaths.contains(f.path) && !writeBuckets(f).forall(touched)
-      } ++ stamp(rewritten) ++ stamp(fresh)
-      Some(CommitPlan(manifests = writeManifests(kept),
-        deleteManifests = carryDeleteManifests(kept)))
+      } ++ stamp(base, rewritten ++ fresh)))
     }
   }
 
@@ -1494,7 +1495,7 @@ final class LakeTable private (val location: String,
     */
   def deleteWhereMoR(spark: SparkSession,
       predicate: org.apache.spark.sql.Column): Long = {
-    val scanSnapshot = meta.currentSnapshotId
+    val scanSnapshot = currentSnapshotId
     val written = writePositionDeletes(spark, predicate)
     if (written.isEmpty) -1L
     else commitPositionDeletes(written, Some(scanSnapshot))
@@ -1577,21 +1578,6 @@ final class LakeTable private (val location: String,
     }
   }
 
-  /** Commit half of [[deleteWhereMoR]]: append the position-delete files'
-    * manifest as one snapshot.
-    *
-    * Conflict validation, mirroring [[commitDelta]]: a compaction/CoW
-    * rewrite landing between the scan and this commit replaces data files
-    * these positions reference — the entries would dangle forever and the
-    * DELETE would silently no-op (rows resurrect). Validate per attempt
-    * against FRESH metadata. Entries past the inline-path cap carry no
-    * exact path list, so they validate via the SCAN SNAPSHOT instead:
-    * abort if any file removed since the scan lies in the entry's
-    * [lo,hi] path range (a mere live-overlap check would pass trivially —
-    * a rewrite's replacement files land in the same bucket dirs and sort
-    * inside the range). An expired scan snapshot degrades to abort:
-    * the caller re-runs the DELETE against current data.
-    */
   /** Dangling-reference detection shared by the delete/delta commits:
     * entries inlining their referenced paths check them against the live
     * set exactly; CAPPED entries (range only) check that no file removed
@@ -1599,15 +1585,18 @@ final class LakeTable private (val location: String,
     * trivially after the very rewrite being raced — replacement files
     * land in the same bucket dirs and sort inside the range). An expired
     * scan snapshot, or a capped entry with no scan info, cannot be proven
-    * safe and reports dangling (the caller re-runs against current data).
+    * safe and counts as dangling. Any dangling entry aborts the `op`
+    * commit (the caller re-runs against current data).
     */
-  private def danglingDeleteRefs(written: Seq[DeleteFileMeta],
-      live: Set[String], scanSnapshot: Option[Long]): Seq[String] = {
+  private def assertNoDanglingRefs(base: TableMeta, written: Seq[DeleteFileMeta],
+      scanSnapshot: Option[Long], op: String): Unit = {
+    val live = filesOf(base).map(_.path).toSet
     // outer None = no scan info; inner None = scan snapshot expired;
     // inner Some = paths live at the scan but gone now (replaced since)
-    lazy val removedSince: Option[Option[Set[String]]] = scanSnapshot.map(
-      s => meta.snapshot(s).map(_ => files(s).map(_.path).toSet -- live))
-    written.iterator.filter(_.kind == DeleteFileMeta.KindPos).flatMap { d =>
+    lazy val removedSince: Option[Option[Set[String]]] = scanSnapshot.map(s =>
+      base.snapshot(s).map(at => readManifests(at.manifests).map(_.path).toSet -- live))
+    val pos = written.iterator.filter(_.kind == DeleteFileMeta.KindPos)
+    val dangling = pos.flatMap { d =>
       if (d.dataPaths.nonEmpty) d.dataPaths.filterNot(live)
       else removedSince match {
         case Some(None) =>
@@ -1622,20 +1611,33 @@ final class LakeTable private (val location: String,
           else Seq(s"[${d.minDataPath}, ${d.maxDataPath}] (range, no live overlap)")
       }
     }.toSeq
+    if (dangling.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"$op invalidated by concurrent rewrite: ${dangling.size} referenced " +
+          s"data file(s) no longer live (first: ${dangling.head})")
   }
 
+  /** Commit half of [[deleteWhereMoR]]: append the position-delete files'
+    * manifest as one snapshot.
+    *
+    * Conflict validation, mirroring [[commitDelta]]: a compaction/CoW
+    * rewrite landing between the scan and this commit replaces data files
+    * these positions reference — the entries would dangle forever and the
+    * DELETE would silently no-op (rows resurrect). Validate against each
+    * attempt's base. Entries past the inline-path cap carry no
+    * exact path list, so they validate via the SCAN SNAPSHOT instead:
+    * abort if any file removed since the scan lies in the entry's
+    * [lo,hi] path range (a mere live-overlap check would pass trivially —
+    * a rewrite's replacement files land in the same bucket dirs and sort
+    * inside the range). An expired scan snapshot degrades to abort:
+    * the caller re-runs the DELETE against current data.
+    */
   private[lake] def commitPositionDeletes(written: Seq[DeleteFileMeta],
       scanSnapshot: Option[Long] = None): Long =
-    commit("delete") { () =>
-      val dangling = danglingDeleteRefs(written,
-        files().map(_.path).toSet, scanSnapshot)
-      if (dangling.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"MoR delete invalidated by concurrent rewrite: " +
-            s"${dangling.size} referenced data file(s) no longer live " +
-            s"(first: ${dangling.head})")
-      val cur = meta.current.map(_.deleteManifests).getOrElse(Nil)
-      Some(CommitPlan(deleteManifests = cur :+ writeDeleteManifest(written)))
+    commit("delete") { base =>
+      assertNoDanglingRefs(base, written, scanSnapshot, "MoR delete")
+      Some(new CommitPlan(base)(deleteManifests =
+        base.currentDeleteManifests :+ writeDeleteManifest(written)))
     }
 
   /** Compact the table's POSITION-delete files (the Iceberg
@@ -1662,7 +1664,7 @@ final class LakeTable private (val location: String,
     * forward untouched; if a concurrent rewrite already replaced one of
     * this op's inputs, the commit aborts (re-run). The rewritten entries
     * re-validate against the live file set per attempt via
-    * [[danglingDeleteRefs]] — a data compaction landing mid-rewrite
+    * [[assertNoDanglingRefs]] — a data compaction landing mid-rewrite
     * aborts rather than committing entries that dangle from birth.
     *
     * Returns the new snapshot id, or -1 when there is nothing to gain
@@ -1670,10 +1672,9 @@ final class LakeTable private (val location: String,
     */
   def rewritePositionDeletes(spark: SparkSession): Long = {
     import org.apache.spark.sql.functions.col
-    refresh()
-    val scanSnapshot = meta.currentSnapshotId
-    val all = deleteFilesMeta()
-    val pos = all.filter(_.kind == DeleteFileMeta.KindPos)
+    val scan = refresh().tableMeta
+    val scanSnapshot = scan.currentSnapshotId
+    val pos = deleteFilesOf(scan).filter(_.kind == DeleteFileMeta.KindPos)
     if (pos.isEmpty) return -1L
     val origRows = pos.map(_.rowCount).sum
     // live-path filter stays DISTRIBUTED (filesDF parses manifests
@@ -1697,29 +1698,8 @@ final class LakeTable private (val location: String,
       if (pos.size <= 1 && n == origRows) return -1L
       if (n == 0L) Nil else writeDeleteParquets(spark, rows, n)
     } finally rows.unpersist()
-    val replaced = pos.map(_.path).toSet
-    commit("rewrite-deletes") { () =>
-      val curEntries = deleteFilesMeta()
-      val gone = replaced -- curEntries.map(_.path).toSet
-      if (gone.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"rewrite-deletes aborted: ${gone.size} input delete file(s) no " +
-            "longer in the current snapshot — replaced by a concurrent " +
-            "delete rewrite, or pruned by a concurrent data compaction " +
-            s"that retired their targets (first: ${gone.head}); re-run")
-      val dangling = danglingDeleteRefs(rewritten,
-        files().map(_.path).toSet, Some(scanSnapshot))
-      if (dangling.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"rewrite-deletes invalidated by concurrent data rewrite: " +
-            s"${dangling.size} referenced data file(s) no longer live " +
-            s"(first: ${dangling.head})")
-      // eq entries + any pos files appended since the scan carry forward
-      val kept = curEntries.filterNot(d => replaced.contains(d.path))
-      val next = kept ++ rewritten
-      Some(CommitPlan(deleteManifests =
-        if (next.isEmpty) Nil else Seq(writeDeleteManifest(next))))
-    }
+    commitDeleteRewrite("rewrite-deletes", pos.map(_.path).toSet, rewritten,
+      scanSnapshot)
   }
 
   /** Retire EQUALITY-delete debt by converting it to position deletes
@@ -1771,9 +1751,9 @@ final class LakeTable private (val location: String,
       // debt warrants one distributed scan, not per CDC batch
       minEqFiles: Int = 0): Long = {
     import org.apache.spark.sql.functions.{col, lit, max}
-    refresh()
-    val scanSnapshot = meta.currentSnapshotId
-    val allEqs = deleteFilesMeta().filter(_.kind == DeleteFileMeta.KindEq)
+    val scan = refresh().tableMeta
+    val scanSnapshot = scan.currentSnapshotId
+    val allEqs = deleteFilesOf(scan).filter(_.kind == DeleteFileMeta.KindEq)
     if (allEqs.size < minEqFiles) return -1L
     val eqs = maxSeq.fold(allEqs)(ms => allEqs.filter(_.seq <= ms))
     if (eqs.isEmpty) return -1L
@@ -1803,31 +1783,34 @@ final class LakeTable private (val location: String,
       val n = marks.count()
       if (n == 0L) Nil else writeDeleteParquets(spark, marks, n)
     } finally marks.unpersist()
-    val replaced = eqs.map(_.path).toSet
     // the replaced eq parquets become orphans after the commit; the
     // bounded GC sweep (removeOrphanFiles) collects them with every
     // other dead file
-    commit("rewrite-deletes") { () =>
-      val curEntries = deleteFilesMeta()
+    commitDeleteRewrite("convert-eq-deletes", eqs.map(_.path).toSet, rewritten,
+      scanSnapshot)
+  }
+
+  /** Commit half of the delete-file rewrites: one "rewrite-deletes"
+    * snapshot swapping the entries `replaced` for `rewritten`. Entries
+    * appended since the scan (`scanSnapshot`) carry forward; the commit
+    * aborts if an input entry is no longer current (replaced by a
+    * concurrent delete rewrite, or pruned by a concurrent data compaction
+    * that retired its targets) or if a rewritten entry would dangle.
+    */
+  private def commitDeleteRewrite(op: String, replaced: Set[String],
+      rewritten: Seq[DeleteFileMeta], scanSnapshot: Long): Long =
+    commit("rewrite-deletes") { base =>
+      val curEntries = deleteFilesOf(base)
       val gone = replaced -- curEntries.map(_.path).toSet
       if (gone.nonEmpty)
         throw new java.util.ConcurrentModificationException(
-          s"convert-eq-deletes aborted: ${gone.size} input eq-delete " +
-            s"file(s) no longer in the current snapshot (first: " +
-            s"${gone.head}); re-run")
-      val dangling = danglingDeleteRefs(rewritten,
-        files().map(_.path).toSet, Some(scanSnapshot))
-      if (dangling.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"convert-eq-deletes invalidated by concurrent data rewrite: " +
-            s"${dangling.size} referenced data file(s) no longer live " +
-            s"(first: ${dangling.head})")
-      val kept = curEntries.filterNot(d => replaced.contains(d.path))
-      val next = kept ++ rewritten
-      Some(CommitPlan(deleteManifests =
+          s"$op aborted: ${gone.size} input delete file(s) no longer in the " +
+            s"current snapshot (first: ${gone.head}); re-run")
+      assertNoDanglingRefs(base, rewritten, Some(scanSnapshot), op)
+      val next = curEntries.filterNot(d => replaced.contains(d.path)) ++ rewritten
+      Some(new CommitPlan(base)(deleteManifests =
         if (next.isEmpty) Nil else Seq(writeDeleteManifest(next))))
     }
-  }
 
   /** Delta commit (merge-on-read MERGE/UPDATE via SupportsDelta): append
     * executor-written data files (the inserted/updated row versions) AND
@@ -1844,7 +1827,7 @@ final class LakeTable private (val location: String,
     * metadata); a miss aborts the commit so the caller re-runs the DML
     * against current data. Entries past the inline cap
     * ([[LakeTable.DeletePathListCap]] paths from one task) validate via
-    * `scanSnapshot` ([[danglingDeleteRefs]]): abort when any file removed
+    * `scanSnapshot` ([[assertNoDanglingRefs]]): abort when any file removed
     * since the scan lies in the entry's path range.
     */
   def commitDelta(newData: Seq[DataFileMeta],
@@ -1852,25 +1835,14 @@ final class LakeTable private (val location: String,
       scanSnapshot: Option[Long] = None): Long = {
     if (newData.isEmpty && newDeletes.isEmpty) return -1L
     val fresh = newData.distinctBy(_.path)
-    commit(if (fresh.nonEmpty) "append" else "delete") { () =>
-      assertEqColumnsResolvable(newDeletes, "delta commit")
-      val dangling = danglingDeleteRefs(newDeletes,
-        files().map(_.path).toSet, scanSnapshot)
-      if (dangling.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"delta commit invalidated by concurrent rewrite: " +
-            s"${dangling.size} referenced data file(s) no longer live " +
-            s"(first: ${dangling.head})")
-      val curM = meta.current.map(_.manifests).getOrElse(Nil)
-      val curD = meta.current.map(_.deleteManifests).getOrElse(Nil)
-      val s = nextSeq
-      Some(CommitPlan(
+    commit(if (fresh.nonEmpty) "append" else "delete") { base =>
+      assertEqColumnsResolvable(base, newDeletes, "delta commit")
+      assertNoDanglingRefs(base, newDeletes, scanSnapshot, "delta commit")
+      val curM = base.currentManifests
+      Some(new CommitPlan(base)(
         manifests =
-          if (fresh.isEmpty) curM else curM :+ writeManifest(stamp(fresh)),
-        deleteManifests =
-          if (newDeletes.isEmpty) curD
-          else curD :+ writeDeleteManifest(newDeletes.map(d =>
-            if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))))
+          if (fresh.isEmpty) curM else curM :+ writeManifest(stamp(base, fresh)),
+        deleteManifests = withDeletes(base, newDeletes)))
     }
   }
 
@@ -1890,7 +1862,7 @@ final class LakeTable private (val location: String,
     */
   private[lake] def readWithDeletes(spark: SparkSession, schema: StructType,
       fileMetas: Seq[DataFileMeta],
-      snapshotId: Long = meta.currentSnapshotId,
+      snapshotId: Long = currentSnapshotId,
       keepPathCol: Option[String] = None,
       keepPosCol: Option[String] = None,
       // the SchemaDef `schema`'s names belong to, when it is NOT the
@@ -1975,27 +1947,26 @@ final class LakeTable private (val location: String,
     */
   def changelogBetween(spark: SparkSession, fromId: Long, toId: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit, udf}
-    meta.snapshot(fromId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $fromId"))
-    meta.snapshot(toId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $toId"))
-    val outSchema = schemaAt(toId)
-    val outDef = schemaDefAt(toId)
+    val m = meta
+    m.requireSnapshot(fromId)
+    val to = m.requireSnapshot(toId)
+    val outSchema = StructType.fromDDL(to.schemaDdl.getOrElse(m.schemaDdl))
+    val outDef = schemaDefAt(m, toId)
     val toPlain = udf((s: String) => new Path(s).toUri.getPath)
     def withMeta(df: DataFrame, tpe: String, snap: Long): DataFrame =
       df.select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
         .withColumn("_change_type", lit(tpe))
         .withColumn("_commit_snapshot_id", lit(snap))
-    val ids = meta.snapshots.map(_.id)
+    val ids = m.snapshots.map(_.id)
       .filter(id => id > fromId && id <= toId).sorted
     val parts: Seq[DataFrame] = ids.flatMap { id =>
-      val s = meta.snapshot(id).get
+      val s = m.snapshot(id).get
       // compaction/expiry/delete-rewrite are physical no-ops; "stage"
       // snapshots are off the main lineage — their rows surface at publish
       if (s.operation == "compact" || s.operation == "expire" ||
           s.operation == "stage" || s.operation == "rewrite-deletes") Nil
       else {
-        val parent = meta.snapshot(s.parentId)
+        val parent = m.snapshot(s.parentId)
         val pFiles = parent.map(p => readManifests(p.manifests))
           .getOrElse(Nil).distinctBy(_.path)
         val sFiles = readManifests(s.manifests).distinctBy(_.path)
@@ -2008,7 +1979,7 @@ final class LakeTable private (val location: String,
           val oldRows = readWithDeletes(spark, outSchema, removed,
             snapshotId = s.parentId, requestDef = Some(outDef))
           val newRows = LakeTable.readFilesMapped(spark, outDef, outSchema,
-            added, meta.schemas)
+            added, m.schemas)
           Seq(withMeta(oldRows.exceptAll(newRows), "delete", id),
             withMeta(newRows.exceptAll(oldRows), "insert", id))
         } else {
@@ -2016,7 +1987,7 @@ final class LakeTable private (val location: String,
             if (added.isEmpty) Nil
             else Seq(withMeta(
               LakeTable.readFilesMapped(spark, outDef, outSchema, added,
-                meta.schemas),
+                m.schemas),
               "insert", id))
           // new delete files (diffed by delete-file path — rewrite commits
           // re-list carried entries under fresh manifest names)
@@ -2096,16 +2067,13 @@ final class LakeTable private (val location: String,
       scanSnapshot: Option[Long] = None): Long = {
     val fresh = newFiles.distinctBy(_.path)
     if (replacedPaths.isEmpty && fresh.isEmpty) return -1L
-    commit("rewrite") { () =>
+    commit("rewrite") { base =>
+      val (replaced, kept) = filesOf(base).partition(f => replacedPaths.contains(f.path))
       scanSnapshot.foreach { s =>
-        assertReplacedLive(replacedPaths, "rewrite")
-        val replacedMetas = files().filter(f => replacedPaths.contains(f.path))
-        assertNoNewDeletes(s, replacedMetas, "rewrite")
+        assertReplacedLive(base, replacedPaths, "rewrite")
+        assertNoNewDeletes(base, s, replaced, "rewrite")
       }
-      val kept = files().filterNot(f => replacedPaths.contains(f.path)) ++
-        stamp(fresh)
-      Some(CommitPlan(manifests = writeManifests(kept),
-        deleteManifests = carryDeleteManifests(kept)))
+      Some(rewritePlan(base, kept ++ stamp(base, fresh)))
     }
   }
 
@@ -2150,11 +2118,12 @@ final class LakeTable private (val location: String,
       // streaming-upsert table the hot files are LARGE but pay a mask
       // subtraction per scan; size-only selection never reclaims them
       deleteMarkThreshold: Option[Long] = None): Long = {
+    val scan = meta
     val effectiveSortBy =
       if (sortBy.nonEmpty || zorderBy.nonEmpty) sortBy
-      else LakeFormat.sortOrderColumns(meta.properties,
-        schema.fieldNames.toIndexedSeq)
-    val scanSnapshot = meta.currentSnapshotId
+      else LakeFormat.sortOrderColumns(scan.properties,
+        scan.schema.fieldNames.toIndexedSeq)
+    val scanSnapshot = scan.currentSnapshotId
     // per-file pending pos-delete mark counts (only when the threshold
     // is on), DISTINCT marks via [[pendingPosMarkCounts]] — duplicate
     // marks from overlapping DELETEs must not fake read-amp debt. A
@@ -2167,11 +2136,11 @@ final class LakeTable private (val location: String,
     val markCounts: Map[String, Long] = deleteMarkThreshold match {
       case None => Map.empty
       case Some(_) =>
-        val pos0 = deleteFilesMeta().filter(_.kind == DeleteFileMeta.KindPos)
+        val pos0 = deleteFilesOf(scan).filter(_.kind == DeleteFileMeta.KindPos)
         val pos =
           if (partitionMin.isEmpty && partitionMax.isEmpty) pos0
           else {
-            val inScope = files().filter(f =>
+            val inScope = filesOf(scan).filter(f =>
               partitionMin.forall(f.partitionValue >= _) &&
                 partitionMax.forall(f.partitionValue <= _))
             pos0.filter(d => inScope.exists(f => d.references(f.path)))
@@ -2188,7 +2157,7 @@ final class LakeTable private (val location: String,
     // is the migration path that pays down an old layout. A group with any
     // over-threshold member always qualifies: materializing delete debt is
     // worth a rewrite even for a single large file.
-    val candidates = files()
+    val candidates = filesOf(scan)
       .filter(f => f.sizeBytes < smallFileBytes || overMarkThreshold(f))
       .filter(f => partitionMin.forall(f.partitionValue >= _) &&
         partitionMax.forall(f.partitionValue <= _))
@@ -2201,7 +2170,7 @@ final class LakeTable private (val location: String,
     // live rows only, and the commit prunes delete entries whose targets
     // were replaced — compaction is how a merge-on-read table pays down its
     // delete debt
-    val rows = readWithDeletes(spark, schema, candidates)
+    val rows = readWithDeletes(spark, scan.schema, candidates, scanSnapshot)
     // z-order: per-dimension min/max from manifest stats (no data pass);
     // a column missing a stat on any candidate falls back to one tiny
     // min/max aggregate over the rows being rewritten
@@ -2224,13 +2193,11 @@ final class LakeTable private (val location: String,
       sortBy = effectiveSortBy, maxRecordsPerFile = maxRecordsPerFile,
       sortExprs = zKey)
     val replaced = candidates.map(_.path).toSet
-    commit("compact") { () =>
-      assertNoNewDeletes(scanSnapshot, candidates, "compaction")
-      assertReplacedLive(replaced, "compaction")
-      val kept = files().filterNot(f => replaced.contains(f.path)) ++
-        stamp(rewritten)
-      Some(CommitPlan(manifests = writeManifests(kept),
-        deleteManifests = carryDeleteManifests(kept)))
+    commit("compact") { base =>
+      assertNoNewDeletes(base, scanSnapshot, candidates, "compaction")
+      assertReplacedLive(base, replaced, "compaction")
+      Some(rewritePlan(base, filesOf(base).filterNot(f => replaced.contains(f.path)) ++
+        stamp(base, rewritten)))
     }
   }
 
@@ -2244,31 +2211,31 @@ final class LakeTable private (val location: String,
     // an explicit retainLast (the Reaper passes 20, Reaper.java:22) wins.
     val keepCount =
       if (retainLast > 0) retainLast
-      else meta.properties.getOrElse(PropMinSnapshotsToKeep, "100").toInt
+      else tableMeta.properties.getOrElse(PropMinSnapshotsToKeep, "100").toInt
     // orphan sets captured from the attempt that actually lands, so the
     // post-commit GC never deletes files referenced by a concurrent commit
     var orphanFiles: Set[String] = Set.empty
     var orphanManifests: Set[String] = Set.empty
     var orphanDeleteFiles: Set[String] = Set.empty
     var orphanDeleteManifests: Set[String] = Set.empty
-    val id = commit("expire") { () =>
-      val ordered = meta.snapshots.sortBy(_.id)
+    val id = commit("expire") { base =>
+      val ordered = base.snapshots.sortBy(_.id)
       val byAge = ordered.filter(s =>
-        s.timestampMs >= olderThanMs || s.id == meta.currentSnapshotId)
+        s.timestampMs >= olderThanMs || s.id == base.currentSnapshotId)
       val byCount = ordered.takeRight(keepCount)
       // tagged snapshots are pinned regardless of age/count — a tag is a
       // promise the snapshot (and its files) stay readable
-      val tagged = tags.values.toSet
+      val tagged = base.tags.values.toSet
       val byTag = ordered.filter(s => tagged.contains(s.id))
       // live WAP branches pin their whole stage chain (unpublished work
       // must survive retention until published or dropped)
       val branchPinned = scala.collection.mutable.HashSet.empty[Long]
-      branches.values.foreach { headId =>
-        var cur = meta.snapshot(headId)
+      base.branches.values.foreach { headId =>
+        var cur = base.snapshot(headId)
         while (cur.exists(_.operation == "stage") &&
             !branchPinned.contains(cur.get.id)) {
           branchPinned += cur.get.id
-          cur = meta.snapshot(cur.get.parentId)
+          cur = base.snapshot(cur.get.parentId)
         }
         // pin the first non-stage ancestor too: publishBranch's chain walk
         // terminates AT the base — if the base expired while the branch was
@@ -2279,7 +2246,7 @@ final class LakeTable private (val location: String,
       val byBranch = ordered.filter(s => branchPinned.contains(s.id))
       val keep = (byAge ++ byCount ++ byTag ++ byBranch)
         .distinctBy(_.id).sortBy(_.id)
-      if (keep.size == meta.snapshots.size) None
+      if (keep.size == base.snapshots.size) None
       else {
         val keptManifests = keep.flatMap(_.manifests).toSet
         val expired = ordered.filterNot(s => keep.exists(_.id == s.id))
@@ -2346,7 +2313,7 @@ final class LakeTable private (val location: String,
           .map(_.path).toSet
         orphanDeleteFiles =
           readDeleteManifests(orphanDeleteManifests.toSeq).map(_.path).toSet -- keptDelPaths
-        Some(CommitPlan(keepSnapshots = keep))
+        Some(new CommitPlan(base)(keepSnapshots = keep))
       }
     }
     if (id >= 0) {
@@ -2419,7 +2386,7 @@ final class LakeTable private (val location: String,
     // this order sees such files in at least one set either way
     val pendingRefs = Monikers.read(Monikers.listPending(location))
       .map(f => plain(f.path))
-    refresh()
+    val m = refresh().tableMeta
     // the DATA reference set (one path per file of every RETAINED
     // snapshot) stays DISTRIBUTED end to end — manifests parse
     // executor-side (the filesDF shape) and feed the anti-join as a
@@ -2429,9 +2396,9 @@ final class LakeTable private (val location: String,
     // the million-file posture and grows with the inventory; this shape
     // grows only with manifest count. Delete-file and pending-moniker
     // references stay driver-side — both are metadata-bounded by design.
-    val dataManifests = meta.snapshots.flatMap(_.manifests).distinct
+    val dataManifests = m.snapshots.flatMap(_.manifests).distinct
       .map(new Path(metaDir, _).toString)
-    val smallRefs = (readDeleteManifests(meta.snapshots.flatMap(_.deleteManifests).distinct)
+    val smallRefs = (readDeleteManifests(m.snapshots.flatMap(_.deleteManifests).distinct)
       .map(f => plain(f.path)) ++ pendingRefs)
     val locPrefix = plain(new Path(location).toString) + "/"
     import org.apache.spark.sql.functions.col
@@ -2556,11 +2523,10 @@ final class LakeTable private (val location: String,
     * compose on this instead of collecting `files()`.
     */
   def filesDF(spark: SparkSession,
-      snapshotId: Long = meta.currentSnapshotId): DataFrame = {
+      snapshotId: Long = currentSnapshotId): DataFrame = {
     import spark.implicits._
-    val snap = meta.snapshot(snapshotId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $snapshotId"))
-    val manifestPaths = snap.manifests.map(new Path(metaDir, _).toString)
+    val manifestPaths = meta.requireSnapshot(snapshotId).manifests
+      .map(new Path(metaDir, _).toString)
     if (manifestPaths.isEmpty)
       return spark.emptyDataset[(String, Long, Long, Long, Int, Long)]
         .toDF("path", "size_bytes", "row_count", "partition_value", "spec_id",
@@ -2600,7 +2566,7 @@ final class LakeTable private (val location: String,
   }
 
   /** Current table as a DataFrame. */
-  def toDF(spark: SparkSession): DataFrame = snapshotDF(spark, meta.currentSnapshotId)
+  def toDF(spark: SparkSession): DataFrame = snapshotDF(spark, currentSnapshotId)
 
   /** Time travel (B2) — reads with the schema AND pending merge-on-read
     * deletes as of that snapshot.
@@ -2614,9 +2580,11 @@ final class LakeTable private (val location: String,
     * live consumer saw; downstream compacts with the CDC-apply pattern).
     * For the full insert+delete changelog, see [[changelogBetween]].
     */
-  def changesBetween(spark: SparkSession, fromId: Long, toId: Long): DataFrame =
-    LakeTable.readFilesMapped(spark, meta.currentSchemaDef, schema,
-      addedFilesBetween(fromId, toId), meta.schemas)
+  def changesBetween(spark: SparkSession, fromId: Long, toId: Long): DataFrame = {
+    val m = meta
+    LakeTable.readFilesMapped(spark, m.currentSchemaDef, m.schema,
+      addedFilesBetween(fromId, toId), m.schemas)
+  }
 
   /** Scan with manifest-level pruning (SURVEY §4): partition-bucket and
     * column min/max stats filter the file list before Spark plans the scan.
@@ -2624,16 +2592,17 @@ final class LakeTable private (val location: String,
   def scan(spark: SparkSession,
       partitionMin: Option[Long] = None, partitionMax: Option[Long] = None,
       colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame = {
-    val pruned = files().filter { f =>
+    val m = meta
+    val pruned = filesOf(m).filter { f =>
       partitionMin.forall(lo =>
-        f.partitionValue + meta.specWidth(f.specId) > lo) &&
+        f.partitionValue + m.specWidth(f.specId) > lo) &&
         partitionMax.forall(hi => f.partitionValue <= hi) &&
         colRanges.forall { case (c, (lo, hi)) =>
           f.stats.get(c).forall(s =>
             s.longMax.forall(_ >= lo) && s.longMin.forall(_ <= hi))
         }
     }
-    readWithDeletes(spark, schema, pruned)
+    readWithDeletes(spark, m.schema, pruned, m.currentSnapshotId)
   }
 }
 
@@ -2852,11 +2821,11 @@ object LakeTable {
       fs.mkdirs(new Path(location, PendingCommitsDir))
       fs.mkdirs(new Path(location, TmpCommitsDir))
     }
-    val meta = TableMeta(1, location, schemaDdl, spec,
+    val initial = TableMeta(1, location, schemaDdl, spec,
       DefaultProperties ++ properties,
       Seq(Snapshot(0L, -1L, System.currentTimeMillis(), "create", Nil)), 0L)
-    val t = new LakeTable(location, meta)
-    writeSmall(fs, new Path(metaDir, "v0.json"), Json.metaToJson(meta),
+    val t = new LakeTable(location, initial)
+    writeSmall(fs, new Path(metaDir, "v0.json"), Json.metaToJson(initial),
       overwrite = false)
     writeSmall(fs, new Path(metaDir, VersionHint), "0", overwrite = true)
     t

@@ -211,6 +211,22 @@ final case class TableMeta(
     currentSpecId: Int = 0) {
   def current: Option[Snapshot] = snapshots.find(_.id == currentSnapshotId)
   def snapshot(id: Long): Option[Snapshot] = snapshots.find(_.id == id)
+  def requireSnapshot(id: Long): Snapshot = snapshot(id)
+    .getOrElse(throw new IllegalArgumentException(s"no snapshot $id"))
+  def currentManifests: Seq[String] = current.toSeq.flatMap(_.manifests)
+  def currentDeleteManifests: Seq[String] = current.toSeq.flatMap(_.deleteManifests)
+  /** Snapshot id (and metadata version) of a commit derived from this
+    * metadata; stamped onto its new data files and equality deletes. */
+  def nextSnapshotId: Long = snapshots.map(_.id).maxOption.getOrElse(-1L) + 1
+  def schema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
+  /** Named snapshot refs ("tags"): `ref.tag.<name>` -> snapshot id. */
+  def tags: Map[String, Long] = refs(LakeFormat.PropTagPrefix)
+  /** Branch refs: `ref.branch.<name>` -> head snapshot id. */
+  def branches: Map[String, Long] = refs(LakeFormat.PropBranchPrefix)
+  private def refs(prefix: String): Map[String, Long] = properties.collect {
+    case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v.toLong
+  }
   /** Resolve a schema id; 0 always resolves (synthesized for legacy
     * metadata from the CURRENT ddl — sound because until the first
     * rename/drop mints def 1, names never changed and ids are positional).

@@ -57,7 +57,7 @@ final class LakeFilesMetaTable(location: String) extends Table with SupportsRead
       override def planInputPartitions(): Array[InputPartition] = {
         val t = LakeTable.load(location)
         val metaDir = new Path(location, graft.lake.LakeFormat.MetadataDir)
-        t.tableMeta.current.map(_.manifests).getOrElse(Nil)
+        t.tableMeta.currentManifests
           .map(m => ManifestPartition(new Path(metaDir, m).toString): InputPartition)
           .toArray
       }
@@ -110,7 +110,7 @@ final class LakePartitionsMetaTable(location: String) extends Table with Support
         val t = LakeTable.load(location)
         val metaDir = new Path(location, graft.lake.LakeFormat.MetadataDir)
         Array(ManifestListPartition(
-          t.tableMeta.current.map(_.manifests).getOrElse(Nil)
+          t.tableMeta.currentManifests
             .map(m => new Path(metaDir, m).toString)))
       }
       override def createReaderFactory(): PartitionReaderFactory =
@@ -167,7 +167,7 @@ final class LakeManifestsMetaTable(location: String) extends Table with Supports
       override def planInputPartitions(): Array[InputPartition] = {
         val t = LakeTable.load(location)
         val metaDir = new Path(location, graft.lake.LakeFormat.MetadataDir)
-        t.tableMeta.current.map(_.manifests).getOrElse(Nil)
+        t.tableMeta.currentManifests
           .map(m => ManifestPartition(new Path(metaDir, m).toString): InputPartition)
           .toArray
       }

@@ -179,15 +179,20 @@ object LakeQueries {
   }
 
   /** Session-stable V2 catalog for the SQL-DML entries (MERGE/UPDATE need
-    * a catalog-resolvable target). One warehouse per session; each entry
-    * uses a UUID table name so repeated bench runs never collide.
+    * a catalog-resolvable target). One warehouse per session, deleted with
+    * everything in it when the JVM exits; each entry uses a UUID table name
+    * so repeated bench runs never collide.
     */
   private[graft] def dmlCatalog(s: SparkSession): String = {
     val cat = "graftlake"
     if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
+      val wh = new org.apache.hadoop.fs.Path(Scratch.location("dml-wh"))
+      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.mkdirs(wh) // deleteOnExit registers only a path that exists
+      fs.deleteOnExit(wh)
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.lake.dsv2.LakeCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", Scratch.location("dml-wh"))
+      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
     }
     cat
   }

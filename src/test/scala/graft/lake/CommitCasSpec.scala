@@ -172,6 +172,48 @@ class CommitCasSpec extends SparkSpec {
     }
   }
 
+  test("a handle that commits while its own commit is being planned " +
+      "loses no file: each attempt plans and publishes from one base") {
+    val loc = tmpDir("cas-shared-handle")
+    def file(name: String) =
+      DataFileMeta(s"$loc/data/$name.parquet", 100L, 10L, bucket(0))
+    val t = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+    t.append(Seq(file("f0")))
+    // the batch's first traversal appends f1 through the SAME handle, as a
+    // second thread sharing the handle would while f2's commit is planned
+    var landed = false
+    val batch = new scala.collection.immutable.AbstractSeq[DataFileMeta] {
+      private val files = Vector(file("f2"))
+      override def iterator: Iterator[DataFileMeta] = {
+        if (!landed) { landed = true; t.append(Seq(file("f1"))) }
+        files.iterator
+      }
+      override def apply(i: Int): DataFileMeta = files(i)
+      override def length: Int = files.length
+    }
+    t.append(batch)
+    assert(landed)
+    val paths = LakeTable.load(loc).files().map(_.path).toSet
+    assert(paths == Set("f0", "f1", "f2").map(file(_).path), s"lost update: $paths")
+  }
+
+  test("a failed version-hint rewrite leaves the commit landed, and a " +
+      "fresh load finds it by listing") {
+    val loc = tmpDir("cas-hint-fail")
+    val t = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+    // a non-empty directory where the hint lives: the rewrite's
+    // non-recursive delete of it throws
+    val hint = new java.io.File(loc, s"${LakeFormat.MetadataDir}/${LakeFormat.VersionHint}")
+    assert(hint.delete() && new java.io.File(hint, "blocker").mkdirs())
+    val a = DataFileMeta(s"$loc/data/a.parquet", 100L, 10L, bucket(0))
+    val id = t.append(Seq(a))
+    assert(id == 1L)
+    assert(hint.isDirectory, "the hint rewrite did not fail")
+    val fresh = LakeTable.load(loc)
+    assert(fresh.currentSnapshotId == id)
+    assert(fresh.files().map(_.path) == Seq(a.path))
+  }
+
   test("5-way local-FS append storm: no commit lost, no committer dies " +
       "(jittered backoff defeats retry-exhaustion starvation)") {
     // The round-10 contention probe caught this for real: without

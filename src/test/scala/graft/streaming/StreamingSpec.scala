@@ -226,6 +226,12 @@ class StreamingSpec extends SparkSpec {
       s"per-run deltas $deltas don't sum to ${out.count(_._2)}")
     assert(deltas(1) >= 60L && deltas(1) <= 80L,
       s"run-2 dup delta ${deltas(1)} outside wave 2's [60, 80] envelope")
+    // a gate that flags every arrival meets the wave-2 checks above; run 1
+    // gated the whole wave 1 (the odd corpus docs, novel text), which such
+    // a gate would flag in full
+    val wave1 = out.keys.count(_ < 1000000L)
+    assert(deltas(0) < wave1,
+      s"run 1 flagged ${deltas(0)} of its $wave1 arrivals")
     // the wave-grain oracle's premise: each AvailableNow run processed
     // its wave as exactly ONE micro-batch
     assert(trace.series("epochs") == Seq(1L, 1L),

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{DecimalNode, IntNode, LongNode,
   NullNode, ObjectNode}
 import graft.lake.Json
-import org.apache.spark.sql.SparkSession
+import graft.queries.Scratch
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): runs the headline batch queries on
@@ -166,16 +166,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.useV1SourceList", "")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionConf.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(ExchangeProbe)
 
@@ -289,10 +280,10 @@ object Bench {
       * files → publish monikers → bookkeeper sweep → one fast-append commit.
       * Reported as seconds for 100k rows × 4 writer batches.
       */
-    def runIngest(): Double = {
+    def runIngest(): Double = Scratch.scoped(spark) { sc =>
       import graft.lake._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-ingest-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val table = sc.table("bench-ingest", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val loc = table.location
       val t0 = System.nanoTime()
       for (i <- 0 until 4) {
         val files = LakeWriter.writeDataFiles(
@@ -303,7 +294,6 @@ object Bench {
       new FileBookkeeper(table).sweep()
       val secs = (System.nanoTime() - t0) / 1e9
       assert(table.toDF(spark).count() == 100000L)
-      LakeTable.drop(loc)
       secs
     }
 
@@ -312,10 +302,9 @@ object Bench {
       * compactFiles + full re-scan (the operations an operator schedules);
       * the fragmentation setup itself is untimed.
       */
-    def runMaintenance(): Double = {
+    def runMaintenance(): Double = Scratch.scoped(spark) { sc =>
       import graft.lake._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-maint-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val table = sc.table("bench-maint", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
       // 4 commits × (buckets × 4 files) of small files — the many-small-file
       // state a streaming ingester leaves behind
       for (i <- 0 until 4) {
@@ -330,7 +319,6 @@ object Bench {
       val secs = (System.nanoTime() - t0) / 1e9
       assert(n == 100000L, s"maintenance rescan saw $n rows")
       assert(table.files().size < before, "compaction did not reduce file count")
-      LakeTable.drop(loc)
       secs
     }
 
@@ -340,11 +328,11 @@ object Bench {
       * numbers belong within ~1.5× of each other — the laketable source must
       * not tax the table it exists for.
       */
-    def runLakeScanPair(): Seq[(String, Double)] = {
+    def runLakeScanPair(): Seq[(String, Double)] = Scratch.scoped(spark) { sc =>
       import graft.lake._
       import org.apache.spark.sql.functions._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-scan-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val table = sc.table("bench-scan", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val loc = table.location
       // 100k rows × 4 commits = 400k
       for (i <- 0 until 4)
         table.append(LakeWriter.writeDataFiles(
@@ -373,7 +361,6 @@ object Bench {
       // direction. Both sides get identical treatment.
       once(lakeDf); once(rawDf)
       val (lakes, raws) = (1 to 5).map(_ => (once(lakeDf), once(rawDf))).unzip
-      LakeTable.drop(loc)
       Seq("lake_scan_400k" -> lakes.min, "lake_scan_raw_parquet" -> raws.min)
     }
 
@@ -385,9 +372,8 @@ object Bench {
       * 100 TB it is the difference between a delta-sized commit and
       * re-copying every touched file. Timed region = the MERGE only.
       */
-    def runMergeOnce(mor: Boolean): Double = {
-      val cat = graft.queries.LakeQueries.dmlCatalog(spark)
-      val tbl = s"$cat.ns.bm${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    def runMergeOnce(mor: Boolean): Double = Scratch.scoped(spark) { sc =>
+      val tbl = sc.catalogTable("bm")
       val props =
         if (mor) s"TBLPROPERTIES ('${graft.lake.LakeFormat.PropMergeMode}'='" +
           s"${graft.lake.LakeFormat.DeleteModeMergeOnRead}')"
@@ -410,7 +396,6 @@ object Bench {
       val secs = (System.nanoTime() - t0) / 1e9
       val n = spark.sql(s"SELECT count(*) FROM $tbl").head().getLong(0)
       assert(n == 100000L, s"merge bench saw $n rows")
-      spark.sql(s"DROP TABLE $tbl")
       secs
     }
 
@@ -421,12 +406,12 @@ object Bench {
       * what un-paid delete debt costs every reader, i.e. the number that
       * sets the compaction cadence at 100 TB.
       */
-    def runMorScanPair(): Seq[(String, Double)] = {
+    def runMorScanPair(): Seq[(String, Double)] = Scratch.scoped(spark) { sc =>
       import graft.lake._
       import org.apache.spark.sql.functions._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-mor-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec,
+      val table = sc.table("bench-mor", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec,
         Map(LakeFormat.PropDeleteMode -> LakeFormat.DeleteModeMergeOnRead))
+      val loc = table.location
       for (i <- 0 until 4)
         table.append(LakeWriter.writeDataFiles(
           LakeWriter.generateBatch(spark, 100000, (5666666L + i) * 300000000L, seed = 300 + i),
@@ -445,7 +430,6 @@ object Bench {
       table.compactFiles(spark)
       once()
       val compacted = math.min(once(), once())
-      LakeTable.drop(loc)
       Seq("lake_scan_mor_pending" -> pending,
         "lake_scan_mor_compacted" -> compacted)
     }
@@ -472,12 +456,11 @@ object Bench {
       * rep means a scheduler/GC pause the min already absorbs.
       */
     var pointLookupDetail: Seq[(String, Double)] = Nil
-    def runPointLookupPair(): Seq[(String, Double)] = {
-      val cat = graft.queries.LakeQueries.dmlCatalog(spark)
+    def runPointLookupPair(): Seq[(String, Double)] = Scratch.scoped(spark) { sc =>
+      val cat = SessionConf.dmlCatalog(spark)
       val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
-      val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
-      def build(name: String, props: String): (String, String) = {
-        val tbl = s"$cat.ns.$name$sfx"
+      def build(prefix: String, props: String): (String, String) = {
+        val tbl = sc.catalogTable(prefix)
         spark.sql(
           s"""CREATE TABLE $tbl (k BIGINT, v BIGINT, tag STRING)
              |PARTITIONED BY (truncate(1000000, k)) $props""".stripMargin)
@@ -487,7 +470,7 @@ object Bench {
         // make the rolled files disjoint in v
         spark.sql(s"INSERT INTO $tbl SELECT id, (id * 7919) % 1000000, " +
           "md5(cast(id AS STRING)) FROM range(0, 1000000)")
-        (tbl, s"$wh/ns/$name$sfx")
+        (tbl, s"$wh/ns/${tbl.stripPrefix(s"$cat.ns.")}")
       }
       val (sorted, sortedLoc) = build("pls",
         "TBLPROPERTIES ('write.sort-order'='v', " +
@@ -554,7 +537,6 @@ object Bench {
         case ("p_planned", v) => "pp" -> v }
       System.err.println("[bench] point_lookup detail: " + pointLookupDetail
         .map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-      spark.sql(s"DROP TABLE $sorted"); spark.sql(s"DROP TABLE $plain")
       Seq("lake_point_lookup_sorted" -> s, "lake_point_lookup_plain" -> p)
     }
 
@@ -567,11 +549,9 @@ object Bench {
       * is a per-bucket merge; without, it moves both corpora over the
       * network. Timed region = join + aggregate only; table build shared.
       */
-    def runSpjJoinPair(): Seq[(String, Double)] = {
-      val cat = graft.queries.LakeQueries.dmlCatalog(spark)
-      val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
-      def build(name: String): String = {
-        val tbl = s"$cat.ns.$name$sfx"
+    def runSpjJoinPair(): Seq[(String, Double)] = Scratch.scoped(spark) { sc =>
+      def build(prefix: String): String = {
+        val tbl = sc.catalogTable(prefix)
         spark.sql(
           s"""CREATE TABLE $tbl (k BIGINT, id BIGINT, v DOUBLE)
              |PARTITIONED BY (truncate(62500, k))""".stripMargin)
@@ -610,7 +590,6 @@ object Bench {
       val spjs = (1 to 3).map(_ => probedRep("lake_join_spj", spj = true))
       val shuf = (1 to 3).map(_ =>
         probedRep("lake_join_shuffle", spj = false))
-      spark.sql(s"DROP TABLE $a"); spark.sql(s"DROP TABLE $b")
       Seq("lake_join_spj" -> spjs.min, "lake_join_shuffle" -> shuf.min)
     }
 
@@ -624,11 +603,10 @@ object Bench {
       * start → processAllAvailable; per-trigger admitted row counts go to
       * stderr so the round artifact records the admission shape.
       */
-    def runStreamCatchup(): Double = {
+    def runStreamCatchup(): Double = Scratch.scoped(spark) { sc =>
       import graft.lake._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-stream-${java.util.UUID.randomUUID()}"
-      val ckpt = s"$loc-ckpt"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val table = sc.table("bench-stream", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val (loc, ckpt) = (table.location, sc.dir("bench-stream-ckpt"))
       for (i <- 0 until 32)
         table.append(LakeWriter.writeDataFiles(
           LakeWriter.generateBatch(spark, 3125, (5666666L + i % 4) * 300000000L,
@@ -652,10 +630,6 @@ object Bench {
         s"admission did not chunk the backlog (${admitted.length} trigger(s))")
       System.err.println(
         s"[bench] stream_catchup admissions (rows/trigger): ${admitted.mkString(",")}")
-      LakeTable.drop(loc)
-      org.apache.hadoop.fs.FileSystem
-        .getLocal(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(ckpt), true)
       secs
     }
 
@@ -714,9 +688,10 @@ object Bench {
       * sub-second on BOTH engines, carrying no engine signal.
       */
     def runEnvelopeAtScale(m: Int, names: Seq[String], withPack: Boolean):
-        (Seq[(String, Double)], Option[JsonNode], Seq[(String, Double)]) = {
+        (Seq[(String, Double)], Option[JsonNode], Seq[(String, Double)]) =
+        Scratch.scoped(spark) { sc =>
       import org.apache.spark.sql.functions._
-      val scratch = s"${System.getProperty("java.io.tmpdir")}/graft-envx$m-${java.util.UUID.randomUUID()}"
+      val scratch = sc.dir(s"envx$m")
       def tb(n: String) = graft.Tables.t(spark, sfDir, n)
       def keyCeil(n: String, c: String): Long =
         tb(n).agg(max(col(c))).head().getLong(0) + 1
@@ -848,7 +823,6 @@ object Bench {
         }
       // DuckDB over the SAME scratch corpus, same protocol, same run
       val duck = runDuckdb(scratch, names.toSet, Some("median3"))
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(scratch))
       (sparkSide, duck, packPhases)
     }
 
@@ -887,13 +861,13 @@ object Bench {
         concat(concat_ws(" ", terms: _*),
           when(pmod(col("id"), lit(512L)) === 0L,
             lit(s" zp1 zp2 $span")).otherwise(lit(""))).as("text"))
-      val idxLoc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-zipf-${java.util.UUID.randomUUID()}"
-      val idx = LakeTable.create(idxLoc,
-        "tkey BIGINT,thash BIGINT,term STRING,doc_id BIGINT,tf BIGINT," +
-          "dl BIGINT,positions ARRAY<BIGINT>",
-        TruncateSpec("tkey", 1L))
-      idx.setProperty("write.sort-order", "thash")
-      try {
+      Scratch.scoped(spark) { sc =>
+        val idx = sc.table("bench-zipf",
+          "tkey BIGINT,thash BIGINT,term STRING,doc_id BIGINT,tf BIGINT," +
+            "dl BIGINT,positions ARRAY<BIGINT>",
+          TruncateSpec("tkey", 1L))
+        val idxLoc = idx.location
+        idx.setProperty("write.sort-order", "thash")
         idx.append(LakeWriter.writeDataFiles(
           P.positionalPostings(docs)
             .withColumn("thash", xxhash64(col("term")))
@@ -960,7 +934,7 @@ object Bench {
           out += "phrase_s" -> timed(phraseOnce())
           out += "phrase_files" -> planned()
         }
-      } finally LakeTable.drop(idxLoc)
+      }
       // ---- substring gate through the committed shingle index ----
       // corpus = the zipf docs (planted span duplicated every 512th doc);
       // increment = one novel doc COPYING the span — the gate must flag
@@ -1003,10 +977,10 @@ object Bench {
       * own `commit_curve` JSON key (ms units), never inside
       * `total`/`heavy_total`.
       */
-    def runCommitCurve(): Seq[(String, Double)] = {
+    def runCommitCurve(): Seq[(String, Double)] = Scratch.scoped(spark) { sc =>
       import graft.lake._
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-ccurve-${java.util.UUID.randomUUID()}"
-      val table = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val table = sc.table("bench-ccurve", LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+      val loc = table.location
       val lat = new Array[Double](1000)
       for (i <- 0 until 1000) {
         val meta = DataFileMeta(s"$loc/data/f$i.parquet", 1024L, 10L,
@@ -1017,7 +991,6 @@ object Bench {
       }
       assert(table.currentSnapshotId == 1000L,
         s"commit curve landed at snapshot ${table.currentSnapshotId}")
-      LakeTable.drop(loc)
       def win(until: Int): Double = {
         val from = math.max(0, until - 10)
         lat.slice(from, until).sum / (until - from)
@@ -1040,25 +1013,23 @@ object Bench {
       * three timed phases under their own keys; the entry's single number
       * stays untouched for cross-round comparability.
       */
-    def runShardPhases(): Seq[(String, Double)] = {
+    def runShardPhases(): Seq[(String, Double)] = Scratch.scoped(spark) { sc =>
       import graft.lake._
       val P = graft.queries.PipelineQueries
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-bench-d06p-${java.util.UUID.randomUUID()}"
       def secs(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }
       val sharded = P.shardedCorpus(spark, sfDir)
       val computeS = secs(sharded.write.mode("overwrite").format("noop").save())
-      LakeTable.create(loc,
+      val loc = sc.table("bench-d06p",
         "lang STRING,doc_id BIGINT,n_tok BIGINT,cum_tok BIGINT," +
           "shard BIGINT,redacted_sha STRING",
-        TruncateSpec("shard", 1L))
+        TruncateSpec("shard", 1L)).location
       val writeS = secs(
         sharded.write.format("laketable").mode("append").save(loc))
       val readS = secs(
         spark.read.format("laketable").load(loc)
           .write.mode("overwrite").format("noop").save())
-      LakeTable.drop(loc)
       System.err.println(f"[bench] d06 shard phases: compute=$computeS%.2fs " +
         f"write=$writeS%.2fs read=$readS%.2fs")
       Seq("compute_s" -> computeS, "write_s" -> writeS, "read_s" -> readS)

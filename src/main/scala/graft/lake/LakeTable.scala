@@ -489,7 +489,9 @@ final class LakeTable private (val location: String,
     bestEffort("version-hint rewrite", hint,
       "stale hint left; readers recover the version by listing") {
       fs.delete(hint, false)
-      writeAtomic(hint, nextVersion.toString)
+      // a racing committer's hint landed first; it is as good as ours
+      try writeAtomic(hint, nextVersion.toString)
+      catch { case _: FileAlreadyExistsException => }
     }
     bestEffort("metadata cleanup", metaDir,
       "superseded v*.json files left for a later cleanup")(cleanupOldMetadata(next))

@@ -10,16 +10,8 @@ import org.apache.spark.sql.SparkSession
   * sleepMs retentionMs markOldIntervalMs]
   */
 object Main {
-  private def spark(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-lake")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private def spark(): SparkSession = graft.SessionConf
+    .builder("graft-lake", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
 
   /** Fixed-cadence pacing: sleep interval minus work time (Main.java:11-16). */
   private def pace(sleepMs: Long, tookMs: Long): Unit = {

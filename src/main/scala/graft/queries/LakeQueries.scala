@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.UUID
 
+import graft.SessionConf.dmlCatalog
 import graft.Tables.t
 import graft.Trace
 import graft.lake._
@@ -178,51 +179,31 @@ object LakeQueries {
     localize(j.crossJoin(c))
   }
 
-  /** Session-stable V2 catalog for the SQL-DML entries (MERGE/UPDATE need
-    * a catalog-resolvable target). One warehouse per session, deleted with
-    * everything in it when the JVM exits; each entry uses a UUID table name
-    * so repeated bench runs never collide.
-    */
-  private[graft] def dmlCatalog(s: SparkSession): String = {
-    val cat = "graftlake"
-    if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-      val wh = new org.apache.hadoop.fs.Path(Scratch.location("dml-wh"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(wh) // deleteOnExit registers only a path that exists
-      fs.deleteOnExit(wh)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.lake.dsv2.LakeCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    }
-    cat
-  }
-
   // B34 — SQL MERGE INTO (SupportsRowLevelOperations, group-based CoW):
   // upsert a shifted slice of orders into a laketable seeded with the low
   // keys — matched rows double their price, unmatched insert. The final
   // table is pure-SQL reconstructable over `orders`, so this one IS
   // hash-oracled despite being an engine-side table op.
-  def b34_merge_upsert(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.m${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+  def b34_merge_upsert(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("m")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 800")
+      s"FROM $src WHERE o_orderkey < 800")
     s.sql(
       s"""MERGE INTO $tbl t
          |USING (SELECT o_orderkey, o_totalprice, o_orderstatus
-         |       FROM graft_orders_src
+         |       FROM $src
          |       WHERE o_orderkey >= 400 AND o_orderkey < 1200) s
          |ON t.o_orderkey = s.o_orderkey
          |WHEN MATCHED THEN UPDATE SET o_totalprice = s.o_totalprice * 2
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B34b — tri-clause MERGE with WHEN NOT MATCHED BY SOURCE (Spark 4
@@ -233,19 +214,20 @@ object LakeQueries {
   // table (no group pruning on the ON condition) — the semantics the CoW
   // scan's no-pushdown rule exists for. Final state is pure-SQL
   // reconstructable over `orders` → hash-oracled.
-  def b34b_merge_full(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.f${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+  def b34b_merge_full(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("f")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 800")
+      s"FROM $src WHERE o_orderkey < 800")
     s.sql(
       s"""MERGE INTO $tbl t
          |USING (SELECT o_orderkey, o_totalprice, o_orderstatus
-         |       FROM graft_orders_src
+         |       FROM $src
          |       WHERE o_orderkey >= 400 AND o_orderkey < 1200) s
          |ON t.o_orderkey = s.o_orderkey
          |WHEN MATCHED THEN UPDATE SET o_totalprice = s.o_totalprice * 2
@@ -253,30 +235,27 @@ object LakeQueries {
          |WHEN NOT MATCHED BY SOURCE AND t.o_totalprice > 150000
          |  THEN UPDATE SET o_orderstatus = 'STALE'
          |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B35 — SQL UPDATE (group-based CoW): bump one segment's balances.
   // Runtime group filtering bounds the rewrite to files holding matched
   // rows; +100.0 on DOUBLE is exact in both engines → hash-oracled.
-  def b35_update(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.u${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "customer").createOrReplaceTempView("graft_customer_src")
+  def b35_update(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("u")
+    val src = sc.view("graft_customer_src_")
+    t(s, dir, "customer").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (c_custkey BIGINT, c_acctbal DOUBLE, c_mktsegment STRING)
          |PARTITIONED BY (truncate(50, c_custkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT c_custkey, c_acctbal, c_mktsegment " +
-      "FROM graft_customer_src")
+      s"FROM $src")
     s.sql(s"UPDATE $tbl SET c_acctbal = c_acctbal + 100.0 " +
       "WHERE c_mktsegment = 'BUILDING'")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT c_custkey, c_acctbal, c_mktsegment FROM $tbl ORDER BY c_custkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B44 — filter overwrite (OverwriteByExpression → overwriteWhere): the
@@ -285,22 +264,21 @@ object LakeQueries {
   // aligned to the 400-wide buckets, so the op exercises both whole-file
   // drops ([0,400)) and a straddling-file survivor rewrite ([400,800)).
   // Final state is pure-SQL reconstructable over `orders` → hash-oracled.
-  def b44_insert_overwrite(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.o${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_ow_src")
+  def b44_insert_overwrite(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("o")
+    val src = sc.view("graft_orders_ow_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_ow_src WHERE o_orderkey < 1000")
+      s"FROM $src WHERE o_orderkey < 1000")
     s.sql("SELECT o_orderkey, o_totalprice + 1000.0 AS o_totalprice, " +
-        "o_orderstatus FROM graft_orders_ow_src WHERE o_orderkey < 500")
+        s"o_orderstatus FROM $src WHERE o_orderkey < 500")
       .writeTo(tbl).overwrite(col("o_orderkey") < 500)
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B45 — dynamic partition overwrite (OverwritePartitionsDynamic →
@@ -310,49 +288,46 @@ object LakeQueries {
   // the restatement shape for "recompute these hours"). The recomputed
   // slice [400,800) covers one full bucket; [0,400) and [800,1200) come
   // through physically untouched. Hash-oracled.
-  def b45_dynamic_overwrite(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.d${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_dyn_src")
+  def b45_dynamic_overwrite(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("d")
+    val src = sc.view("graft_orders_dyn_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_dyn_src WHERE o_orderkey < 1200")
+      s"FROM $src WHERE o_orderkey < 1200")
     graft.SessionConf.withConf(s,
         "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
       s.sql(s"INSERT OVERWRITE $tbl " +
         "SELECT o_orderkey, o_totalprice * 2, o_orderstatus " +
-        "FROM graft_orders_dyn_src WHERE o_orderkey >= 400 AND o_orderkey < 800"))
-    val out = localize(s.sql(
+        s"FROM $src WHERE o_orderkey >= 400 AND o_orderkey < 800"))
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B46 — CTAS / RTAS through the V2 catalog: CREATE TABLE AS SELECT
   // resolves the truncate transform and lands the query result through the
   // DSv2 write; REPLACE TABLE AS SELECT swaps content and schema. Final
   // state is the RTAS query over `orders` → hash-oracled.
-  def b46_ctas(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val name = s"c${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_ctas_src")
+  def b46_ctas(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("c")
+    val src = sc.view("graft_orders_ctas_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl
          |PARTITIONED BY (truncate(400, o_orderkey))
          |AS SELECT o_orderkey, o_totalprice, o_orderstatus
-         |FROM graft_orders_ctas_src WHERE o_orderkey < 600""".stripMargin)
+         |FROM $src WHERE o_orderkey < 600""".stripMargin)
     s.sql(
       s"""REPLACE TABLE $tbl
          |PARTITIONED BY (truncate(400, o_orderkey))
          |AS SELECT o_orderkey, o_totalprice * 0.5 AS half_price, o_orderstatus
-         |FROM graft_orders_ctas_src WHERE o_orderkey >= 600 AND o_orderkey < 1400""".stripMargin)
-    val out = localize(s.sql(
+         |FROM $src WHERE o_orderkey >= 600 AND o_orderkey < 1400""".stripMargin)
+    localize(s.sql(
       s"SELECT o_orderkey, half_price, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B37 — storage-partitioned join: two laketables co-partitioned by
@@ -362,20 +337,20 @@ object LakeQueries {
   // this entry proves the result is right). At 100 TB this removes the
   // dominant cost of a lake-lake join. Pure-SQL reconstructable over
   // `events` → hash-oracled.
-  def b37_spj_join(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val ta = s"$cat.ns.ja$sfx"
-    val tb = s"$cat.ns.jb$sfx"
-    t(s, dir, "events").createOrReplaceTempView("graft_events_src")
+  def b37_spj_join(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val ta = sc.catalogTable("ja")
+    val tb = sc.catalogTable("jb")
+    val src = sc.view("graft_events_src_")
+    t(s, dir, "events").createOrReplaceTempView(src)
     Seq(ta -> 0, tb -> 1).foreach { case (tbl, parity) =>
       s.sql(
         s"""CREATE TABLE $tbl (event_id BIGINT, user_id BIGINT, value DOUBLE)
            |PARTITIONED BY (truncate(10, user_id))""".stripMargin)
       s.sql(s"INSERT INTO $tbl SELECT event_id, user_id, value " +
-        s"FROM graft_events_src WHERE event_id % 2 = $parity")
+        s"FROM $src WHERE event_id % 2 = $parity")
     }
-    val out = graft.SessionConf.withConf(s,
+    graft.SessionConf.withConf(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")(localize(s.sql(
@@ -383,9 +358,6 @@ object LakeQueries {
          |  sum(a.event_id + b.event_id) AS id_sum
          |FROM $ta a JOIN $tb b ON a.user_id = b.user_id
          |GROUP BY a.user_id ORDER BY user_id""".stripMargin)))
-    s.sql(s"DROP TABLE $ta")
-    s.sql(s"DROP TABLE $tb")
-    out
   }
 
   // B38 — merge-on-read DELETE: `write.delete.mode=merge-on-read` routes
@@ -395,23 +367,22 @@ object LakeQueries {
   // files provably untouched (asserted engine-side in MergeOnReadSpec);
   // scans subtract the masks. Final content is pure-SQL reconstructable
   // over `orders` → hash-oracled.
-  def b38_mor_delete(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.d${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+  def b38_mor_delete(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("d")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))
          |TBLPROPERTIES ('${LakeFormat.PropDeleteMode}'='${LakeFormat.DeleteModeMergeOnRead}')""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 2000")
+      s"FROM $src WHERE o_orderkey < 2000")
     // partial-file matches everywhere: no bucket is dropped whole, so a
     // CoW engine would rewrite every touched file — MoR writes positions
     s.sql(s"DELETE FROM $tbl WHERE o_orderstatus = 'F' AND o_orderkey % 5 < 2")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B39 — merge-on-read MERGE INTO (SupportsDelta): `write.merge.mode=
@@ -422,28 +393,27 @@ object LakeQueries {
   // pre-merge files survive untouched. At 100 TB this is the difference
   // between a MERGE that writes ~its delta and one that re-copies every
   // touched file.
-  def b39_mor_merge(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.g${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+  def b39_mor_merge(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("g")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))
          |TBLPROPERTIES ('${LakeFormat.PropMergeMode}'='${LakeFormat.DeleteModeMergeOnRead}')""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 800")
+      s"FROM $src WHERE o_orderkey < 800")
     s.sql(
       s"""MERGE INTO $tbl t
          |USING (SELECT o_orderkey, o_totalprice, o_orderstatus
-         |       FROM graft_orders_src
+         |       FROM $src
          |       WHERE o_orderkey >= 400 AND o_orderkey < 1200) s
          |ON t.o_orderkey = s.o_orderkey
          |WHEN MATCHED THEN UPDATE SET o_totalprice = s.o_totalprice * 2
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B40 — CDC changelog read (`changelogBetween`): the full insert+delete
@@ -451,29 +421,29 @@ object LakeQueries {
   // resolved back to whole rows — what a downstream sync consumes instead
   // of re-diffing snapshots. Scripted ops over `orders` make the changelog
   // pure-SQL reconstructable → hash-oracled.
-  def b40_changelog(s: SparkSession, dir: String): DataFrame = {
+  def b40_changelog(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"c${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+    val tbl = sc.catalogTable("c")
+    val name = tbl.stripPrefix(s"$cat.ns.")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))
          |TBLPROPERTIES ('${LakeFormat.PropDeleteMode}'='${LakeFormat.DeleteModeMergeOnRead}')""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 1500")
+      s"FROM $src WHERE o_orderkey < 1500")
     val warehouse = s.conf.get(s"spark.sql.catalog.$cat.warehouse")
     val table = LakeTable.load(s"$warehouse/ns/$name")
     val s1 = table.currentSnapshotId
     s.sql(s"DELETE FROM $tbl WHERE o_orderkey < 300") // MoR: position deletes
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey >= 1500 AND o_orderkey < 2000")
+      s"FROM $src WHERE o_orderkey >= 1500 AND o_orderkey < 2000")
     val s3 = table.refresh().currentSnapshotId
-    val out = localize(table.changelogBetween(s, s1, s3)
+    localize(table.changelogBetween(s, s1, s3)
       .select("o_orderkey", "o_totalprice", "o_orderstatus", "_change_type")
       .orderBy("_change_type", "o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B41 — write-audit-publish: stage a batch on a branch (main readers see
@@ -513,26 +483,25 @@ object LakeQueries {
   // data stays dead: the re-added name carries a FRESH id, so every
   // pre-drop row reads NULL while batch 3 (inserted after) keeps its
   // values. Fully reconstructable over `orders` → hash-oracled.
-  def b42_schema_evolution(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.e${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+  def b42_schema_evolution(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("e")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 500")
+      s"FROM $src WHERE o_orderkey < 500")
     s.sql(s"ALTER TABLE $tbl RENAME COLUMN o_totalprice TO price")
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey >= 500 AND o_orderkey < 1000")
+      s"FROM $src WHERE o_orderkey >= 500 AND o_orderkey < 1000")
     s.sql(s"ALTER TABLE $tbl DROP COLUMN o_orderstatus")
     s.sql(s"ALTER TABLE $tbl ADD COLUMN o_orderstatus STRING")
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey >= 1000 AND o_orderkey < 1500")
-    val out = localize(s.sql(
+      s"FROM $src WHERE o_orderkey >= 1000 AND o_orderkey < 1500")
+    localize(s.sql(
       s"SELECT o_orderkey, price, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B57 — schema-evolution TYPE WIDENING (ALTER COLUMN ... TYPE): narrow
@@ -542,26 +511,25 @@ object LakeQueries {
   // vintage at decode; a filter crossing both vintages still prunes
   // (row-group predicates drop per-file where the physical type differs,
   // Spark re-evaluates). Hash-oracled: derivation is pure orders math.
-  def b57_type_widening(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.w${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_wsrc")
+  def b57_type_widening(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("w")
+    val src = sc.view("graft_orders_wsrc_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, k INT, v FLOAT)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, " +
       "CAST(o_orderkey % 1000 AS INT), CAST(o_orderkey AS FLOAT) / 32 " +
-      "FROM graft_orders_wsrc WHERE o_orderkey < 500")
+      s"FROM $src WHERE o_orderkey < 500")
     s.sql(s"ALTER TABLE $tbl ALTER COLUMN k TYPE BIGINT")
     s.sql(s"ALTER TABLE $tbl ALTER COLUMN v TYPE DOUBLE")
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, " +
       "CAST(o_orderkey % 1000 AS BIGINT), CAST(o_orderkey AS DOUBLE) / 32 " +
-      "FROM graft_orders_wsrc WHERE o_orderkey >= 500 AND o_orderkey < 1000")
-    val out = localize(s.sql(
+      s"FROM $src WHERE o_orderkey >= 500 AND o_orderkey < 1000")
+    localize(s.sql(
       s"""SELECT o_orderkey, k, CAST(CAST(round(v, 4) AS DECIMAL(28,4)) AS DOUBLE) AS v
          |FROM $tbl WHERE k >= 100 ORDER BY o_orderkey""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B58 — DECIMAL PRECISION WIDENING (ALTER COLUMN ... TYPE DECIMAL(p',s)):
@@ -573,25 +541,24 @@ object LakeQueries {
   // where the physical decimal differs; Spark re-evaluates). All values
   // are exact in both decimal and binary (quarter steps / integral), so
   // the DOUBLE projection hash-oracles.
-  def b58_decimal_widening(s: SparkSession, dir: String): DataFrame = {
-    val cat = dmlCatalog(s)
-    val tbl = s"$cat.ns.dw${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_dwsrc")
+  def b58_decimal_widening(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
+    val tbl = sc.catalogTable("dw")
+    val src = sc.view("graft_orders_dwsrc_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, price DECIMAL(9,2))
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, " +
       "CAST(CAST(o_orderkey AS DECIMAL(9,2)) / 4 AS DECIMAL(9,2)) " +
-      "FROM graft_orders_dwsrc WHERE o_orderkey < 500")
+      s"FROM $src WHERE o_orderkey < 500")
     s.sql(s"ALTER TABLE $tbl ALTER COLUMN price TYPE DECIMAL(18,2)")
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, " +
       "CAST(CAST(o_orderkey AS DECIMAL(18,2)) * 100000 AS DECIMAL(18,2)) " +
-      "FROM graft_orders_dwsrc WHERE o_orderkey >= 500 AND o_orderkey < 1000")
-    val out = localize(s.sql(
+      s"FROM $src WHERE o_orderkey >= 500 AND o_orderkey < 1000")
+    localize(s.sql(
       s"""SELECT o_orderkey, CAST(price AS DOUBLE) AS price
          |FROM $tbl WHERE price >= 50 ORDER BY o_orderkey""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B36 — `$partitions` skew audit over a deliberately skewed scratch
@@ -603,21 +570,20 @@ object LakeQueries {
   // file per bucket), so the oracle reconstructs the expected rollup from
   // the same declaration. Exact values also spec-checked in
   // LakeCatalogSpec.
-  def b36_partitions_meta(s: SparkSession, dir: String): DataFrame = {
+  def b36_partitions_meta(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"p${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("p")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
     for (i <- 0 until 4)
       s.sql(s"INSERT INTO $tbl SELECT id + ${i * 100}, ${bucket(0)}L FROM range(0, 100)")
     s.sql(s"INSERT INTO $tbl SELECT id, ${bucket(1)}L FROM range(0, 50)")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT partition_value, file_count, row_count " +
         s"FROM $cat.ns.`$name$$partitions` ORDER BY partition_value"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B43 — partition-spec evolution (width change with per-file vintages):
@@ -626,29 +592,29 @@ object LakeQueries {
   // new width; the scan consolidates both vintages and predicate pruning
   // resolves each file's bucket range under its OWN width. The final
   // content is pure-SQL reconstructable over `orders` → hash-oracled.
-  def b43_partition_evolution(s: SparkSession, dir: String): DataFrame = {
+  def b43_partition_evolution(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"v${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_pevo_src")
+    val tbl = sc.catalogTable("v")
+    val name = tbl.stripPrefix(s"$cat.ns.")
+    val src = sc.view("graft_orders_pevo_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_pevo_src WHERE o_orderkey < 800")
+      s"FROM $src WHERE o_orderkey < 800")
     s.sql(s"CALL $cat.system.set_partition_width(`table` => 'ns.$name', " +
       "width_micros => 2000)")
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_pevo_src WHERE o_orderkey >= 800 AND o_orderkey < 1600")
+      s"FROM $src WHERE o_orderkey >= 800 AND o_orderkey < 1600")
     // the filter crosses both vintages (narrow buckets [400,800), wide
     // bucket [0,2000)) — per-file width pruning must keep exactly the
     // files that can hold matches
-    val out = localize(s.sql(
+    localize(s.sql(
       s"""SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl
          |WHERE o_orderkey >= 600 AND o_orderkey < 1200
          |ORDER BY o_orderkey""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // D1g — INCREMENTAL dedup: dedupe a newly-arrived batch against the
@@ -1882,10 +1848,11 @@ object LakeQueries {
   // are sequential and every (id, parent, ancestor?, op) tuple is
   // declared by the sequence below (made_current_at is wall-clock, so
   // the driver query projects it out).
-  def b47_history(s: SparkSession, dir: String): DataFrame = {
+  def b47_history(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"h${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("h")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
@@ -1897,11 +1864,9 @@ object LakeQueries {
       s.range(0, 25).select(col("id").as("message_id"),
         lit(bucket(2)).as("timeperiod_loadedBy")), table), "audit")
     s.sql(s"INSERT INTO $tbl SELECT id, ${bucket(3)}L FROM range(0, 10)")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"""SELECT snapshot_id, parent_id, is_current_ancestor, operation
          |FROM $cat.ns.`$name$$history` ORDER BY snapshot_id""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B59 — `$snapshots` commit-log audit: one row per retained snapshot
@@ -1911,21 +1876,20 @@ object LakeQueries {
   // ids are sequential, each clustered INSERT lands exactly one manifest,
   // manifests accumulate until the merge threshold (not reached here), and
   // committed_at_ms is wall-clock so the query projects it out.
-  def b59_snapshots_meta(s: SparkSession, dir: String): DataFrame = {
+  def b59_snapshots_meta(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"sn${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("sn")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT id, ${bucket(0)}L FROM range(0, 100)")
     s.sql(s"INSERT INTO $tbl SELECT id, ${bucket(1)}L FROM range(0, 50)")
     s.sql(s"INSERT INTO $tbl SELECT id, ${bucket(2)}L FROM range(0, 25)")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"""SELECT snapshot_id, parent_id, operation, manifest_count
          |FROM $cat.ns.`$name$$snapshots` ORDER BY snapshot_id""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B60 — `$manifests` merge-health audit before AND after
@@ -1934,10 +1898,11 @@ object LakeQueries {
   // shows the rewrite binned them into ONE manifest carrying all files.
   // Manifest names and byte sizes are nondeterministic, so the query
   // projects the deterministic (file_count, row_count) shape per phase.
-  def b60_manifests_meta(s: SparkSession, dir: String): DataFrame = {
+  def b60_manifests_meta(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"mf${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("mf")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
@@ -1955,12 +1920,10 @@ object LakeQueries {
          |FROM $cat.ns.`$name$$manifests`""".stripMargin)
       .collect().toSeq
     import s.implicits._
-    val out = localize(
+    localize(
       (before ++ after).map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
         .toDF("phase", "file_count", "row_count")
         .orderBy("phase", "row_count"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B61 — `$files` inventory audit (the per-file grain under b36's
@@ -1968,10 +1931,11 @@ object LakeQueries {
   // exactly one file per touched bucket, so (partition_value, row_count,
   // format, spec_id) is fully declared; paths and byte sizes are
   // per-run, so the query projects the deterministic shape.
-  def b61_files_meta(s: SparkSession, dir: String): DataFrame = {
+  def b61_files_meta(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"fl${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("fl")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
@@ -1980,12 +1944,10 @@ object LakeQueries {
       s"CASE WHEN id < 60 THEN ${bucket(0)}L ELSE ${bucket(1)}L END " +
       "FROM range(0, 100)")
     s.sql(s"INSERT INTO $tbl SELECT id, ${bucket(1)}L FROM range(0, 25)")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"""SELECT partition_value, row_count, format, spec_id
          |FROM $cat.ns.`$name$$files`
          |ORDER BY partition_value, row_count""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B62 — `$refs` audit: a retention-pinning TAG and an unpublished WAP
@@ -1994,10 +1956,11 @@ object LakeQueries {
   // a lightweight snapshot to preserve the metadata-version==snapshot-id
   // CAS invariant — stage=4) — the view an operator uses to answer "what
   // is pinned, and what is staged?".
-  def b62_refs_meta(s: SparkSession, dir: String): DataFrame = {
+  def b62_refs_meta(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"rf${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("rf")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))""".stripMargin)
@@ -2009,11 +1972,9 @@ object LakeQueries {
     table.stageAppend(LakeWriter.writeDataFiles(
       s.range(0, 25).select(col("id").as("message_id"),
         lit(bucket(2)).as("timeperiod_loadedBy")), table), "wap-etl")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"""SELECT name, type, snapshot_id
          |FROM $cat.ns.`$name$$refs` ORDER BY name""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B63 — `$deletes` merge-on-read debt audit: a MoR DELETE leaves
@@ -2021,10 +1982,11 @@ object LakeQueries {
   // referenced_files) are declared by the delete predicate and the
   // clustered layout (paths/bytes/seq are per-run). The view that sets
   // the compaction cadence: how many masked rows is every reader paying?
-  def b63_deletes_meta(s: SparkSession, dir: String): DataFrame = {
+  def b63_deletes_meta(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"dl${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("dl")
+    val name = tbl.stripPrefix(s"$cat.ns.")
     s.sql(
       s"""CREATE TABLE $tbl (message_id BIGINT, timeperiod_loadedBy BIGINT)
          |PARTITIONED BY (truncate($Width, timeperiod_loadedBy))
@@ -2035,11 +1997,9 @@ object LakeQueries {
       s"CASE WHEN id < 50 THEN ${bucket(0)}L ELSE ${bucket(1)}L END " +
       "FROM range(0, 100)")
     s.sql(s"DELETE FROM $tbl WHERE message_id % 5 = 0")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"""SELECT kind, row_count, eq_columns, referenced_files
          |FROM $cat.ns.`$name$$deletes` ORDER BY row_count""".stripMargin))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B64 — snapshot ROLLBACK as an end-to-end read state: batch 1 lands,
@@ -2084,17 +2044,19 @@ object LakeQueries {
   // $deletes collapse engine-side (≥3 → 1) and hashes the post-rewrite
   // read — any position lost or invented by the rewrite resurrects or
   // swallows a row the oracle's replay of the three predicates catches.
-  def b66_rewrite_deletes(s: SparkSession, dir: String): DataFrame = {
+  def b66_rewrite_deletes(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"rd${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+    val tbl = sc.catalogTable("rd")
+    val name = tbl.stripPrefix(s"$cat.ns.")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))
          |TBLPROPERTIES ('${LakeFormat.PropDeleteMode}'='${LakeFormat.DeleteModeMergeOnRead}')""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 2000")
+      s"FROM $src WHERE o_orderkey < 2000")
     s.sql(s"DELETE FROM $tbl WHERE o_orderstatus = 'F' AND o_orderkey % 7 = 0")
     s.sql(s"DELETE FROM $tbl WHERE o_orderkey % 11 = 3")
     s.sql(s"DELETE FROM $tbl WHERE o_totalprice < 50000 AND o_orderkey % 5 = 1")
@@ -2106,10 +2068,8 @@ object LakeQueries {
     s.sql(s"CALL $cat.system.rewrite_position_deletes(`table` => 'ns.$name')")
     val after = posFiles()
     require(after == 1, s"rewrite must collapse pos-delete files to 1, got $after")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // B67 — delete-mark-THRESHOLD compaction (the Iceberg
@@ -2121,17 +2081,19 @@ object LakeQueries {
   // runs on its hot files. The entry asserts the debt materialized
   // engine-side ($deletes empties) and hashes the post-compact read: a
   // mark lost in the rewrite resurrects a row, one over-applied swallows.
-  def b67_compact_threshold(s: SparkSession, dir: String): DataFrame = {
+  def b67_compact_threshold(s: SparkSession, dir: String): DataFrame =
+      Scratch.scoped(s) { sc =>
     val cat = dmlCatalog(s)
-    val name = s"ct${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
-    t(s, dir, "orders").createOrReplaceTempView("graft_orders_src")
+    val tbl = sc.catalogTable("ct")
+    val name = tbl.stripPrefix(s"$cat.ns.")
+    val src = sc.view("graft_orders_src_")
+    t(s, dir, "orders").createOrReplaceTempView(src)
     s.sql(
       s"""CREATE TABLE $tbl (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
          |PARTITIONED BY (truncate(400, o_orderkey))
          |TBLPROPERTIES ('${LakeFormat.PropDeleteMode}'='${LakeFormat.DeleteModeMergeOnRead}')""".stripMargin)
     s.sql(s"INSERT INTO $tbl SELECT o_orderkey, o_totalprice, o_orderstatus " +
-      "FROM graft_orders_src WHERE o_orderkey < 2000")
+      s"FROM $src WHERE o_orderkey < 2000")
     s.sql(s"DELETE FROM $tbl WHERE o_orderkey % 3 = 0")
     def posMarks(): Long = s.sql(
       s"SELECT coalesce(sum(row_count), 0) FROM $cat.ns.`$name$$deletes` " +
@@ -2141,10 +2103,8 @@ object LakeQueries {
       "small_file_bytes => 0, delete_file_threshold => 50)")
     require(posMarks() == 0,
       "threshold compaction must materialize every bucket's delete debt")
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT o_orderkey, o_totalprice, o_orderstatus FROM $tbl ORDER BY o_orderkey"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -19,9 +19,7 @@ object RelationalQueries {
   // B1 — parquet scan; COUNT/MIN/MAX answered from footer metadata alone
   // (parquet aggregate pushdown — no row data read at any scale).
   def b01_scan(s: SparkSession, dir: String): DataFrame = {
-    // aggregate pushdown exists only in the DSv2 parquet reader
-    s.conf.set("spark.sql.sources.useV1SourceList", "")
-    s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+    // aggregate pushdown needs the DSv2 reader (SessionConf.builder)
     t(s, dir, "lineitem").agg(
       count(lit(1)).as("cnt"),
       min("l_orderkey").as("min_ok"),

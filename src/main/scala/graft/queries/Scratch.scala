@@ -6,16 +6,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.{Trace, TraceRecord}
+import graft.{SessionConf, Trace, TraceRecord}
 import graft.lake.{LakeTable, TruncateSpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scratch resources of the query entries, with one owner each.
   *
-  * [[scoped]] is the lifecycle every entry's scratch tables, checkpoint
-  * and replay directories, temp views and overlapped builds share: the
-  * scope hands them out, and on exit it first awaits every branch it
-  * started, then drops what it created. A branch can therefore never
+  * [[scoped]] is the lifecycle every entry's scratch tables (by path or
+  * in the DML catalog), checkpoint and replay directories, temp views and
+  * overlapped builds share: the scope hands them out, and on exit it first
+  * awaits every branch it started, then drops what it created. A branch can therefore never
   * commit into a table after the table is dropped.
   *
   * [[persist]] writes an iterative/multi-consumer intermediate to a
@@ -111,16 +111,28 @@ private[graft] object Scratch {
   /** What one [[scoped]] call owns; see [[scoped]]. */
   final class Scope private[Scratch] (session: SparkSession) {
     private val tables = ArrayBuffer.empty[String]
+    private val catalogTables = ArrayBuffer.empty[String]
     private val dirs = ArrayBuffer.empty[String]
     private val views = ArrayBuffer.empty[String]
     private val branches = ArrayBuffer.empty[Branch[_]]
 
     /** A LakeTable created at a fresh [[location]]; dropped at exit
       * through `LakeTable.drop`. */
-    def table(prefix: String, ddl: String, spec: TruncateSpec): LakeTable = {
+    def table(prefix: String, ddl: String, spec: TruncateSpec,
+        properties: Map[String, String] = Map.empty): LakeTable = {
       val loc = location(prefix)
       synchronized(tables += loc)
-      LakeTable.create(loc, ddl, spec)
+      LakeTable.create(loc, ddl, spec, properties)
+    }
+
+    /** A fresh table name `<catalog>.ns.<prefix><uuid>` in the session's
+      * DML catalog (`SessionConf.dmlCatalog`); the caller creates the
+      * table, and it is dropped at exit with `DROP TABLE IF EXISTS`. */
+    def catalogTable(prefix: String): String = {
+      val t = s"${SessionConf.dmlCatalog(session)}.ns.$prefix" +
+        UUID.randomUUID().toString.replace("-", "")
+      synchronized(catalogTables += t)
+      t
     }
 
     /** A fresh directory path (checkpoint, replay input); deleted at exit. */
@@ -177,6 +189,7 @@ private[graft] object Scratch {
       synchronized(branches.toList).foreach(b =>
         b.outcome().left.foreach(e => if (!b.joined) note(e)))
       tables.foreach(loc => attempt(LakeTable.drop(loc)))
+      catalogTables.foreach(t => attempt(session.sql(s"DROP TABLE IF EXISTS $t")))
       dirs.foreach(d => attempt(
         org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d))))
       views.foreach(v => attempt(session.catalog.dropTempView(v)))

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import graft.Tables.{t, us}
 import graft.Trace
 import graft.lake._
@@ -440,9 +438,7 @@ object StreamingQueries {
   // exactly-once variant — MERGE-per-batch trades that for upsert power.)
   def c19_stream_upsert(s: SparkSession, dir: String): DataFrame =
       Scratch.scoped(s) { sc =>
-    val cat = L.dmlCatalog(s)
-    val name = s"s${UUID.randomUUID().toString.replace("-", "")}"
-    val tbl = s"$cat.ns.$name"
+    val tbl = sc.catalogTable("s")
     s.sql(
       s"""CREATE TABLE $tbl (user_id BIGINT, last_event_id BIGINT,
          |  last_ts_us BIGINT, n_events BIGINT)
@@ -470,10 +466,8 @@ object StreamingQueries {
            |WHEN NOT MATCHED THEN INSERT (user_id, last_event_id, last_ts_us, n_events)
            |  VALUES (s.user_id, s.eid, s.tsu, s.cnt)""".stripMargin)
     }
-    val out = localize(s.sql(
+    localize(s.sql(
       s"SELECT user_id, last_event_id, last_ts_us, n_events FROM $tbl ORDER BY user_id"))
-    s.sql(s"DROP TABLE $tbl")
-    out
   }
 
   // C21 — transformWithState (Spark 4's arbitrary-state operator, the

@@ -5,16 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val spark: SparkSession = SessionConf.builder("graft-test", "4")
     .config("spark.sql.warehouse.dir", SparkSpec.warehouse)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def tmpDir(prefix: String): String = SparkSpec.scratchDir(prefix)
+
+  /** Register a `LakeCatalog` named `name` (once per JVM, with a scratch
+    * warehouse); returns its warehouse. */
+  def lakeCatalog(name: String): String =
+    SessionConf.lakeCatalog(spark, name)(tmpDir(s"$name-wh"))
 }
 
 /** Scratch directories of the test JVM: each is deleted, with everything

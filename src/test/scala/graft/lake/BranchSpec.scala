@@ -91,10 +91,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("SQL: VERSION AS OF branch name reads staged data") {
-    val w = tmpDir("wap-wh")
-    spark.conf.set("spark.sql.catalog.wapcat",
-      classOf[graft.lake.dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.wapcat.warehouse", w)
+    val w = lakeCatalog("wapcat")
     spark.sql(
       s"""CREATE TABLE wapcat.ns.w (message_id BIGINT, data STRING,
          |  timestamp TIMESTAMP, timeperiod_loadedBy BIGINT, message_body BINARY)

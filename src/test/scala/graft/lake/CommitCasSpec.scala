@@ -27,6 +27,25 @@ class CommitCasSpec extends SparkSpec {
   private def mockLoc(prefix: String): String =
     "mocks3:" + tmpDir(prefix)
 
+  /** The WARN messages logger `graft.lake` logs while `body` runs. */
+  private def warnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("graft.lake").asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try body finally { logger.removeAppender(appender); appender.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   test("the mock store's rename really does double-publish (the hazard)") {
     val fs = new Path(mockLoc("cas-hazard")).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -80,7 +99,8 @@ class CommitCasSpec extends SparkSpec {
         "expected a lost CAS + retry on the stale instance")
 
       // 4-way thread race on fresh instances: every committer wins
-      // eventually, every version publishes exactly once
+      // eventually, every version publishes exactly once; a committer
+      // whose advisory version hint loses to another's logs nothing
       val racers = (0 until 4).map { i =>
         new Thread(() => {
           val ti = LakeTable.load(loc)
@@ -88,7 +108,11 @@ class CommitCasSpec extends SparkSpec {
             bucket(0))))
         })
       }
-      racers.foreach(_.start()); racers.foreach(_.join())
+      val warned = warnings {
+        racers.foreach(_.start()); racers.foreach(_.join())
+      }
+      assert(!warned.exists(_.contains("version-hint")),
+        s"lost hint races logged: $warned")
       val fin = LakeTable.load(loc)
       val finPaths = fin.files().map(_.path).toSet
       (0 until 4).foreach(i => assert(finPaths(s"$loc/data/r$i.parquet"),

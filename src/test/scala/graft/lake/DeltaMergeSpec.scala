@@ -16,13 +16,7 @@ class DeltaMergeSpec extends SparkSpec {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (7100000L + i) * Width
 
-  private lazy val warehouse: String = {
-    val w = tmpDir("delta-warehouse")
-    spark.conf.set("spark.sql.catalog.deltacat",
-      classOf[graft.lake.dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.deltacat.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("deltacat")
 
   private def newOrdersTable(props: String): (String, String) = {
     val wh = warehouse // force catalog registration before any SQL

@@ -220,10 +220,7 @@ class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("SQL DELETE routes through MoR when the table property says so") {
-    val w = tmpDir("mor-warehouse")
-    spark.conf.set("spark.sql.catalog.morcat",
-      classOf[graft.lake.dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.morcat.warehouse", w)
+    val w = lakeCatalog("morcat")
     spark.sql(
       s"""CREATE TABLE morcat.ns.ev (
          |  message_id BIGINT, data STRING, timestamp TIMESTAMP,

@@ -103,10 +103,7 @@ class PartitionEvolutionSpec extends SparkSpec {
   }
 
   test("SQL: CALL set_partition_width + $partitions separates vintages") {
-    val w = tmpDir("lake-warehouse-pevo")
-    spark.conf.set("spark.sql.catalog.lakepe",
-      classOf[graft.lake.dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lakepe.warehouse", w)
+    lakeCatalog("lakepe")
     spark.sql(
       """CREATE TABLE lakepe.ns.ev (message_id BIGINT, timeperiod_loadedBy BIGINT)
         |PARTITIONED BY (truncate(100, timeperiod_loadedBy))""".stripMargin)
@@ -132,10 +129,7 @@ class PartitionEvolutionSpec extends SparkSpec {
   }
 
   test("joins across a mid-migration table stay correct (SPJ stands down)") {
-    val w = tmpDir("lake-warehouse-pevo2")
-    spark.conf.set("spark.sql.catalog.lakepe2",
-      classOf[graft.lake.dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lakepe2.warehouse", w)
+    val w = lakeCatalog("lakepe2")
     for (name <- Seq("a", "b")) {
       spark.sql(
         s"""CREATE TABLE lakepe2.ns.$name (message_id BIGINT, timeperiod_loadedBy BIGINT)
@@ -157,16 +151,8 @@ class PartitionEvolutionSpec extends SparkSpec {
     spark.sql("DROP TABLE lakepe2.ns.b")
   }
 
-  private def withSpjConfs[A](body: => A): A = {
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withSpjConfs[A](body: => A): A = graft.SessionConf.withConf(spark,
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false")(body)
 }

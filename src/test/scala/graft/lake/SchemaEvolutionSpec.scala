@@ -236,9 +236,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("SQL ALTER TABLE RENAME/DROP COLUMN through the catalog") {
-    spark.conf.set("spark.sql.catalog.lake",
-      classOf[dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lake.warehouse", tmpDir("evo-warehouse"))
+    lakeCatalog("lake")
     try {
       spark.sql("CREATE TABLE lake.db.evo (message_id BIGINT, data STRING, " +
         "timeperiod_loadedBy BIGINT) PARTITIONED BY " +
@@ -260,9 +258,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("TYPE WIDENING: INT->BIGINT / FLOAT->DOUBLE read across vintages; " +
       "illegal changes rejected") {
-    spark.conf.set("spark.sql.catalog.widencat",
-      classOf[dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.widencat.warehouse", tmpDir("widen-wh"))
+    val w = lakeCatalog("widencat")
     try {
       spark.sql("CREATE TABLE widencat.db.widen (k INT, f FLOAT, tag STRING, " +
         "timeperiod_loadedBy BIGINT) PARTITIONED BY " +
@@ -270,9 +266,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       // narrow-vintage files (k int32, f float physically)
       spark.sql("INSERT INTO widencat.db.widen SELECT CAST(id AS INT), " +
         s"CAST(id AS FLOAT) / 2, 'n', ${bucket(0)}L FROM range(0, 100)")
-      val preWiden = LakeTable.load(
-        s"${spark.conf.get("spark.sql.catalog.widencat.warehouse")}/db/widen")
-        .currentSnapshotId
+      val preWiden = LakeTable.load(s"$w/db/widen").currentSnapshotId
       spark.sql("ALTER TABLE widencat.db.widen ALTER COLUMN k TYPE BIGINT")
       spark.sql("ALTER TABLE widencat.db.widen ALTER COLUMN f TYPE DOUBLE")
       // wide-vintage files land int64/double physically
@@ -294,7 +288,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       // time travel to the pre-widen snapshot sees the NARROW schema
       val tt = spark.read.format("laketable")
         .option("snapshotId", preWiden.toString)
-        .load(s"${spark.conf.get("spark.sql.catalog.widencat.warehouse")}/db/widen")
+        .load(s"$w/db/widen")
       assert(tt.schema("k").dataType ==
         org.apache.spark.sql.types.IntegerType)
       assert(tt.count() == 100)
@@ -319,9 +313,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("DECIMAL WIDENING: precision growth reads across vintages (INT32 -> " +
       "INT64 -> FLBA physical); scale change / shrink / cross-family rejected") {
-    spark.conf.set("spark.sql.catalog.deccat",
-      classOf[dsv2.LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.deccat.warehouse", tmpDir("dec-wh"))
+    lakeCatalog("deccat")
     try {
       spark.sql("CREATE TABLE deccat.db.dec (d DECIMAL(9,2), " +
         "timeperiod_loadedBy BIGINT) PARTITIONED BY " +

@@ -15,12 +15,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   * the manifests: per-file cost, zero driver-metadata growth.
   */
 class BloomWriteSpec extends SparkSpec {
-  private lazy val warehouse: String = {
-    val w = tmpDir("lake-bloom-wh")
-    spark.conf.set("spark.sql.catalog.lakebl", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lakebl.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("lakebl")
 
   private def bloomColumns(file: String): Set[String] = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(

@@ -11,12 +11,7 @@ import graft.lake.LakeTable
   * non-staging fallback drops the half-created table).
   */
 class CtasSpec extends SparkSpec {
-  private lazy val warehouse: String = {
-    val w = tmpDir("lake-ctas-wh")
-    spark.conf.set("spark.sql.catalog.lakectas", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lakectas.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("lakectas")
 
   private def seedSrc(): Unit = {
     warehouse

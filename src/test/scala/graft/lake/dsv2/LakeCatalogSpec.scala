@@ -11,12 +11,7 @@ class LakeCatalogSpec extends SparkSpec {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (5666666L + i) * Width
 
-  private lazy val warehouse: String = {
-    val w = tmpDir("lake-warehouse")
-    spark.conf.set("spark.sql.catalog.lake", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lake.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("lake")
 
   test("SQL DDL + INSERT + SELECT + time travel round-trip") {
     val w = warehouse

@@ -1,6 +1,6 @@
 package graft.lake.dsv2
 
-import graft.SparkSpec
+import graft.{SessionConf, SparkSpec}
 import graft.lake._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -20,12 +20,7 @@ class LakeSourceSpec extends SparkSpec {
   }
 
   /** A catalog whose tables live under one warehouse directory. */
-  private lazy val warehouse: String = {
-    val w = tmpDir("dsv2-warehouse")
-    spark.conf.set("spark.sql.catalog.srccat", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.srccat.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("srccat")
 
   private def appendBatch(t: LakeTable, rows: Long, micros: Long, seed: Long): Long =
     t.append(LakeWriter.writeDataFiles(
@@ -111,9 +106,8 @@ class LakeSourceSpec extends SparkSpec {
     assert(t.files().size == 5)
     // openCost=0 + minPartitionNum=1 force all five files into ONE task —
     // the chained columnar reader must walk every file of the pack
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
-    try {
+    SessionConf.withConf(spark, "spark.sql.files.openCostInBytes" -> "0",
+        "spark.sql.files.minPartitionNum" -> "1") {
       val df = spark.read.format("laketable").load(t.location)
       assert(df.rdd.getNumPartitions == 1)
       assert(df.count() == 200)
@@ -140,9 +134,6 @@ class LakeSourceSpec extends SparkSpec {
       assert(byPath.rdd.getNumPartitions == 1)
       assert(byPath.orderBy("message_id", "timeperiod_loadedBy").collect().toSeq ==
         df2.orderBy("message_id", "timeperiod_loadedBy").collect().toSeq)
-    } finally {
-      spark.conf.unset("spark.sql.files.openCostInBytes")
-      spark.conf.unset("spark.sql.files.minPartitionNum")
     }
   }
 
@@ -156,9 +147,8 @@ class LakeSourceSpec extends SparkSpec {
     assert(t.files().size == 1)
     val size = t.files().head.sizeBytes
     // force range splitting: split budget far below the single file's size
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (size / 4).toString)
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    try {
+    SessionConf.withConf(spark, "spark.sql.files.maxPartitionBytes" -> (size / 4).toString,
+        "spark.sql.files.openCostInBytes" -> "0") {
       val df = spark.read.format("laketable").load(t.location)
       assert(df.rdd.getNumPartitions >= 4,
         s"expected >=4 range partitions over one ${size}B file")
@@ -168,9 +158,6 @@ class LakeSourceSpec extends SparkSpec {
       // timestamps decode identically through the split-based initializer
       assert(df.agg(max("timestamp")).head
         .getTimestamp(0).getTime > 0)
-    } finally {
-      spark.conf.unset("spark.sql.files.maxPartitionBytes")
-      spark.conf.unset("spark.sql.files.openCostInBytes")
     }
   }
 
@@ -207,18 +194,15 @@ class LakeSourceSpec extends SparkSpec {
     assert(none.count() == 0)
     // byte-range splits + predicate compose: every row group is owned by
     // exactly one range and the predicate skips within each independently
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (f.sizeBytes / 4).toString)
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    try {
+    SessionConf.withConf(spark,
+        "spark.sql.files.maxPartitionBytes" -> (f.sizeBytes / 4).toString,
+        "spark.sql.files.openCostInBytes" -> "0") {
       val split = spark.read.format("laketable").load(t.location)
         .filter(col("message_id") >= 500L && col("message_id") < 700L)
       assert(split.rdd.getNumPartitions >= 4)
       assert(split.count() == 200)
       assert(split.agg(org.apache.spark.sql.functions.sum("message_id"))
         .head.getLong(0) == (500L until 700L).sum)
-    } finally {
-      spark.conf.unset("spark.sql.files.maxPartitionBytes")
-      spark.conf.unset("spark.sql.files.openCostInBytes")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.lake.dsv2
 
-import graft.SparkSpec
+import graft.{SessionConf, SparkSpec}
 import graft.lake.{LakeTable, LakeWriter, TruncateSpec}
 import org.apache.spark.sql.functions._
 
@@ -15,12 +15,7 @@ class OverwriteSpec extends SparkSpec {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (5666666L + i) * Width
 
-  private lazy val warehouse: String = {
-    val w = tmpDir("lake-ow-warehouse")
-    spark.conf.set("spark.sql.catalog.lakeow", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lakeow.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("lakeow")
 
   private def mkTable(name: String): String = {
     warehouse
@@ -67,15 +62,9 @@ class OverwriteSpec extends SparkSpec {
     val tbl = mkTable("dynsql")
     insert(tbl, 20, b = 0)
     insert(tbl, 10, b = 2)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    SessionConf.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
       spark.sql(s"INSERT OVERWRITE $tbl SELECT id, id * 2, ${bucket(0)}L " +
-        "FROM range(0, 5)")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+        "FROM range(0, 5)"))
     assert(spark.sql(s"SELECT count(*) FROM $tbl").head.getLong(0) == 15)
     assert(spark.sql(
       s"SELECT sum(v) FROM $tbl WHERE timeperiod_loadedBy = ${bucket(0)}"

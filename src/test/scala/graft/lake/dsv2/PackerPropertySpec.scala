@@ -1,23 +1,16 @@
 package graft.lake.dsv2
 
+import graft.{SessionConf, SparkSpec}
 import graft.lake.DataFileMeta
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Scan-task packing invariants: every byte of every file is covered by
   * exactly one slice (no lost or double-read row groups downstream), the
   * whole-file rowCount is attributed to exactly one slice (the COUNT(*)
   * path), and task sizes respect the split budget for splittable files.
   */
-class PackerPropertySpec extends AnyFunSuite {
-
-  // the packer reads conf from the active session
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]").appName("packer-prop")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PackerPropertySpec extends SparkSpec {
 
   private val fileGen: Gen[DataFileMeta] = for {
     size <- Gen.choose(1L, 512L << 20)
@@ -57,7 +50,7 @@ class PackerPropertySpec extends AnyFunSuite {
   }
 
   test("pack covers every file byte exactly once and every rowCount exactly once") {
-    spark // force session
+    spark // the packer reads conf from the active session
     check(forAll(Gen.listOfN(12, fileGen)) { files =>
       covers(files, tasks(files, keyed = true)) &&
         covers(files, tasks(files, keyed = false))
@@ -65,15 +58,13 @@ class PackerPropertySpec extends AnyFunSuite {
   }
 
   test("keyed tasks never mix buckets; unkeyed packing plans no more tasks") {
-    spark
     // a small open cost lets small files of different buckets share a task
-    spark.conf.set("spark.sql.files.openCostInBytes", "1048576")
-    try check(forAll(Gen.listOfN(12, fileGen)) { files =>
-      val keyed = tasks(files, keyed = true)
-      val bucketOf = files.map(f => f.path -> f.partitionValue).toMap
-      keyed.forall(p => p.files.forall(s => bucketOf(s.path) == p.bucket)) &&
-        tasks(files, keyed = false).size <= keyed.size
-    })
-    finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    SessionConf.withConf(spark, "spark.sql.files.openCostInBytes" -> "1048576")(
+      check(forAll(Gen.listOfN(12, fileGen)) { files =>
+        val keyed = tasks(files, keyed = true)
+        val bucketOf = files.map(f => f.path -> f.partitionValue).toMap
+        keyed.forall(p => p.files.forall(s => bucketOf(s.path) == p.bucket)) &&
+          tasks(files, keyed = false).size <= keyed.size
+      }))
   }
 }

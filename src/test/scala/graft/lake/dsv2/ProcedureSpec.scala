@@ -12,13 +12,7 @@ class ProcedureSpec extends SparkSpec {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (7500000L + i) * Width
 
-  private lazy val warehouse: String = {
-    val w = tmpDir("proc-wh")
-    spark.conf.set("spark.sql.catalog.proccat",
-      classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.proccat.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("proccat")
 
   private def newTable(): (String, LakeTable) = {
     val wh = warehouse

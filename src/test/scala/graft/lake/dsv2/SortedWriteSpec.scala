@@ -10,12 +10,7 @@ import graft.lake.LakeTable
   * ingest, without waiting for a clustering compaction.
   */
 class SortedWriteSpec extends SparkSpec {
-  private lazy val warehouse: String = {
-    val w = tmpDir("lake-sorted-wh")
-    spark.conf.set("spark.sql.catalog.lakesw", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.lakesw.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("lakesw")
 
   test("sorted ingest yields disjoint per-file ranges and 1-file point lookups") {
     warehouse

@@ -1,6 +1,6 @@
 package graft.lake.dsv2
 
-import graft.SparkSpec
+import graft.{SessionConf, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -14,12 +14,7 @@ class SpjSpec extends SparkSpec {
   private val Width = 300000000L
   private def bucket(i: Int): Long = (5666666L + i) * Width
 
-  private lazy val warehouse: String = {
-    val w = tmpDir("spj-warehouse")
-    spark.conf.set("spark.sql.catalog.spj", classOf[LakeCatalog].getName)
-    spark.conf.set("spark.sql.catalog.spj.warehouse", w)
-    w
-  }
+  private lazy val warehouse: String = lakeCatalog("spj")
 
   private def mkTable(name: String, buckets: Seq[Int], rowsPer: Int): Unit = {
     spark.sql(
@@ -39,20 +34,11 @@ class SpjSpec extends SparkSpec {
   private def shuffles(df: DataFrame): Int =
     df.queryExecution.executedPlan.collect { case s: ShuffleExchangeExec => s }.size
 
-  private def withSpjConfs(body: => Unit): Unit = {
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withSpjConfs(body: => Unit): Unit = SessionConf.withConf(spark,
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "false")(body)
 
   test("lake-lake join on the partition column runs with zero shuffles") {
     warehouse
@@ -110,10 +96,8 @@ class SpjSpec extends SparkSpec {
     warehouse
     mkTable("h", buckets = Seq(0, 1, 2), rowsPer = 50)
     mkTable("i", buckets = Seq(0, 1, 2), rowsPer = 50)
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try withSpjConfs {
+    SessionConf.withConf(spark,
+        "spark.sql.requireAllClusterKeysForCoPartition" -> "false")(withSpjConfs {
       val joined = spark.sql(
         """SELECT count(*) AS pairs, sum(h.message_id) AS s
           |FROM spj.ns.h h JOIN spj.ns.i i
@@ -126,10 +110,7 @@ class SpjSpec extends SparkSpec {
       assert(smj.isDefined, s"expected sort-merge join:\n$plan")
       assert(smj.get.collect { case s: ShuffleExchangeExec => s }.isEmpty,
         s"expected shuffle-free superset-key join:\n$plan")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    })
   }
 
   test("mixed spec widths fall back to a shuffled join, never a wrong zip") {

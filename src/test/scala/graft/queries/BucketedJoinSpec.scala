@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SessionConf, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Co-located joins via bucketing (SURVEY D6: "co-locate joins via
@@ -12,11 +12,9 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("join of co-bucketed tables plans without a shuffle") {
     // bucketed writes go through the V1 path and the session catalog
-    spark.conf.set("spark.sql.sources.useV1SourceList",
-      "avro,csv,json,kafka,orc,parquet,text")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try SessionConf.withConf(spark,
+        "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,parquet,text",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.range(1000).select(col("id").as("k"), (col("id") * 2).as("va"))
         .write.mode("overwrite").bucketBy(8, "k").sortBy("k").saveAsTable("bkt_a")
       spark.range(1000).select(col("id").as("k"), (col("id") * 3).as("vb"))
@@ -26,7 +24,6 @@ class BucketedJoinSpec extends SparkSpec {
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"bucketed join shuffled:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS bkt_a")
       spark.sql("DROP TABLE IF EXISTS bkt_b")
     }

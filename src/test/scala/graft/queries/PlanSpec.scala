@@ -1,8 +1,9 @@
 package graft.queries
 
-import graft.{SparkSpec, Trace}
+import graft.{SessionConf, SparkSpec, Trace}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.{col, expr, sha2}
 
 /** Physical-plan assertions (the 100 TB posture, SURVEY D6/§4): these
@@ -14,14 +15,12 @@ import org.apache.spark.sql.functions.{col, expr, sha2}
 class PlanSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  // b01 switches the session to the V2 parquet reader; pin the default V1
-  // list here so each test sees the source it asserts against regardless
-  // of suite order.
-  private def useV1(): Unit = spark.conf.set(
-    "spark.sql.sources.useV1SourceList", "avro,csv,json,kafka,orc,parquet,text")
-
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  private def noAutoBroadcast[A](body: => A): A = SessionConf.withConf(spark,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   test("B1: count/min/max answered by parquet aggregate pushdown") {
     val p = plan(RelationalQueries.b01_scan(spark, dir))
@@ -29,8 +28,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("B8: all predicates pushed to the parquet scan") {
-    useV1()
-    val p = plan(RelationalQueries.b08_filter(spark, dir))
+    // about V1's display: its PushedFilters lists every predicate Spark
+    // hands the source, V2's only what parquet accepts (no l_shipdate range)
+    val p = SessionConf.withConf(spark, "spark.sql.sources.useV1SourceList" ->
+      "avro,csv,json,kafka,orc,parquet,text")(plan(RelationalQueries.b08_filter(spark, dir)))
     assert(p.contains("PushedFilters"), p)
     assert(p.contains("GreaterThanOrEqual(l_shipdate"), p)
     assert(p.contains("In(l_discount"), p)
@@ -38,7 +39,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("B8: scan reads only the filter columns (column pruning)") {
-    useV1()
     val p = plan(RelationalQueries.b08_filter(spark, dir))
     val readSchema = p.linesIterator.filter(_.contains("ReadSchema")).mkString
     assert(!readSchema.contains("l_extendedprice"), readSchema)
@@ -103,17 +103,12 @@ class PlanSpec extends SparkSpec {
     // driver at 100 TB. With the auto-broadcast thresholds disabled, ONLY
     // a hint could still produce a broadcast exchange; the plan must
     // instead join on the gram key (both sides are already gram-keyed).
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, "-1"))
-    try {
+    noAutoBroadcast {
       val p = plan(PipelineQueries.d03_boilerplate(spark, dir))
       assert(!p.contains("BroadcastExchange"),
         s"boilerplate side is hint-broadcast (survives threshold=-1):\n$p")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("D3/D2 exact twins: candidate joins shuffle on the bucket key, never hint-broadcast") {
@@ -121,11 +116,7 @@ class PlanSpec extends SparkSpec {
     // d03_boilerplate: with auto-broadcast off, only an (absent) hint
     // could still broadcast; the join must key on (band, sig) / (band,
     // h0, h1) so both twins keep the production variants' scale shape
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, "-1"))
-    try {
+    noAutoBroadcast {
       for (q <- Seq(PipelineQueries.d03_minhash_exact(spark, dir),
                     PipelineQueries.d02_ann_exact(spark, dir))) {
         val p = plan(q)
@@ -134,8 +125,7 @@ class PlanSpec extends SparkSpec {
           !p.contains("BroadcastNestedLoopJoin"), p)
         assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
       }
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("D1g: incremental dedup prefilters the corpus scan through the increment bloom") {
@@ -261,16 +251,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("D2r: BM25 serve broadcasts the query side and scans the corpus once") {
-    val p = plan(PipelineQueries.d02_bm25_topk(spark, dir))
+    val df = PipelineQueries.d02_bm25_topk(spark, dir)
+    val p = plan(df)
     // the tiny query-term relations (terms, per-query terms, dfreq)
     // broadcast — the postings never shuffle to meet an 8-row list
     assert(p.contains("BroadcastExchange"), p)
-    // the returned plan tokenizes the corpus exactly once: the stats
-    // aggregate was collected eagerly before plan build, so a second
-    // documents scan would mean postings are being recomputed per arm
-    val scans = "documents".r.findAllIn(p).size
-    assert(scans <= 2, // one scan node, its name may render twice
-      s"documents referenced $scans times — postings recomputed:\n$p")
+    // the stats aggregate was collected eagerly before plan build, so the
+    // returned plan holds at most the two scan nodes over documents it
+    // has on both parquet readers; a third would mean postings are being
+    // recomputed per arm
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    val scans = root.collect {
+      case n if n.nodeName.contains("Scan") && n.toString.contains("documents") => n
+    }.size
+    assert(scans <= 2, s"$scans scan nodes over documents — postings recomputed:\n$p")
   }
 
   test("D1g: substring dedup derives the shingle space ONCE (cached), " +

@@ -37,6 +37,19 @@ class ScratchScopeSpec extends SparkSpec {
     assert(!new File(dir).exists, s"directory $dir left behind")
   }
 
+  test("a body that throws after catalogTable leaves no table in the catalog") {
+    var tbl: String = null
+    intercept[IllegalStateException](Scratch.scoped(spark) { sc =>
+      tbl = sc.catalogTable("scopespec")
+      spark.sql(s"CREATE TABLE $tbl (id BIGINT) PARTITIONED BY (truncate(10, id))")
+      spark.sql(s"INSERT INTO $tbl SELECT id FROM range(3)")
+      throw new IllegalStateException("boom")
+    })
+    val (ns, name) = tbl.splitAt(tbl.lastIndexOf('.'))
+    val left = spark.sql(s"SHOW TABLES IN $ns").collect().map(_.getString(1))
+    assert(!left.contains(name.drop(1)), s"$tbl left behind")
+  }
+
   test("when one overlap branch fails, its sibling's commit never lands " +
       "after the drop") {
     val started = new CountDownLatch(1)

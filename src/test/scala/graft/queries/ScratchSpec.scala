@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SessionConf, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Scratch lifecycle: the TTL sweep reclaims this JVM's stale dirs
@@ -13,8 +13,7 @@ class ScratchSpec extends SparkSpec {
     val root = new java.io.File(
       spark.sessionState.conf.warehousePath.stripPrefix("file:"),
       "_graft_scratch")
-    spark.conf.set(Scratch.TtlKey, "1")
-    try {
+    SessionConf.withConf(spark, Scratch.TtlKey -> "1") {
       // first persist: learn this JVM's ownership token from the dir name
       val out = Scratch.persist(
         spark.range(100).select(col("id")), "scratchspec")
@@ -43,6 +42,6 @@ class ScratchSpec extends SparkSpec {
       assert(!foreignAncient.exists(),
         "foreign dir past 24x TTL must be reclaimed")
       assert(fresh.exists(), "fresh dir must never be swept")
-    } finally spark.conf.unset(Scratch.TtlKey)
+    }
   }
 }
